@@ -12,7 +12,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.operators.{Snapshot, SnapshotSql}
+import graft.operators.Snapshot
 
 /** A REAL Spark `TableCatalog` over snapshot tables, so the vanilla
   * parser/analyzer resolve them BY NAME — `spark.sql("INSERT INTO
@@ -20,7 +20,7 @@ import graft.operators.{Snapshot, SnapshotSql}
   * DESCRIBE, SHOW TABLES, ALTER TABLE all work under stock spark-sql
   * with zero registry plumbing. This is the difference between "a
   * ported reference script is SQL text end to end" (the
-  * `tables: Map[name → path]` front end, [[SnapshotSql]]) and "a
+  * `tables: Map[name → path]` front end, [[RegistryBinding]]) and "a
   * ported script runs under the session's own catalog", which is what
   * a BigQuery user actually has: `dataset.table` names, no path maps.
   *
@@ -139,7 +139,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with StagingTabl
     * {INSERT, DELETE} — loses sight of the generated column in its ON
     * clause, which fails resolution LOUDLY (name its source column
     * instead); silently failing every positional INSERT OVERWRITE
-    * would be the worse trade.
+    * would be the worse trade. Every write load is a `writeTarget`
+    * (see [[GraftTable.constraints]]).
     */
   override def loadTable(ident: Identifier,
                          writePrivileges: util.Set[TableWritePrivilege]): Table = {
@@ -147,9 +148,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with StagingTabl
     val p = writePrivileges.asScala.toSet
     val insertShaped = p == Set(TableWritePrivilege.INSERT) ||
       p == Set(TableWritePrivilege.INSERT, TableWritePrivilege.DELETE)
-    if (insertShaped && t.manifest.generatedCols.nonEmpty)
-      t.copy(hideGenerated = true)
-    else t
+    t.copy(hideGenerated = insertShaped && t.manifest.generatedCols.nonEmpty,
+      writeTarget = true)
   }
 
   /** `VERSION AS OF v` — the analyzer hands the version string through.
@@ -191,8 +191,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with StagingTabl
     val path = pathFor(ident)
     if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
     val userProps = GraftCatalog.userProperties(properties)
-    val (pTransforms, clusterBy) = SnapshotSql.splitClusterBy(partitions.toSeq, "CREATE TABLE")
-    val (pCols, genCols) = SnapshotSql.partitionSpec(pTransforms, "CREATE TABLE")
+    val (pTransforms, clusterBy) = GraftCatalog.splitClusterBy(partitions.toSeq, "CREATE TABLE")
+    val (pCols, genCols) = GraftCatalog.partitionSpec(pTransforms, "CREATE TABLE")
     val declared = StructType(columns.map { c =>
       require(c.generationExpression() == null,
         s"GraftCatalog: explicit GENERATED columns are not supported (${c.name()}); " +
@@ -205,7 +205,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with StagingTabl
       case c if c.defaultValue() != null => c.name() -> c.defaultValue().getSql
     }.toMap
     // a TIME transform's generated column joins the schema with the
-    // transform's own type, exactly like the registry front end
+    // transform's own type (days/months/years → DATE, hours → TIMESTAMP)
     val genFields = genCols.keys.toSeq.sorted
       .filterNot(g => declared.fieldNames.contains(g)).map { g =>
         StructField(g,
@@ -261,18 +261,21 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with StagingTabl
           s"(${fieldNames.mkString(".")})")
       fieldNames.head
     }
+    // one ADD COLUMNS statement is ONE metadata-only commit however
+    // many columns it adds. ADD COLUMN … DEFAULT v: the default is both
+    // the write default and the frozen existence default every
+    // pre-evolution row reads — no file rewritten
+    val adds = changes.collect { case add: TableChange.AddColumn =>
+      require(add.position() == null,
+        s"GraftCatalog ADD COLUMNS: FIRST/AFTER positions are not supported")
+      (StructField(topLevel(add.fieldNames(), "ADD COLUMNS"), add.dataType(), nullable = true),
+        Option(add.defaultValue()).map(_.getSql))
+    }
+    if (adds.nonEmpty)
+      Snapshot.addColumns(spark, path, adds.map(_._1),
+        adds.collect { case (f, Some(d)) => f.name -> d }.toMap)
     changes.foreach {
-      case add: TableChange.AddColumn =>
-        require(add.position() == null,
-          s"GraftCatalog ADD COLUMNS: FIRST/AFTER positions are not supported")
-        val name = topLevel(add.fieldNames(), "ADD COLUMNS")
-        // ADD COLUMN … DEFAULT v: the default is both the write default
-        // and the frozen existence default every pre-evolution row
-        // reads — metadata only, no file rewritten
-        val defaults = Option(add.defaultValue())
-          .map(d => Map(name -> d.getSql)).getOrElse(Map.empty)
-        Snapshot.addColumns(spark, path,
-          Seq(StructField(name, add.dataType(), nullable = true)), defaults)
+      case _: TableChange.AddColumn => () // committed above
       case upd: TableChange.UpdateColumnDefaultValue =>
         // SET DEFAULT expr / DROP DEFAULT (delivered as an empty sql):
         // write default only — history never reinterprets
@@ -342,7 +345,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with StagingTabl
   override def dropTable(ident: Identifier): Boolean = {
     val path = pathFor(ident)
     if (!Snapshot.isSnapshotTable(spark, path)) false
-    else { fs.delete(new HPath(path), true); true }
+    else {
+      new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(new HPath(path), true)
+      true
+    }
   }
 
   override def renameTable(oldIdent: Identifier, newIdent0: Identifier): Unit = {
@@ -427,8 +434,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with StagingTabl
                     partitions: Array[Transform],
                     mode: StagedGraftTable.Mode,
                     properties: Map[String, String]): StagedTable = {
-    val (pTransforms, clusterBy) = SnapshotSql.splitClusterBy(partitions.toSeq, "CTAS")
-    val (pCols, genCols) = SnapshotSql.partitionSpec(pTransforms, "CTAS")
+    val (pTransforms, clusterBy) = GraftCatalog.splitClusterBy(partitions.toSeq, "CTAS")
+    val (pCols, genCols) = GraftCatalog.partitionSpec(pTransforms, "CTAS")
     val schema = StructType(columns.map(c =>
       StructField(c.name(), c.dataType(), c.nullable())))
     new StagedGraftTable(fullName(ident), pathFor(ident), schema, pCols, genCols, mode,
@@ -481,10 +488,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with StagingTabl
 }
 
 private object GraftCatalog {
-  /** The catalog keeps no property store — the manifest is the table
-    * metadata. Anything beyond the analyzer's own bookkeeping props is
-    * refused loudly rather than silently dropped.
-    */
   /** Keys Spark itself stuffs into the property map (plus our own
     * `version` surfaced by [[GraftTable.properties]]) — everything else
     * is a USER property carried verbatim in the manifest.
@@ -509,9 +512,56 @@ private object GraftCatalog {
     }
   }
 
-  def validateProperties(properties: util.Map[String, String]): Unit = {
-    val user = userProperties(properties)
-    require(user.isEmpty,
-      s"GraftCatalog: table properties are not supported here: ${user.keys.mkString(", ")}")
+  /** Split `CLUSTER BY` out of a transform list: Spark 4 delivers
+    * clustering as a `ClusterByTransform` riding the partitioning
+    * array. Returns (remaining transforms, clustering column names).
+    */
+  def splitClusterBy(partitioning: Seq[Transform],
+                     what: String): (Seq[Transform], Seq[String]) = {
+    import org.apache.spark.sql.connector.expressions.ClusterByTransform
+    val (cbs, rest) = partitioning.partition(_.isInstanceOf[ClusterByTransform])
+    val cols = cbs.flatMap { case cb: ClusterByTransform =>
+      cb.columnNames.map(r => r.fieldNames match {
+        case Array(one) => one
+        case other => throw new IllegalArgumentException(
+          s"$what: nested CLUSTER BY reference ${other.mkString(".")}")
+      })
+    }
+    (rest, cols)
+  }
+
+  /** The Scala case classes behind Transform are private[sql]; the
+    * public face is the Java interface. Identity transforms partition
+    * on the named column; the TIME transforms (`days/months/years/
+    * hours(ts)` — the reference's DAY/MONTH-partitioned BigQuery
+    * landing tables) become a VISIBLE generated column (`ts_day`, …)
+    * the writers derive on every load. Returns (partition columns in
+    * declared order, generated-column name → generator SQL).
+    */
+  def partitionSpec(partitioning: Seq[Transform],
+                    what: String): (Seq[String], Map[String, String]) = {
+    val gen = Map.newBuilder[String, String]
+    val cols = partitioning.map { t =>
+      val src = t.references match {
+        case Array(ref) => ref.fieldNames match {
+          case Array(one) => one
+          case other => throw new IllegalArgumentException(
+            s"$what: nested partition reference ${other.mkString(".")}")
+        }
+        case _ => throw new IllegalArgumentException(
+          s"$what: unsupported PARTITIONED BY transform $t")
+      }
+      t.name match {
+        case "identity" => src
+        case "days"   => gen += s"${src}_day" -> s"CAST(date_trunc('DAY', `$src`) AS DATE)"; s"${src}_day"
+        case "months" => gen += s"${src}_month" -> s"CAST(date_trunc('MONTH', `$src`) AS DATE)"; s"${src}_month"
+        case "years"  => gen += s"${src}_year" -> s"CAST(date_trunc('YEAR', `$src`) AS DATE)"; s"${src}_year"
+        case "hours"  => gen += s"${src}_hour" -> s"date_trunc('HOUR', `$src`)"; s"${src}_hour"
+        case other => throw new IllegalArgumentException(
+          s"$what: unsupported PARTITIONED BY transform $other($src) " +
+            "(identity, days, months, years, hours)")
+      }
+    }
+    (cols, gen.result())
   }
 }

@@ -30,7 +30,7 @@ import graft.operators.{Snapshot, SnapshotStats}
   * session without the extensions reads correctly, just slower.
   */
 final case class GraftTable(tableName: String, path: String, manifest: Snapshot.Manifest,
-                            hideGenerated: Boolean = false)
+                            hideGenerated: Boolean = false, writeTarget: Boolean = false)
     extends Table with SupportsRead with SupportsWrite with SupportsDelete
     with SupportsPartitionManagement {
 
@@ -63,8 +63,14 @@ final case class GraftTable(tableName: String, path: String, manifest: Snapshot.
 
   override def version(): String = manifest.version.toString
 
+  /** A write target reports none: the engine's own write path checks
+    * every CHECK constraint before any file lands, and a reported one
+    * would make Spark add a second, row-at-a-time invariant with an
+    * error of its own.
+    */
   override def constraints(): Array[org.apache.spark.sql.connector.catalog.constraints.Constraint] =
-    manifest.constraints.toSeq.sortBy(_._1).map { case (n, p) =>
+    if (writeTarget) Array.empty
+    else manifest.constraints.toSeq.sortBy(_._1).map { case (n, p) =>
       org.apache.spark.sql.connector.catalog.constraints.Constraint
         .check(n).predicateSql(p).build()
         : org.apache.spark.sql.connector.catalog.constraints.Constraint
@@ -80,13 +86,11 @@ final case class GraftTable(tableName: String, path: String, manifest: Snapshot.
   // the capability check runs. Stock sessions keep static overwrite +
   // the Scala replacePartitions API, refusing dynamic mode loudly.
   //
-  // AUTOMATIC_SCHEMA_EVOLUTION arms `MERGE … WITH SCHEMA EVOLUTION` on
-  // the catalog route: the analyzer's own rule
-  // (ResolveMergeIntoSchemaEvolution) computes the source-minus-target
-  // column set and routes it through [[GraftCatalog.alterTable]] —
-  // i.e. [[Snapshot.addColumns]], the SAME metadata-only commit the
-  // registry front end makes (SnapshotSql.merge), so both routes
-  // evolve identically: no file rewritten, pre-evolution files read
+  // AUTOMATIC_SCHEMA_EVOLUTION arms `MERGE … WITH SCHEMA EVOLUTION`:
+  // the analyzer's own rule (ResolveMergeIntoSchemaEvolution) computes
+  // the source-minus-target column set and routes it through
+  // [[GraftCatalog.alterTable]] — i.e. [[Snapshot.addColumns]], one
+  // metadata-only commit: no file rewritten, pre-evolution files read
   // the new columns as null.
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(

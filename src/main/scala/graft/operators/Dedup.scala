@@ -490,7 +490,7 @@ object Dedup {
     // null ids never meet an equi-join key, so they cannot link
     // components in EITHER tier; dropped up front (the driver tier
     // would otherwise have to order null, which Spark's min never does)
-    val edgesPlan = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .where(col("src").isNotNull && col("dst").isNotNull)
     // TIERED, like every size-dependent strategy in Spark (broadcast
@@ -506,22 +506,32 @@ object Dedup {
     // The final labels→ids join is the same broadcast either way.
     // The gate and the collect are ONE job: limit(max+1).collect()
     // returns the complete edge set iff it fits the tier (a result of
-    // <= max rows under a max+1 limit is necessarily exhaustive), so
-    // the pair pipeline — the expensive part — is evaluated once, not
-    // once for a count and again for the collect.
-    val probe = edgesPlan.limit(
-      math.min(driverMaxEdges + 1, Int.MaxValue.toLong).toInt).collect()
-    if (probe.length <= driverMaxEdges) {
-      driverCanonicalize(probe, pairs.schema(aCol).dataType,
-        edgesPlan.sparkSession) match {
-        case Some(labelsDf) =>
-          return ids.select(col(idCol).as("id"))
-            .join(labelsDf, Seq("id"), "left")
-            .select(col("id"), coalesce(col("canonical_id"), col("id")).as("canonical_id"))
-        case None => () // unsupported id type: fall through to the loop
+    // <= max rows under a max+1 limit is necessarily exhaustive). The
+    // edges are cached BEFORE the probe, so the pair pipeline — the
+    // expensive part — is evaluated once whichever tier runs: the
+    // probe's pass fills the cache the distributed loop reads. (Edges
+    // over driver-local rows have no pipeline to save; they cache only
+    // for the loop.) A threshold whose max+1 does not fit an Int
+    // cannot be probed exhaustively and goes straight to the
+    // distributed tier.
+    val driverLocal = edges.queryExecution.optimizedPlan.collectLeaves()
+      .forall(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    if (!driverLocal) edges.persist()
+    if (driverMaxEdges < Int.MaxValue) {
+      val probe = edges.limit((driverMaxEdges + 1).toInt).collect()
+      if (probe.length <= driverMaxEdges) {
+        driverCanonicalize(probe, pairs.schema(aCol).dataType,
+          edges.sparkSession) match {
+          case Some(labelsDf) =>
+            edges.unpersist()
+            return ids.select(col(idCol).as("id"))
+              .join(labelsDf, Seq("id"), "left")
+              .select(col("id"), coalesce(col("canonical_id"), col("id")).as("canonical_id"))
+          case None => () // unsupported id type: fall through to the loop
+        }
       }
     }
-    val edges = edgesPlan.persist()
+    if (driverLocal) edges.persist()
     // only edge-touched nodes need propagation — a vanishing fraction of
     // the corpus (near-dups are rare by construction); everything else
     // is its own canonical id and never enters the loop

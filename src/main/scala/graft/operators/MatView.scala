@@ -1105,16 +1105,24 @@ object MatView {
     // them (a) keeps the no-op-window contract (empty delta → metadata
     // commit, no file rewrite) and (b) keeps the fold's delta side
     // O(truly-changed groups). Per column: count/sum neutral iff the
-    // signed sum is 0 or NULL; MIN/MAX neutral iff the window's insert
-    // and delete extrema agree (min(S∖D∪I) = min(S) when min(I) =
-    // min(D) and counts cancel: a deleted minimum is re-inserted, and
-    // anything else deleted sits above it — provably no state change);
-    // KMV neutral only when the window touched nothing (bottom-k
-    // equality of ins/del hashes does NOT imply the sketch survives —
-    // a deleted mid-sketch hash can hide behind matching bottom-ks).
+    // signed sum is 0 or NULL; MIN/MAX, with ONE feed, neutral iff the
+    // window's insert and delete extrema agree (min(S∖D∪I) = min(S)
+    // when min(I) = min(D) and counts cancel: a deleted minimum is
+    // re-inserted, and anything else deleted sits above it — provably
+    // no state change, because a single feed's deletes are a
+    // sub-multiset of the prior state). With SEVERAL feeds a
+    // telescoped replay carries transient rows (inserted by one feed,
+    // deleted by a later one), so equal extrema prove nothing: MIN/MAX
+    // is neutral only when the window touched neither side. KMV
+    // neutral only when the window touched nothing (bottom-k equality
+    // of ins/del hashes does NOT imply the sketch survives — a deleted
+    // mid-sketch hash can hide behind matching bottom-ks).
+    val multiFeed = feeds.size > 1
     val effective = shape.cols.flatMap {
       case (name, CountStar | CountOf(_) | SumOf(_)) =>
         Seq(coalesce(col(s"__d_$name") =!= 0, lit(false)))
+      case (name, MinOf(_) | MaxOf(_)) if multiFeed =>
+        Seq(col(s"__ins_$name").isNotNull || col(s"__del_$name").isNotNull)
       case (name, MinOf(_) | MaxOf(_)) =>
         Seq(!(col(s"__ins_$name") <=> col(s"__del_$name")))
       case (name, KmvOf(_, _)) =>
@@ -1257,32 +1265,43 @@ object MatView {
     // query's child at the new source version against the (broadcast-
     // tiny) affected key set, then the original aggregation — bitwise
     // the recompute's result for exactly those groups. The key
-    // expressions are projected as `__gk_<i>` columns first so
-    // expression keys (and duplicate raw names) join/group cleanly.
+    // expressions and every aggregate's input are projected as
+    // `__gk_<i>` / `__ra_<name>` columns BEFORE the child is re-aliased,
+    // so expression keys, duplicate raw names and the defining query's
+    // own table qualifiers (`MIN(l.price)` over `lineitem l`) all
+    // resolve against the child, never against the alias.
     val gkCols = shape.keys.zipWithIndex.map { case ((_, ke), i) =>
       ColumnBridge.column(ke).as(s"__gk_$i") }
-    val src = childAtNew.select(col("*") +: gkCols: _*).alias("__src")
+    val inputs = shape.cols.collect {
+      case (name, CountOf(e)) => ColumnBridge.column(e).as(s"__ra_$name")
+      case (name, SumOf(e)) => ColumnBridge.column(e).as(s"__ra_$name")
+      case (name, MinOf(e)) => ColumnBridge.column(e).as(s"__ra_$name")
+      case (name, MaxOf(e)) => ColumnBridge.column(e).as(s"__ra_$name")
+      case (name, DistinctOf(e)) => ColumnBridge.column(e).as(s"__ra_$name")
+      case (name, AvgOf(e)) => ColumnBridge.column(e).as(s"__ra_$name")
+      case (name, KmvOf(e, _)) => ColumnBridge.column(e).as(s"__ra_$name")
+    }
+    val src = childAtNew.select(gkCols ++ inputs: _*).alias("__src")
     val aff = affected.alias("__aff")
     val semiOn = shape.keys.zipWithIndex.map { case ((sn, _), i) =>
       col(s"__src.__gk_$i") <=> col(s"__aff.$sn")
     }.reduce(_ && _)
     val reAggs = shape.cols.collect {
       case (name, CountStar) => count(lit(1)).cast(curSchema(name).dataType).as(name)
-      case (name, CountOf(e)) =>
-        count(ColumnBridge.column(e)).cast(curSchema(name).dataType).as(name)
-      case (name, SumOf(e)) =>
-        sum(ColumnBridge.column(e)).cast(curSchema(name).dataType).as(name)
-      case (name, MinOf(e)) =>
-        min(ColumnBridge.column(e)).cast(curSchema(name).dataType).as(name)
-      case (name, MaxOf(e)) =>
-        max(ColumnBridge.column(e)).cast(curSchema(name).dataType).as(name)
-      case (name, DistinctOf(e)) =>
-        count_distinct(ColumnBridge.column(e))
-          .cast(curSchema(name).dataType).as(name)
-      case (name, AvgOf(e)) =>
-        avg(ColumnBridge.column(e)).cast(curSchema(name).dataType).as(name)
-      case (name, KmvOf(e, k)) =>
-        call_function("graft_bottomk", ColumnBridge.column(e), lit(k))
+      case (name, CountOf(_)) =>
+        count(col(s"__ra_$name")).cast(curSchema(name).dataType).as(name)
+      case (name, SumOf(_)) =>
+        sum(col(s"__ra_$name")).cast(curSchema(name).dataType).as(name)
+      case (name, MinOf(_)) =>
+        min(col(s"__ra_$name")).cast(curSchema(name).dataType).as(name)
+      case (name, MaxOf(_)) =>
+        max(col(s"__ra_$name")).cast(curSchema(name).dataType).as(name)
+      case (name, DistinctOf(_)) =>
+        count_distinct(col(s"__ra_$name")).cast(curSchema(name).dataType).as(name)
+      case (name, AvgOf(_)) =>
+        avg(col(s"__ra_$name")).cast(curSchema(name).dataType).as(name)
+      case (name, KmvOf(_, k)) =>
+        call_function("graft_bottomk", col(s"__ra_$name"), lit(k))
           .cast(curSchema(name).dataType).as(name)
     }
     val rederived = src.join(broadcast(aff), semiOn, "left_semi")

@@ -2863,7 +2863,7 @@ object Snapshot {
   private def validateDefault(spark: SparkSession, col: String,
                               dt: org.apache.spark.sql.types.DataType,
                               sql: String): (String, String) = {
-    SnapshotSql.refuseSubqueries(
+    graft.plans.GraftDmlCapture.refuseSubqueries(
       spark.sessionState.sqlParser.parseExpression(sql), s"DEFAULT for $col")
     val probe =
       try spark.range(1).select(lit(1).as("__graft_probe"))
@@ -3603,20 +3603,21 @@ object Snapshot {
 
   // --------------------------------------------------- row-level DML
 
-  /** Execute a SQL-text DML statement (`DELETE FROM … WHERE …`,
-    * `UPDATE … SET … WHERE …`, `MERGE INTO … USING …`) against the
-    * `tables` registry of snapshot paths — the reference's maintenance
-    * statements verbatim (consumo_detalle.py:317-340,
-    * funnel_live.py:106-174). See [[SnapshotSql]].
+  /** Execute one SQL statement (DML, DDL, CTAS/INSERT, maintenance)
+    * against the `tables` registry of snapshot paths — the reference's
+    * maintenance statements verbatim (consumo_detalle.py:317-340,
+    * funnel_live.py:106-174). Returns the target table's version after
+    * the statement. Registered names bind into the catalog route; see
+    * [[SnapshotSql]].
     */
   def sql(spark: SparkSession, sqlText: String, tables: Map[String, String]): Long =
     SnapshotSql(spark, sqlText, tables)
 
-  /** Execute a SQL-text QUERY (SELECT, including CTEs, subqueries and
-    * time travel — `VERSION AS OF n` / `FOR SYSTEM_TIME AS OF ts`)
-    * with registered snapshot-table names resolved to native
-    * manifest-backed scans. Unregistered names still resolve against
-    * the session catalog (temp views). See [[SnapshotSql.query]].
+  /** Execute a SQL-text QUERY (SELECT, including CTEs, subqueries,
+    * `table_changes` and time travel — `VERSION AS OF n` / `FOR
+    * SYSTEM_TIME AS OF ts`) with registered snapshot-table names
+    * resolved to native manifest-backed scans. Unregistered names still
+    * resolve against the session catalog (temp views).
     */
   def sqlQuery(spark: SparkSession, sqlText: String,
                tables: Map[String, String]): DataFrame =
@@ -3630,16 +3631,14 @@ object Snapshot {
     */
   def sqlScript(spark: SparkSession, sqlText: String,
                 tables: Map[String, String]): Option[DataFrame] =
-    SnapshotSql.script(spark, sqlText, tables)
+    SnapshotSql.script(spark, sqlText, Some(tables))
 
   /** Registry-free script: statements resolve through the session's
-    * catalogs ([[graft.catalog.GraftCatalog]] names, the maintenance
-    * dialect parser, DML capture) — the form a ported script actually
-    * ships once its tables live in a catalog. See
-    * [[SnapshotSql.scriptSql]].
+    * catalogs ([[graft.catalog.GraftCatalog]] names) — the form a
+    * ported script ships once its tables live in a catalog.
     */
   def sqlScript(spark: SparkSession, sqlText: String): Option[DataFrame] =
-    SnapshotSql.scriptSql(spark, sqlText)
+    SnapshotSql.script(spark, sqlText, None)
 
   /** Row-level DELETE by predicate, file-granular — the plain-SQL
     * `DELETE FROM t WHERE pred` the reference gets from BigQuery

@@ -1,543 +1,138 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedAttribute, UnresolvedIdentifier, UnresolvedRelation, UnresolvedTable}
-import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression, InSubquery, ListQuery, SubqueryExpression}
-import org.apache.spark.sql.catalyst.plans.logical.{AddColumns, Assignment, CreateTableAsSelect, DeleteAction, DeleteFromTable, InsertAction, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeIntoTable, ReplaceTableAsSelect, SubqueryAlias, UpdateAction, UpdateStarAction, UpdateTable}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.graftbridge.{ColumnBridge, PlanBridge}
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedIdentifier, UnresolvedRelation, UnresolvedTable, UnresolvedTableOrView, UnresolvedTableValuedFunction}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.{Command, InsertIntoStatement, LogicalPlan, ParsedStatement, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.graftbridge.PlanBridge
+import org.apache.spark.unsafe.types.UTF8String
 
-/** SQL-text front end for snapshot-table maintenance.
+import graft.catalog.RegistryBinding
+import graft.plans.{GraftDmlCapture, GraftMaintenanceCommand}
+
+/** `Snapshot.sql*`: SQL text against a `tables` registry (name →
+  * snapshot-table path), e.g. the reference's literal maintenance
+  * statements (consumo_detalle.py:317-340, funnel_live.py:155-172).
   *
-  * The reference's table maintenance is literal SQL strings handed to
-  * the warehouse — `DELETE FROM t WHERE fecha >= cutoff`
-  * (consumo_detalle.py:317-340), and an aliased MERGE with explicit
-  * assignment arms (funnel_live.py:155-172):
-  *
-  * {{{
-  *   MERGE target t_final USING updates t_update
-  *   ON t_final.id = t_update.id
-  *   WHEN MATCHED THEN UPDATE SET minutes = t_update.minutes, …
-  *   WHEN NOT MATCHED THEN INSERT (id, fecha, …) VALUES (id, fecha, …)
-  * }}}
-  *
-  * This front end lets a user porting a reference script hand over
-  * that text unchanged (modulo table names): the SESSION parser does
-  * all the parsing (no hand-rolled SQL grammar) — `parsePlan` yields
-  * the standard `DeleteFromTable` / `UpdateTable` / `MergeIntoTable`
-  * nodes, whose predicates and assignments are rewrapped as Columns
-  * and routed to the engine tiers ([[Snapshot.delete]] with its
-  * deletion-vector path, [[Snapshot.update]], [[Snapshot.mergeById]]
-  * for `SET * / INSERT *`, [[Snapshot.mergeArms]] for explicit arms) —
-  * so SQL-text DML and the Scala API are ONE code path with one set of
-  * semantics, and everything the session parser accepts in a predicate
-  * (BETWEEN, IN lists, nested boolean algebra, casts, functions) works
-  * here for free.
-  *
-  * Statements execute against the `tables` registry (logical name →
-  * snapshot-table path); a MERGE source may be a registered snapshot
-  * table or any catalog/temp view. Refused with a clear message:
-  * unknown tables/columns, foreign qualifiers, subquery predicates,
-  * conditional merge arms, and arm shapes beyond one action per arm.
+  * The catalog route is the one SQL front end; this object only BINDS
+  * the registry. The statement's target and every reference whose name
+  * is a key of `tables` is rewritten to `graft_registry.<call>.<name>`,
+  * which [[RegistryBinding]] resolves to the registered path for the
+  * duration of the call — so a registered name wins over a temp view,
+  * and any other name resolves against the session catalog as usual.
+  * The session must carry `graft.plans.GraftExtensions`, whose parser
+  * and analyzer rules execute every statement.
   */
 object SnapshotSql {
 
-  // Maintenance verbs are the one place the session parser can't help:
-  // vanilla Spark SQL has no VACUUM / OPTIMIZE / DESCRIBE HISTORY
-  // grammar (they are lakehouse-dialect statements), so these three are
-  // matched textually — the shapes are single-identifier with at most
-  // one optional clause, which a regex covers without a grammar. The
-  // reference's K2/K3 maintenance loops (delete-and-replace windows,
-  // hourly merges) run forever; routing retention and compaction
-  // through the same SQL surface makes a ported script SQL end to end.
-  private val VacuumRe =
-    """(?is)\s*VACUUM\s+([\w.]+)\s*(?:RETAIN\s+(\d+)\s+(VERSIONS|DAYS|HOURS)\s*)?;?\s*""".r
-  private val OptimizeRe =
-    """(?is)\s*OPTIMIZE\s+([\w.]+)\s*(FULL\s*)?(?:WHERE\s+(.+?)\s*)?(?:ZORDER\s+BY\s*\(([^)]+)\)\s*)?;?\s*""".r
-  private val HistoryRe =
-    """(?is)\s*DESCRIBE\s+HISTORY\s+([\w.]+)\s*;?\s*""".r
-  private val DetailRe =
-    """(?is)\s*DESCRIBE\s+DETAIL\s+([\w.]+)\s*;?\s*""".r
-  private val ImportRe =
-    """(?is)\s*CREATE\s+TABLE\s+([\w.]+)\s+FROM\s+PARQUET\s+'([^']+)'\s*(?:PARTITIONED\s+BY\s*\(([^)]+)\)\s*)?;?\s*""".r
-  private val CloneRe =
-    """(?is)\s*CREATE\s+TABLE\s+([\w.]+)\s+(SHALLOW|DEEP)\s+CLONE\s+([\w.]+)\s*(?:VERSION\s+AS\s+OF\s+('?[\w.\-]+'?)\s*|TIMESTAMP\s+AS\s+OF\s+(\S+(?:\s+\S+)*?)\s*)?;?\s*""".r
-  private val RestoreRe =
-    """(?is)\s*RESTORE\s+(?:TABLE\s+)?([\w.]+)\s+TO\s+(VERSION|TIMESTAMP)\s+AS\s+OF\s+(\S+(?:\s+\S+)*?)\s*;?\s*""".r
-  private val CreateTagRe =
-    """(?is)\s*ALTER\s+TABLE\s+([\w.]+)\s+CREATE\s+(OR\s+REPLACE\s+)?TAG\s+('?[\w.\-]+'?)\s*(?:AS\s+OF\s+VERSION\s+('?[\w.\-]+'?)\s*)?;?\s*""".r
-  private val DropTagRe =
-    """(?is)\s*ALTER\s+TABLE\s+([\w.]+)\s+DROP\s+TAG\s+(IF\s+EXISTS\s+)?('?[\w.\-]+'?)\s*;?\s*""".r
-  private val CreateBranchRe =
-    """(?is)\s*ALTER\s+TABLE\s+([\w.]+)\s+CREATE\s+BRANCH\s+('?[\w.\-]+'?)\s*;?\s*""".r
-  private val DropBranchRe =
-    """(?is)\s*ALTER\s+TABLE\s+([\w.]+)\s+DROP\s+BRANCH\s+(IF\s+EXISTS\s+)?('?[\w.\-]+'?)\s*;?\s*""".r
-  private val MergeBranchRe =
-    """(?is)\s*ALTER\s+TABLE\s+([\w.]+)\s+MERGE\s+BRANCH\s+('?[\w.\-]+'?)\s*;?\s*""".r
-  private val CreateMvRe =
-    """(?is)\s*CREATE\s+MATERIALIZED\s+VIEW\s+([\w.]+)\s+AS\s+(.+?)\s*;?\s*""".r
-  private val RefreshMvRe =
-    """(?is)\s*REFRESH\s+MATERIALIZED\s+VIEW\s+([\w.]+)\s*;?\s*""".r
-  private val AlterMvRefreshRe =
-    """(?is)\s*ALTER\s+MATERIALIZED\s+VIEW\s+([\w.]+)\s+SET\s+REFRESH\s+EVERY\s+(\d+)\s+TICKS\s*;?\s*""".r
-  private val AlterMvUnsetRe =
-    """(?is)\s*ALTER\s+MATERIALIZED\s+VIEW\s+([\w.]+)\s+UNSET\s+REFRESH\s*;?\s*""".r
-  private val RebaseBranchRe =
-    """(?is)\s*ALTER\s+TABLE\s+([\w.]+)\s+REBASE\s+BRANCH\s+('?[\w.\-]+'?)\s*;?\s*""".r
-  private val AnalyzeRe =
-    """(?is)\s*ANALYZE\s+TABLE\s+([\w.]+)\s+COMPUTE\s+STATISTICS\s*(NOSCAN|FOR\s+ALL\s+COLUMNS|FOR\s+COLUMNS\s+([\w\s,]+?))?\s*;?\s*""".r
+  /** Execute one statement; returns its target table's version after it. */
+  def apply(spark: SparkSession, sqlText: String, tables: Map[String, String]): Long = {
+    val (_, parsed) = run(spark, Seq(sqlText), Some(tables), queryAllowed = false)
+    target(parsed).flatMap(registered(tables, _))
+      .flatMap(Snapshot.latestVersion(spark, _)).getOrElse(0L)
+  }
 
-  private def unquoteTag(s: String): String =
-    s.stripPrefix("'").stripSuffix("'")
+  /** Execute one query (or result-producing statement) with registered names bound. */
+  def query(spark: SparkSession, sqlText: String, tables: Map[String, String]): DataFrame =
+    run(spark, Seq(sqlText), Some(tables), queryAllowed = true)._1
 
-  private def maintenance(spark: SparkSession, sqlText: String,
-                          tables: Map[String, String]): Option[Long] = sqlText match {
-    case VacuumRe(ident, retain, unit) =>
-      val path = pathOf(ident, tables)
-      Option(unit).map(_.toUpperCase) match {
-        case None =>
-          // bare VACUUM: the table's own retention policy, same shared
-          // body the catalog dialect calls
-          Snapshot.vacuumPolicy(spark, path)
-        case Some("VERSIONS") =>
-          Snapshot.vacuum(spark, path, keepVersions = retain.toInt)
-        case Some(timeUnit) =>
-          // age-based retention: the latest version always survives;
-          // everything younger than the horizon survives with it
-          val micros = retain.toLong *
-            (if (timeUnit == "DAYS") 86400L * 1000000L else 3600L * 1000000L)
-          Snapshot.vacuum(spark, path, keepVersions = 1,
-            retainMicros = Some(micros))
-      }
-      Some(Snapshot.latestVersion(spark, path).getOrElse(0L))
-    case OptimizeRe(ident, full, whereText, zorder) =>
-      val path = pathOf(ident, tables)
-      val zcols = Option(zorder).toSeq
-        .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-      val where = Option(whereText).map { t =>
-        refuseSubqueries(spark.sessionState.sqlParser.parseExpression(t), "OPTIMIZE WHERE")
-        org.apache.spark.sql.functions.expr(t)
-      }
-      Snapshot.compact(spark, path, minFiles = if (full != null) 1 else 0,
-        zorderBy = zcols, where = where)
-      Some(Snapshot.latestVersion(spark, path).getOrElse(0L))
-    case ImportRe(dst, dir, pcols) =>
-      // in-place parquet import: zero bytes moved, footer stats only
-      Some(Snapshot.importParquet(spark, dir, pathOf(dst, tables),
-        Option(pcols).toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)))
-    case CloneRe(dst, kind, src, ver, ts) =>
-      // SHALLOW: zero-copy fork (the clone manifest references the
-      // source's files as external refs — no data moves). DEEP:
-      // materialize the pinned version (distributed byte-copy, local
-      // refs — durable against source vacuum).
-      val srcPath = pathOf(src, tables)
-      val pinned = (Option(ver), Option(ts)) match {
-        case (Some(v), _) => Some(Snapshot.resolveVersionSpec(spark, srcPath, v))
-        case (None, Some(raw)) =>
-          val micros = evalTimestampMicros(spark,
-            spark.sessionState.sqlParser.parseExpression(raw))
-          Some(Snapshot.versionAtTimestamp(spark, srcPath, micros).getOrElse(
-            throw new IllegalArgumentException(
-              s"Snapshot.sql CLONE: no version of $src at or before $raw")))
-        case _ => None
-      }
-      if (kind.equalsIgnoreCase("DEEP"))
-        Some(Snapshot.deepClone(spark, srcPath, pathOf(dst, tables), pinned))
-      else Some(Snapshot.shallowClone(spark, srcPath, pathOf(dst, tables), pinned))
-    case RestoreRe(ident, kind, raw) =>
-      val path = pathOf(ident, tables)
-      val version = kind.toUpperCase match {
-        case "VERSION" => Snapshot.resolveVersionSpec(spark, path, raw)
-        case _ =>
-          val micros = evalTimestampMicros(spark,
-            spark.sessionState.sqlParser.parseExpression(raw))
-          Snapshot.versionAtTimestamp(spark, path, micros).getOrElse(
-            throw new IllegalArgumentException(
-              s"Snapshot.sql RESTORE: no version of $ident committed at or before $raw"))
-      }
-      Some(Snapshot.restore(spark, path, version))
-    case CreateTagRe(ident, replace, name, verSpec) =>
-      val path = pathOf(ident, tables)
-      Some(Snapshot.createTag(spark, path, unquoteTag(name),
-        Option(verSpec).map(v => Snapshot.resolveVersionSpec(spark, path, v)),
-        replace != null))
-    case DropTagRe(ident, ifExists, name) =>
-      val path = pathOf(ident, tables)
-      Some(Snapshot.dropTag(spark, path, unquoteTag(name), ifExists != null))
-    case CreateBranchRe(ident, name) =>
-      // writable fork: the branch is its own snapshot table at
-      // Snapshot.branchPath — register that path to read/write it
-      Some(Snapshot.createBranch(spark, pathOf(ident, tables), unquoteTag(name)))
-    case DropBranchRe(ident, ifExists, name) =>
-      Some(Snapshot.dropBranch(spark, pathOf(ident, tables), unquoteTag(name),
-        ifExists != null))
-    case MergeBranchRe(ident, name) =>
-      // fast-forward the parent to the branch head (refuses loudly on a
-      // diverged parent); the branch retires in the same commit
-      Some(Snapshot.mergeBranch(spark, pathOf(ident, tables), unquoteTag(name)))
-    case CreateMvRe(ident, query) =>
-      // first-class MV: the defining SQL and the source watermark live
-      // in the view's own manifest; source names resolve through the
-      // SAME registry map as every other statement
-      Some(MatView.create(spark, pathOf(ident, tables), query,
-        parts => pathOf(parts.mkString("."), tables)))
-    case AlterMvRefreshRe(ident, n) =>
-      // declared maintenance policy: graft.mv.refreshEvery rides the
-      // table properties like graft.vacuum.* — the fleet tick
-      // (pipelines.Maintenance) reads it, no per-table knowledge
-      val path = pathOf(ident, tables)
-      require(Snapshot.latestManifest(spark, path).exists(MatView.isMatView),
-        s"ALTER MATERIALIZED VIEW: not a materialized view: $ident")
-      Some(Snapshot.setProperties(spark, path, Map("graft.mv.refreshEvery" -> n)))
-    case AlterMvUnsetRe(ident) =>
-      val path = pathOf(ident, tables)
-      require(Snapshot.latestManifest(spark, path).exists(MatView.isMatView),
-        s"ALTER MATERIALIZED VIEW: not a materialized view: $ident")
-      Some(Snapshot.setProperties(spark, path, Map.empty,
-        unset = Seq("graft.mv.refreshEvery")))
-    case RefreshMvRe(ident) =>
-      // incremental when the shape allows (additive rollup over the
-      // change feed), full pinned recompute otherwise
-      MatView.refresh(spark, pathOf(ident, tables),
-        parts => pathOf(parts.mkString("."), tables))
-      Some(Snapshot.latestVersion(spark, pathOf(ident, tables)).get)
-    case RebaseBranchRe(ident, name) =>
-      // replay the branch's deltas onto the parent's moved head — the
-      // recovery verb a diverged-parent merge refusal points at
-      Some(Snapshot.rebaseBranch(spark, pathOf(ident, tables), unquoteTag(name)))
-    case AnalyzeRe(ident, clause, colsRaw) =>
-      // COMPUTE STATISTICS [NOSCAN]: table rows/bytes are already
-      // metadata-exact — verify the table, commit nothing. FOR [ALL]
-      // COLUMNS: the one-pass NDV job for the cost-based optimizer.
-      val path = pathOf(ident, tables)
-      Option(clause).map(_.trim.toUpperCase.replaceAll("\\s+", " ")) match {
-        case None | Some("NOSCAN") =>
-          Some(Snapshot.latestVersion(spark, path).getOrElse(
-            throw new IllegalArgumentException(s"not a snapshot table: $path")))
-        case Some("FOR ALL COLUMNS") => Some(Snapshot.analyze(spark, path))
-        case Some(_) =>
-          val cols = colsRaw.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-          // a list that trims to empty must be a parse error, never a
-          // silent analyze-everything (a full-scan surprise at 100 TB)
-          require(cols.nonEmpty,
-            s"ANALYZE … FOR COLUMNS: no column names in '$colsRaw'")
-          Some(Snapshot.analyze(spark, path, cols))
-      }
+  /** Execute a SCRIPT: statements run in order, each individually
+    * atomic (a failure stops the script, earlier ones stay committed),
+    * at most one SELECT and only last; its (or a closing DESCRIBE's)
+    * rows are the result. `tables = None` binds no registry.
+    */
+  def script(spark: SparkSession, sqlText: String,
+             tables: Option[Map[String, String]]): Option[DataFrame] = {
+    val stmts = splitStatements(sqlText)
+    require(stmts.nonEmpty, "Snapshot.sqlScript: empty script")
+    val (df, parsed) = run(spark, stmts, tables, queryAllowed = true)
+    Some(df).filter(_ => isQuery(parsed) || parsed.output.nonEmpty)
+  }
+
+  private def isQuery(p: LogicalPlan): Boolean =
+    !p.isInstanceOf[Command] && !p.isInstanceOf[ParsedStatement]
+
+  /** The one statement loop; returns the last statement's DataFrame and parsed plan. */
+  private def run(spark: SparkSession, stmts: Seq[String], tables: Option[Map[String, String]],
+                  queryAllowed: Boolean): (DataFrame, LogicalPlan) = {
+    require(spark.sessionState.analyzer.extendedResolutionRules.exists(_.isInstanceOf[GraftDmlCapture]),
+      "Snapshot.sql needs a session with spark.sql.extensions=graft.plans.GraftExtensions " +
+        "(graft.Engine.session builds one)")
+    def loop(bind: LogicalPlan => LogicalPlan) = stmts.zipWithIndex.map { case (stmt, i) =>
+      val parsed = spark.sessionState.sqlParser.parsePlan(stmt)
+      require(!isQuery(parsed) || queryAllowed, "Snapshot.sql supports DELETE / UPDATE / " +
+        "MERGE / INSERT / CREATE / ALTER / TRUNCATE / DROP TABLE and maintenance statements, " +
+        s"got ${parsed.nodeName} (for SELECT, use Snapshot.sqlQuery)")
+      require(!isQuery(parsed) || i == stmts.size - 1,
+        s"Snapshot.sqlScript: SELECT must be the script's final statement " +
+          s"(statement ${i + 1} of ${stmts.size} is a query whose result would be dropped)")
+      (PlanBridge.dataFrame(spark, bind(parsed)), parsed)
+    }.last
+    tables match {
+      case None => loop(identity)
+      case Some(reg) => RegistryBinding.withBinding(spark, reg)(ns => loop(bind(spark, _, reg, ns)))
+    }
+  }
+
+  private def registered(tables: Map[String, String], name: String): Option[String] =
+    tables.collectFirst { case (k, p) if k.equalsIgnoreCase(name) => p }
+
+  /** The table a statement writes: a maintenance command's table, else
+    * the first table name in pre-order (DML/DDL targets precede their
+    * sources among a command's children).
+    */
+  private def target(plan: LogicalPlan): Option[String] = plan match {
+    case c: GraftMaintenanceCommand => Some(c.nameParts.mkString("."))
+    case i: InsertIntoStatement => target(i.table)
+    case _: Command | _: UnresolvedRelation => plan.collectFirst {
+      case t: UnresolvedTable => t.multipartIdentifier.mkString(".")
+      case t: UnresolvedTableOrView => t.multipartIdentifier.mkString(".")
+      case t: UnresolvedIdentifier => t.nameParts.mkString(".")
+      case r: UnresolvedRelation => r.multipartIdentifier.mkString(".")
+    }
     case _ => None
   }
 
-  /** Parse and execute one DML statement; returns the committed
-    * version (unchanged if nothing matched).
-    */
-  def apply(spark: SparkSession, sqlText: String,
-            tables: Map[String, String]): Long = maintenance(spark, sqlText, tables).getOrElse {
-    spark.sessionState.sqlParser.parsePlan(sqlText) match {
-
-      case DeleteFromTable(rel, cond) =>
-        val (names, path) = resolveTable(rel, tables)
-        cond match {
-          // `DELETE ... WHERE k IN (SELECT ...)`: the subquery resolves
-          // through the REGISTRY (like any front-end SELECT) and the
-          // delete routes through [[Snapshot.deleteMatching]] — one
-          // distributed equi-join, then the standard delete tiers,
-          // never a collected value list. Single bare-column
-          // uncorrelated shape only; anything else keeps the loud
-          // refusal in `predicate`.
-          case InSubquery(Seq(key: UnresolvedAttribute), l: ListQuery) =>
-            val keyName = singleName(key, names: _*)
-            Snapshot.deleteMatching(spark, path, keyName,
-              resolveQuery(spark, l.plan, tables))
-          case _ =>
-            Snapshot.delete(spark, path, predicate(cond, names))
-        }
-
-      case UpdateTable(rel, assignments, cond) =>
-        val (names, path) = resolveTable(rel, tables)
-        val set = assignments.map {
-          case Assignment(key: UnresolvedAttribute, value) =>
-            refuseSubqueries(value, "UPDATE SET values")
-            singleName(key, names: _*) ->
-              ColumnBridge.column(stripQualifier(value, names))
-          case a => throw new IllegalArgumentException(
-            s"Snapshot.sql: unsupported assignment target ${a.key.sql}")
-        }
-        val dup = set.map(_._1).diff(set.map(_._1).distinct).distinct
-        require(dup.isEmpty,
-          s"Snapshot.sql: column(s) assigned twice: ${dup.mkString(", ")}")
-        cond match {
-          // `UPDATE ... WHERE k IN (SELECT ...)` — deleteMatching's
-          // twin; the key set resolves through the registry and stays
-          // distributed
-          case Some(InSubquery(Seq(key: UnresolvedAttribute), l: ListQuery)) =>
-            Snapshot.updateMatching(spark, path, singleName(key, names: _*),
-              resolveQuery(spark, l.plan, tables), set.toMap)
-          case _ =>
-            Snapshot.update(spark, path,
-              cond.map(predicate(_, names)).getOrElse(lit(true)), set.toMap)
-        }
-
-      case m: MergeIntoTable => merge(spark, m, tables)
-
-      case i: InsertIntoStatement => insertInto(spark, i, tables)
-
-      case c: CreateTableAsSelect =>
-        ctas(spark, identName(c.name), c.partitioning, c.query, tables,
-          replaceExisting = false, orCreate = true, ignoreIfExists = c.ignoreIfExists,
-          properties = specProperties(c.tableSpec))
-
-      case org.apache.spark.sql.catalyst.plans.logical.CreateTable(name, columns, partitioning, spec, ignoreIfExists) =>
-        // plain DDL create: an EMPTY snapshot table with the declared
-        // schema and identity partitioning — the shape a ported script
-        // declares before its first INSERT
-        val ident = identName(name)
-        val path = pathOf(ident, tables)
-        val (pTransforms, clusterBy) = splitClusterBy(partitioning, "CREATE TABLE")
-        val (pCols, genCols) = partitionSpec(pTransforms, "CREATE TABLE")
-        val declared = StructType(columns.map(cd =>
-          StructField(cd.name, cd.dataType, cd.nullable)))
-        // CREATE-time DEFAULTs: write defaults (column-list INSERTs
-        // fill them; files all carry the column physically)
-        val colDefaults = columns.flatMap(cd =>
-          cd.defaultValue.map(d => cd.name -> d.originalSQL)).toMap
-        // a transform's generated column joins the schema with the
-        // transform's own type (days/months/years → DATE, hours →
-        // TIMESTAMP)
-        val genFields = genCols.keys.toSeq.sorted
-          .filterNot(g => declared.fieldNames.contains(g)).map { g =>
-            StructField(g,
-              if (g.endsWith("_hour")) org.apache.spark.sql.types.TimestampType
-              else org.apache.spark.sql.types.DateType)
-          }
-        val schema = StructType(declared.fields ++ genFields)
-        val exists = Snapshot.latestVersion(spark, path).isDefined
-        if (exists) {
-          if (ignoreIfExists) Snapshot.latestVersion(spark, path).get
-          else throw new IllegalArgumentException(
-            s"Snapshot.sql CREATE TABLE: table '$ident' already exists at $path")
-        } else Snapshot.create(spark, path,
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
-          pCols, genCols, keepNullability = true, // DDL-declared NOT NULL is real
-          clusterBy = clusterBy, properties = specProperties(spec),
-          defaults = colDefaults)
-
-      case r: ReplaceTableAsSelect =>
-        ctas(spark, identName(r.name), r.partitioning, r.query, tables,
-          replaceExisting = true, orCreate = r.orCreate, ignoreIfExists = false,
-          properties = specProperties(r.tableSpec))
-
-      case AddColumns(t: UnresolvedTable, colsToAdd) =>
-        val ident = t.multipartIdentifier.mkString(".")
-        val path = pathOf(ident, tables)
-        // ADD COLUMN … DEFAULT v: write default + frozen existence
-        // default (pre-evolution rows read v) — metadata-only commit
-        val addDefaults = colsToAdd.flatMap(qc =>
-          qc.default.map(d => qc.colName -> d.originalSQL)).toMap
-        Snapshot.addColumns(spark, path, colsToAdd.map { qc =>
-          require(qc.path.isEmpty,
-            s"Snapshot.sql ADD COLUMNS: nested field paths are not supported (${qc.colName})")
-          require(qc.position.isEmpty,
-            s"Snapshot.sql ADD COLUMNS: FIRST/AFTER positions are not supported (${qc.colName})")
-          StructField(qc.colName, qc.dataType, nullable = true)
-        }, addDefaults)
-
-      case org.apache.spark.sql.catalyst.plans.logical.RenameColumn(t: UnresolvedTable, column, newName) =>
-        val path = pathOf(t.multipartIdentifier.mkString("."), tables)
-        val parts = fieldNameParts(column, "RENAME COLUMN")
-        Snapshot.renameColumn(spark, path, parts.head, newName)
-
-      case org.apache.spark.sql.catalyst.plans.logical.DropColumns(t: UnresolvedTable, colsToDrop, ifExists) =>
-        val path = pathOf(t.multipartIdentifier.mkString("."), tables)
-        // the existence set shrinks AS the loop drops: a repeated name
-        // under IF EXISTS (… DROP COLUMN IF EXISTS a, a) must see the
-        // first drop, not the pre-statement schema
-        var table = Snapshot.latestManifest(spark, path).map(m =>
-          StructType.fromDDL(m.schemaDdl).fieldNames.toSet).getOrElse(Set.empty[String])
-        var last = 0L
-        colsToDrop.map(fieldNameParts(_, "DROP COLUMN")).foreach { parts =>
-          if (table.contains(parts.head) || !ifExists) {
-            last = Snapshot.dropColumn(spark, path, parts.head)
-            table -= parts.head
-          }
-        }
-        last
-
-      case org.apache.spark.sql.catalyst.plans.logical.AlterColumns(t: UnresolvedTable, specs) =>
-        val path = pathOf(t.multipartIdentifier.mkString("."), tables)
-        var last = 0L
-        specs.foreach { spec =>
-          require(spec.newNullability.isEmpty && spec.newComment.isEmpty &&
-            spec.newPosition.isEmpty,
-            "Snapshot.sql ALTER COLUMN: only TYPE widening and SET/DROP DEFAULT are supported")
-          val colName = fieldNameParts(spec.column, "ALTER COLUMN").head
-          (spec.newDataType, spec.newDefaultExpression, spec.dropDefault) match {
-            case (Some(to), None, false) =>
-              last = Snapshot.widenColumnType(spark, path, colName, to)
-            case (None, Some(d), false) =>
-              last = Snapshot.setColumnDefault(spark, path, colName, Some(d.originalSQL))
-            case (None, None, true) =>
-              last = Snapshot.setColumnDefault(spark, path, colName, None)
-            case _ => throw new IllegalArgumentException(
-              "Snapshot.sql ALTER COLUMN: give exactly one of TYPE, SET DEFAULT, DROP DEFAULT")
-          }
-        }
-        last
-
-      case a: org.apache.spark.sql.catalyst.plans.logical.AddCheckConstraint =>
-        // the parser wraps the target as Filter(condition, relation) so
-        // vanilla analysis can validate existing rows; the table is the
-        // leaf relation
-        val ident = a.child.collectFirst {
-          case r: UnresolvedRelation => r.multipartIdentifier.mkString(".")
-          case t: UnresolvedTable => t.multipartIdentifier.mkString(".")
-        }.getOrElse(throw new IllegalArgumentException(
-          "Snapshot.sql ADD CONSTRAINT: could not resolve the target table"))
-        val cc = a.checkConstraint
-        Snapshot.addConstraint(spark, pathOf(ident, tables), cc.name, cc.condition)
-
-      case a: org.apache.spark.sql.catalyst.plans.logical.AddConstraint =>
-        throw new IllegalArgumentException(
-          "Snapshot.sql ADD CONSTRAINT: only CHECK constraints are supported")
-
-      case org.apache.spark.sql.catalyst.plans.logical.DropConstraint(t: UnresolvedTable, name, ifExists, cascade) =>
-        require(!cascade, "Snapshot.sql DROP CONSTRAINT: CASCADE is not supported")
-        Snapshot.dropConstraint(spark, pathOf(t.multipartIdentifier.mkString("."), tables),
-          name, ifExists)
-
-      case t: org.apache.spark.sql.catalyst.plans.logical.TruncateTable =>
-        val path = pathOf(childIdent(t.table), tables)
-        val m = Snapshot.latestManifest(spark, path).getOrElse(
-          throw new IllegalArgumentException(s"not a snapshot table: $path"))
-        // an atomic overwrite to the empty set: schema and partition
-        // layout survive, time travel to pre-truncate versions still works
-        Snapshot.overwrite(spark, path,
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            StructType.fromDDL(m.schemaDdl)))
-
-      case d: org.apache.spark.sql.catalyst.plans.logical.DropTable =>
-        val ident = childIdent(d.child)
-        val path = pathOf(ident, tables)
-        val exists = Snapshot.latestVersion(spark, path).isDefined
-        if (!exists && !d.ifExists)
-          throw new IllegalArgumentException(s"Snapshot.sql DROP TABLE: no snapshot table at $path")
-        if (exists) {
-          val fs = new org.apache.hadoop.fs.Path(path)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.delete(new org.apache.hadoop.fs.Path(path), true)
-        }
-        0L
-
-      case other => throw new IllegalArgumentException(
-        "Snapshot.sql supports DELETE / UPDATE / MERGE / INSERT … SELECT / " +
-          "CREATE [OR REPLACE] TABLE … AS SELECT / ALTER TABLE … ADD COLUMNS / " +
-          "RENAME COLUMN / DROP COLUMN / TRUNCATE TABLE / DROP TABLE / VACUUM / OPTIMIZE " +
-          s"statements, got ${other.nodeName} (for SELECT, use Snapshot.sqlQuery)")
+  /** Bind the target and every registered name under `ns`; reads keep their name as alias. */
+  private def bind(spark: SparkSession, plan: LogicalPlan, tables: Map[String, String],
+                   ns: Seq[String]): LogicalPlan = {
+    val written = target(plan)
+    def hit(parts: Seq[String]): Boolean = {
+      val name = parts.mkString(".")
+      registered(tables, name).isDefined || written.exists(_.equalsIgnoreCase(name))
     }
-  }
-
-  /** Top-level field name of an ALTER COLUMN target; nested paths
-    * refuse (this engine's tables are flat, like the reference's).
-    */
-  private def fieldNameParts(f: org.apache.spark.sql.catalyst.analysis.FieldName,
-                             what: String): Seq[String] = {
-    val parts = f match {
-      case u: org.apache.spark.sql.catalyst.analysis.UnresolvedFieldName => u.name
-      case other => throw new IllegalArgumentException(
-        s"Snapshot.sql $what: unsupported column reference ${other.getClass.getSimpleName}")
+    def to(parts: Seq[String]): Seq[String] = ns :+ parts.mkString(".")
+    def read(r: UnresolvedRelation, node: LogicalPlan => LogicalPlan): LogicalPlan =
+      SubqueryAlias(r.multipartIdentifier.mkString("."),
+        node(r.copy(multipartIdentifier = to(r.multipartIdentifier))))
+    def rebind(p: LogicalPlan): LogicalPlan = p.transformDownWithSubqueries {
+      case tt @ RelationTimeTravel(r: UnresolvedRelation, _, _) if hit(r.multipartIdentifier) =>
+        read(r, b => tt.copy(relation = b))
+      case r: UnresolvedRelation if hit(r.multipartIdentifier) => read(r, identity)
+      case i @ InsertIntoStatement(r: UnresolvedRelation, _, _, _, _, _, _)
+          if hit(r.multipartIdentifier) =>
+        i.copy(table = r.copy(multipartIdentifier = to(r.multipartIdentifier)))
+      case t: UnresolvedTable if hit(t.multipartIdentifier) =>
+        t.copy(multipartIdentifier = to(t.multipartIdentifier))
+      case t: UnresolvedTableOrView if hit(t.multipartIdentifier) =>
+        t.copy(multipartIdentifier = to(t.multipartIdentifier))
+      case t: UnresolvedIdentifier if hit(t.nameParts) => t.copy(nameParts = to(t.nameParts))
+      case c: GraftMaintenanceCommand if hit(c.nameParts) => c.copy(nameParts = to(c.nameParts))
+      // CTE definitions are not children of the WITH node
+      case w: UnresolvedWith => w.copy(cteRelations = w.cteRelations.map {
+        case (n, q, depth) => (n, rebind(q).asInstanceOf[SubqueryAlias], depth) })
+      case f: UnresolvedTableValuedFunction
+          if f.name.map(_.toLowerCase(java.util.Locale.ROOT)) == Seq("table_changes") =>
+        f.copy(functionArgs = f.functionArgs match {
+          case (l @ Literal(s: UTF8String, _)) +: rest
+              if hit(spark.sessionState.sqlParser.parseMultipartIdentifier(s.toString)) =>
+            val parts = to(spark.sessionState.sqlParser.parseMultipartIdentifier(s.toString))
+            l.copy(value = UTF8String.fromString(
+              parts.map(x => "`" + x.replace("`", "``") + "`").mkString("."))) +: rest
+          case args => args
+        })
     }
-    require(parts.size == 1,
-      s"Snapshot.sql $what: nested field paths are not supported (${parts.mkString(".")})")
-    parts
-  }
-
-  private def childIdent(child: LogicalPlan): String = child match {
-    case t: UnresolvedTable => t.multipartIdentifier.mkString(".")
-    case i: UnresolvedIdentifier => i.nameParts.mkString(".")
-    case other => throw new IllegalArgumentException(
-      s"Snapshot.sql: unsupported table reference ${other.nodeName}")
-  }
-
-  /** Execute a SQL-text QUERY with registered snapshot names resolved
-    * to native manifest-backed scans — including time travel
-    * (`FROM t VERSION AS OF 3`, `FROM t FOR SYSTEM_TIME AS OF
-    * '2026-08-01T00:00:00Z'`) routed to the source's
-    * versionAsOf/timestampAsOf options. Names not in the registry
-    * resolve against the session catalog as usual, so a query can mix
-    * snapshot tables and temp views.
-    */
-  def query(spark: SparkSession, sqlText: String,
-            tables: Map[String, String]): DataFrame = sqlText match {
-    case HistoryRe(ident) =>
-      Snapshot.history(spark, pathOf(ident, tables))
-    case DetailRe(ident) =>
-      Snapshot.describeDetail(spark, pathOf(ident, tables))
-    case _ =>
-      resolveQuery(spark, spark.sessionState.sqlParser.parsePlan(sqlText), tables)
-  }
-
-  /** Execute a multi-statement SQL SCRIPT — the shape a reference job
-    * actually ships: a sequence of DML/DDL/maintenance statements with
-    * at most one final SELECT whose result is the script's result
-    * (exactly BigQuery's multi-statement-query contract the reference
-    * relies on). Statements run in order, each through the same
-    * routing as [[apply]]/[[query]]; a failure stops the script at
-    * that statement (everything before it is committed — statements
-    * are individually atomic, the script is not a transaction, which
-    * matches the warehouse the reference targets). A SELECT anywhere
-    * but last refuses: its result would be silently dropped, and a
-    * dropped result set is a ported-script bug, not a feature.
-    */
-  def script(spark: SparkSession, sqlText: String,
-             tables: Map[String, String]): Option[DataFrame] = {
-    val stmts = splitStatements(sqlText)
-    require(stmts.nonEmpty, "Snapshot.sqlScript: empty script")
-    var result: Option[DataFrame] = None
-    stmts.zipWithIndex.foreach { case (stmt, i) =>
-      if (isQueryStatement(spark, stmt)) {
-        require(i == stmts.size - 1,
-          s"Snapshot.sqlScript: SELECT must be the script's final statement " +
-            s"(statement ${i + 1} of ${stmts.size} is a query whose result would be dropped)")
-        result = Some(query(spark, stmt, tables))
-      } else apply(spark, stmt, tables)
-    }
-    result
-  }
-
-  /** Multi-statement script through the SESSION's own front end — the
-    * catalog-resolved twin of [[script]]: every statement (DDL, DML,
-    * maintenance verbs via the dialect parser, the final SELECT) is
-    * plain `spark.sql` text against [[graft.catalog.GraftCatalog]]
-    * names, no registry at all. Same contract: statements run in
-    * order, each individually atomic, at most one SELECT and only as
-    * the final statement (its result is the script's result).
-    */
-  def scriptSql(spark: SparkSession, sqlText: String): Option[DataFrame] = {
-    val stmts = splitStatements(sqlText)
-    require(stmts.nonEmpty, "Snapshot.sqlScript: empty script")
-    var result: Option[DataFrame] = None
-    stmts.zipWithIndex.foreach { case (stmt, i) =>
-      // a statement is a command if it parses to a Command node or to
-      // one of the ParsedStatement DML forms (InsertIntoStatement is
-      // NOT a Command pre-analysis)
-      val parsed = spark.sessionState.sqlParser.parsePlan(stmt)
-      val isQuery = !parsed.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Command] &&
-        !parsed.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.ParsedStatement]
-      // a maintenance command WITH a result set (DESCRIBE HISTORY /
-      // DETAIL) closing the script returns its rows, matching the
-      // registry front end's contract; mid-script it just runs
-      val isOutputCmd = parsed.isInstanceOf[graft.plans.GraftMaintenanceCommand] &&
-        parsed.output.nonEmpty
-      if (isQuery) {
-        require(i == stmts.size - 1,
-          s"Snapshot.sqlScript: SELECT must be the script's final statement " +
-            s"(statement ${i + 1} of ${stmts.size} is a query whose result would be dropped)")
-        result = Some(spark.sql(stmt))
-      } else if (isOutputCmd && i == stmts.size - 1) {
-        result = Some(spark.sql(stmt))
-      } else spark.sql(stmt)
-    }
-    result
+    rebind(plan)
   }
 
   /** Split on top-level semicolons only: quoted strings (single,
@@ -580,517 +175,4 @@ object SnapshotSql {
     out += cur.toString
     out.result().map(_.trim).filter(_.nonEmpty)
   }
-
-  /** A statement is a QUERY (result-producing) when it parses to a
-    * plan that is none of the command nodes [[apply]] routes — plus the
-    * textual DESCRIBE HISTORY form.
-    */
-  private def isQueryStatement(spark: SparkSession, stmt: String): Boolean = stmt match {
-    case HistoryRe(_) | DetailRe(_) => true
-    case VacuumRe(_, _, _) | OptimizeRe(_, _, _, _) | RestoreRe(_, _, _) |
-         CloneRe(_, _, _, _, _) | ImportRe(_, _, _) |
-         CreateTagRe(_, _, _, _) | DropTagRe(_, _, _) | AnalyzeRe(_, _, _) |
-         CreateBranchRe(_, _) | DropBranchRe(_, _, _) | MergeBranchRe(_, _) |
-         RebaseBranchRe(_, _) | CreateMvRe(_, _) | RefreshMvRe(_) |
-         AlterMvRefreshRe(_, _) | AlterMvUnsetRe(_) => false
-    case _ =>
-      spark.sessionState.sqlParser.parsePlan(stmt) match {
-        case _: DeleteFromTable | _: UpdateTable | _: MergeIntoTable |
-             _: InsertIntoStatement | _: CreateTableAsSelect |
-             _: org.apache.spark.sql.catalyst.plans.logical.CreateTable |
-             _: ReplaceTableAsSelect | _: AddColumns |
-             _: org.apache.spark.sql.catalyst.plans.logical.RenameColumn |
-             _: org.apache.spark.sql.catalyst.plans.logical.DropColumns |
-             _: org.apache.spark.sql.catalyst.plans.logical.AlterColumns |
-             _: org.apache.spark.sql.catalyst.plans.logical.AddConstraint |
-             _: org.apache.spark.sql.catalyst.plans.logical.AddCheckConstraint |
-             _: org.apache.spark.sql.catalyst.plans.logical.DropConstraint |
-             _: org.apache.spark.sql.catalyst.plans.logical.TruncateTable |
-             _: org.apache.spark.sql.catalyst.plans.logical.DropTable => false
-        case _ => true
-      }
-  }
-
-  // --------------------------------------------- query-side resolution
-
-  /** Rewrite every registered table reference (including inside
-    * subqueries and CTE definitions) to the snapshot source's analyzed
-    * relation — the native vectorized scan with manifest pruning —
-    * keeping the reference's own name as a qualifier. Time travel
-    * wraps the same relation pinned at the requested version.
-    */
-  private def resolveQuery(spark: SparkSession, plan: LogicalPlan,
-                           tables: Map[String, String]): DataFrame = {
-    val rewritten = plan.transformUpWithSubqueries {
-      case tt @ RelationTimeTravel(r: UnresolvedRelation, ts, v) =>
-        val ident = r.multipartIdentifier.mkString(".")
-        tables.collectFirst { case (k, p) if k.equalsIgnoreCase(ident) =>
-          val reader = spark.read.format("graft.sources.SnapshotSource")
-          val pinned = (v, ts) match {
-            case (Some(ver), None) => reader.option("versionAsOf", ver)
-            case (None, Some(expr)) =>
-              reader.option("timestampAsOf", evalTimestampMicros(spark, expr).toString)
-            case _ => throw new IllegalArgumentException(
-              s"Snapshot.sql: time travel on '$ident' needs VERSION AS OF or TIMESTAMP AS OF")
-          }
-          SubqueryAlias(ident, pinned.load(p).queryExecution.analyzed): LogicalPlan
-        }.getOrElse(tt)
-      case r: UnresolvedRelation =>
-        val ident = r.multipartIdentifier.mkString(".")
-        tables.collectFirst { case (k, p) if k.equalsIgnoreCase(ident) =>
-          SubqueryAlias(ident,
-            spark.read.format("graft.sources.SnapshotSource").load(p)
-              .queryExecution.analyzed): LogicalPlan
-        }.getOrElse(r)
-      // the change feed as a table-valued function — the standard CDC
-      // SQL surface: table_changes('t', from, to) (or just from, which
-      // reads through the latest version)
-      case tvf: org.apache.spark.sql.catalyst.analysis.UnresolvedTableValuedFunction
-          if tvf.name.map(_.toLowerCase).mkString(".") == "table_changes" =>
-        def longArg(e: Expression, what: String): Long = e match {
-          case l: org.apache.spark.sql.catalyst.expressions.Literal =>
-            l.value match {
-              case n: java.lang.Number => n.longValue()
-              case other => throw new IllegalArgumentException(
-                s"Snapshot.sql table_changes: $what must be an integer literal, got $other")
-            }
-          case other => throw new IllegalArgumentException(
-            s"Snapshot.sql table_changes: $what must be an integer literal, got ${other.sql}")
-        }
-        val (identE, fromE, toV) = tvf.functionArgs match {
-          case Seq(n, f) => (n, f, None)
-          case Seq(n, f, t) => (n, f, Some(longArg(t, "the end version")))
-          case _ => throw new IllegalArgumentException(
-            "Snapshot.sql: table_changes takes (table, fromVersion[, toVersion])")
-        }
-        val ident = identE match {
-          case l: org.apache.spark.sql.catalyst.expressions.Literal
-              if l.value.isInstanceOf[org.apache.spark.unsafe.types.UTF8String] =>
-            l.value.toString
-          case other => throw new IllegalArgumentException(
-            s"Snapshot.sql table_changes: the table must be a string literal, got ${other.sql}")
-        }
-        val path = pathOf(ident, tables)
-        val from = longArg(fromE, "the start version")
-        val to = toV.getOrElse(Snapshot.latestVersion(spark, path).getOrElse(from))
-        // versions from..to INCLUSIVE, per-commit reconciled rows
-        // stamped _change_type/_commit_version/_commit_timestamp — the
-        // standard CDC TVF contract, identical on the registry and
-        // catalog routes (and the streaming feed)
-        SubqueryAlias(ident,
-          graft.sources.SnapshotCdfStreamSource.batchFeed(spark, path, from, to)
-            .queryExecution.analyzed): LogicalPlan
-    }
-    PlanBridge.dataFrame(spark, rewritten)
-  }
-
-  /** Evaluate a time-travel timestamp expression ONCE on the driver to
-    * epoch micros (`SELECT <expr>::timestamp` against a one-row
-    * relation — parser-grade literals, casts and arithmetic for free).
-    */
-  private def evalTimestampMicros(spark: SparkSession, e: Expression): Long = {
-    refuseSubqueries(e, "time-travel timestamps")
-    val row = spark.range(1)
-      .select(ColumnBridge.column(e).cast("timestamp").as("ts")).head()
-    val ts = row.getAs[java.sql.Timestamp](0)
-    require(ts != null, "Snapshot.sql: time-travel timestamp evaluated to NULL")
-    ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
-  }
-
-  // ------------------------------------------------- CTAS / INSERT
-
-  /** `CREATE [OR REPLACE] TABLE t [PARTITIONED BY …] AS SELECT …` — the
-    * reference's `QueryJobConfig(destination=…, WRITE_TRUNCATE)`
-    * materialization (liveod_editorial.py:282-359) as literal SQL. The
-    * target must be REGISTERED (the registry is what maps a logical
-    * name to storage); create routes to [[Snapshot.create]], replace of
-    * an existing table to [[Snapshot.overwrite]] — an atomic
-    * full-rewrite commit that keeps history, stream watermarks and
-    * concurrent pinned readers intact.
-    */
-  private def ctas(spark: SparkSession, ident: String, partitioning: Seq[Transform],
-                   query: LogicalPlan, tables: Map[String, String],
-                   replaceExisting: Boolean, orCreate: Boolean,
-                   ignoreIfExists: Boolean,
-                   properties: Map[String, String] = Map.empty): Long = {
-    val path = pathOf(ident, tables)
-    val (pTransforms, clusterBy) = splitClusterBy(partitioning, "CTAS")
-    val (pCols, genCols) = partitionSpec(pTransforms, "CTAS")
-    val exists = Snapshot.latestVersion(spark, path).isDefined
-    lazy val df = resolveQuery(spark, query, tables)
-    if (!replaceExisting) {
-      if (exists) {
-        if (ignoreIfExists) return Snapshot.latestVersion(spark, path).get
-        throw new IllegalArgumentException(
-          s"Snapshot.sql: table '$ident' already exists at $path " +
-            "(use CREATE OR REPLACE TABLE … AS SELECT)")
-      }
-      Snapshot.create(spark, path, df, pCols, genCols, clusterBy = clusterBy,
-        properties = properties)
-    } else if (exists) {
-      val m = Snapshot.latestManifest(spark, path).get
-      // validate the declared policies against the REPLACEMENT schema
-      // BEFORE any commit — a bad CLUSTER BY must fail the statement
-      // whole, never leave the table replaced with a stale policy
-      clusterBy.foreach(c => require(df.columns.contains(c),
-        s"Snapshot.sql REPLACE: CLUSTER BY column $c not in the query schema"))
-      // no PARTITIONED BY keeps the existing layout; an explicit one
-      // EVOLVES it atomically (per-manifest layout, time travel keeps
-      // each version's own scheme)
-      val v =
-        if (pCols.isEmpty || (pCols == m.partitionCols && genCols == m.generatedCols))
-          Snapshot.overwrite(spark, path, df)
-        else Snapshot.overwritePartitioned(spark, path, df, pCols, genCols)
-      // a re-declared CLUSTER BY on the REPLACE becomes the new policy
-      if (clusterBy.nonEmpty &&
-          Snapshot.latestManifest(spark, path).get.clusterBy != clusterBy)
-        Snapshot.setClusterBy(spark, path, clusterBy)
-      // REPLACE REDEFINES the table: a declared TBLPROPERTIES set
-      // replaces the old one whole (standard lakehouse REPLACE
-      // semantics — stale policy keys must not silently outlive the
-      // redefinition); declaring none keeps the existing set
-      if (properties.nonEmpty)
-        Snapshot.setProperties(spark, path, properties,
-          unset = (m.properties.keySet -- properties.keySet).toSeq.sorted)
-      Snapshot.latestVersion(spark, path).getOrElse(v)
-    } else if (orCreate) {
-      Snapshot.create(spark, path, df, pCols, genCols, clusterBy = clusterBy,
-        properties = properties)
-    } else throw new IllegalArgumentException(
-      s"Snapshot.sql: REPLACE TABLE '$ident': no table at $path " +
-        "(use CREATE OR REPLACE)")
-  }
-
-  /** `INSERT INTO t [(cols)] SELECT …` → [[Snapshot.append]];
-    * `INSERT OVERWRITE t SELECT …` → [[Snapshot.overwrite]]. SQL
-    * semantics: the query's columns map POSITIONALLY to the target
-    * list (or the full schema); unlisted table columns insert as null.
-    */
-  private def insertInto(spark: SparkSession, i: InsertIntoStatement,
-                         tables: Map[String, String]): Long = {
-    val (_, path) = resolveTable(i.table, tables)
-    require(i.partitionSpec.isEmpty,
-      "Snapshot.sql INSERT: static PARTITION clauses are not supported — " +
-        "partition values ride the rows")
-    require(!i.ifPartitionNotExists,
-      "Snapshot.sql INSERT: IF NOT EXISTS is not supported")
-    val m = Snapshot.latestManifest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"not a snapshot table: $path"))
-    val schema = StructType.fromDDL(m.schemaDdl)
-    val df = resolveQuery(spark, i.query, tables)
-    val out =
-      if (i.byName) df
-      else {
-        // canonicalize the target list to the table's own column names;
-        // with no explicit list, a query that omits exactly the
-        // GENERATED columns maps to the non-generated schema (the
-        // engine derives the rest on write)
-        val canon =
-          (if (i.userSpecifiedCols.nonEmpty) i.userSpecifiedCols
-           else if (df.columns.length == schema.fields.length) schema.fieldNames.toSeq
-           else schema.fieldNames.toSeq.filterNot(m.generatedCols.contains)).map { n =>
-            schema.fieldNames.find(_.equalsIgnoreCase(n)).getOrElse(
-              throw new IllegalArgumentException(
-                s"Snapshot.sql INSERT: unknown column $n"))
-          }
-        val dup = canon.diff(canon.distinct)
-        require(dup.isEmpty,
-          s"Snapshot.sql INSERT lists column(s) twice: ${dup.mkString(", ")}")
-        require(df.columns.length == canon.length,
-          s"Snapshot.sql INSERT: the query produces ${df.columns.length} column(s) " +
-            s"but the target list has ${canon.length}")
-        val renamed = df.toDF(canon: _*)
-        // SQL INSERT semantics: unlisted columns take their declared
-        // DEFAULT when one exists, else null
-        renamed.select(schema.fields.toSeq.map { f =>
-          if (canon.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-          else m.colDefault.get(f.name)
-            .map(d => org.apache.spark.sql.functions.expr(d).cast(f.dataType).as(f.name))
-            .getOrElse(lit(null).cast(f.dataType).as(f.name))
-        }: _*)
-      }
-    if (i.overwrite) Snapshot.overwrite(spark, path, out)
-    else Snapshot.append(spark, path, out)
-  }
-
-  /** The Scala case classes behind Transform are private[sql]; the
-    * public face is the Java interface. Identity transforms partition
-    * on the named column; the TIME transforms (`days/months/years/
-    * hours(ts)` — the reference's DAY/MONTH-partitioned BigQuery
-    * landing tables) become a VISIBLE generated column (`ts_day`, …)
-    * the writers derive on every load. Returns (partition columns in
-    * declared order, generated-column name → generator SQL).
-    */
-  /** The user-declared TBLPROPERTIES off a parsed table spec (write
-    * OPTIONS and engine keys are not table properties).
-    */
-  private def specProperties(
-      spec: org.apache.spark.sql.catalyst.plans.logical.TableSpecBase): Map[String, String] =
-    spec match {
-      case u: org.apache.spark.sql.catalyst.plans.logical.UnresolvedTableSpec => u.properties
-      case t: org.apache.spark.sql.catalyst.plans.logical.TableSpec => t.properties
-      case _ => Map.empty
-    }
-
-  /** Split `CLUSTER BY` out of a transform list: Spark 4 delivers
-    * clustering as a `ClusterByTransform` riding the partitioning
-    * array. Returns (remaining transforms, clustering column names).
-    */
-  private[graft] def splitClusterBy(partitioning: Seq[Transform],
-                                    what: String): (Seq[Transform], Seq[String]) = {
-    import org.apache.spark.sql.connector.expressions.ClusterByTransform
-    val (cbs, rest) = partitioning.partition(_.isInstanceOf[ClusterByTransform])
-    val cols = cbs.flatMap { case cb: ClusterByTransform =>
-      cb.columnNames.map(r => r.fieldNames match {
-        case Array(one) => one
-        case other => throw new IllegalArgumentException(
-          s"Snapshot.sql $what: nested CLUSTER BY reference ${other.mkString(".")}")
-      })
-    }
-    (rest, cols)
-  }
-
-  private[graft] def partitionSpec(partitioning: Seq[Transform],
-                            what: String): (Seq[String], Map[String, String]) = {
-    val gen = Map.newBuilder[String, String]
-    val cols = partitioning.map { t =>
-      val src = t.references match {
-        case Array(ref) => ref.fieldNames match {
-          case Array(one) => one
-          case other => throw new IllegalArgumentException(
-            s"Snapshot.sql $what: nested partition reference ${other.mkString(".")}")
-        }
-        case _ => throw new IllegalArgumentException(
-          s"Snapshot.sql $what: unsupported PARTITIONED BY transform $t")
-      }
-      t.name match {
-        case "identity" => src
-        case "days"   => gen += s"${src}_day" -> s"CAST(date_trunc('DAY', `$src`) AS DATE)"; s"${src}_day"
-        case "months" => gen += s"${src}_month" -> s"CAST(date_trunc('MONTH', `$src`) AS DATE)"; s"${src}_month"
-        case "years"  => gen += s"${src}_year" -> s"CAST(date_trunc('YEAR', `$src`) AS DATE)"; s"${src}_year"
-        case "hours"  => gen += s"${src}_hour" -> s"date_trunc('HOUR', `$src`)"; s"${src}_hour"
-        case other => throw new IllegalArgumentException(
-          s"Snapshot.sql $what: unsupported PARTITIONED BY transform $other($src) " +
-            "(identity, days, months, years, hours)")
-      }
-    }
-    (cols, gen.result())
-  }
-
-  private def identityPartitionCols(partitioning: Seq[Transform], what: String): Seq[String] = {
-    val (cols, gen) = partitionSpec(partitioning, what)
-    require(gen.isEmpty,
-      s"Snapshot.sql $what: only identity PARTITIONED BY columns are supported here")
-    cols
-  }
-
-  private def identName(name: LogicalPlan): String = name match {
-    case u: UnresolvedIdentifier => u.nameParts.mkString(".")
-    case other => throw new IllegalArgumentException(
-      s"Snapshot.sql: unsupported table identifier ${other.nodeName}")
-  }
-
-  private def pathOf(ident: String, tables: Map[String, String]): String =
-    tables.collectFirst {
-      case (k, v) if k.equalsIgnoreCase(ident) => v
-    }.getOrElse(throw new IllegalArgumentException(
-      s"Snapshot.sql: unknown table '$ident' " +
-        s"(registered: ${tables.keys.toSeq.sorted.mkString(", ")})"))
-
-  // ------------------------------------------------------------- merge
-
-  private def merge(spark: SparkSession, m: MergeIntoTable,
-                    tables: Map[String, String]): Long = {
-    val (tNames, path) = resolveTable(m.targetTable, tables)
-    val (sNames, source) = resolveSource(spark, m.sourceTable, tables)
-    // WITH SCHEMA EVOLUTION: source columns the target lacks become a
-    // metadata-only ADD COLUMNS commit before the merge — the standard
-    // lakehouse evolving-upsert, and on this engine exactly the ALTER a
-    // user would otherwise write by hand (pre-evolution files read the
-    // new columns as null; nothing rewrites)
-    if (m.withSchemaEvolution) {
-      val mf = Snapshot.latestManifest(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"not a snapshot table: $path"))
-      val have = StructType.fromDDL(mf.schemaDdl).fieldNames.toSet
-      val extra = source.schema.fields.filterNot(f => have.contains(f.name))
-      if (extra.nonEmpty) Snapshot.addColumns(spark, path,
-        extra.map(f => org.apache.spark.sql.types.StructField(
-          f.name, f.dataType, nullable = true)).toSeq)
-    }
-    // ON is a CONJUNCTION of same-named column equalities — one column
-    // (the id-upsert shape) or several (a composite natural key like
-    // (orderkey, linenumber)); anything richer refuses loudly
-    def keyCols(e: Expression): Seq[String] = e match {
-      case org.apache.spark.sql.catalyst.expressions.And(l, r) => keyCols(l) ++ keyCols(r)
-      case EqualTo(a: UnresolvedAttribute, b: UnresolvedAttribute) =>
-        val all = tNames ++ sNames
-        val (an, bn) = (singleName(a, all: _*), singleName(b, all: _*))
-        require(an.equalsIgnoreCase(bn),
-          s"Snapshot.sql MERGE: ON must equate the same column across the sides, got $an = $bn")
-        Seq(an)
-      case other => throw new IllegalArgumentException(
-        s"Snapshot.sql MERGE: ON must be a conjunction of target.<k> = source.<k> " +
-          s"equalities, got ${other.sql}")
-    }
-    val idCols = keyCols(m.mergeCondition)
-    val idCol = idCols.head
-
-    (m.matchedActions, m.notMatchedActions, m.notMatchedBySourceActions) match {
-      // star/star: whole-row replace — mergeById's exact semantics,
-      // restricted to the partition TUPLES present in the source.
-      // assertIdsLocal: SQL users have not opted into the Scala API's
-      // id-embeds-partition contract — a source row whose partition
-      // tuple moved would otherwise duplicate its id silently; the
-      // probe (one id-column semi-join over unaffected partitions)
-      // refuses loudly instead.
-      case (Seq(UpdateStarAction(None)), Seq(InsertStarAction(None)), Seq())
-          if idCols.size == 1 =>
-        val mf = Snapshot.latestManifest(spark, path).getOrElse(
-          throw new IllegalArgumentException(s"not a snapshot table: $path"))
-        Snapshot.mergeByIdPartitioned(spark, path, source, idCol, mf.partitionCols,
-          assertIdsLocal = true)
-
-      // explicit arms, any number, each optionally conditional, plus
-      // WHEN NOT MATCHED BY SOURCE — the full standard surface
-      // (funnel_live.py:155-172 is the one-unconditional-arm special
-      // case); first-match-wins ordering handled by the engine
-      case (matched, notMatched, bySource) =>
-        val mf = Snapshot.latestManifest(spark, path).getOrElse(
-          throw new IllegalArgumentException(s"not a snapshot table: $path"))
-        val targetCols = StructType.fromDDL(mf.schemaDdl).fieldNames.toSeq
-        def cond(c: Option[Expression], what: String): Option[Column] = c.map { e =>
-          refuseSubqueries(e, what)
-          ColumnBridge.column(e)
-        }
-        def assigns(as: Seq[Assignment], what: String): Map[String, Column] = as.map {
-          case Assignment(key: UnresolvedAttribute, value) =>
-            refuseSubqueries(value, what)
-            singleName(key, (tNames ++ sNames): _*) -> ColumnBridge.column(value)
-          case a => throw new IllegalArgumentException(
-            s"Snapshot.sql MERGE: unsupported assignment target ${a.key.sql}")
-        }.toMap
-        // SET * / INSERT * expand to the TARGET schema, each column
-        // taken from the source by name (standard star semantics)
-        def starMap: Map[String, Column] =
-          targetCols.map(c => c -> col(s"${sNames.last}.$c")).toMap
-        def whenArm(a: org.apache.spark.sql.catalyst.plans.logical.MergeAction,
-                    side: String): Snapshot.WhenArm = a match {
-          case UpdateAction(c, as, _) =>
-            Snapshot.WhenArm(cond(c, s"$side conditions"),
-              Some(assigns(as, "MERGE assignments")))
-          case UpdateStarAction(c) =>
-            Snapshot.WhenArm(cond(c, s"$side conditions"), Some(starMap))
-          case DeleteAction(c) => Snapshot.WhenArm(cond(c, s"$side conditions"), None)
-          case other => throw new IllegalArgumentException(
-            s"Snapshot.sql MERGE: unsupported $side action ${other.getClass.getSimpleName}")
-        }
-        val insertArms = notMatched.map {
-          case InsertAction(c, as) =>
-            Snapshot.InsertArm(cond(c, "INSERT conditions"),
-              assigns(as, "MERGE insert values").toSeq)
-          case InsertStarAction(c) =>
-            Snapshot.InsertArm(cond(c, "INSERT conditions"), starMap.toSeq)
-          case other => throw new IllegalArgumentException(
-            s"Snapshot.sql MERGE: unsupported not-matched action ${other.getClass.getSimpleName}")
-        }
-        Snapshot.mergeArmsMulti(spark, path, source,
-          targetAlias = tNames.last, sourceAlias = sNames.last, idCols = idCols,
-          matched = matched.map { a =>
-            // star/star with a composite ON (or extra arms) routes here:
-            // whenArm expands SET * itself
-            whenArm(a, "MATCHED")
-          },
-          notMatched = insertArms,
-          bySource = bySource.map(whenArm(_, "NOT MATCHED BY SOURCE")))
-    }
-  }
-
-  // -------------------------------------------------------- resolution
-
-  /** Unwrap an optionally-aliased table reference; returns the names
-    * it may be qualified by (table name, then alias if given) and its
-    * registered snapshot path.
-    */
-  private def resolveTable(rel: LogicalPlan,
-                           tables: Map[String, String]): (Seq[String], String) = {
-    val (names, ident) = unwrap(rel)
-    val path = tables.collectFirst {
-      case (k, v) if k.equalsIgnoreCase(ident) => v
-    }.getOrElse(throw new IllegalArgumentException(
-      s"Snapshot.sql: unknown table '$ident' " +
-        s"(registered: ${tables.keys.toSeq.sorted.mkString(", ")})"))
-    (names, path)
-  }
-
-  /** A MERGE source: a registered snapshot table, or any catalog /
-    * temp-view name the session can resolve.
-    */
-  private def resolveSource(spark: SparkSession, rel: LogicalPlan,
-                            tables: Map[String, String]): (Seq[String], DataFrame) = {
-    val (names, ident) = unwrap(rel)
-    val df = tables.collectFirst {
-      case (k, v) if k.equalsIgnoreCase(ident) => Snapshot.read(spark, v)
-    }.getOrElse(spark.table(ident))
-    (names, df)
-  }
-
-  private def unwrap(rel: LogicalPlan): (Seq[String], String) = rel match {
-    case SubqueryAlias(alias, r: UnresolvedRelation) =>
-      val ident = r.multipartIdentifier.mkString(".")
-      (Seq(ident, alias.name).distinct, ident)
-    case r: UnresolvedRelation =>
-      val ident = r.multipartIdentifier.mkString(".")
-      (Seq(ident), ident)
-    case other => throw new IllegalArgumentException(
-      s"Snapshot.sql: expected a plain table name (optionally aliased), got ${other.nodeName}")
-  }
-
-  /** Predicate expression → Column, with the statement's own table
-    * qualifiers stripped (it resolves against the bare target scan) and
-    * subqueries refused up front — a subquery would silently analyze
-    * against nothing inside the per-file match count.
-    */
-  private def predicate(cond: Expression, names: Seq[String]): Column = {
-    refuseSubqueries(cond, "DML predicates")
-    ColumnBridge.column(stripQualifier(cond, names))
-  }
-
-  /** Subqueries anywhere in a DML expression would resolve against the
-    * session catalog, not the `tables` registry — silently the wrong
-    * table when a name shadows, an opaque analysis error otherwise.
-    * Refused with the front end's own message instead.
-    */
-  private[graft] def refuseSubqueries(e: Expression, where: String): Unit =
-    e.foreach {
-      case _: SubqueryExpression => throw new IllegalArgumentException(
-        s"Snapshot.sql: subqueries are not supported in $where; " +
-          "materialize the subquery and use the Scala API instead")
-      case _ => ()
-    }
-
-  /** Drop the statement table's own qualifiers off attribute
-    * references; any OTHER qualifier is a user error against a
-    * single-table statement.
-    */
-  private def stripQualifier(e: Expression, names: Seq[String]): Expression = e.transform {
-    case a: UnresolvedAttribute if a.nameParts.length > 1 =>
-      val qual = a.nameParts.init.mkString(".")
-      if (names.exists(_.equalsIgnoreCase(qual))) UnresolvedAttribute(Seq(a.nameParts.last))
-      else throw new IllegalArgumentException(
-        s"Snapshot.sql: unknown qualifier '$qual' (statement table is " +
-          s"'${names.mkString("' aka '")}')")
-  }
-
-  /** An attribute that must name one column of one of `allowed`'s
-    * tables (or be unqualified); returns the bare column name.
-    */
-  private def singleName(a: UnresolvedAttribute, allowed: String*): String =
-    if (a.nameParts.length == 1) a.nameParts.head
-    else {
-      val qual = a.nameParts.init.mkString(".")
-      if (allowed.exists(_.equalsIgnoreCase(qual))) a.nameParts.last
-      else throw new IllegalArgumentException(
-        s"Snapshot.sql: unknown qualifier '$qual' " +
-          s"(expected one of: ${allowed.mkString(", ")})")
-    }
 }

@@ -1,8 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, Row, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, Cast, EqualTo, Exists, Expression, InSubquery, ListQuery, OuterReference}
+import org.apache.spark.sql.catalyst.analysis.{ResolvedTable, UnresolvedAttribute}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, Cast, EqualTo, Exists, Expression, InSubquery, LambdaFunction, ListQuery, OuterReference}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftbridge.{ColumnBridge, PlanBridge}
 
 import graft.catalog.GraftTable
-import graft.operators.{Snapshot, SnapshotSql}
+import graft.operators.Snapshot
 import graft.sources.SnapshotSource
 
 /** Analyzer rules that make [[graft.catalog.GraftCatalog]] tables
@@ -31,7 +31,7 @@ import graft.sources.SnapshotSource
   *
   * [[GraftDmlCapture]] routes `UPDATE` / `MERGE INTO` / rich `DELETE`
   * statements over catalog tables to the SAME engine tiers as the
-  * Scala API and the registry front end ([[Snapshot.update]],
+  * Scala API ([[Snapshot.update]],
   * [[Snapshot.mergeArms]], [[Snapshot.delete]]) — one code path, one
   * set of semantics. Without this rule stock Spark would refuse
   * UPDATE/MERGE outright (they require `SupportsRowLevelOperations`);
@@ -57,12 +57,12 @@ case class GraftDmlCapture(session: SparkSession) extends Rule[LogicalPlan] {
   /** Resolved attribute refs → bare names, so the captured Column
     * re-resolves against the engine's own scan of the same table.
     */
-  private def nameify(e: Expression): Expression = e.transform {
+  private def nameify(e: Expression): Expression = GraftDmlCapture.inlineWith(e).transform {
     case a: AttributeReference => UnresolvedAttribute(Seq(a.name))
   }
 
   private def column(e: Expression, what: String): Column = {
-    SnapshotSql.refuseSubqueries(e, what)
+    GraftDmlCapture.refuseSubqueries(e, what)
     ColumnBridge.column(nameify(e))
   }
 
@@ -116,7 +116,119 @@ case class GraftDmlCapture(session: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
+  /** Attribute references outside lambda bodies (a lambda's own
+    * variables resolve in a later pass).
+    */
+  private def unresolvedRefs(e: Expression): Seq[UnresolvedAttribute] = e match {
+    case _: LambdaFunction => Nil
+    case a: UnresolvedAttribute => Seq(a)
+    case other => other.children.flatMap(unresolvedRefs)
+  }
+
+  /** A DELETE/UPDATE over a resolved catalog table whose expressions
+    * name something the table can never resolve — a qualifier that is
+    * neither the table nor its alias, or a column the table lacks —
+    * refuses with the statement's own message rather than the
+    * analyzer's generic unresolved-column error.
+    */
+  private def refuseUnknownNames(target: LogicalPlan, names: Seq[String],
+                                 exprs: Seq[Expression], what: String): Unit = {
+    val resolver = session.sessionState.conf.resolver
+    exprs.flatMap(unresolvedRefs).find(a => target.resolve(a.nameParts, resolver).isEmpty)
+      .foreach { a =>
+        val qual = a.nameParts.init
+        if (qual.nonEmpty && target.resolve(qual.take(1), resolver).isEmpty &&
+            !names.exists(n => resolver(n, qual.mkString("."))))
+          throw new IllegalArgumentException(
+            s"$what: unknown qualifier '${qual.mkString(".")}' " +
+              s"(statement table is '${names.mkString("' aka '")}')")
+        throw new IllegalArgumentException(s"$what: unknown column '${a.name}'")
+      }
+  }
+
+  private def graftIdent(p: LogicalPlan)
+      : Option[(graft.catalog.GraftCatalog, org.apache.spark.sql.connector.catalog.Identifier)] =
+    p match {
+      case org.apache.spark.sql.catalyst.analysis.ResolvedIdentifier(
+          g: graft.catalog.GraftCatalog, i) => Some((g, i))
+      case _ => None
+    }
+
+  private def refuseExisting(name: LogicalPlan, what: String): Unit =
+    graftIdent(name).filter { case (g, i) => g.tableExists(i) }.foreach { case (g, i) =>
+      throw new IllegalArgumentException(
+        s"$what: table '${i.name}' already exists at ${g.pathFor(i)} " +
+          "(use CREATE OR REPLACE TABLE … AS SELECT)")
+    }
+
+  /** `INSERT INTO t (cols) …` over a catalog table: the column list
+    * must name the table's columns and match the query's arity —
+    * checked as soon as both sides resolve, one fixed-point pass ahead
+    * of Spark's own alignment.
+    */
+  private def checkInsertColumns(i: InsertIntoStatement): Unit = unwrapTarget(i.table) match {
+    case Some((t, _, _)) =>
+      val have = org.apache.spark.sql.types.StructType.fromDDL(t.manifest.schemaDdl).fieldNames
+      val what = s"INSERT INTO ${t.tableName}"
+      i.userSpecifiedCols.find(c => !have.exists(_.equalsIgnoreCase(c))).foreach(c =>
+        throw new IllegalArgumentException(s"$what: unknown column $c"))
+      require(i.userSpecifiedCols.size == i.query.output.size,
+        s"$what: the query produces ${i.query.output.size} column(s) " +
+          s"but the target list has ${i.userSpecifiedCols.size}")
+    case None => ()
+  }
+
   override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsUp {
+
+    case i: InsertIntoStatement if i.userSpecifiedCols.nonEmpty && i.query.resolved =>
+      checkInsertColumns(i); i
+
+    case d @ DeleteFromTable(target, cond) if !d.resolved =>
+      unwrapTarget(target).foreach { case (t, _, names) =>
+        refuseUnknownNames(target, names, Seq(cond), s"DELETE FROM ${t.tableName}")
+      }
+      d
+
+    case u @ UpdateTable(target, assignments, cond) if !u.resolved =>
+      unwrapTarget(target).foreach { case (t, _, names) =>
+        refuseUnknownNames(target, names,
+          assignments.flatMap(a => Seq(a.key, a.value)) ++ cond, s"UPDATE ${t.tableName}")
+      }
+      u
+
+    // existence refusals the engine's own create/replace/drop make,
+    // raised at analysis so they precede Spark's generic errors
+    case c: CreateTableAsSelect if !c.ignoreIfExists => refuseExisting(c.name, "CREATE TABLE"); c
+    case c: CreateTable if !c.ignoreIfExists => refuseExisting(c.name, "CREATE TABLE"); c
+    case r: ReplaceTableAsSelect if !r.orCreate =>
+      graftIdent(r.name).filter { case (g, i) => !g.tableExists(i) }.foreach { case (g, i) =>
+        throw new IllegalArgumentException(
+          s"REPLACE TABLE '${i.name}': no table at ${g.pathFor(i)} (use CREATE OR REPLACE)")
+      }
+      r
+    case d: DropTable if !d.ifExists =>
+      graftIdent(d.child).filter { case (g, i) => !g.tableExists(i) }.foreach { case (g, i) =>
+        throw new IllegalArgumentException(s"DROP TABLE: no snapshot table at ${g.pathFor(i)}")
+      }
+      d
+    // ALTER TABLE over a catalog table calls the catalog directly, so
+    // the engine's own refusals surface as they are (Spark's
+    // AlterTableExec re-wraps them as an opaque "unsupported table
+    // change")
+    case a: AlterTableCommand if a.resolved => a.table match {
+      case ResolvedTable(catalog, ident, t: GraftTable, _) =>
+        GraftDmlCommand(s"ALTER TABLE ${t.tableName}", _ =>
+          catalog.alterTable(ident, a.changes: _*).asInstanceOf[GraftTable].manifest.version)
+      case _ => a
+    }
+    // ADD CONSTRAINT … CHECK: the engine validates the existing rows and
+    // commits the constraint in one call
+    case a @ AddCheckConstraint(child, cc) if a.resolved =>
+      child.collectFirst { case DataSourceV2Relation(t: GraftTable, _, _, _, _, _) => t } match {
+        case Some(t) => GraftDmlCommand(s"ADD CONSTRAINT ${cc.name} ON ${t.tableName}",
+          sp => Snapshot.addConstraint(sp, t.path, cc.name, cc.condition))
+        case None => a
+      }
 
     case d @ DeleteFromTable(target, cond) if d.resolved =>
       unwrapTarget(target) match {
@@ -190,6 +302,10 @@ case class GraftDmlCapture(session: SparkSession) extends Rule[LogicalPlan] {
             case a => throw new UnsupportedOperationException(
               s"graft UPDATE: unsupported assignment target ${a.key.sql}")
           }
+          val keys = set.map(_._1)
+          val twice = keys.diff(keys.distinct).distinct
+          require(twice.isEmpty, s"UPDATE ${t.tableName}: column(s) assigned twice: " +
+            twice.mkString(", "))
           cond match {
             // UPDATE ... WHERE k IN (SELECT ...): deleteMatching's twin
             case Some(InSubquery(Seq(BareAttr(a)), l: ListQuery))
@@ -215,16 +331,15 @@ case class GraftDmlCapture(session: SparkSession) extends Rule[LogicalPlan] {
           // routed the source-minus-target columns through
           // GraftCatalog.alterTable (→ Snapshot.addColumns, one
           // metadata-only commit) and reloaded the target relation —
-          // the capture below sees the EVOLVED schema, identical to the
-          // registry route's behavior (SnapshotSql.merge).
+          // the capture below sees the EVOLVED schema.
           val tAttrs = targetRel.outputSet
           val sAttrs = AttributeSet(sourceP.output)
           val (tAlias, sAlias) = ("__graft_t", "__graft_s")
           // re-qualify each side's refs so the captured Columns resolve
           // against the engine's aliased merge join
           def sided(e: Expression, what: String): Column = {
-            SnapshotSql.refuseSubqueries(e, what)
-            ColumnBridge.column(e.transform {
+            GraftDmlCapture.refuseSubqueries(e, what)
+            ColumnBridge.column(GraftDmlCapture.inlineWith(e).transform {
               case a: AttributeReference if tAttrs.contains(a) =>
                 UnresolvedAttribute(Seq(tAlias, a.name))
               case a: AttributeReference if sAttrs.contains(a) =>
@@ -240,9 +355,9 @@ case class GraftDmlCapture(session: SparkSession) extends Rule[LogicalPlan] {
                 if a.name.equalsIgnoreCase(b.name) &&
                   ((tAttrs.contains(a) && sAttrs.contains(b)) ||
                    (tAttrs.contains(b) && sAttrs.contains(a))) => Seq(a.name)
-            case other => throw new UnsupportedOperationException(
-              s"graft MERGE: ON must be a conjunction of same-named column " +
-                s"equalities across the two sides, got ${other.sql}")
+            case other => throw new IllegalArgumentException(
+              s"graft MERGE: ON must be a conjunction of equalities of the same column " +
+                s"across the two sides, got ${other.sql}")
           }
           val idCols = keyCols(cond)
           val idCol = idCols.head
@@ -311,6 +426,62 @@ case class GraftDmlCapture(session: SparkSession) extends Rule[LogicalPlan] {
         case None => m
       }
   }
+}
+
+/** `ALTER TABLE t DROP COLUMN …` (no IF EXISTS) over a catalog table:
+  * every named column must exist when its turn comes — a repeated name
+  * finds its column already gone. Checked in the hint phase, against
+  * the table's manifest, because Spark's own field resolution refuses
+  * an unknown name in the same pass that resolves the table.
+  */
+case class GraftAlterNames(session: SparkSession) extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan = {
+    plan.foreach {
+      case DropColumns(t: org.apache.spark.sql.catalyst.analysis.UnresolvedTable, cols, false) =>
+        GraftCatalogResolve.pathOf(session, t.multipartIdentifier)
+          .flatMap(Snapshot.latestManifest(session, _)).foreach { m =>
+            val what = s"DROP COLUMN ${t.multipartIdentifier.mkString(".")}"
+            cols.map(_.name.mkString(".")).foldLeft(
+                org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl).fieldNames.toSeq) {
+              (have, c) =>
+                require(have.exists(_.equalsIgnoreCase(c)), s"$what: no column $c")
+                have.filterNot(_.equalsIgnoreCase(c))
+            }
+          }
+      case _ => ()
+    }
+    plan
+  }
+}
+
+object GraftDmlCapture {
+
+  /** Inline the analyzer's common-subexpression `With` nodes (BETWEEN
+    * resolves to one): a captured expression is re-analyzed against
+    * the engine's own scan, and a `With` cannot carry unresolved refs.
+    */
+  private[plans] def inlineWith(e: Expression): Expression = e.transformUp {
+    case w: org.apache.spark.sql.catalyst.expressions.With =>
+      val defs = w.defs.collect {
+        case d: org.apache.spark.sql.catalyst.expressions.CommonExpressionDef => d.id -> d.child
+      }.toMap
+      w.child.transform {
+        case r: org.apache.spark.sql.catalyst.expressions.CommonExpressionRef => defs(r.id)
+      }
+  }
+
+  /** Subqueries anywhere in a captured expression would be evaluated
+    * once per engine job against whatever they resolve to at that
+    * moment — refused with one clear message instead.
+    */
+  def refuseSubqueries(e: Expression, where: String): Unit =
+    e.foreach {
+      case _: org.apache.spark.sql.catalyst.expressions.SubqueryExpression =>
+        throw new IllegalArgumentException(
+          s"subqueries are not supported in $where; " +
+            "materialize the subquery and use the Scala API instead")
+      case _ => ()
+    }
 }
 
 /** See [[GraftDmlCapture]]'s scaladoc. Runs AFTER it in the extension
@@ -425,12 +596,12 @@ case class GraftAnalyzeCapture(session: SparkSession) extends Rule[LogicalPlan] 
         "ANALYZE TABLE … PARTITION: snapshot statistics are table-scoped " +
           "(per-partition rows/bytes are already exact in the manifest)")
       GraftMaintenanceCommand(s"ANALYZE ${nameParts(r).mkString(".")}",
-        nameParts(r), Nil, (_, _) => Nil) // rows/size already manifest-exact
+        nameParts(r), Nil, (_, _, _) => Nil) // rows/size already manifest-exact
     case AnalyzeColumn(r: ResolvedTable, columnNames, allColumns)
         if r.table.isInstanceOf[GraftTable] =>
       val cols = if (allColumns) Nil else columnNames.getOrElse(Nil)
       GraftMaintenanceCommand(s"ANALYZE ${nameParts(r).mkString(".")} FOR COLUMNS",
-        nameParts(r), Nil, (sp, path) => { Snapshot.analyze(sp, path, cols); Nil })
+        nameParts(r), Nil, (sp, path, _) => { Snapshot.analyze(sp, path, cols); Nil })
   }
 }
 
@@ -504,34 +675,49 @@ object GraftNativeReads {
   */
 object GraftCatalogResolve {
 
+  /** (catalog, identifier parts within it) — explicit catalog segment,
+    * else the current catalog (+ current namespace for a bare name).
+    */
+  private def locate(session: SparkSession, nameParts: Seq[String])
+      : (org.apache.spark.sql.connector.catalog.CatalogPlugin, Seq[String]) = {
+    val cm = session.sessionState.catalogManager
+    nameParts match {
+      case Seq(single) => (cm.currentCatalog, cm.currentNamespace.toSeq :+ single)
+      case more if cm.isCatalogRegistered(more.head) => (cm.catalog(more.head), more.tail)
+      case more => (cm.currentCatalog, more)
+    }
+  }
+
   /** Resolve name parts to a snapshot-table path IF they land in a
     * GraftCatalog; None when another catalog owns the name.
     */
-  def pathOf(session: SparkSession, nameParts: Seq[String]): Option[String] = {
-    val cm = session.sessionState.catalogManager
-    val (catalog, ident) = nameParts match {
-      case Seq(single) =>
-        (cm.currentCatalog, cm.currentNamespace.toSeq :+ single)
-      case more if cm.isCatalogRegistered(more.head) =>
-        (cm.catalog(more.head), more.tail)
-      case more =>
-        (cm.currentCatalog, more)
-    }
-    catalog match {
-      case g: graft.catalog.GraftCatalog =>
+  def pathOf(session: SparkSession, nameParts: Seq[String]): Option[String] =
+    locate(session, nameParts) match {
+      case (g: graft.catalog.GraftCatalog, ident) =>
         Some(g.pathFor(org.apache.spark.sql.connector.catalog.Identifier.of(
           ident.init.toArray, ident.last)))
       case _ => None
     }
-  }
+
+  /** Resolve a statement's secondary name (a materialized view's source,
+    * a clone's source) given the table `of` the statement addresses.
+    * When `of` is bound by a `Snapshot.sql*` registry call, an
+    * unqualified name is a registry name too and resolves in the same
+    * binding; otherwise the name resolves like any statement's — the
+    * same rule [[MvAutoRoute]] and `Maintenance.tickNamespace` apply to
+    * a stored view's sources.
+    */
+  def near(session: SparkSession, of: Seq[String], name: Seq[String]): Option[String] =
+    locate(session, of) match {
+      case (r: graft.catalog.RegistryCatalog, ident) if name.size == 1 =>
+        pathOf(session, (r.name() +: ident.init) :+ name.head)
+      case _ => pathOf(session, name)
+    }
 
   /** The `table_changes('t', from[, to])` TABLE FUNCTION builder —
     * registered on the session (GraftFunctions.register /
     * GraftExtensions), so the CDC SQL surface resolves
-    * catalog-qualified names through the standard analyzer. The
-    * registry front end ([[graft.operators.SnapshotSql.query]])
-    * rewrites its own registered names before analysis, so both
-    * addressing styles coexist.
+    * catalog-qualified names through the standard analyzer.
     */
   def tableChanges(session: SparkSession, args: Seq[Expression]): LogicalPlan = {
     def longArg(e: Expression, what: String): Long = e match {

@@ -316,9 +316,9 @@ object GraftSqlParser {
         s"CREATE MATERIALIZED VIEW needs AS <query>: $text")
       val query = text.substring(toks(j).end).trim
       loud(query.nonEmpty, s"CREATE MATERIALIZED VIEW: empty defining query in: $text")
-      return Some(maintCmdNew(s"CREATE MATERIALIZED VIEW ${dstParts.mkString(".")}") {
-        (sp, path) =>
-          graft.operators.MatView.create(sp, path, query, catalogSourcePath(sp)); Nil
+      return Some(maintCmdRel(s"CREATE MATERIALIZED VIEW ${dstParts.mkString(".")}",
+          mustExist = false) { (sp, path, near) =>
+        graft.operators.MatView.create(sp, path, query, sourcePath(near)); Nil
       }(dstParts))
     }
     if (toks.length < 3 || !toks(0).is("CREATE") || !toks(1).is("TABLE")) return None
@@ -344,7 +344,8 @@ object GraftSqlParser {
         loud(j + 1 == toks.length, s"FROM PARQUET: unexpected trailing text in: $text")
         pCols = cols.result(); k = j + 1
       }
-      return Some(maintCmdNew(s"IMPORT PARQUET ${dstParts.mkString(".")}") { (sp, dstPath) =>
+      return Some(maintCmdRel(s"IMPORT PARQUET ${dstParts.mkString(".")}",
+          mustExist = false) { (sp, dstPath, _) =>
         graft.operators.Snapshot.importParquet(sp, dir, dstPath, pCols); Nil
       }(dstParts))
     }
@@ -376,14 +377,15 @@ object GraftSqlParser {
         tsRaw = Some(raw); k = toks.length
       }
     }
-    // nameParts = the SOURCE (the command's existence check applies
-    // to it); the destination resolves inside the body and must land
-    // in a graft catalog too
-    Some(maintCmd(s"$kindWord CLONE ${srcParts.mkString(".")}") { (sp, srcPath) =>
-      val dstPath = GraftCatalogResolve.pathOf(sp, dstParts).getOrElse(
-        throw new UnsupportedOperationException(
-          s"$kindWord CLONE: destination '${dstParts.mkString(".")}' " +
-            "must live in a graft catalog"))
+    // nameParts = the DESTINATION (the statement's result table); the
+    // source resolves through GraftCatalogResolve.near and must be a
+    // graft-catalog table
+    Some(maintCmdRel(s"$kindWord CLONE ${dstParts.mkString(".")}", mustExist = false) {
+        (sp, dstPath, near) =>
+      val srcPath = near(srcParts).filter(Snapshot.isSnapshotTable(sp, _)).getOrElse(
+        throw new IllegalArgumentException(
+          s"$kindWord CLONE: source '${srcParts.mkString(".")}' " +
+            "is not a snapshot table in a graft catalog"))
       val pinned = tsRaw match {
         case None => verSpec.map(Snapshot.resolveVersionSpec(sp, srcPath, _))
         case Some(raw) =>
@@ -395,7 +397,7 @@ object GraftSqlParser {
       if (deep) graft.operators.Snapshot.deepClone(sp, srcPath, dstPath, pinned)
       else graft.operators.Snapshot.shallowClone(sp, srcPath, dstPath, pinned)
       Nil
-    }(srcParts))
+    }(dstParts))
   }
 
   /** Try the maintenance shapes; None → not ours. */
@@ -434,11 +436,10 @@ object GraftSqlParser {
       if (after != toks0.length && !cascade) throw new IllegalStateException(
         s"REFRESH MATERIALIZED VIEW: unexpected trailing text in: $text0")
       val tail = if (cascade) " CASCADE" else ""
-      return Some(maintCmd(s"REFRESH MATERIALIZED VIEW ${parts.mkString(".")}$tail") {
-        (sp, path) =>
-          if (cascade)
-            graft.operators.MatView.refreshCascade(sp, path, catalogSourcePath(sp))
-          else graft.operators.MatView.refresh(sp, path, catalogSourcePath(sp))
+      return Some(maintCmdRel(s"REFRESH MATERIALIZED VIEW ${parts.mkString(".")}$tail") {
+        (sp, path, near) =>
+          if (cascade) graft.operators.MatView.refreshCascade(sp, path, sourcePath(near))
+          else graft.operators.MatView.refresh(sp, path, sourcePath(near))
           Nil
       }(parts))
     }
@@ -523,7 +524,7 @@ object GraftSqlParser {
           cols.result()
         }
       val where = whereText.map { w =>
-        graft.operators.SnapshotSql.refuseSubqueries(
+        GraftDmlCapture.refuseSubqueries(
           delegate.parseExpression(w), "OPTIMIZE WHERE")
         org.apache.spark.sql.functions.expr(w)
       }
@@ -607,38 +608,43 @@ object GraftSqlParser {
       "branches STRING")
 
   /** A materialized view's SOURCE table name (from its defining SQL)
-    * resolved to a snapshot path through the session catalogs — the
-    * catalog-route counterpart of the registry map.
+    * resolved to a snapshot path ([[GraftCatalogResolve.near]]).
     */
-  private def catalogSourcePath(sp: SparkSession): Seq[String] => String =
-    src => GraftCatalogResolve.pathOf(sp, src).getOrElse(
+  private def sourcePath(near: Seq[String] => Option[String]): Seq[String] => String =
+    src => near(src).getOrElse(
       throw new IllegalArgumentException(
         s"materialized view source '${src.mkString(".")}' must live in a graft catalog"))
 
   private def maintCmd(desc: String)(body: (SparkSession, String) => Seq[Row])(
       parts: Seq[String]): LogicalPlan =
-    GraftMaintenanceCommand(desc, parts, Nil, body)
+    GraftMaintenanceCommand(desc, parts, Nil, (sp, path, _) => body(sp, path))
 
-  /** A maintenance command whose target need NOT exist yet (imports). */
-  private def maintCmdNew(desc: String)(body: (SparkSession, String) => Seq[Row])(
+  /** A maintenance command whose body resolves further table names
+    * given its target (MV sources, a clone's source); `mustExist =
+    * false` for the verbs that create the target.
+    */
+  private def maintCmdRel(desc: String, mustExist: Boolean = true)(
+      body: (SparkSession, String, Seq[String] => Option[String]) => Seq[Row])(
       parts: Seq[String]): LogicalPlan =
-    GraftMaintenanceCommand(desc, parts, Nil, body, mustExist = false)
+    GraftMaintenanceCommand(desc, parts, Nil, body, mustExist)
 
   private def maintQuery(desc: String, schema: StructType)(
       body: (SparkSession, String) => Seq[Row])(parts: Seq[String]): LogicalPlan =
     GraftMaintenanceCommand(desc, parts,
-      DataTypeUtils.toAttributes(schema), body)
+      DataTypeUtils.toAttributes(schema), (sp, path, _) => body(sp, path))
 }
 
 /** One parsed maintenance statement: the identifier resolves through
   * the session's catalog manager AT RUN TIME (current catalog rules
   * apply, exactly like any other statement), must land in a
   * [[GraftCatalog]], and the body runs against the resolved table
-  * path. DESCRIBE forms carry their result schema in `output`.
+  * path, plus a resolver for the statement's further names
+  * ([[GraftCatalogResolve.near]]). DESCRIBE forms carry their result
+  * schema in `output`.
   */
 case class GraftMaintenanceCommand(desc: String, nameParts: Seq[String],
                                    override val output: Seq[Attribute],
-                                   body: (SparkSession, String) => Seq[Row],
+                                   body: (SparkSession, String, Seq[String] => Option[String]) => Seq[Row],
                                    mustExist: Boolean = true)
     extends LeafRunnableCommand {
 
@@ -649,7 +655,7 @@ case class GraftMaintenanceCommand(desc: String, nameParts: Seq[String],
           s"('${nameParts.mkString(".")}' resolves elsewhere)"))
     if (mustExist) require(Snapshot.isSnapshotTable(session, path),
       s"$desc: no snapshot table at $path")
-    body(session, path)
+    body(session, path, GraftCatalogResolve.near(session, nameParts, _))
   }
 
   override def simpleString(maxFields: Int): String = s"GraftMaintenanceCommand $desc"

@@ -142,6 +142,7 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     ext.injectResolutionRule(session => GraftDmlCapture(session))
     ext.injectResolutionRule(session => GraftNativeReads(session))
     ext.injectResolutionRule(session => GraftAnalyzeCapture(session))
+    ext.injectHintResolutionRule(session => GraftAlterNames(session))
     // MV auto-routing runs POST-HOC: the plan is fully resolved and the
     // native-read swaps are done, so the matcher sees final leaves
     ext.injectPostHocResolutionRule(session => MvAutoRoute(session))

@@ -13,4 +13,10 @@ object PlanBridge {
     val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     org.apache.spark.sql.classic.Dataset.ofRows(cs, plan)
   }
+
+  /** Run `f` with `spark` as the thread's active session, so
+    * `SQLConf.get` (and everything keyed off it) reads this session.
+    */
+  def withActive[T](spark: SparkSession)(f: => T): T =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].withActive(f)
 }

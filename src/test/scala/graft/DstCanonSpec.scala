@@ -47,6 +47,21 @@ class DstCanonSpec extends SparkSpec {
     assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L, 6L -> 5L, 7L -> 7L))
   }
 
+  test("canonicalize with a driverMaxEdges beyond Int range matches the default tiers") {
+    // max+1 overflows an Int (and, at Long.MaxValue, a Long): such a
+    // threshold cannot be probed exhaustively, so it must take the
+    // distributed tier rather than canonicalize a truncated edge set
+    val ids = (1L to 7L).toDF("doc_id")
+    val pairs = Seq((2L, 3L), (1L, 2L), (5L, 6L)).toDF("id_a", "id_b")
+    def labels(max: Long): Map[Long, Long] =
+      Dedup.canonicalize(ids, "doc_id", pairs, driverMaxEdges = max)
+        .as[(Long, Long)].collect().toMap
+    val default = Dedup.canonicalize(ids, "doc_id", pairs).as[(Long, Long)].collect().toMap
+    assert(labels(Long.MaxValue) == default)
+    assert(labels(Int.MaxValue.toLong) == default)
+    assert(default(3L) == 1L && default(6L) == 5L)
+  }
+
   test("canonicalize driver tier runs exactly ONE job: the gate and the collect fuse") {
     // the tier gate (edge count <= driverMaxEdges) must NOT be its own
     // driver action: limit(max+1).collect() both proves the edge set

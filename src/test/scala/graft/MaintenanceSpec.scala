@@ -133,6 +133,50 @@ class MaintenanceSpec extends SparkSpec {
     assert(Snapshot.latestVersion(spark, s"$wh/db/plain").contains(1L))
   }
 
+  test("an MV outside the current namespace resolves its unqualified source one way everywhere") {
+    val wh = Files.createTempDirectory("graft-maint-nsrel").toString
+    spark.conf.set("spark.sql.catalog.gmq", "graft.catalog.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.gmq.warehouse", wh)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS gmq.db1")
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS gmq.db2")
+    // two tables named `fact_nsrel`: the current namespace's and the view's own
+    Snapshot.create(spark, s"$wh/db1/fact_nsrel",
+      (0L until 60L).map(i => (i, s"k${i % 3}")).toDF("id", "k"))
+    Snapshot.create(spark, s"$wh/db2/fact_nsrel",
+      (0L until 10L).map(i => (i, s"z${i % 2}")).toDF("id", "k"))
+    val defining = "SELECT k, COUNT(*) AS n FROM fact_nsrel GROUP BY k"
+    def truth = spark.sql("SELECT k, COUNT(*) AS n FROM gmq.db1.fact_nsrel GROUP BY k")
+      .as[(String, Long)].collect().toSet
+    def view = Snapshot.read(spark, s"$wh/db2/mv").as[(String, Long)].collect().toSet
+    val before = spark.catalog.currentCatalog()
+    try {
+      spark.sql("USE gmq.db1")
+      spark.sql(s"CREATE MATERIALIZED VIEW gmq.db2.mv AS $defining")
+      assert(view == truth, "CREATE reads the current namespace's table")
+      Snapshot.append(spark, s"$wh/db1/fact_nsrel", Seq((500L, "k0")).toDF("id", "k"))
+      spark.sql("REFRESH MATERIALIZED VIEW gmq.db2.mv")
+      assert(view == truth, "REFRESH follows the same table")
+      spark.sql("ALTER MATERIALIZED VIEW gmq.db2.mv SET REFRESH EVERY 1 TICKS")
+      Snapshot.append(spark, s"$wh/db1/fact_nsrel", Seq((501L, "k1")).toDF("id", "k"))
+      val out = Maintenance.tickNamespace(spark, "gmq.db2", 1L, s"$wh/flags")
+      assert(out.values.forall(_.ok), out.toString)
+      assert(view == truth, "the namespace tick refreshes from the same table")
+      // the router checks freshness against that table too: fresh → routes
+      spark.conf.set("spark.graft.mv.autoRoute", s"$wh/db2/mv")
+      val routed = spark.sql(defining)
+      val scanned = routed.queryExecution.optimizedPlan.collect {
+        case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+          l.relation.asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
+            .location.asInstanceOf[graft.sources.SnapshotFileIndex].pinnedPath
+      }.toSet
+      assert(scanned == Set(s"$wh/db2/mv"), s"expected the MV scan, got $scanned")
+      assert(routed.as[(String, Long)].collect().toSet == truth)
+    } finally {
+      spark.conf.unset("spark.graft.mv.autoRoute")
+      spark.sql(s"USE $before.default")
+    }
+  }
+
   test("a GLOBAL rollup MV (no GROUP BY) refreshes by full recompute, correctly") {
     val root = Files.createTempDirectory("graft-mv-global").toString
     val (srcP, mvP) = (s"$root/src", s"$root/mv")

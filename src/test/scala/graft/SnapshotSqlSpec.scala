@@ -321,4 +321,53 @@ class SnapshotSqlSpec extends SparkSpec {
     assert(err.getMessage.contains("nondeterministic"))
     assert(Snapshot.latestVersion(spark, dir).contains(1L))
   }
+
+  test("the registry binding leaves nothing behind, even when the statement throws") {
+    val dir = tmp("binding")
+    Snapshot.create(spark, dir, fixture(0 until 10))
+    val reg = Map("t" -> dir)
+    val cm = spark.sessionState.catalogManager
+    Snapshot.sql(spark, "UPDATE t SET v = 1 WHERE id = 1", reg)
+    val catalogs = cm.listCatalogs(None)
+    val live = graft.catalog.RegistryBinding.activeBindings
+    intercept[IllegalArgumentException](Snapshot.sql(spark, "DELETE FROM nope", reg))
+    intercept[Exception](Snapshot.sql(spark, "DELETE FROM t WHERE no_such_fn(id)", reg))
+    Snapshot.sqlQuery(spark, "SELECT * FROM t", reg).collect()
+    assert(graft.catalog.RegistryBinding.activeBindings == live)
+    assert(cm.listCatalogs(None) == catalogs, "one registry catalog per session, not per call")
+    assert(spark.conf.getOption("spark.sql.catalog.graft_registry").isEmpty)
+    // a binding namespace outlives no call
+    val gone = intercept[IllegalArgumentException](
+      spark.sql("SELECT * FROM graft_registry.call1.t").collect())
+    assert(gone.getMessage.contains("no active registry binding"))
+  }
+
+  test("a session without GraftExtensions is refused with one clear message") {
+    import org.apache.spark.sql.SparkSession
+    val dir = tmp("noext")
+    Snapshot.create(spark, dir, fixture(0 until 10))
+    val v0 = Snapshot.latestVersion(spark, dir)
+    // extensions come from the shared context's static conf: lift it
+    // while a fresh session state is built on the same context
+    val sc = spark.sparkContext
+    val conf = sc.getClass.getMethod("conf").invoke(sc).asInstanceOf[org.apache.spark.SparkConf]
+    val ext = conf.get("spark.sql.extensions")
+    val prev = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    conf.remove("spark.sql.extensions")
+    try {
+      val plain = SparkSession.builder().getOrCreate()
+      assert(plain ne prev)
+      val e = intercept[IllegalArgumentException](
+        Snapshot.sql(plain, "DELETE FROM t WHERE id = 1", Map("t" -> dir)))
+      assert(e.getMessage.contains("GraftExtensions"))
+      intercept[IllegalArgumentException](Snapshot.sqlScript(plain, "SELECT 1"))
+    } finally {
+      conf.set("spark.sql.extensions", ext)
+      SparkSession.setDefaultSession(prev)
+      SparkSession.setActiveSession(prev)
+    }
+    assert(Snapshot.latestVersion(spark, dir) == v0, "nothing ran")
+  }
 }
