@@ -385,7 +385,7 @@ object MatView {
       // re-running it once per consumer. Change-window-sized, the same
       // budget the fold itself reads. A view with NO distinct columns
       // has exactly one consumer — skip the materialization there.
-      lazy val replays = prof(spark, "replays (materialize)") {
+      lazy val replays = {
         val r = replaysFor(vFroms(_).get, changed)
         if (shape.distinctCols.isEmpty && shape.avgCols.isEmpty) r
         else r.map(_.localCheckpoint())
@@ -406,19 +406,16 @@ object MatView {
           val sameWindow = sChanged == changed &&
             sChanged.forall(i => vFroms(i).contains(sFroms(i)))
           val feeds = if (sameWindow) replays else replaysFor(sFroms(_), sChanged)
-          val sDelta = prof(spark, s"side delta ($n)") {
-            sideDelta(feeds, shape, e).localCheckpoint() }
-          prof(spark, s"side fold+commit ($n)") {
-            if (sDelta.isEmpty)
-              Snapshot.commitMetaOn(spark, sp, sm,
-                s"REFRESH DISTINCT STATE $opTail (no-op window)")(stamp)
-            else
-              foldCommitRestricted(spark, sp, sm, sDelta,
-                shape.keys.headOption.map(_._1),
-                cur => foldSide(cur, sDelta, shape),
-                op = s"REFRESH DISTINCT STATE $opTail (incremental)",
-                finish = stamp)
-          }
+          val sDelta = sideDelta(feeds, shape, e).localCheckpoint()
+          if (sDelta.isEmpty)
+            Snapshot.commitMetaOn(spark, sp, sm,
+              s"REFRESH DISTINCT STATE $opTail (no-op window)")(stamp)
+          else
+            foldCommitRestricted(spark, sp, sm, sDelta,
+              shape.keys.headOption.map(_._1),
+              cur => foldSide(cur, sDelta, shape),
+              op = s"REFRESH DISTINCT STATE $opTail (incremental)",
+              finish = stamp)
         }
       }
       // the per-group MIN/MAX recompute tier reads the NEW state of
@@ -443,19 +440,16 @@ object MatView {
           val sameWindow = sChanged == changed &&
             sChanged.forall(i => vFroms(i).contains(sFroms(i)))
           val feeds = if (sameWindow) replays else replaysFor(sFroms(_), sChanged)
-          val aDelta = prof(spark, "avg side delta") {
-            groupedDelta(feeds, ash).localCheckpoint() }
-          prof(spark, "avg side fold+commit") {
-            if (aDelta.isEmpty)
-              Snapshot.commitMetaOn(spark, sp, sm,
-                s"REFRESH AVG STATE $opTail (no-op window)")(stamp)
-            else
-              foldCommitRestricted(spark, sp, sm, aDelta,
-                ash.keys.headOption.map(_._1),
-                cur => foldDeltas(cur, aDelta, ash, childAtNew),
-                op = s"REFRESH AVG STATE $opTail (incremental)",
-                finish = stamp)
-          }
+          val aDelta = groupedDelta(feeds, ash).localCheckpoint()
+          if (aDelta.isEmpty)
+            Snapshot.commitMetaOn(spark, sp, sm,
+              s"REFRESH AVG STATE $opTail (no-op window)")(stamp)
+          else
+            foldCommitRestricted(spark, sp, sm, aDelta,
+              ash.keys.headOption.map(_._1),
+              cur => foldDeltas(cur, aDelta, ash, childAtNew),
+              op = s"REFRESH AVG STATE $opTail (incremental)",
+              finish = stamp)
         }
       }
       val current = Snapshot.readManifestFiles(spark, mvPath, mvM, mvM.files)
@@ -465,8 +459,7 @@ object MatView {
       // this the replay trees (the expensive part: change feeds joined
       // through the defining tree) would run once for the emptiness
       // check and again for the fold
-      val delta0 = prof(spark, "view delta") {
-        groupedDelta(replays, shape).localCheckpoint() }
+      val delta0 = groupedDelta(replays, shape).localCheckpoint()
       if (delta0.isEmpty)
         Snapshot.commitMetaOn(spark, mvPath, mvM,
           s"REFRESH MATERIALIZED VIEW $opTail (no-op window)")(stamp)
@@ -477,14 +470,12 @@ object MatView {
       // side state (and so the patched column) while every view-owned
       // aggregate nets to neutral — so they keep the whole rewrite.
       else if (shape.distinctCols.isEmpty && shape.avgCols.isEmpty)
-        prof(spark, "view fold+commit") {
-          foldCommitRestricted(spark, mvPath, mvM, delta0,
-            shape.keys.headOption.map(_._1),
-            cur => foldDeltas(cur, delta0, shape, childAtNew),
-            op = s"REFRESH MATERIALIZED VIEW $opTail (incremental)",
-            finish = stamp)
-        }
-      else prof(spark, "view fold+commit") {
+        foldCommitRestricted(spark, mvPath, mvM, delta0,
+          shape.keys.headOption.map(_._1),
+          cur => foldDeltas(cur, delta0, shape, childAtNew),
+          op = s"REFRESH MATERIALIZED VIEW $opTail (incremental)",
+          finish = stamp)
+      else {
         val folded = foldDeltas(current, delta0, shape, childAtNew)
         // COUNT(DISTINCT) columns derive from the just-committed side
         // states: per-group row counts of a state-sized table — never
@@ -663,18 +654,6 @@ object MatView {
   }
 
   // ----------------------------------------------------------- internals
-
-  /** Stage timing for the incremental refresh, printed only under
-    * `spark.graft.mv.profile=true` — a diagnostic seam for the
-    * optimization rounds; zero cost when off.
-    */
-  private def prof[A](spark: SparkSession, label: String)(f: => A): A =
-    if (!spark.conf.getOption("spark.graft.mv.profile").contains("true")) f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[mvprof] $label%-30s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
 
   private def srcKey(parts: Seq[String]): String =
     parts.map(_.toLowerCase).mkString(".")

@@ -75,10 +75,12 @@ object Snapshot {
   val DvBroadcastMaxRowsKey = "spark.graft.dv.broadcastMaxRows"
   private val DvBroadcastMaxRowsDefault = 1000000L
 
-  /** Candidate-row ceiling for the fused single-scan DML path (delete
-    * caches matched positions and derives tier counts from the cache).
-    * Bounds the cached position set (file ref + position + partition
-    * values per matched row); above it the classic two-scan path runs.
+  /** Candidate-row ceiling for the fused single-scan DML path (every
+    * row-level DML verb caches its matched rows and derives both the
+    * tier counts and the vector tier from the cache). Bounds the cached
+    * match set (a DELETE keeps file ref + position + partition values
+    * per matched row, an UPDATE the whole row); above it the classic
+    * two-scan path runs.
     * A data-volume gate, not a core-count one — the same default is
     * reasonable on a cluster, where 4M cached rows are a few hundred
     * MB spread over executors.
@@ -216,18 +218,6 @@ object Snapshot {
     * concurrently-writing snapshot tables in the same JVM.
     */
   private val writeConfLock = new Object
-
-  /** Stage timing for the DML verbs, printed only under
-    * `spark.graft.dml.profile=true` — diagnostic seam for the
-    * optimization rounds; zero cost when off.
-    */
-  private def dmlProf[A](spark: SparkSession, label: String)(f: => A): A =
-    if (!spark.conf.getOption("spark.graft.dml.profile").contains("true")) f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[dmlprof] $label%-28s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
 
   /** A concurrent commit took this version first. APPEND-family writers
     * catch it and rebase ([[append]]'s retry loop); read-modify-write
@@ -3111,13 +3101,24 @@ object Snapshot {
   def overwrite(spark: SparkSession, path: String, df: DataFrame): Long =
     overwriteWith(spark, path, df, identity)
 
+  /** The one full-rewrite body under [[overwrite]], [[overwriteBatch]]
+    * and [[overwritePartitioned]]: `layout` (partition columns,
+    * generated columns) replaces the table's own when given.
+    */
   private def overwriteWith(spark: SparkSession, path: String, df: DataFrame,
-                            finish: Manifest => Manifest): Long = {
+                            finish: Manifest => Manifest,
+                            layout: Option[(Seq[String], Map[String, String])] = None): Long = {
     val m = latestManifest(spark, path).getOrElse(
       throw new IllegalArgumentException(s"not a snapshot table: $path"))
-    // an overwrite keeps the table's generated partition columns: the
-    // replacement derives them like any other load
-    val full = withGenerated(df, m.generatedCols)
+    val (partitionCols, generatedCols) = layout.getOrElse((m.partitionCols, m.generatedCols))
+    // an overwrite keeps (or swaps in) the generated partition columns:
+    // the replacement derives them like any other load
+    val full = withGenerated(df, generatedCols)
+    layout.foreach { _ =>
+      val missing = partitionCols.filterNot(full.columns.contains)
+      require(missing.isEmpty,
+        s"overwritePartitioned: partition column(s) not in the data: ${missing.mkString(", ")}")
+    }
     // the replacement's schema takes over, but DECLARED nullability
     // survives for columns that keep their name (inferred flags relax
     // — see create); the kept declarations are enforced on the data
@@ -3126,7 +3127,7 @@ object Snapshot {
       f.copy(nullable = !prior.fields.find(_.name == f.name).exists(!_.nullable))
     }).toDDL
     val (sortBy1, sortRange1) = writeSortSpec(m)
-    val files = writeTxnFiles(full, path, m.partitionCols,
+    val files = writeTxnFiles(full, path, partitionCols,
       constraints = withNotNullChecks(m.constraints, ddl),
       sortBy = sortBy1, sortRange = sortRange1)
     // streamBatch watermarks survive an overwrite: a foreachBatch
@@ -3139,11 +3140,14 @@ object Snapshot {
     commitManifest(spark, path, finish(
       m.copy(version = m.version + 1, operation = "OVERWRITE",
         schemaDdl = ddl, files = files,
-        stats = statsFor(spark, path, files, ddl, m.partitionCols),
+        stats = statsFor(spark, path, files, ddl, partitionCols),
+        partitionCols = partitionCols, generatedCols = generatedCols,
         // clustering keys survive an overwrite only while their
-        // columns do — a replaced schema must not strand a policy
-        // the next OPTIMIZE cannot resolve
-        clusterBy = m.clusterBy.filter(full.columns.contains),
+        // columns do (and are not partition columns of the new layout)
+        // — a replaced schema must not strand a policy the next
+        // OPTIMIZE cannot resolve
+        clusterBy = m.clusterBy.filter(c =>
+          full.columns.contains(c) && !partitionCols.contains(c)),
         dvs = Map.empty, colMap = Map.empty, retired = Nil,
         // bloom refs belong to the replaced files: keeping them would
         // hold their sidecar dirs live in vacuum forever
@@ -3162,32 +3166,8 @@ object Snapshot {
     */
   def overwritePartitioned(spark: SparkSession, path: String, df: DataFrame,
                            partitionCols: Seq[String],
-                           generatedCols: Map[String, String] = Map.empty): Long = {
-    val m = latestManifest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"not a snapshot table: $path"))
-    val full = withGenerated(df, generatedCols)
-    val missing = partitionCols.filterNot(full.columns.contains)
-    require(missing.isEmpty,
-      s"overwritePartitioned: partition column(s) not in the data: ${missing.mkString(", ")}")
-    // same nullability contract as overwriteWith: declared NOT NULL
-    // survives by name, inferred flags relax
-    val prior = StructType.fromDDL(m.schemaDdl)
-    val ddl = StructType(cleanFields(full.schema).map { f =>
-      f.copy(nullable = !prior.fields.find(_.name == f.name).exists(!_.nullable))
-    }).toDDL
-    val (sortBy2, sortRange2) = writeSortSpec(m)
-    val files = writeTxnFiles(full, path, partitionCols,
-      constraints = withNotNullChecks(m.constraints, ddl),
-      sortBy = sortBy2, sortRange = sortRange2)
-    commitManifest(spark, path,
-      m.copy(version = m.version + 1, operation = "OVERWRITE",
-        schemaDdl = ddl, files = files,
-        stats = statsFor(spark, path, files, ddl, partitionCols),
-        partitionCols = partitionCols, generatedCols = generatedCols,
-        clusterBy = m.clusterBy.filter(c =>
-          full.columns.contains(c) && !partitionCols.contains(c)),
-        dvs = Map.empty, colMap = Map.empty, retired = Nil, blooms = Map.empty))
-  }
+                           generatedCols: Map[String, String] = Map.empty): Long =
+    overwriteWith(spark, path, df, identity, Some((partitionCols, generatedCols)))
 
   /** Exactly-once micro-batch OVERWRITE — the full-rewrite twin of
     * [[appendBatch]], for incremental consumers whose publish step
@@ -3415,26 +3395,6 @@ object Snapshot {
       affectedRaw.contains(partitionValues(m.partitionCols, f))))
   }
 
-  /** Generalized MERGE with explicit arms — the reference's literal
-    * maintenance statement (funnel_live.py:155-172: aliased target and
-    * source, `WHEN MATCHED THEN UPDATE SET col = s.col, …`,
-    * `WHEN NOT MATCHED THEN INSERT (cols) VALUES (exprs)`), which
-    * [[mergeById]]'s whole-row replace cannot express. Arm semantics:
-    *
-    *  - `matchedSet = Some(set)`: matched target rows take each
-    *    assignment (expressions may reference BOTH sides through the
-    *    aliases; unlisted columns keep their old values);
-    *  - `matchedDelete = true`: matched target rows are dropped;
-    *  - neither: matched rows pass through unchanged;
-    *  - `insertCols = Some(cols)`: source rows matching no target id
-    *    insert with the given (target column → expression-over-source)
-    *    list; unlisted columns are null (SQL INSERT semantics).
-    *
-    * Same partition-restriction and id-embeds-partition contract as
-    * [[mergeById]]: only partitions present in the source are read and
-    * atomically swapped. Source ids must be unique (a duplicate would
-    * fan out the join) — refused, not deduped silently.
-    */
   /** One WHEN arm of a generalized MERGE: `cond` is the arm's AND
     * condition (None = unconditional), `set` the UPDATE assignments
     * (None = DELETE). Insert arms are [[InsertArm]].
@@ -3442,28 +3402,21 @@ object Snapshot {
   final case class WhenArm(cond: Option[Column], set: Option[Map[String, Column]])
   final case class InsertArm(cond: Option[Column], cols: Seq[(String, Column)])
 
-  /** Back-compat single-arm entry: the original one-unconditional-arm
-    * shape, now a thin wrapper over [[mergeArmsMulti]].
-    */
-  private[graft] def mergeArms(spark: SparkSession, path: String, source: DataFrame,
-                               targetAlias: String, sourceAlias: String, idCol: String,
-                               matchedSet: Option[Map[String, Column]],
-                               matchedDelete: Boolean,
-                               insertCols: Option[Seq[(String, Column)]]): Long =
-    mergeArmsMulti(spark, path, source, targetAlias, sourceAlias, Seq(idCol),
-      matched =
-        if (matchedDelete) Seq(WhenArm(None, None))
-        else matchedSet.map(set => WhenArm(None, Some(set))).toSeq,
-      notMatched = insertCols.map(InsertArm(None, _)).toSeq,
-      bySource = Nil)
-
-  /** Generalized MERGE: the FULL standard arm surface —
+  /** Generalized MERGE with explicit arms — the reference's literal
+    * maintenance statement (funnel_live.py:155-172: aliased target and
+    * source, `WHEN MATCHED THEN UPDATE SET col = s.col, …`,
+    * `WHEN NOT MATCHED THEN INSERT (cols) VALUES (exprs)`), which
+    * [[mergeById]]'s whole-row replace cannot express. The FULL
+    * standard arm surface —
     *
     *  - `matched`: `WHEN MATCHED [AND cond] THEN UPDATE SET .../DELETE`,
     *    any number, evaluated IN ORDER — the first arm whose condition
-    *    holds applies (none hold: the row passes unchanged);
+    *    holds applies (none hold: the row passes unchanged); UPDATE
+    *    assignments may reference both sides through the aliases and
+    *    unlisted columns keep their old values;
     *  - `notMatched`: `WHEN NOT MATCHED [AND cond] THEN INSERT ...`,
-    *    same first-match-wins ordering over source-only rows;
+    *    same first-match-wins ordering over source-only rows; columns
+    *    the insert does not list are null (SQL INSERT semantics);
     *  - `bySource`: `WHEN NOT MATCHED BY SOURCE [AND cond] THEN
     *    UPDATE/DELETE` over target rows with NO source match — the
     *    sync shape ("delete/flag whatever the feed no longer carries").
@@ -3478,6 +3431,8 @@ object Snapshot {
     * contract). A `bySource` arm is a statement about EVERY target
     * row, so the merge reads the whole table and swaps every partition
     * — the inherent cost of the shape, paid only when asked for.
+    * Source keys must be unique (a duplicate would fan out the join) —
+    * refused, not deduped silently.
     */
   private[graft] def mergeArmsMulti(spark: SparkSession, path: String, source: DataFrame,
                                     targetAlias: String, sourceAlias: String,
@@ -3652,9 +3607,11 @@ object Snapshot {
     *     prunes the scan to the predicate's columns) — a candidate with
     *     zero real matches stays byte-identical in the new version;
     *  3. a file where EVERY row matches is dropped from the manifest
-    *     with no rewrite at all (row count from its own stats); only
-    *     files with a partial match are read again and rewritten
-    *     without their matching rows.
+    *     with no rewrite at all (row count from its own stats); a file
+    *     with a small matched fraction (at most `dvMaxFraction` of its
+    *     live rows) takes a deletion vector; only the remaining partial
+    *     matches are read again and rewritten without their matching
+    *     rows.
     *
     * SQL semantics: rows where `pred` is NULL are kept (DELETE removes
     * only where the predicate is true). Commits one new version (or
@@ -3662,7 +3619,50 @@ object Snapshot {
     */
   def delete(spark: SparkSession, path: String, pred: Column,
              dvMaxFraction: Double = 0.1): Long =
-    retryDml("delete")(deleteOnce(spark, path, pred, dvMaxFraction))
+    retryDml("delete")(rowDmlOnce(spark, path, "delete", ByPred(pred), None, dvMaxFraction))
+
+  /** Row-level DELETE of every row whose `keyCol` value appears in
+    * `keys` — the `DELETE … WHERE k IN (SELECT …)` shape, which a row
+    * predicate cannot express without collecting the subquery. The key
+    * set stays DISTRIBUTED end to end (a left-semi equi-join finds the
+    * matches, a left-anti join the rewrite's survivors), the same three
+    * tiers as [[delete]] apply, and nothing key-sized ever lands on the
+    * driver — at 100 TB the subquery result is a table, not a literal
+    * list. NULL keys are dropped up front (SQL IN semantics: NULL never
+    * matches).
+    */
+  def deleteMatching(spark: SparkSession, path: String, keyCol: String,
+                     keys: DataFrame, dvMaxFraction: Double = 0.1): Long =
+    retryDml("deleteMatching")(rowDmlOnce(spark, path, "deleteMatching",
+      ByKeys(keyCol, keys), None, dvMaxFraction))
+
+  /** Row-level UPDATE by predicate: `set` maps column name → new-value
+    * expression (evaluated against the old row, so `"c" -> col("c")+1`
+    * works). Same candidate pruning and zero-match skip as [[delete]],
+    * and the same two write tiers: a file where more than
+    * `dvMaxFraction` of live rows match is rewritten with `set`
+    * applied to its matching rows; a POINT update instead records the
+    * matched positions in the file's deletion vector and APPENDS the
+    * updated rows as a new file — copy-on-write of the rows, not the
+    * file, so a 1-row rectification of a 1-GB file moves 1 row. Rows
+    * where `pred` is NULL are untouched (SQL UPDATE semantics).
+    * Returns the committed version (unchanged if nothing matched).
+    */
+  def update(spark: SparkSession, path: String, pred: Column,
+             set: Map[String, Column], dvMaxFraction: Double = 0.1): Long =
+    retryDml("update")(rowDmlOnce(spark, path, "update", ByPred(pred), Some(set), dvMaxFraction))
+
+  /** Row-level UPDATE of every row whose `keyCol` value appears in
+    * `keys` — `UPDATE … SET … WHERE k IN (SELECT …)`. Same distributed
+    * shape as [[deleteMatching]] (the key set never collects), same
+    * two write tiers as [[update]] (a left join marks the rewritten
+    * files' keyed rows).
+    */
+  def updateMatching(spark: SparkSession, path: String, keyCol: String,
+                     keys: DataFrame, set: Map[String, Column],
+                     dvMaxFraction: Double = 0.1): Long =
+    retryDml("updateMatching")(rowDmlOnce(spark, path, "updateMatching",
+      ByKeys(keyCol, keys), Some(set), dvMaxFraction))
 
   /** A DML STATEMENT is safely re-derivable: unlike compact (whose
     * marked file set is an input), delete/update compute everything
@@ -3726,91 +3726,154 @@ object Snapshot {
     org.apache.spark.sql.graftbridge.ColumnBridge.column(pinned)
   }
 
-  private def deleteOnce(spark: SparkSession, path: String, pred0: Column,
+  /** What a row-level DML statement matches: the rows where `pred` is
+    * true ([[delete]], [[update]]), or the rows whose `keyCol` value is
+    * in a distributed key set ([[deleteMatching]], [[updateMatching]]).
+    */
+  private sealed trait DmlMatch
+  private final case class ByPred(pred: Column) extends DmlMatch
+  private final case class ByKeys(keyCol: String, keys: DataFrame) extends DmlMatch
+
+  /** A [[DmlMatch]] bound to one manifest — all the DML pipeline needs
+    * of it: the files that may hold matches, the matched rows of some
+    * files (with [[MetaFile]]/[[MetaPos]]), the rows a DELETE rewrite
+    * keeps, and an UPDATE rewrite's rows with their is-matched flag.
+    */
+  private final case class BoundMatch(candidates: Seq[String],
+                                      matchedIn: Seq[String] => DataFrame,
+                                      keep: DataFrame => DataFrame,
+                                      mark: DataFrame => (DataFrame, Column))
+
+  /** The ONE body under the four row-level DML verbs; `set` None means
+    * DELETE. The match only decides which rows are hit; this owns the
+    * protocol: per-file match counts, the tier split (whole-file drop —
+    * DELETE only —, deletion vector, rewrite), the rewrite and vector
+    * writes, the rebasing commit and the dense-vector fold.
+    */
+  private def rowDmlOnce(spark: SparkSession, path: String, what: String,
+                         target: DmlMatch, set0: Option[Map[String, Column]],
                          dvMaxFraction: Double): Long = {
     val m = latestManifest(spark, path).getOrElse(
       throw new IllegalArgumentException(s"not a snapshot table: $path"))
-    val pred = pinDmlExpr(spark, m, "delete", pred0)
-    val hit = coalesce(pred, lit(false))
-    val candidates = SnapshotStats.prune(spark, m, pred, Some(path))
-    if (candidates.isEmpty) return m.version
-    // FUSED single scan for bounded candidate sets: the per-file match
-    // counts (tier decision) and the DV tier's matched positions come
-    // from ONE persisted pass over the stats-pruned candidates instead
-    // of two — the common point-delete pays one table read, not two.
-    // Gated by the candidates' manifest row counts (driver-known, no
-    // job) so an unpruned 100 TB band delete never caches a
-    // table-sized position set; above the gate, the two-scan path is
-    // unchanged. The gate is data volume, not core count — the same
-    // threshold is right on a cluster.
-    val fusedGate = spark.conf.getOption(DmlFusedScanMaxRowsKey)
-      .flatMap(_.toLongOption).getOrElse(DmlFusedScanMaxRowsDefault)
-    val candRows = candidates.map(f => liveRowsOf(m, f))
-    val fused = candRows.forall(_.isDefined) &&
-      candRows.flatten.sum <= fusedGate
-    val matchedRows =
-      if (!fused) null
-      else readFilesMeta(spark, path, m, Some(candidates), meta = true)
-        .where(hit)
-        .select((m.partitionCols.map(col) ++ Seq(col(MetaFile), col(MetaPos))): _*)
-        .persist()
+    val schema = StructType.fromDDL(m.schemaDdl)
+    set0.foreach { s =>
+      val bad = s.keySet.diff(schema.fieldNames.toSet)
+      require(bad.isEmpty, s"Snapshot.$what: unknown column(s) ${bad.mkString(", ")}")
+      require(s.keySet.intersect(m.partitionCols.toSet).isEmpty,
+        s"Snapshot.$what: cannot update a partition column (delete + append instead)")
+    }
+    val verb = if (set0.isEmpty) "delete" else "update"
+    // persisted frames, released when the statement ends
+    val held = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    def hold(df: DataFrame): DataFrame = { held += df.persist(); df }
     try {
-      val matched = dmlProf(spark, "delete: matchedPerFile")(
-        if (fused)
-          countsToManifest(path, m, matchedRows
-            .groupBy(col(MetaFile).as("__file")).count()
-            .collect().map(r => (r.getString(0), r.getLong(1))))
-        else matchedPerFile(spark, path, m, pred))
-      if (matched.isEmpty) return m.version
+      val bound = target match {
+        case ByPred(pred0) =>
+          val pred = pinDmlExpr(spark, m, verb, pred0)
+          val hit = coalesce(pred, lit(false))
+          BoundMatch(SnapshotStats.prune(spark, m, pred, Some(path)),
+            fs => readFilesMeta(spark, path, m, Some(fs), meta = true).where(hit),
+            _.where(!hit), df => (df, hit))
+        case ByKeys(keyCol, keys0) =>
+          // the key set feeds several jobs (counts, rewrite, vectors):
+          // persist it so the subquery computes once
+          val keys = hold(inKeySet(keys0, schema, keyCol, s"Snapshot.$what"))
+          val on = col(keyCol) === col(InKeyCol)
+          BoundMatch(m.files,
+            fs => readFilesMeta(spark, path, m, Some(fs), meta = true).join(keys, on, "left_semi"),
+            _.join(keys, on, "left_anti"),
+            df => (df.join(keys, on, "left"), col(InKeyCol).isNotNull))
+      }
+      // SET values are evaluated once per tier (two writeTxnFiles jobs);
+      // pin their clock too, so both tiers stamp the same instant
+      val set = set0.map(_.map { case (k, v) => k -> pinDmlExpr(spark, m, verb, v) })
+      val candidates = bound.candidates
+      if (candidates.isEmpty) return m.version
+      // FUSED single scan for bounded candidate sets: the per-file match
+      // counts (tier decision) and the DV tier's matched rows come from
+      // ONE persisted pass over the candidates instead of two — the
+      // common point DML pays one table read, not two. A DELETE keeps
+      // only the positions, an UPDATE the whole rows (they also feed the
+      // appended updated rows). Gated by the candidates' manifest row
+      // counts (driver-known, no job) so an unpruned 100 TB band
+      // statement never caches a table-sized match set; above the gate
+      // the counts and the vector tier scan separately. The gate is
+      // data volume, not core count — the same threshold is right on a
+      // cluster.
+      val fusedGate = spark.conf.getOption(DmlFusedScanMaxRowsKey)
+        .flatMap(_.toLongOption).getOrElse(DmlFusedScanMaxRowsDefault)
+      val candRows = candidates.map(f => liveRowsOf(m, f))
+      val fused =
+        if (candRows.exists(_.isEmpty) || candRows.flatten.sum > fusedGate) None
+        else {
+          val rows = bound.matchedIn(candidates)
+          Some(hold(if (set.isDefined) rows
+            else rows.select((m.partitionCols.map(col) ++ Seq(col(MetaFile), col(MetaPos))): _*)))
+        }
+      val counts = fused.getOrElse(bound.matchedIn(candidates))
+        .groupBy(col(MetaFile).as("__file")).count()
+        .collect().map(r => (r.getString(0), r.getLong(1)))
+      if (counts.isEmpty) return m.version
+      val entryOf = manifestEntryOf(path, m)
+      val matched = counts.map { case (abs, n) => entryOf(abs) -> n }.toMap
       // live rows = physical rows minus already-deleted positions — the
       // whole-file and fraction tiers must judge against what a reader
       // actually sees, or a second delete on a DV'd file mis-tiers
-      val (whole, rest) = matched.partition { case (f, n) => liveRowsOf(m, f).contains(n) }
+      val (whole, rest) =
+        if (set.isDefined) (Map.empty[String, Long], matched)
+        else matched.partition { case (f, n) => liveRowsOf(m, f).contains(n) }
       val (dvTier, rewriteTier) = dvTierSplit(m, rest, dvMaxFraction)
       val rewrite = rewriteTier.keys.toSeq.sorted
-      val newFiles =
+      val (checks, generated) =
+        if (set.isEmpty) (Map.empty[String, String], Map.empty[String, String])
+        else (withNotNullChecks(m.constraints, m.schemaDdl), m.generatedCols)
+      def write(df: DataFrame): Seq[String] =
+        writeTxnFiles(df, path, m.partitionCols, m.colMap, checks, generated,
+          sortBy = writeSortSpec(m)._1, sortRange = writeSortSpec(m)._2)
+      def assigned(df: DataFrame, hit: Column, s: Map[String, Column]): DataFrame =
+        df.select(schema.fields.toSeq.map { f =>
+          s.get(f.name).fold(col(f.name))(v =>
+            when(hit, v.cast(f.dataType)).otherwise(col(f.name))).as(f.name)
+        }: _*)
+      val rewritten =
         if (rewrite.isEmpty) Nil
-        else dmlProf(spark, "delete: rewrite write")(writeTxnFiles(
-          readFiles(spark, path, m, Some(rewrite)).where(!coalesce(pred, lit(false))),
-          path, m.partitionCols, m.colMap,
-          sortBy = writeSortSpec(m)._1, sortRange = writeSortSpec(m)._2))
-      val dvNew =
-        if (dvTier.isEmpty) Map.empty[String, DvRef]
-        // the fused matched-rows cache serves the vector directly only
-        // when it holds EXACTLY the dv tier's rows (no whole-file or
-        // rewrite-tier rows mixed in — a pure point delete)
-        else if (fused && whole.isEmpty && rewrite.isEmpty)
-          dmlProf(spark, "delete: writeDv (fused)")(
-            writeDvFrom(spark, path, m, matchedRows, dvTier))
-        else dmlProf(spark, "delete: writeDv")(writeDv(spark, path, m, pred, dvTier))
-      val committed = dmlProf(spark, "delete: stats+commit")(commitRebasing(spark, path, m,
-        drop = whole.keySet ++ rewrite.toSet,
+        else {
+          val rows = readFiles(spark, path, m, Some(rewrite))
+          write(set.fold(bound.keep(rows)) { s =>
+            val (marked, hit) = bound.mark(rows)
+            assigned(marked, hit, s)
+          })
+        }
+      val (dvNew, appended) =
+        if (dvTier.isEmpty) (Map.empty[String, DvRef], Nil)
+        else {
+          // the vector and an UPDATE's appended rows read the fused
+          // cache, narrowed to the tier's files; without it one scan of
+          // the tier feeds both, held for an UPDATE — the set is small by
+          // the fraction cap
+          val rows = fused match {
+            case Some(c) =>
+              val scanned = counts.map(_._1).filter(f => dvTier.contains(entryOf(f)))
+              c.where(col(MetaFile).isin(scanned: _*))
+            case None =>
+              val r = bound.matchedIn(dvTier.keys.toSeq.sorted)
+              if (set.isDefined) hold(r) else r
+          }
+          (writeDvFrom(spark, path, m, rows, dvTier),
+            set.fold(Seq.empty[String])(s => write(assigned(rows, lit(true), s))))
+        }
+      val added = rewritten ++ appended
+      val committed = commitRebasing(spark, path, m,
+        drop = whole.keySet ++ rewrite,
         touched = dvTier.keySet,
-        addFiles = newFiles,
+        addFiles = added,
         addStats =
-          if (newFiles.isEmpty) Map.empty
-          else statsFor(spark, path, newFiles, m.schemaDdl, m.partitionCols, m.colMap),
-        addDvs = dvNew, op = "DELETE"))
-      if (dvNew.isEmpty) committed
-      else dmlProf(spark, "delete: maybeFoldDense")(maybeFoldDense(spark, path, committed))
-    } finally if (matchedRows != null) matchedRows.unpersist()
+          if (added.isEmpty) Map.empty
+          else statsFor(spark, path, added, m.schemaDdl, m.partitionCols, m.colMap),
+        addDvs = dvNew, op = if (set.isEmpty) "DELETE" else "UPDATE")
+      if (dvNew.isEmpty) committed else maybeFoldDense(spark, path, committed)
+    } finally held.foreach(_.unpersist())
   }
-
-  /** Row-level DELETE of every row whose `keyCol` value appears in
-    * `keys` — the `DELETE … WHERE k IN (SELECT …)` shape, which a row
-    * predicate cannot express without collecting the subquery. The key
-    * set stays DISTRIBUTED end to end: per-file match counts come from
-    * one left-semi equi-join over the live scan, the same three tiers
-    * as [[delete]] apply (whole-file drop, deletion-vector positions,
-    * minimum rewrite via left-anti join), and nothing key-sized ever
-    * lands on the driver — at 100 TB the subquery result is a table,
-    * not a literal list. NULL keys are dropped up front (SQL IN
-    * semantics: NULL never matches).
-    */
-  def deleteMatching(spark: SparkSession, path: String, keyCol: String,
-                     keys: DataFrame, dvMaxFraction: Double = 0.1): Long =
-    retryDml("deleteMatching")(
-      deleteMatchingOnce(spark, path, keyCol, keys, dvMaxFraction))
 
   /** Column name the IN-key join binds the (single-column, distinct,
     * null-free) key set under; chosen to never collide with user
@@ -3844,145 +3907,13 @@ object Snapshot {
       .where(col(InKeyCol).isNotNull).distinct()
   }
 
-  /** Absolute scanned-file counts → manifest-relative entries, shared
-    * by every per-file matcher ([[matchedPerFile]] and the IN-key
-    * twins) so the fileKey resolution quirks live in one place.
+  /** Scanned absolute file path → its manifest entry, so the fileKey
+    * resolution quirks live in one place.
     */
-  private def countsToManifest(path: String, m: Manifest,
-                               counts: Array[(String, Long)]): Map[String, Long] = {
+  private def manifestEntryOf(path: String, m: Manifest): String => String = {
     val byKey = m.files.map(f => fileKey(fileAbs(path, m, f)) -> f).toMap
-    counts.map { case (abs, n) =>
-      byKey.getOrElse(fileKey(abs), throw new IllegalStateException(
-        s"Snapshot DML: scanned file $abs not resolvable to a manifest entry")) -> n
-    }.toMap
-  }
-
-  /** Per-file matched counts of the IN-key join — [[matchedPerFile]]'s
-    * twin for a join "predicate": one left-semi equi-join over the
-    * live scan of `files` (all live files when None), keyed back to
-    * manifest entries.
-    */
-  private def inKeyMatches(spark: SparkSession, path: String, m: Manifest,
-                           keyCol: String, keys: DataFrame,
-                           files: Option[Seq[String]]): DataFrame =
-    readFilesMeta(spark, path, m, files, meta = true)
-      .join(keys, col(keyCol) === col(InKeyCol), "left_semi")
-
-  private def deleteMatchingOnce(spark: SparkSession, path: String, keyCol: String,
-                                 keys0: DataFrame, dvMaxFraction: Double): Long = {
-    val m = latestManifest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"not a snapshot table: $path"))
-    val schema = StructType.fromDDL(m.schemaDdl)
-    val keyTmp = InKeyCol
-    // the key set feeds up to three jobs (counts, rewrite, vectors) —
-    // persist it so the subquery computes once, like updateOnce's
-    // matched-row cache
-    val keys = inKeySet(keys0, schema, keyCol, "Snapshot.deleteMatching").persist()
-    try {
-      def hits(files: Option[Seq[String]]): DataFrame =
-        inKeyMatches(spark, path, m, keyCol, keys, files)
-      val counts = hits(None)
-        .groupBy(col(MetaFile).as("__file")).count()
-        .collect().map(r => (r.getString(0), r.getLong(1)))
-      if (counts.isEmpty) return m.version
-      val matched = countsToManifest(path, m, counts)
-      val (whole, rest) = matched.partition { case (f, n) => liveRowsOf(m, f).contains(n) }
-      val (dvTier, rewriteTier) = dvTierSplit(m, rest, dvMaxFraction)
-      val rewrite = rewriteTier.keys.toSeq.sorted
-      val newFiles =
-        if (rewrite.isEmpty) Nil
-        else writeTxnFiles(
-          readFiles(spark, path, m, Some(rewrite))
-            .join(keys, col(keyCol) === col(keyTmp), "left_anti"),
-          path, m.partitionCols, m.colMap,
-          sortBy = writeSortSpec(m)._1, sortRange = writeSortSpec(m)._2)
-      val dvNew =
-        if (dvTier.isEmpty) Map.empty[String, DvRef]
-        else writeDvFrom(spark, path, m, hits(Some(dvTier.keys.toSeq.sorted)), dvTier)
-      val committed = commitRebasing(spark, path, m,
-        drop = whole.keySet ++ rewrite.toSet,
-        touched = dvTier.keySet,
-        addFiles = newFiles,
-        addStats =
-          if (newFiles.isEmpty) Map.empty
-          else statsFor(spark, path, newFiles, m.schemaDdl, m.partitionCols, m.colMap),
-        addDvs = dvNew, op = "DELETE")
-      if (dvNew.isEmpty) committed else maybeFoldDense(spark, path, committed)
-    } finally keys.unpersist()
-  }
-
-  /** Row-level UPDATE of every row whose `keyCol` value appears in
-    * `keys` — `UPDATE … SET … WHERE k IN (SELECT …)`. Same distributed
-    * shape as [[deleteMatching]] (the key set never collects), same
-    * two write tiers as [[update]]: heavily-matched files rewrite in
-    * place (a left join marks the rows), lightly-matched files take a
-    * deletion vector plus an append of their updated rows.
-    */
-  def updateMatching(spark: SparkSession, path: String, keyCol: String,
-                     keys: DataFrame, set: Map[String, Column],
-                     dvMaxFraction: Double = 0.1): Long =
-    retryDml("updateMatching")(
-      updateMatchingOnce(spark, path, keyCol, keys, set, dvMaxFraction))
-
-  private def updateMatchingOnce(spark: SparkSession, path: String, keyCol: String,
-                                 keys0: DataFrame, set0: Map[String, Column],
-                                 dvMaxFraction: Double): Long = {
-    val m = latestManifest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"not a snapshot table: $path"))
-    val schema = StructType.fromDDL(m.schemaDdl)
-    val bad = set0.keySet.diff(schema.fieldNames.toSet)
-    require(bad.isEmpty, s"Snapshot.updateMatching: unknown column(s) ${bad.mkString(", ")}")
-    require(set0.keySet.intersect(m.partitionCols.toSet).isEmpty,
-      "Snapshot.updateMatching: cannot update a partition column (delete + append instead)")
-    val set = set0.map { case (k, v) => k -> pinDmlExpr(spark, m, "update", v) }
-    val keys = inKeySet(keys0, schema, keyCol, "Snapshot.updateMatching").persist()
-    try {
-      val counts = inKeyMatches(spark, path, m, keyCol, keys, None)
-        .groupBy(col(MetaFile).as("__file")).count()
-        .collect().map(r => (r.getString(0), r.getLong(1)))
-      if (counts.isEmpty) return m.version
-      val matched = countsToManifest(path, m, counts)
-      val (dvTier, rewriteTier) = dvTierSplit(m, matched, dvMaxFraction)
-      def applySet(hit: Column, onlyMatched: Boolean) = schema.fields.toSeq.map { f =>
-        set.get(f.name)
-          .map { v =>
-            if (onlyMatched) v.cast(f.dataType).as(f.name)
-            else when(hit, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-          }
-          .getOrElse(col(f.name).as(f.name))
-      }
-      val rewrite = rewriteTier.keys.toSeq.sorted
-      val rewriteFiles =
-        if (rewrite.isEmpty) Nil
-        else writeTxnFiles(
-          readFiles(spark, path, m, Some(rewrite))
-            .join(keys, col(keyCol) === col(InKeyCol), "left")
-            .select(applySet(col(InKeyCol).isNotNull, onlyMatched = false): _*),
-          path, m.partitionCols, m.colMap,
-            withNotNullChecks(m.constraints, m.schemaDdl), m.generatedCols,
-          sortBy = writeSortSpec(m)._1, sortRange = writeSortSpec(m)._2)
-      val (dvNew, updatedFiles) =
-        if (dvTier.isEmpty) (Map.empty[String, DvRef], Nil)
-        else {
-          val matchedRows = inKeyMatches(spark, path, m, keyCol, keys,
-            Some(dvTier.keys.toSeq.sorted)).persist()
-          try (
-            writeDvFrom(spark, path, m, matchedRows, dvTier),
-            writeTxnFiles(matchedRows.select(applySet(lit(true), onlyMatched = true): _*),
-              path, m.partitionCols, m.colMap,
-            withNotNullChecks(m.constraints, m.schemaDdl), m.generatedCols,
-              sortBy = writeSortSpec(m)._1, sortRange = writeSortSpec(m)._2))
-          finally matchedRows.unpersist()
-        }
-      val committed = commitRebasing(spark, path, m,
-        drop = rewrite.toSet,
-        touched = dvTier.keySet,
-        addFiles = rewriteFiles ++ updatedFiles,
-        addStats = statsFor(spark, path, rewriteFiles ++ updatedFiles,
-          m.schemaDdl, m.partitionCols, m.colMap),
-        addDvs = dvNew, op = "UPDATE")
-      if (dvNew.isEmpty) committed else maybeFoldDense(spark, path, committed)
-    } finally keys.unpersist()
+    abs => byKey.getOrElse(fileKey(abs), throw new IllegalStateException(
+      s"Snapshot DML: scanned file $abs not resolvable to a manifest entry"))
   }
 
   /** Live rows of a file: physical rows minus already-deleted
@@ -4009,25 +3940,14 @@ object Snapshot {
     }
   }
 
-  /** Write REPLACEMENT deletion vectors for the `matched` files: the
-    * predicate's matched physical positions plus each file's
-    * previously-deleted positions (vectors are immutable; a new delete
-    * supersedes the old vector rather than mutating it), grouped by
-    * data-file basename under one commit dir. Nothing is live until
-    * the manifest commits. Per-file row counts come from the already-
-    * computed match counts plus the superseded vector's count — no
-    * extra job.
-    */
-  private def writeDv(spark: SparkSession, path: String, m: Manifest, pred: Column,
-                      matched: Map[String, Long]): Map[String, DvRef] =
-    writeDvFrom(spark, path, m,
-      readFilesMeta(spark, path, m, Some(matched.keys.toSeq.sorted), meta = true)
-        .where(coalesce(pred, lit(false))),
-      matched)
-
-  /** [[writeDv]] from an already-filtered matched-rows frame (with the
-    * meta columns) — lets [[update]]'s DV tier share one cached scan
-    * between the vector and the appended rows.
+  /** Write REPLACEMENT deletion vectors for the `matched` files from
+    * their matched rows (`matchedRows`, with the meta columns): the
+    * matched physical positions plus each file's previously-deleted
+    * positions (vectors are immutable; a new delete supersedes the old
+    * vector rather than mutating it), grouped by data-file basename
+    * under one commit dir. Nothing is live until the manifest commits.
+    * Per-file row counts come from the already-computed match counts
+    * plus the superseded vector's count — no extra job.
     */
   private def writeDvFrom(spark: SparkSession, path: String, m: Manifest,
                           matchedRows: DataFrame,
@@ -4054,98 +3974,6 @@ object Snapshot {
       f -> DvRef(s"$dvDirRel/$DvFileCol=$esc",
         matched(f) + m.dvs.get(f).map(_.rows).getOrElse(0L))
     }.toMap
-  }
-
-  /** Row-level UPDATE by predicate: `set` maps column name → new-value
-    * expression (evaluated against the old row, so `"c" -> col("c")+1`
-    * works). Same candidate pruning and zero-match skip as [[delete]],
-    * and the same two write tiers: a file where more than
-    * `dvMaxFraction` of live rows match is rewritten with `set`
-    * applied to its matching rows; a POINT update instead records the
-    * matched positions in the file's deletion vector and APPENDS the
-    * updated rows as a new file — copy-on-write of the rows, not the
-    * file, so a 1-row rectification of a 1-GB file moves 1 row. Rows
-    * where `pred` is NULL are untouched (SQL UPDATE semantics).
-    * Returns the committed version (unchanged if nothing matched).
-    */
-  def update(spark: SparkSession, path: String, pred: Column,
-             set: Map[String, Column], dvMaxFraction: Double = 0.1): Long =
-    retryDml("update")(updateOnce(spark, path, pred, set, dvMaxFraction))
-
-  private def updateOnce(spark: SparkSession, path: String, pred0: Column,
-                         set0: Map[String, Column], dvMaxFraction: Double): Long = {
-    val m = latestManifest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"not a snapshot table: $path"))
-    val schema = StructType.fromDDL(m.schemaDdl)
-    val bad = set0.keySet.diff(schema.fieldNames.toSet)
-    require(bad.isEmpty, s"Snapshot.update: unknown column(s) ${bad.mkString(", ")}")
-    require(set0.keySet.intersect(m.partitionCols.toSet).isEmpty,
-      "Snapshot.update: cannot update a partition column (delete + append instead)")
-    val pred = pinDmlExpr(spark, m, "update", pred0)
-    // SET values are evaluated once per tier (two writeTxnFiles jobs);
-    // pin their clock too, so both tiers stamp the same instant
-    val set = set0.map { case (k, v) => k -> pinDmlExpr(spark, m, "update", v) }
-    val matched = matchedPerFile(spark, path, m, pred)
-    if (matched.isEmpty) return m.version
-    val (dvTier, rewriteTier) = dvTierSplit(m, matched, dvMaxFraction)
-    val hit = coalesce(pred, lit(false))
-    def applySet(onlyMatched: Boolean) = schema.fields.toSeq.map { f =>
-      set.get(f.name)
-        .map { v =>
-          if (onlyMatched) v.cast(f.dataType).as(f.name)
-          else when(hit, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-        }
-        .getOrElse(col(f.name))
-    }
-    val rewrite = rewriteTier.keys.toSeq.sorted
-    val rewriteFiles =
-      if (rewrite.isEmpty) Nil
-      else writeTxnFiles(
-        readFiles(spark, path, m, Some(rewrite)).select(applySet(onlyMatched = false): _*),
-        path, m.partitionCols, m.colMap,
-            withNotNullChecks(m.constraints, m.schemaDdl), m.generatedCols,
-        sortBy = writeSortSpec(m)._1, sortRange = writeSortSpec(m)._2)
-    val (dvNew, updatedFiles) =
-      if (dvTier.isEmpty) (Map.empty[String, DvRef], Nil)
-      else {
-        // ONE scan of the DV-tier files feeds both outputs (the
-        // vector's positions and the appended updated rows) — the
-        // matched set is small by the fraction cap, so caching it
-        // costs nothing and halves the tier's file reads
-        val matchedRows = readFilesMeta(spark, path, m,
-          Some(dvTier.keys.toSeq.sorted), meta = true).where(hit).persist()
-        try (
-          writeDvFrom(spark, path, m, matchedRows, dvTier),
-          writeTxnFiles(matchedRows.select(applySet(onlyMatched = true): _*),
-            path, m.partitionCols, m.colMap,
-            withNotNullChecks(m.constraints, m.schemaDdl), m.generatedCols,
-            sortBy = writeSortSpec(m)._1, sortRange = writeSortSpec(m)._2))
-        finally matchedRows.unpersist()
-      }
-    val committed = commitRebasing(spark, path, m,
-      drop = rewrite.toSet,
-      touched = dvTier.keySet,
-      addFiles = rewriteFiles ++ updatedFiles,
-      addStats = statsFor(spark, path, rewriteFiles ++ updatedFiles,
-        m.schemaDdl, m.partitionCols, m.colMap),
-      addDvs = dvNew, op = "UPDATE")
-    if (dvNew.isEmpty) committed else maybeFoldDense(spark, path, committed)
-  }
-
-  /** Exact per-file match counts for `pred` over the stats-pruned
-    * candidate files: one job, scanning only predicate columns of only
-    * candidate files. Keys are table-relative paths; files with zero
-    * matches are absent.
-    */
-  private def matchedPerFile(spark: SparkSession, path: String, m: Manifest,
-                             pred: Column): Map[String, Long] = {
-    val candidates = SnapshotStats.prune(spark, m, pred, Some(path))
-    if (candidates.isEmpty) return Map.empty
-    val counts = readFilesMeta(spark, path, m, Some(candidates), meta = true)
-      .where(coalesce(pred, lit(false)))
-      .groupBy(col(MetaFile).as("__file")).count()
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    countsToManifest(path, m, counts)
   }
 
   /** Canonical comparison key for a data-file path: scheme/authority
@@ -4338,8 +4166,10 @@ object Snapshot {
     bloomPolicyCols(m).foreach(cols => bloomIndex(spark, path, cols))
 
   /** Swap EXACTLY `drop` (live files) for `replacement`'s rewrite in
-    * one atomic commit — the file-precise core under [[compact]],
-    * [[update]] and [[delete]]'s rewrite tier.
+    * one atomic commit — the file-precise core under [[compact]] (and,
+    * pinned to a given manifest, [[foldDvs]]). The DML verbs commit
+    * their rewrite tier themselves, next to the deletion vectors,
+    * through [[commitRebasing]].
     */
   private def replaceFiles(spark: SparkSession, path: String, replacement: DataFrame,
                            drop: Set[String]): Long = {
@@ -4356,15 +4186,6 @@ object Snapshot {
       op = "OPTIMIZE")
   }
 
-  /** Fold deletion vectors WITHOUT a full compaction: rewrite exactly
-    * the DV'd files whose vector covers at least `minFileFraction` of
-    * their physical rows (0 folds every vector), minus their deleted
-    * rows — file-precise, so untouched files (and small-file layout)
-    * stay byte-identical, unlike [[compact]] which also bin-packs.
-    * A DV'd file without row stats folds unconditionally (no
-    * denominator to judge it by, and always-correct beats fast).
-    * Returns the folded files; commits nothing when none qualify.
-    */
   /** Build per-file bloom-filter sidecars over `cols` for every live
     * file not already indexed on exactly that column set, and commit
     * the refs ([[BloomRef]]; see [[SnapshotBloom]] for what blooms buy
@@ -4395,6 +4216,15 @@ object Snapshot {
     }
   }
 
+  /** Fold deletion vectors WITHOUT a full compaction: rewrite exactly
+    * the DV'd files whose vector covers at least `minFileFraction` of
+    * their physical rows (0 folds every vector), minus their deleted
+    * rows — file-precise, so untouched files (and small-file layout)
+    * stay byte-identical, unlike [[compact]] which also bin-packs.
+    * A DV'd file without row stats folds unconditionally (no
+    * denominator to judge it by, and always-correct beats fast).
+    * Returns the folded files; commits nothing when none qualify.
+    */
   def foldDvs(spark: SparkSession, path: String,
               minFileFraction: Double = 0.0): Seq[String] = {
     val m = latestManifest(spark, path).getOrElse(

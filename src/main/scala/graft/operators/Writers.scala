@@ -317,31 +317,6 @@ object Writers {
     stagedSwap(fs, path, merged)
   }
 
-  /** K3 with the reference's PARTIAL column update (funnel_live.py:
-    * 155-175): `MERGE … WHEN MATCHED THEN UPDATE SET <setCols> WHEN NOT
-    * MATCHED THEN INSERT` — a matched target row takes the update's
-    * values for `setCols` ONLY (its other columns, the identity/
-    * dimension ones, are kept), while unmatched update rows insert
-    * whole. One left join (matched marker, so a legitimately-NULL update
-    * value still overwrites) + one anti join on the same key — AQE
-    * reuses the partitioning. Precondition, as in SQL MERGE: ids are
-    * unique within `updates`.
-    */
-  def mergeByIdPartial(target: DataFrame, updates: DataFrame, idCol: String,
-                       setCols: Seq[String]): DataFrame = {
-    val u = updates.select((idCol +: setCols).map(col): _*)
-      .withColumnsRenamed(setCols.map(c => c -> s"__u_$c").toMap)
-      .withColumn("__matched", lit(true))
-    val updated = target.join(u, Seq(idCol), "left")
-      .select(col(idCol) +: target.columns.filterNot(_ == idCol).map { c =>
-        if (setCols.contains(c))
-          when(col("__matched"), col(s"__u_$c")).otherwise(col(c)).as(c)
-        else col(c)
-      }.toSeq: _*)
-    val inserts = updates.join(target.select(idCol), Seq(idCol), "left_anti")
-    updated.unionByName(inserts.select(target.columns.map(col).toSeq: _*))
-  }
-
   /** K3 at scale: merge-by-id restricted to the partitions the updates
     * touch. Valid when the id embeds its partition — the reference's
     * synthesized ids do (soporte + date + periodo + vip,

@@ -32,7 +32,7 @@ import graft.sources.SnapshotSource
   * [[GraftDmlCapture]] routes `UPDATE` / `MERGE INTO` / rich `DELETE`
   * statements over catalog tables to the SAME engine tiers as the
   * Scala API ([[Snapshot.update]],
-  * [[Snapshot.mergeArms]], [[Snapshot.delete]]) — one code path, one
+  * [[Snapshot.mergeArmsMulti]], [[Snapshot.delete]]) — one code path, one
   * set of semantics. Without this rule stock Spark would refuse
   * UPDATE/MERGE outright (they require `SupportsRowLevelOperations`);
   * with it the whole reference maintenance surface is plain

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.operators.Snapshot
 
@@ -361,5 +361,134 @@ class SnapshotDmlSpec extends SparkSpec {
     assert(schema("v").dataType == org.apache.spark.sql.types.LongType)
     assert(Snapshot.read(spark, dir).where(col("id") === 1L)
       .select("v").as[Long].head() == 2L)
+  }
+
+  /** Three single-file versions for one logical edit that lands in
+    * every tier: all rows of the first file match (whole-file drop for
+    * DELETE, rewrite for UPDATE), 5% of the second (deletion vector),
+    * half of the third (rewrite). Returns the table and its original
+    * files in version order.
+    */
+  private def tieredTable(tag: String): (String, Seq[String]) = {
+    val dir = tmp(tag)
+    Snapshot.create(spark, dir, fixture(0 until 100).repartition(1))
+    Snapshot.append(spark, dir, fixture(100 until 200).repartition(1))
+    Snapshot.append(spark, dir, fixture(200 until 300).repartition(1))
+    val files = (1L to 3L).map(v => Snapshot.manifest(spark, dir, v).files.toSet)
+    (dir, files.head.toSeq ++ (files(1) -- files(0)) ++ (files(2) -- files(1)))
+  }
+
+  private val tierKeys: Seq[Long] =
+    (0L until 100L) ++ Seq(105L, 118L, 126L, 134L, 142L) ++ (200L until 250L)
+
+  /** One DML statement through either match: a row predicate over `id`
+    * or the same ids as an IN key set; `set` None = DELETE.
+    */
+  private def dml(dir: String, byKeys: Boolean, ids: Seq[Long],
+                  set: Option[Map[String, Column]]): Long = {
+    lazy val keys = ids.toDF("k")
+    val pred = col("id").isin(ids: _*)
+    (byKeys, set) match {
+      case (false, None)    => Snapshot.delete(spark, dir, pred)
+      case (true, None)     => Snapshot.deleteMatching(spark, dir, "id", keys)
+      case (false, Some(s)) => Snapshot.update(spark, dir, pred, s)
+      case (true, Some(s))  => Snapshot.updateMatching(spark, dir, "id", keys, s)
+    }
+  }
+
+  /** What the latest commit did to each original file ("dropped",
+    * "dv:<deleted rows>" or "kept"), plus the total rows of the files it
+    * added (how many files carry them depends on the write's plan).
+    */
+  private def tierOutcome(dir: String, originals: Seq[String]): (Seq[String], Long) = {
+    val m = Snapshot.latestManifest(spark, dir).get
+    (originals.map { f =>
+      if (!m.files.contains(f)) "dropped"
+      else m.dvs.get(f).fold("kept")(dv => s"dv:${dv.rows}")
+    }, m.files.filterNot(originals.toSet).map(m.stats(_).rows).sum)
+  }
+
+  test("predicate and key-set DML agree on contents and per-file tiers") {
+    val bump = Map("v" -> (col("v") + 100000L))
+    for (set <- Seq(None, Some(bump))) {
+      val runs = Seq(false, true).map { byKeys =>
+        val (dir, originals) = tieredTable(s"agree-$byKeys-${set.isDefined}")
+        dml(dir, byKeys, tierKeys, set)
+        (rows(Snapshot.read(spark, dir)), tierOutcome(dir, originals),
+          Snapshot.latestManifest(spark, dir).get.operation)
+      }
+      val (byPred, byKeys) = (runs(0), runs(1))
+      assert(byPred._1 == byKeys._1, s"set=$set: contents differ")
+      assert(byPred._2 == byKeys._2 && byPred._3 == byKeys._3,
+        s"set=$set: predicate ${(byPred._2, byPred._3)} vs key set ${(byKeys._2, byKeys._3)}")
+      val hit = tierKeys.toSet
+      val expected = rows(fixture(0 until 300)).flatMap { case r @ (id, p, v) =>
+        if (!hit(id)) Some(r) else set.map(_ => (id, p, v + 100000L))
+      }
+      assert(byPred._1 == expected, s"set=$set: contents differ from the edit")
+      // DELETE drops the fully-matched file whole and rewrites the
+      // half-matched one; UPDATE rewrites both and appends the five
+      // updated rows of the vectored file
+      assert(byPred._2 == (Seq("dropped", "dv:5", "dropped"), if (set.isEmpty) 50L else 205L),
+        s"set=$set: ${byPred._2}")
+      assert(byPred._3 == (if (set.isEmpty) "DELETE" else "UPDATE"))
+    }
+  }
+
+  /** Spark jobs the calling thread starts inside `body`, counted by a
+    * job group so nothing else on the shared context is attributed.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"graft-dml-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet(); ()
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "dml job pin")
+    try {
+      body
+      // listener bus is async: poll until the job count stabilizes
+      var last = -1
+      val deadline = System.currentTimeMillis() + 5000
+      while (System.currentTimeMillis() < deadline && last != jobs.get()) {
+        last = jobs.get(); Thread.sleep(150)
+      }
+      jobs.get()
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("each DML shape runs at most its pinned number of Spark jobs") {
+    // upper bounds = the counts of the four separate DML bodies that
+    // preceded the one pipeline, measured on this suite's session
+    // (local[4], AQE on; stable across reruns): "tiers" is the
+    // whole-file + vector + rewrite edit above, "point" one id in the
+    // vectored file. The pipeline measured 10/6, 18/14, 12/7, 20/15
+    // when these were recorded — more than a bound is a regression.
+    val bounds = Map(
+      ("delete", "tiers") -> 11, ("delete", "point") -> 6,
+      ("deleteMatching", "tiers") -> 19, ("deleteMatching", "point") -> 15,
+      ("update", "tiers") -> 13, ("update", "point") -> 8,
+      ("updateMatching", "tiers") -> 22, ("updateMatching", "point") -> 17)
+    val bump = Map("v" -> (col("v") + 1L))
+    val seen = for {
+      (shape, byKeys, set) <- Seq(("delete", false, None), ("deleteMatching", true, None),
+        ("update", false, Some(bump)), ("updateMatching", true, Some(bump)))
+      (edit, ids) <- Seq("tiers" -> tierKeys, "point" -> Seq(105L))
+    } yield {
+      val (dir, _) = tieredTable(s"jobs-$shape-$edit")
+      (shape, edit) -> jobsOf(dml(dir, byKeys, ids, set))
+    }
+    info(seen.map { case ((s, e), n) => s"$s/$e=$n" }.mkString(" "))
+    seen.foreach { case (k, n) =>
+      assert(n <= bounds(k), s"$k ran $n jobs, bound ${bounds(k)}")
+    }
   }
 }
