@@ -38,6 +38,7 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", Engine.runWarehouse("graft-bench-"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: file listing, parquet footers, codegen/JIT paths —

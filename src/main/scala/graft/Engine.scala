@@ -31,6 +31,16 @@ object Engine {
     graft.expressions.GraftFunctions.register(spark)
     spark
   }
+
+  /** A fresh `spark.sql.warehouse.dir` for one run of the [[Verify]] and
+    * [[Bench]] mains, deleted when the JVM exits, so a run leaves no
+    * `spark-warehouse/` in its working directory.
+    */
+  def runWarehouse(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+    d.toString
+  }
 }
 
 /** Resolves logical table names to DataFrames over `$dir/<name>.parquet`. */

@@ -20,6 +20,7 @@ object Verify {
       // answer fails the oracle compare, not just a spec
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", Engine.runWarehouse("graft-verify-"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -4,7 +4,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, Metadata, StringType, StructField, StructType}
 
 import scala.jdk.CollectionConverters._
 
@@ -943,14 +943,6 @@ object Snapshot {
   private[graft] def physicalOf(m: Manifest, logical: String): String =
     m.colMap.getOrElse(logical, logical)
 
-  /** The table schema with DEFAULT metadata attached — the standard
-    * Spark field-metadata contract both sides of the engine consume:
-    * CURRENT_DEFAULT lets the vanilla analyzer fill column-list INSERTs
-    * against catalog tables, EXISTS_DEFAULT makes the parquet readers
-    * (vectorized and row converters alike) surface the frozen literal
-    * for files that physically predate the column — per FILE, so
-    * post-evolution nulls stay null. No defaults → the schema unchanged.
-    */
   /** Strip field METADATA before rendering a schema to manifest DDL:
     * caller frames can carry metadata (our own DEFAULT keys when the
     * data was read from a defaults-carrying table or produced by the
@@ -962,6 +954,14 @@ object Snapshot {
   private def cleanFields(schema: StructType): Array[org.apache.spark.sql.types.StructField] =
     schema.fields.map(_.copy(metadata = org.apache.spark.sql.types.Metadata.empty))
 
+  /** The table schema with DEFAULT metadata attached — the standard
+    * Spark field-metadata contract both sides of the engine consume:
+    * CURRENT_DEFAULT lets the vanilla analyzer fill column-list INSERTs
+    * against catalog tables, EXISTS_DEFAULT makes the parquet readers
+    * (vectorized and row converters alike) surface the frozen literal
+    * for files that physically predate the column — per FILE, so
+    * post-evolution nulls stay null. No defaults → the schema unchanged.
+    */
   private[graft] def withDefaultMetadata(schema: StructType, m: Manifest): StructType =
     if (m.colDefault.isEmpty && m.colExistsDefault.isEmpty) schema
     else {
@@ -1006,8 +1006,19 @@ object Snapshot {
                         only: Option[Seq[String]] = None): DataFrame =
     readFilesMeta(spark, path, m, only, meta = false)
 
-  /** The one read core under every batch path. `meta = true` appends
-    * [[MetaFile]]/[[MetaPos]]. Files with a deletion vector are read
+  /** The one read core under every batch path: ONE native parquet scan
+    * ([[graft.sources.SnapshotSource.fileRelation]]) over exactly
+    * `files`, planned from the manifest alone — no footer-inference
+    * job, no file listing. The scan's data schema is the table schema
+    * under PHYSICAL names (what the files store), nullable, with each
+    * added-with-default column's EXISTS_DEFAULT: the parquet readers
+    * surface that frozen literal for files that predate the column
+    * (per file — post-evolution nulls stay null), null for a column a
+    * file lacks, and read a file written before a lossless widening up
+    * to the wider type. Partition values come from the manifest's
+    * paths, typed by the table schema. A Project re-labels physical to
+    * logical names; `meta = true` appends [[MetaFile]]/[[MetaPos]] from
+    * the scan's `_metadata`. Files with a deletion vector are read
     * minus their deleted positions: the DV rows (driver-known small —
     * [[delete]] only takes the DV tier for low matched fractions) are
     * BROADCAST anti-joined on (file basename, physical position), so
@@ -1019,48 +1030,22 @@ object Snapshot {
     val schema = StructType.fromDDL(m.schemaDdl)
     val files = only.getOrElse(m.files)
     val dvRefs = m.dvs.view.filterKeys(files.toSet).toMap
-    val needMeta = meta || dvRefs.nonEmpty
-    if (files.isEmpty) {
-      val base = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      return if (!meta) base
-      else base.withColumn(MetaFile, lit(null).cast("string"))
-        .withColumn(MetaPos, lit(null).cast("long"))
-    }
-    // one read per txn group (partition inference needs the group's own
-    // basePath), then a by-name union (missing = pre-evolution txns,
-    // filled with null); cast to the table schema so partition-value
-    // inference drift can never retype a column
-    // group key carries the RESOLVED root: a shallow clone mixes
-    // external (source-rooted) refs with its own post-clone txns, and
-    // partition inference needs each group's own basePath
-    val groups = files.groupBy { f =>
-      val (r, rel) = fileRootRel(path, m, f); (r, rel.takeWhile(_ != '/'))
-    }.toSeq.sortBy(_._1)
-    val unioned = groups.map { case ((root, txn), fls) =>
-      val df0 = spark.read.option("basePath", s"$root/$txn")
-        .parquet(fls.map(f => fileAbs(path, m, f)): _*)
-      // existence defaults fill PER GROUP, before the by-name union —
-      // after the union a group that lacks the column is
-      // indistinguishable from one whose rows are genuinely null
-      val df = m.colExistsDefault.foldLeft(df0) { case (d, (c, litSql)) =>
-        val phys = physicalOf(m, c)
-        if (d.columns.contains(phys)) d
-        else d.withColumn(phys, expr(litSql).cast(schema(c).dataType))
-      }
-      if (needMeta)
-        df.withColumn(MetaFile, col("_metadata.file_path"))
-          .withColumn(MetaPos, col("_metadata.row_index"))
-      else df
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-    // files store PHYSICAL names; the projection re-labels to the
-    // logical schema (identity unless a rename happened) — a Project
-    // over the scan, so pushdown and pruning are untouched
-    val outCols = schema.fields.toSeq.map { f =>
-      val phys = physicalOf(m, f.name)
-      if (unioned.columns.contains(phys)) col(phys).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    } ++ (if (needMeta) Seq(col(MetaFile), col(MetaPos)) else Nil)
-    val selected = unioned.select(outCols: _*)
+    val dataSchema = StructType(withDefaultMetadata(schema, m).fields.map(f =>
+      f.copy(name = physicalOf(m, f.name), nullable = true)))
+    // the scan's own view of the manifest: what it reads is physical,
+    // vector-free and exactly `files` — stats pruning keys on that
+    val scanM = m.copy(files = files, dvs = Map.empty, colMap = Map.empty,
+      schemaDdl = physicalSchema(m).toDDL)
+    val scan = org.apache.spark.sql.graftbridge.PlanBridge.dataFrame(spark,
+      org.apache.spark.sql.execution.datasources.LogicalRelation(
+        graft.sources.SnapshotSource.fileRelation(spark, path, scanM, dataSchema,
+          wholeVersion = false)))
+    val outCols = schema.fields.toSeq.map(f =>
+      col(physicalOf(m, f.name)).as(f.name, Metadata.empty)) ++
+      (if (meta || dvRefs.nonEmpty)
+        Seq(col("_metadata.file_path").as(MetaFile), col("_metadata.row_index").as(MetaPos))
+      else Nil)
+    val selected = scan.select(outCols: _*)
     val live =
       if (dvRefs.isEmpty) selected
       else {
@@ -1101,24 +1086,23 @@ object Snapshot {
   private val DvPosCol = DvColPrefix + "pos"
 
   /** Union the given deletion-vector parquet dirs into
-    * (basename, partition values, position) — grouped by their commit
-    * dir so partition inference gets the right basePath.
+    * (basename, partition values, position), read under their known
+    * schema — the basename is the vector dir's partition column, so
+    * each read is rooted at its commit's vector dir.
     */
   private def readDvRows(spark: SparkSession, path: String, m: Manifest,
                          refs: Seq[String]): DataFrame = {
     val schema = StructType.fromDDL(m.schemaDdl)
-    val groups = refs.distinct.groupBy { r =>
+    val dvSchema = StructType(
+      StructField(DvFileCol, StringType) +: StructField(DvPosCol, LongType) +:
+        m.partitionCols.map(pc => StructField(DvColPrefix + pc, schema(pc).dataType)))
+    refs.distinct.groupBy { r =>
       val (root, rel) = fileRootRel(path, m, r)
       (root, rel.split('/').take(2).mkString("/"))
-    }.toSeq.sortBy(_._1)
-    val sel = Seq(col(DvFileCol).cast("string").as(DvFileCol),
-        col(DvPosCol).cast("long").as(DvPosCol)) ++
-      m.partitionCols.map(pc =>
-        col(DvColPrefix + pc).cast(schema(pc).dataType).as(DvColPrefix + pc))
-    groups.map { case ((root, base), rs) =>
-      spark.read.option("basePath", s"$root/$base")
+    }.toSeq.sortBy(_._1).map { case ((root, base), rs) =>
+      spark.read.schema(dvSchema).option("basePath", s"$root/$base")
         .parquet(rs.map(r => fileAbs(path, m, r)): _*)
-    }.reduce(_.unionByName(_)).select(sel: _*)
+    }.reduce(_.unionByName(_))
   }
 
   // -------------------------------------------------------------- write
@@ -1133,10 +1117,6 @@ object Snapshot {
     out.toSeq
   }
 
-  /** Write `df` into a fresh immutable txn dir under the table root;
-    * returns the new files' table-relative paths. Nothing is live until
-    * a manifest referencing them commits.
-    */
   /** SQL CHECK semantics: a row violates only when the predicate is
     * FALSE (NULL passes). One short-circuit job per constraint, only
     * on constrained tables — a violating batch refuses BEFORE any file
@@ -1191,6 +1171,10 @@ object Snapshot {
     */
   private[graft] val ReservedConstraintPrefix = "__graft_"
 
+  /** Write `df` into a fresh immutable txn dir under the table root;
+    * returns the new files' table-relative paths. Nothing is live until
+    * a manifest referencing them commits.
+    */
   private def writeTxnFiles(df1: DataFrame, path: String, partitionCols: Seq[String],
                             colMap: Map[String, String] = Map.empty,
                             constraints: Map[String, String] = Map.empty,

@@ -104,7 +104,7 @@ case class MetadataAggRewrite(session: SparkSession) extends Rule[LogicalPlan] {
   private def snapshotManifest(l: LogicalRelation): Option[Snapshot.Manifest] =
     l.relation match {
       case h: HadoopFsRelation => h.location match {
-        case i: SnapshotFileIndex => Some(i.pinnedManifest)
+        case i: SnapshotFileIndex => i.pinnedManifest
         case _ => None
       }
       case d: DvSnapshotRelation => Some(d.pinnedManifest)

@@ -271,7 +271,7 @@ case class MvAutoRoute(session: SparkSession) extends Rule[LogicalPlan] {
   private def leafInfo(p: LogicalPlan): Option[(String, Long)] = p match {
     case l: LogicalRelation => l.relation match {
       case h: HadoopFsRelation => h.location match {
-        case i: SnapshotFileIndex => Some((qr(i.pinnedPath), i.pinnedManifest.version))
+        case i: SnapshotFileIndex => i.pinnedManifest.map(m => (qr(i.pinnedPath), m.version))
         case _ => None
       }
       case d: DvSnapshotRelation => Some((qr(d.pinnedPath), d.pinnedManifest.version))

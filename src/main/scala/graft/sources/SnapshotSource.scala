@@ -9,7 +9,6 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graftbridge.ScanBridge
 import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, RelationProvider}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.{Snapshot, SnapshotStats}
 
@@ -216,14 +215,24 @@ object SnapshotSource {
     // DEFAULT metadata rides the data schema: EXISTS_DEFAULT is how the
     // native parquet readers surface an added-with-default column for
     // files that physically predate it (per file — post-evolution nulls
-    // stay null); the merge-on-read fallback fills per txn group inside
-    // the read core instead
+    // stay null); the merge-on-read fallback's read core does the same
     val tableSchema = Snapshot.withDefaultMetadata(
       schema.getOrElse(StructType.fromDDL(m.schemaDdl)), m)
     if (m.dvs.keySet.intersect(m.files.toSet).nonEmpty || m.colMap.nonEmpty)
-      return new DvSnapshotRelation(spark, path, m, tableSchema)
-    val index = new SnapshotFileIndex(spark, path, m, tableSchema)
-    HadoopFsRelation(index, index.partitionSchema, tableSchema, None,
+      new DvSnapshotRelation(spark, path, m, tableSchema)
+    else fileRelation(spark, path, m, tableSchema)
+  }
+
+  /** The native parquet scan over `m.files` with `dataSchema` — the
+    * SQL source's relation above, and the base scan of the snapshot
+    * read core ([[Snapshot.readFiles]]), which passes a file subset
+    * under physical names with `wholeVersion = false`.
+    */
+  private[graft] def fileRelation(spark: SparkSession, path: String, m: Snapshot.Manifest,
+                                  dataSchema: StructType,
+                                  wholeVersion: Boolean = true): HadoopFsRelation = {
+    val index = new SnapshotFileIndex(spark, path, m, dataSchema, wholeVersion)
+    HadoopFsRelation(index, index.partitionSchema, dataSchema, None,
       new ParquetFileFormat, Map.empty)(spark)
   }
 }
@@ -569,13 +578,17 @@ final class SnapshotStreamSource(spark: SparkSession, path: String,
   * planning a scan costs zero filesystem listings.
   */
 final class SnapshotFileIndex(spark: SparkSession, tablePath: String,
-                              m: Snapshot.Manifest, tableSchema: StructType)
+                              m: Snapshot.Manifest, tableSchema: StructType,
+                              wholeVersion: Boolean = true)
     extends FileIndex {
 
   /** The exact version this scan reads ([[graft.plans.MetadataAggRewrite]]
-    * folds whole-table aggregates from its file stats).
+    * folds whole-table aggregates from its file stats). None for the
+    * read core's scans: a file subset under physical names is not the
+    * table at a version, so no rule may answer for it from the MV
+    * watermark or the table's metadata.
     */
-  private[graft] def pinnedManifest: Snapshot.Manifest = m
+  private[graft] def pinnedManifest: Option[Snapshot.Manifest] = Some(m).filter(_ => wholeVersion)
 
   /** The table root this scan reads ([[graft.plans.MvAutoRoute]] keys
     * its source-identity match on it).
@@ -587,39 +600,19 @@ final class SnapshotFileIndex(spark: SparkSession, tablePath: String,
       throw new IllegalArgumentException(s"partition column $c not in table schema"))))
 
   partitionSchema.fields.foreach { f =>
-    require(canRepresent(f.dataType),
+    require(ScanBridge.canParsePartitionValue(f.dataType),
       s"unsupported partition column type for the SQL source: ${f.dataType}")
-  }
-
-  private def canRepresent(dt: DataType): Boolean = dt match {
-    case StringType | IntegerType | LongType | ShortType | ByteType |
-         DateType | BooleanType | DoubleType | FloatType |
-         TimestampType | TimestampNTZType => true
-    case _ => false
   }
 
   private val fs = new HPath(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
   private val qualifiedRoot = fs.makeQualified(new HPath(tablePath))
 
+  private val timeZone = spark.sessionState.conf.sessionLocalTimeZone
+
   /** Hive partition-dir string → catalyst partition value. */
   private def partitionValue(dt: DataType, raw: String): Any =
     if (raw == null || raw == Snapshot.NullPartition) null
-    else dt match {
-      case StringType  => UTF8String.fromString(raw)
-      case IntegerType => raw.toInt
-      case LongType    => raw.toLong
-      case ShortType   => raw.toShort
-      case ByteType    => raw.toByte
-      case DateType    => java.time.LocalDate.parse(raw).toEpochDay.toInt
-      case BooleanType => raw.toBoolean
-      case DoubleType  => raw.toDouble
-      case FloatType   => raw.toFloat
-      case TimestampType => ScanBridge.timestampValue(raw, spark).getOrElse(
-        throw new IllegalArgumentException(s"unparseable timestamp partition value: $raw"))
-      case TimestampNTZType => ScanBridge.timestampNtzValue(raw).getOrElse(
-        throw new IllegalArgumentException(s"unparseable ntz partition value: $raw"))
-      case other       => throw new IllegalArgumentException(s"unsupported partition type $other")
-    }
+    else ScanBridge.partitionValue(raw, dt, timeZone)
 
   /** Resolve a manifest entry to its filesystem path — external
     * `@alias/` refs (shallow clones) resolve to their recorded source

@@ -3,10 +3,10 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Bridge for [[graft.operators.SnapshotSql]]: turning a (possibly
-  * partially-rewritten) parsed logical plan back into a DataFrame needs
-  * `Dataset.ofRows`, which is `private[sql]` — the same established
-  * extension-package seam as [[StreamBridge]].
+/** Turning a hand-built or partially-rewritten logical plan (the
+  * snapshot read core's manifest-planned scan, a rewritten SQL plan)
+  * into a DataFrame needs `Dataset.ofRows`, which is `private[sql]` —
+  * the same established extension-package seam as [[StreamBridge]].
   */
 object PlanBridge {
   def dataFrame(spark: SparkSession, plan: LogicalPlan): DataFrame = {

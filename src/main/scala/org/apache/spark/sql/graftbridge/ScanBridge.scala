@@ -1,10 +1,11 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, EvalMode, Expression, Literal, Predicate}
 import org.apache.spark.sql.execution.datasources.DataSourceStrategy
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Bridge into the `execution.datasources` seam for
   * [[graft.sources.SnapshotFileIndex]]: a custom `FileIndex` receives
@@ -18,21 +19,18 @@ import org.apache.spark.sql.types.StructType
   */
 object ScanBridge {
 
-  /** Hive partition-dir timestamp string → catalyst micros, with the
-    * SESSION's timezone — the same parse Spark's own partition
-    * inference uses, so a `p_start=2024-01-15 00%3A00%3A00` dir reads
-    * identically through this index and through `spark.read.parquet`.
+  /** Hive partition-dir string → catalyst value of `dt`: Spark's own
+    * string cast (ANSI, so a malformed value fails loudly instead of
+    * reading as null) in the session's time zone — the parse Spark's
+    * partition inference applies, so a `p_start=2024-01-15 00%3A00%3A00`
+    * dir reads the same through this index and through
+    * `spark.read.parquet`, for every type a partitioned write accepts.
     */
-  def timestampValue(raw: String, spark: org.apache.spark.sql.SparkSession): Option[Long] =
-    org.apache.spark.sql.catalyst.util.DateTimeUtils.stringToTimestamp(
-      org.apache.spark.unsafe.types.UTF8String.fromString(raw),
-      org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(
-        spark.sessionState.conf.sessionLocalTimeZone))
+  def partitionValue(raw: String, dt: DataType, timeZone: String): Any =
+    Cast(Literal(UTF8String.fromString(raw)), dt, Some(timeZone), EvalMode.ANSI).eval()
 
-  /** Timezone-free variant for TIMESTAMP_NTZ partition columns. */
-  def timestampNtzValue(raw: String): Option[Long] =
-    org.apache.spark.sql.catalyst.util.DateTimeUtils.stringToTimestampWithoutTimeZone(
-      org.apache.spark.unsafe.types.UTF8String.fromString(raw))
+  /** Whether [[partitionValue]] can produce a `dt` value. */
+  def canParsePartitionValue(dt: DataType): Boolean = Cast.canAnsiCast(StringType, dt)
 
   /** Catalyst predicate → pushdown `Filter`, when expressible. The
     * consumer treats None conservatively (no pruning from this

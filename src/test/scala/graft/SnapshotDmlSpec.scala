@@ -435,48 +435,17 @@ class SnapshotDmlSpec extends SparkSpec {
     }
   }
 
-  /** Spark jobs the calling thread starts inside `body`, counted by a
-    * job group so nothing else on the shared context is attributed.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"graft-dml-jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
-          jobs.incrementAndGet(); ()
-        }
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "dml job pin")
-    try {
-      body
-      // listener bus is async: poll until the job count stabilizes
-      var last = -1
-      val deadline = System.currentTimeMillis() + 5000
-      while (System.currentTimeMillis() < deadline && last != jobs.get()) {
-        last = jobs.get(); Thread.sleep(150)
-      }
-      jobs.get()
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("each DML shape runs at most its pinned number of Spark jobs") {
-    // upper bounds = the counts of the four separate DML bodies that
-    // preceded the one pipeline, measured on this suite's session
-    // (local[4], AQE on; stable across reruns): "tiers" is the
-    // whole-file + vector + rewrite edit above, "point" one id in the
-    // vectored file. The pipeline measured 10/6, 18/14, 12/7, 20/15
-    // when these were recorded — more than a bound is a regression.
+    // upper bounds = the counts measured on this suite's session
+    // (local[4], AQE on; stable across reruns) once the read core
+    // became one manifest-planned scan with no schema-inference job:
+    // "tiers" is the whole-file + vector + rewrite edit above, "point"
+    // one id in the vectored file. More than a bound is a regression.
     val bounds = Map(
-      ("delete", "tiers") -> 11, ("delete", "point") -> 6,
-      ("deleteMatching", "tiers") -> 19, ("deleteMatching", "point") -> 15,
-      ("update", "tiers") -> 13, ("update", "point") -> 8,
-      ("updateMatching", "tiers") -> 22, ("updateMatching", "point") -> 17)
+      ("delete", "tiers") -> 6, ("delete", "point") -> 5,
+      ("deleteMatching", "tiers") -> 10, ("deleteMatching", "point") -> 7,
+      ("update", "tiers") -> 7, ("update", "point") -> 6,
+      ("updateMatching", "tiers") -> 11, ("updateMatching", "point") -> 8)
     val bump = Map("v" -> (col("v") + 1L))
     val seen = for {
       (shape, byKeys, set) <- Seq(("delete", false, None), ("deleteMatching", true, None),

@@ -42,4 +42,35 @@ abstract class SparkSpec extends AnyFunSuite {
   TestSession.scratch // before a suite's first Derby connection or Spark call
   lazy val spark: SparkSession = TestSession.spark
   def sf(dir: String = "sf0.001") = Tables(spark, s"/root/testdata/$dir")
+
+  /** Spark jobs the calling thread starts inside `body`, counted by a
+    * job group so nothing else on the shared context is attributed —
+    * a load-independent figure for job-budget pins.
+    */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet(); ()
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job budget pin")
+    try {
+      body
+      // listener bus is async: poll until the job count stabilizes
+      var last = -1
+      val deadline = System.currentTimeMillis() + 5000
+      while (System.currentTimeMillis() < deadline && last != jobs.get()) {
+        last = jobs.get(); Thread.sleep(150)
+      }
+      jobs.get()
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
