@@ -71,13 +71,18 @@ object Bench {
       // OUTSIDE the timed window, fresh per pass (DML fixtures are not
       // idempotent); the per-query line still reports the setup cost
       // so nothing is hidden — it just stops polluting query timings
-      def timedPass(): (Double, Double, Option[String]) = {
+      // `compiles` counts the Janino compiles of the timed part (codegen
+      // cache misses): where the engine still compiles per query
+      def compiled: Long =
+        org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      def timedPass(): (Double, Double, Option[String], Long) = {
         val tab = Tables(spark, sfDir)
         val s0 = System.nanoTime()
         val prepared =
           try Right(qd.setup.map(_(tab)).orNull)
           catch { case e: Throwable => Left(e) }
         val setupSec = r3((System.nanoTime() - s0) / 1e9)
+        val c0 = compiled
         val t0 = System.nanoTime()
         val err = prepared match {
           case Left(e) =>
@@ -87,21 +92,21 @@ object Bench {
             catch { case e: Throwable =>
               Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(160)}") }
         }
-        (setupSec, r3((System.nanoTime() - t0) / 1e9), err)
+        (setupSec, r3((System.nanoTime() - t0) / 1e9), err, compiled - c0)
       }
-      val (p1, s1, e1) = timedPass()
-      val (setupSec, sec, err, runs) =
-        if (e1.isDefined) (p1, s1, e1, Seq(s1))
+      val (p1, s1, e1, c1) = timedPass()
+      val (setupSec, sec, err, runs, compiles) =
+        if (e1.isDefined) (p1, s1, e1, Seq(s1), c1)
         else {
-          val (p2, s2, e2) = timedPass()
+          val (p2, s2, e2, c2) = timedPass()
           // a second-pass failure on a first-pass success is real flake:
           // surface it rather than hide behind the green first run
-          if (e2.isDefined) (p1 + p2, s1, e2, Seq(s1, s2))
-          else (p1 + p2, math.min(s1, s2), None, Seq(s1, s2))
+          if (e2.isDefined) (p1 + p2, s1, e2, Seq(s1, s2), c1 + c2)
+          else (p1 + p2, math.min(s1, s2), None, Seq(s1, s2), c1 + c2)
         }
       val errJson = err.map(m => s""","err":"${esc(m)}"""").getOrElse("")
       val setupJson = if (qd.setup.isDefined) s""","setup":$setupSec""" else ""
-      println(s"""{"query":"${esc(name)}","sec":$sec,"runs":[${runs.mkString(",")}]$setupJson$errJson}""")
+      println(s"""{"query":"${esc(name)}","sec":$sec,"runs":[${runs.mkString(",")}],"compiles":$compiles$setupJson$errJson}""")
       (name, sec, err)
     }
     // BEST-OF-RUNS: the driver (and judge) run this main several times

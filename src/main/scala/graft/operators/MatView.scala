@@ -191,7 +191,29 @@ object MatView {
     * table map.
     */
   def create(spark: SparkSession, mvPath: String, sqlText: String,
-             resolvePath: Seq[String] => String): Long = {
+             resolvePath: Seq[String] => String): Long =
+    smallOp(spark, mvPath, sqlText, resolvePath)(createOn(spark, mvPath, sqlText, resolvePath))
+
+  /** Run a create or refresh of the view at `mvPath` through [[SmallOp]],
+    * sized over every table it reads: the sources, the view and its side
+    * states. A definition that does not parse or resolve runs the body
+    * as is, which reports it.
+    */
+  private def smallOp[T](spark: SparkSession, mvPath: String, sqlText: => String,
+                         resolvePath: Seq[String] => String)(body: => T): T =
+    scala.util.Try {
+      val plan = spark.sessionState.sqlParser.parsePlan(sqlText)
+      val sides = rollupShape(plan).toSeq.flatMap(sh =>
+        sh.distinctCols.map(d => sidePath(mvPath, d._1)) ++
+          (if (sh.avgCols.isEmpty) Nil else Seq(avgSidePath(mvPath))))
+      sourceRelations(plan, sqlText).map(resolvePath) ++ (mvPath +: sides)
+    }.toOption match {
+      case Some(tables) => SmallOp(spark, tables)(body)
+      case None => body
+    }
+
+  private def createOn(spark: SparkSession, mvPath: String, sqlText: String,
+                       resolvePath: Seq[String] => String): Long = {
     Snapshot.requireNotInGroup("CREATE MATERIALIZED VIEW") // two commits
     // defining SQL may call graft_* sketch functions (graft_bottomk)
     graft.expressions.GraftFunctions.register(spark)
@@ -207,20 +229,15 @@ object MatView {
       Snapshot.readVersion(spark, paths(i), vs(i)).queryExecution.logical).toMap
     val result = PlanBridge.dataFrame(spark, substituted(plan, reads))
     // rollup-shaped views (and their side states, below) cluster by the
-    // first group key with RANGE-distributed writes: state files carry
-    // globally disjoint key ranges from the first commit — the layout
-    // the file-restricted incremental fold (foldCommitRestricted)
-    // prunes against, so a churn window rewrites only dented files
-    // (§6: sort order on write decides what readers/rewriters skip)
+    // first group key; the range-distributed layout the file-restricted
+    // fold prunes against starts once the state spans files
+    // ([[stateLayout]])
     val shapeC = rollupShape(plan)
     val stateCluster = shapeC.toSeq.flatMap(_.keys.headOption.map(_._1))
-    val layoutProps: Map[String, String] =
-      if (stateCluster.isEmpty) Map.empty
-      else Map("graft.write.sorted" -> "range")
     Snapshot.create(spark, mvPath, result,
       clusterBy = stateCluster,
       properties = Map(SqlProp -> sqlText,
-        SourceProp -> srcs.map(_.mkString(".")).mkString(",")) ++ layoutProps)
+        SourceProp -> srcs.map(_.mkString(".")).mkString(",")))
     // a fresh view must be discoverable by the very next routed query
     graft.plans.MvAutoRoute.invalidateDiscovery()
     // watermarks ride a follow-up metadata commit on the fresh table
@@ -241,7 +258,7 @@ object MatView {
           s"distinct-state side table already exists: $sp")
         Snapshot.create(spark, sp, sideState(childDf, sh, e),
           clusterBy = stateCluster,
-          properties = Map(SideProp -> mvPath) ++ layoutProps)
+          properties = Map(SideProp -> mvPath))
         val sm = Snapshot.latestManifest(spark, sp).get
         Snapshot.commitMetaOn(spark, sp, sm,
           s"MATERIALIZE DISTINCT STATE ${vs.mkString("v", ",v", "")}")(mm =>
@@ -259,7 +276,7 @@ object MatView {
           s"avg-state side table already exists: $sp")
         Snapshot.create(spark, sp, avgSideState(childDf, sh),
           clusterBy = stateCluster,
-          properties = Map(SideProp -> mvPath) ++ layoutProps)
+          properties = Map(SideProp -> mvPath))
         val sm = Snapshot.latestManifest(spark, sp).get
         Snapshot.commitMetaOn(spark, sp, sm,
           s"MATERIALIZE AVG STATE ${vs.mkString("v", ",v", "")}")(mm =>
@@ -276,7 +293,13 @@ object MatView {
     * advanced, None when already current.
     */
   def refresh(spark: SparkSession, mvPath: String,
-              resolvePath: Seq[String] => String): Option[(Long, Long)] = {
+              resolvePath: Seq[String] => String): Option[(Long, Long)] =
+    smallOp(spark, mvPath,
+      Snapshot.latestManifest(spark, mvPath).flatMap(_.properties.get(SqlProp)).get,
+      resolvePath)(refreshOn(spark, mvPath, resolvePath))
+
+  private def refreshOn(spark: SparkSession, mvPath: String,
+                        resolvePath: Seq[String] => String): Option[(Long, Long)] = {
     // the refresh session may differ from the creating one — the
     // defining SQL (and the KMV fold) need the graft_* registrations
     graft.expressions.GraftFunctions.register(spark)
@@ -406,8 +429,8 @@ object MatView {
           val sameWindow = sChanged == changed &&
             sChanged.forall(i => vFroms(i).contains(sFroms(i)))
           val feeds = if (sameWindow) replays else replaysFor(sFroms(_), sChanged)
-          val sDelta = sideDelta(feeds, shape, e).localCheckpoint()
-          if (sDelta.isEmpty)
+          val (sDelta, sRows) = materialized(sideDelta(feeds, shape, e))
+          if (sRows == 0L)
             Snapshot.commitMetaOn(spark, sp, sm,
               s"REFRESH DISTINCT STATE $opTail (no-op window)")(stamp)
           else
@@ -440,8 +463,8 @@ object MatView {
           val sameWindow = sChanged == changed &&
             sChanged.forall(i => vFroms(i).contains(sFroms(i)))
           val feeds = if (sameWindow) replays else replaysFor(sFroms(_), sChanged)
-          val aDelta = groupedDelta(feeds, ash).localCheckpoint()
-          if (aDelta.isEmpty)
+          val (aDelta, aRows) = materialized(groupedDelta(feeds, ash))
+          if (aRows == 0L)
             Snapshot.commitMetaOn(spark, sp, sm,
               s"REFRESH AVG STATE $opTail (no-op window)")(stamp)
           else
@@ -459,8 +482,8 @@ object MatView {
       // this the replay trees (the expensive part: change feeds joined
       // through the defining tree) would run once for the emptiness
       // check and again for the fold
-      val delta0 = groupedDelta(replays, shape).localCheckpoint()
-      if (delta0.isEmpty)
+      val (delta0, deltaRows) = materialized(groupedDelta(replays, shape))
+      if (deltaRows == 0L)
         Snapshot.commitMetaOn(spark, mvPath, mvM,
           s"REFRESH MATERIALIZED VIEW $opTail (no-op window)")(stamp)
       // patch-free shapes commit through the file-restricted fold: a
@@ -490,7 +513,7 @@ object MatView {
         val next = if (shape.avgCols.isEmpty) next0
           else patchAvg(next0, Snapshot.read(spark, avgSidePath(mvPath)),
             shape, curSchema)
-        Snapshot.replaceWholeTableOn(spark, mvPath, mvM, next,
+        Snapshot.replaceWholeTableOn(spark, mvPath, stateLayout(mvM), next,
           op = s"REFRESH MATERIALIZED VIEW $opTail (incremental)", finish = stamp)
       }
     }
@@ -513,16 +536,14 @@ object MatView {
               sm.streamBatch.get(wmKey(srcs, i)).exists(_ >= vNows(i))))
             if (!sideCurrent) current match {
               case Some(sm) =>
-                Snapshot.replaceWholeTableOn(spark, sp, sm,
+                Snapshot.replaceWholeTableOn(spark, sp, stateLayout(sm),
                   sideState(childDf, sh, e),
                   op = s"REFRESH DISTINCT STATE $opTail (full recompute)",
                   finish = stamp)
               case None =>
                 Snapshot.create(spark, sp, sideState(childDf, sh, e),
                   clusterBy = sh.keys.headOption.map(_._1).toSeq,
-                  properties = Map(SideProp -> mvPath) ++
-                    (if (sh.keys.isEmpty) Map.empty[String, String]
-                     else Map("graft.write.sorted" -> "range")))
+                  properties = Map(SideProp -> mvPath))
                 val sm = Snapshot.latestManifest(spark, sp).get
                 Snapshot.commitMetaOn(spark, sp, sm,
                   s"MATERIALIZE DISTINCT STATE $opTail")(stamp)
@@ -540,23 +561,21 @@ object MatView {
               sm.streamBatch.get(wmKey(srcs, i)).exists(_ >= vNows(i))))
             if (!sideCurrent) current match {
               case Some(sm) =>
-                Snapshot.replaceWholeTableOn(spark, sp, sm,
+                Snapshot.replaceWholeTableOn(spark, sp, stateLayout(sm),
                   avgSideState(childDf, sh),
                   op = s"REFRESH AVG STATE $opTail (full recompute)",
                   finish = stamp)
               case None =>
                 Snapshot.create(spark, sp, avgSideState(childDf, sh),
                   clusterBy = sh.keys.headOption.map(_._1).toSeq,
-                  properties = Map(SideProp -> mvPath) ++
-                    (if (sh.keys.isEmpty) Map.empty[String, String]
-                     else Map("graft.write.sorted" -> "range")))
+                  properties = Map(SideProp -> mvPath))
                 val sm = Snapshot.latestManifest(spark, sp).get
                 Snapshot.commitMetaOn(spark, sp, sm,
                   s"MATERIALIZE AVG STATE $opTail")(stamp)
             }
           }
         }
-        Snapshot.replaceWholeTableOn(spark, mvPath, mvM, result,
+        Snapshot.replaceWholeTableOn(spark, mvPath, stateLayout(mvM), result,
           op = s"REFRESH MATERIALIZED VIEW $opTail (full recompute)", finish = stamp)
     }
     Some(vFroms.head.getOrElse(0L) -> vNows.head)
@@ -968,6 +987,34 @@ object MatView {
       .where(col("__vcnt") > 0)
   }
 
+  /** The layout a state commit writes under. A rollup state starts
+    * unsorted: while it is one file a range-distributed write buys
+    * nothing (the restricted fold needs more than one file to retain
+    * any) and costs a sampling job plus a range exchange per commit.
+    * Once the state spans files, its commits take the range layout
+    * over the cluster key (`graft.write.sorted=range`, recorded in the
+    * committed manifest), so files carry disjoint key ranges that
+    * [[foldCommitRestricted]] prunes against.
+    */
+  private def stateLayout(sm: Snapshot.Manifest): Snapshot.Manifest =
+    if (sm.clusterBy.isEmpty || sm.files.size <= 1) sm
+    else sm.copy(properties = sm.properties + ("graft.write.sorted" -> "range"))
+
+  /** Materialize `df` and count its rows (with `flag` set, only those
+    * whose boolean column `flag` is true) in ONE job: the lazy
+    * checkpoint fills while the count runs, so the materialized copy
+    * and the emptiness answer cost a single pass.
+    */
+  private def materialized(df: DataFrame, flag: Option[String] = None): (DataFrame, Long) = {
+    val cp = df.localCheckpoint(eager = false)
+    val rows = cp.queryExecution.toRdd
+    val n = PlanBridge.withConfPropagated(cp.sparkSession)(flag.map(cp.schema.fieldIndex) match {
+      case None => rows.count()
+      case Some(i) => rows.filter(r => !r.isNullAt(i) && r.getBoolean(i)).count()
+    })
+    (cp, n)
+  }
+
   /** File-restricted state-fold commit — the O(changed-files) WRITE
     * path for incremental refreshes (opt guide §2.4/§6). Collects the
     * delta's first-group-key values (gated by
@@ -986,18 +1033,19 @@ object MatView {
     * the whole-table rewrite whenever restriction is unsound
     * (partitioned or DV-carrying state) or useless (≤1 file, gate
     * exceeded, nothing retained). With the state layout clustered by
-    * the group keys (`graft.write.sorted=range`, set at creation)
+    * the group keys (`graft.write.sorted=range`, see [[stateLayout]])
     * state files carry disjoint key ranges, so at scale a churn window
     * rewrites only the dented files: the refresh write path becomes
     * O(change) like the read path, instead of a whole-state rewrite
     * per refresh window.
     */
   private def foldCommitRestricted(spark: SparkSession, sp: String,
-                                   sm: Snapshot.Manifest, delta: DataFrame,
+                                   sm0: Snapshot.Manifest, delta: DataFrame,
                                    stateKey: Option[String],
                                    fold: DataFrame => DataFrame,
                                    op: String,
                                    finish: Snapshot.Manifest => Snapshot.Manifest): Long = {
+    val sm = stateLayout(sm0)
     def whole(): Long = Snapshot.replaceWholeTableOn(spark, sp, sm,
       fold(Snapshot.readManifestFiles(spark, sp, sm, sm.files)), op, finish)
     val gate = spark.conf.getOption("spark.graft.mv.foldKeysMax")
@@ -1233,13 +1281,13 @@ object MatView {
     // probe, the keep branch, the affected key set feeding the
     // re-derivation semi-join) — materialize the state-sized fold once
     // instead of re-running the full-outer join per consumer
-    val folded = folded0.localCheckpoint()
+    val (folded, dented) = materialized(folded0, Some("__rec"))
     val keep = folded.where(!col("__rec")).drop("__rec")
-    val affected = folded.where(col("__rec"))
-      .select(shape.keys.map { case (sn, _) => col(sn) }: _*)
     // state-sized decision (the MV rollup, not the source): skip the
     // recompute branch entirely when no delete dented an extremum
-    if (affected.isEmpty) return keep
+    if (dented == 0L) return keep
+    val affected = folded.where(col("__rec"))
+      .select(shape.keys.map { case (sn, _) => col(sn) }: _*)
     // re-derive ONLY the affected groups: semi-join the defining
     // query's child at the new source version against the (broadcast-
     // tiny) affected key set, then the original aggregation — bitwise

@@ -214,11 +214,6 @@ object Snapshot {
     */
   @volatile private[graft] var faultHook: String => Unit = _ => ()
 
-  /** Serializes the parquet-conf window of [[writeTxnFiles]] across
-    * concurrently-writing snapshot tables in the same JVM.
-    */
-  private val writeConfLock = new Object
-
   /** A concurrent commit took this version first. APPEND-family writers
     * catch it and rebase ([[append]]'s retry loop); read-modify-write
     * writers (overwrite, replace, merge) let it propagate — their new
@@ -1107,15 +1102,17 @@ object Snapshot {
 
   // -------------------------------------------------------------- write
 
-  private def listParquetRecursive(fs: FileSystem, dir: HPath): Seq[HPath] = {
-    val it = fs.listFiles(dir, true)
-    val out = scala.collection.mutable.ArrayBuffer.empty[HPath]
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile && f.getPath.getName.endsWith(".parquet")) out += f.getPath
+  /** The parquet files under `dir`, by path only. `listStatus` rather
+    * than `listFiles`: the `LocatedFileStatus` that `listFiles` builds
+    * loads owner and permission bits, which the local filesystem
+    * without native Hadoop reads by forking `ls -ld` once per file.
+    */
+  private def listParquetRecursive(fs: FileSystem, dir: HPath): Seq[HPath] =
+    fs.listStatus(dir).toSeq.flatMap { f =>
+      if (f.isDirectory) listParquetRecursive(fs, f.getPath)
+      else if (f.getPath.getName.endsWith(".parquet")) Seq(f.getPath)
+      else Nil
     }
-    out.toSeq
-  }
 
   /** SQL CHECK semantics: a row violates only when the predicate is
     * FALSE (NULL passes). One short-circuit job per constraint, only
@@ -1214,21 +1211,13 @@ object Snapshot {
     // micros encoding so SnapshotStats can skip on timestamp predicates.
     // The key must be session conf (ParquetFileFormat.prepareWrite reads
     // sessionState.conf AFTER writer options merge, so a per-write
-    // option cannot override it); the set/write/restore window is
-    // serialized under [[writeConfLock]] so two snapshot writers on
-    // DIFFERENT tables in one session (allowed — the single-writer rule
-    // is per table) cannot interleave set/restore and strand the conf.
+    // option cannot override it); [[ScopedConf]] holds it for the write,
+    // so two snapshot writers on DIFFERENT tables in one session
+    // (allowed — the single-writer rule is per table) cannot strand it.
     val tsKey = "spark.sql.parquet.outputTimestampType"
-    writeConfLock.synchronized {
-      val tsOld = df.sparkSession.conf.getOption(tsKey)
-      df.sparkSession.conf.set(tsKey, "TIMESTAMP_MICROS")
-      try {
-        val w = df.write.mode("errorifexists")
-        (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*)).parquet(dir)
-      } finally tsOld match {
-        case Some(v) => df.sparkSession.conf.set(tsKey, v)
-        case None    => df.sparkSession.conf.unset(tsKey)
-      }
+    ScopedConf(df.sparkSession, Seq(tsKey -> "TIMESTAMP_MICROS")) {
+      val w = df.write.mode("errorifexists")
+      (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*)).parquet(dir)
     }
     faultHook("data-files-written")
     val fs = fsFor(df.sparkSession, path)
@@ -1651,7 +1640,7 @@ object Snapshot {
              keepNullability: Boolean = false,
              clusterBy: Seq[String] = Nil,
              properties: Map[String, String] = Map.empty,
-             defaults: Map[String, String] = Map.empty): Long = {
+             defaults: Map[String, String] = Map.empty): Long = SmallOp(spark, Nil, Seq(df)) {
     require(latestVersion(spark, path).isEmpty, s"snapshot table already exists: $path")
     constraints.keys.foreach { n =>
       require(n.nonEmpty && n.forall(c => c.isLetterOrDigit || c == '_'),
@@ -2658,7 +2647,8 @@ object Snapshot {
     */
   def append(spark: SparkSession, path: String, df: DataFrame,
              mergeSchema: Boolean = false): Long =
-    appendWith(spark, path, df, mergeSchema, identity, _ => true).get
+    SmallOp(spark, Nil, Seq(df))(
+      appendWith(spark, path, df, mergeSchema, identity, _ => true).get)
 
   /** Append core with OPTIMISTIC CONCURRENCY: txn files are validated
     * and written once, then the commit rebases onto whatever manifest
@@ -2768,10 +2758,11 @@ object Snapshot {
     */
   def appendBatch(spark: SparkSession, path: String, df: DataFrame,
                   appId: String, batchId: Long,
-                  mergeSchema: Boolean = false): Boolean =
+                  mergeSchema: Boolean = false): Boolean = SmallOp(spark, Nil, Seq(df)) {
     appendWith(spark, path, df, mergeSchema,
       mNew => mNew.copy(streamBatch = mNew.streamBatch + (appId -> batchId)),
       guard = m => !m.streamBatch.get(appId).exists(_ >= batchId)).isDefined
+  }
 
   /** Schema evolution WITHOUT data: append nullable columns to the
     * table schema in a metadata-only commit (the SQL front end's
@@ -3083,7 +3074,7 @@ object Snapshot {
     * manifest rename.
     */
   def overwrite(spark: SparkSession, path: String, df: DataFrame): Long =
-    overwriteWith(spark, path, df, identity)
+    SmallOp(spark, Nil, Seq(df))(overwriteWith(spark, path, df, identity))
 
   /** The one full-rewrite body under [[overwrite]], [[overwriteBatch]]
     * and [[overwritePartitioned]]: `layout` (partition columns,
@@ -3151,7 +3142,8 @@ object Snapshot {
   def overwritePartitioned(spark: SparkSession, path: String, df: DataFrame,
                            partitionCols: Seq[String],
                            generatedCols: Map[String, String] = Map.empty): Long =
-    overwriteWith(spark, path, df, identity, Some((partitionCols, generatedCols)))
+    SmallOp(spark, Nil, Seq(df))(
+      overwriteWith(spark, path, df, identity, Some((partitionCols, generatedCols))))
 
   /** Exactly-once micro-batch OVERWRITE — the full-rewrite twin of
     * [[appendBatch]], for incremental consumers whose publish step
@@ -3165,8 +3157,8 @@ object Snapshot {
     val m = latestManifest(spark, path).getOrElse(
       throw new IllegalArgumentException(s"not a snapshot table: $path"))
     if (m.streamBatch.get(appId).exists(_ >= batchId)) return false
-    overwriteWith(spark, path, df,
-      mNew => mNew.copy(streamBatch = mNew.streamBatch + (appId -> batchId)))
+    SmallOp(spark, Nil, Seq(df))(overwriteWith(spark, path, df,
+      mNew => mNew.copy(streamBatch = mNew.streamBatch + (appId -> batchId))))
     true
   }
 
@@ -3177,10 +3169,12 @@ object Snapshot {
     */
   def replacePartitions(spark: SparkSession, path: String, replacement: DataFrame,
                         dropOld: Map[String, String] => Boolean): Long =
-    replacePartitionsOn(spark, path,
-      latestManifest(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"not a snapshot table: $path")),
-      replacement, dropOld)
+    SmallOp(spark, Nil, Seq(replacement)) {
+      replacePartitionsOn(spark, path,
+        latestManifest(spark, path).getOrElse(
+          throw new IllegalArgumentException(s"not a snapshot table: $path")),
+        replacement, dropOld)
+    }
 
   /** [[replacePartitions]] against a CALLER-PINNED manifest: the merge
     * family derives its replacement from the files of the manifest it
@@ -3231,7 +3225,13 @@ object Snapshot {
     */
   def mergeByIdPartitioned(spark: SparkSession, path: String, updates: DataFrame,
                            idCol: String, partitionCols: Seq[String],
-                           assertIdsLocal: Boolean = false): Long = {
+                           assertIdsLocal: Boolean = false): Long =
+    SmallOp(spark, Seq(path), Seq(updates))(
+      mergeByIdOn(spark, path, updates, idCol, partitionCols, assertIdsLocal))
+
+  private def mergeByIdOn(spark: SparkSession, path: String, updates: DataFrame,
+                          idCol: String, partitionCols: Seq[String],
+                          assertIdsLocal: Boolean): Long = {
     val m = latestManifest(spark, path).getOrElse(
       throw new IllegalArgumentException(s"not a snapshot table: $path"))
     require(m.partitionCols == partitionCols,
@@ -3453,8 +3453,8 @@ object Snapshot {
       "merge source plan is nondeterministic — it is evaluated in several " +
         "jobs; materialize it first (write it out, or drop the nondeterminism)")
     val src = source.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try mergeArmsOn(spark, path, m, src, targetAlias, sourceAlias, idCols,
-      matched, notMatched, bySource, pCols, schema)
+    try SmallOp(spark, Seq(path), Seq(source))(mergeArmsOn(spark, path, m, src,
+      targetAlias, sourceAlias, idCols, matched, notMatched, bySource, pCols, schema))
     finally src.unpersist()
   }
 
@@ -3603,7 +3603,8 @@ object Snapshot {
     */
   def delete(spark: SparkSession, path: String, pred: Column,
              dvMaxFraction: Double = 0.1): Long =
-    retryDml("delete")(rowDmlOnce(spark, path, "delete", ByPred(pred), None, dvMaxFraction))
+    retryDml(spark, path, "delete")(
+      rowDmlOnce(spark, path, "delete", ByPred(pred), None, dvMaxFraction))
 
   /** Row-level DELETE of every row whose `keyCol` value appears in
     * `keys` — the `DELETE … WHERE k IN (SELECT …)` shape, which a row
@@ -3617,8 +3618,8 @@ object Snapshot {
     */
   def deleteMatching(spark: SparkSession, path: String, keyCol: String,
                      keys: DataFrame, dvMaxFraction: Double = 0.1): Long =
-    retryDml("deleteMatching")(rowDmlOnce(spark, path, "deleteMatching",
-      ByKeys(keyCol, keys), None, dvMaxFraction))
+    retryDml(spark, path, "deleteMatching", Seq(keys))(
+      rowDmlOnce(spark, path, "deleteMatching", ByKeys(keyCol, keys), None, dvMaxFraction))
 
   /** Row-level UPDATE by predicate: `set` maps column name → new-value
     * expression (evaluated against the old row, so `"c" -> col("c")+1`
@@ -3634,7 +3635,8 @@ object Snapshot {
     */
   def update(spark: SparkSession, path: String, pred: Column,
              set: Map[String, Column], dvMaxFraction: Double = 0.1): Long =
-    retryDml("update")(rowDmlOnce(spark, path, "update", ByPred(pred), Some(set), dvMaxFraction))
+    retryDml(spark, path, "update")(
+      rowDmlOnce(spark, path, "update", ByPred(pred), Some(set), dvMaxFraction))
 
   /** Row-level UPDATE of every row whose `keyCol` value appears in
     * `keys` — `UPDATE … SET … WHERE k IN (SELECT …)`. Same distributed
@@ -3645,8 +3647,8 @@ object Snapshot {
   def updateMatching(spark: SparkSession, path: String, keyCol: String,
                      keys: DataFrame, set: Map[String, Column],
                      dvMaxFraction: Double = 0.1): Long =
-    retryDml("updateMatching")(rowDmlOnce(spark, path, "updateMatching",
-      ByKeys(keyCol, keys), Some(set), dvMaxFraction))
+    retryDml(spark, path, "updateMatching", Seq(keys))(
+      rowDmlOnce(spark, path, "updateMatching", ByKeys(keyCol, keys), Some(set), dvMaxFraction))
 
   /** A DML STATEMENT is safely re-derivable: unlike compact (whose
     * marked file set is an input), delete/update compute everything
@@ -3655,14 +3657,17 @@ object Snapshot {
     * re-running the statement against the new latest is exactly what a
     * warehouse would do — bounded retries, then surface the conflict.
     */
-  private def retryDml(what: String)(body: => Long, attempts: Int = 3): Long = {
-    var last: CommitConflictException = null
-    (1 to attempts).foreach { _ =>
-      try return body
-      catch { case e: CommitConflictException => last = e }
-    }
-    throw new CommitConflictException(
-      s"snapshot $what: still conflicting after $attempts re-derivations: ${last.getMessage}")
+  private def retryDml(spark: SparkSession, path: String, what: String,
+                       inputs: Seq[DataFrame] = Nil)(body: => Long): Long = {
+    val attempts = 3
+    def attempt(n: Int): Long =
+      try body
+      catch {
+        case _: CommitConflictException if n < attempts => attempt(n + 1)
+        case e: CommitConflictException => throw new CommitConflictException(
+          s"snapshot $what: still conflicting after $attempts re-derivations: ${e.getMessage}")
+      }
+    SmallOp(spark, Seq(path), inputs)(attempt(1))
   }
 
   /** DML predicates and SET values are evaluated in SEVERAL independent
@@ -4005,7 +4010,12 @@ object Snapshot {
     */
   def compact(spark: SparkSession, path: String, targetBytes: Long = 0L,
               minFiles: Int = 0, zorderBy: Seq[String] = Nil,
-              where: Option[Column] = None): Seq[String] = {
+              where: Option[Column] = None): Seq[String] =
+    SmallOp(spark, Seq(path))(compactOn(spark, path, targetBytes, minFiles, zorderBy, where))
+
+  private def compactOn(spark: SparkSession, path: String, targetBytes: Long,
+                        minFiles: Int, zorderBy: Seq[String],
+                        where: Option[Column]): Seq[String] = {
     val m = latestManifest(spark, path).getOrElse(
       throw new IllegalArgumentException(s"not a snapshot table: $path"))
     // 0 = the library default (4): SQL routes pass the sentinel so the
@@ -4190,7 +4200,7 @@ object Snapshot {
     val todo = m.files.filterNot(f => m.blooms.get(f).exists(_.cols.sorted == want))
     if (todo.isEmpty) return m.version
     val refs = SnapshotBloom.build(spark, path, m, todo, cols, fpp)
-    retryDml("bloomIndex") {
+    retryDml(spark, path, "bloomIndex") {
       val cur = latestManifest(spark, path).get
       val liveRefs = refs.view.filterKeys(cur.files.toSet).toMap
       if (liveRefs.isEmpty) cur.version

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Snapshot
+import graft.operators.{SmallOp, Snapshot}
 
 /** Incremental consumer of a snapshot table's change feed: the running
   * form of the q119 story, closing the loop with the reference's hourly
@@ -58,19 +58,21 @@ object FeedConsumer {
       throw new IllegalArgumentException(
         s"downstream rollup must be a snapshot table (create it first): $dstPath"))
     val vFrom = dstM.streamBatch.get(consumerId)
-    if (vFrom.exists(_ >= vNow)) return None
-    val feed = vFrom match {
-      case Some(v) =>
-        if (signed) Snapshot.readChangesSigned(spark, srcPath, v, vNow)
-        else Snapshot.readChanges(spark, srcPath, v, vNow, net = true)
-      case None    => Snapshot.readVersion(spark, srcPath, vNow)
-        .withColumn("_change_type", lit("insert"))
+    if (vFrom.exists(_ >= vNow)) None
+    else SmallOp(spark, Seq(srcPath, dstPath)) {
+      val feed = vFrom match {
+        case Some(v) =>
+          if (signed) Snapshot.readChangesSigned(spark, srcPath, v, vNow)
+          else Snapshot.readChanges(spark, srcPath, v, vNow, net = true)
+        case None    => Snapshot.readVersion(spark, srcPath, vNow)
+          .withColumn("_change_type", lit("insert"))
+      }
+      val next = apply(feed, Snapshot.read(spark, dstPath))
+      // reads above are pinned to immutable files; the publish writes a
+      // fresh txn and commits rollup + watermark in one manifest
+      Snapshot.overwriteBatch(spark, dstPath, next, consumerId, vNow)
+      Some(vFrom.getOrElse(0L) -> vNow)
     }
-    val next = apply(feed, Snapshot.read(spark, dstPath))
-    // reads above are pinned to immutable files; the publish writes a
-    // fresh txn and commits rollup + watermark in one manifest
-    Snapshot.overwriteBatch(spark, dstPath, next, consumerId, vNow)
-    Some(vFrom.getOrElse(0L) -> vNow)
   }
 
   /** Standard delta-fold for additive rollups `GROUP BY keys: COUNT(*),

@@ -19,4 +19,12 @@ object PlanBridge {
     */
   def withActive[T](spark: SparkSession)(f: => T): T =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].withActive(f)
+
+  /** Run `f` with the session's SQL conf propagated to the tasks of the
+    * jobs it starts, as a Dataset action does — for jobs run straight on
+    * a plan's RDD.
+    */
+  def withConfPropagated[T](spark: SparkSession)(f: => T): T =
+    org.apache.spark.sql.execution.SQLExecution.withSQLConfPropagated(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])(f)
 }

@@ -83,7 +83,7 @@ class JobBudgetSpec extends SparkSpec {
     assert(sorted(Snapshot.read(spark, s"$root/mv_min")) == recompute(minSql))
     assert(sorted(Snapshot.read(spark, feed)) == recompute(sumSql))
 
-    val bounds = Map("create" -> 4, "refreshSum" -> 9, "refreshMin" -> 3, "drain" -> 4)
+    val bounds = Map("create" -> 2, "refreshSum" -> 6, "refreshMin" -> 3, "drain" -> 4)
     Seq("create" -> create, "refreshSum" -> refreshSum, "refreshMin" -> refreshMin,
       "drain" -> drained).foreach { case (k, n) =>
       assert(n <= bounds(k), s"$k ran $n jobs, bound ${bounds(k)}")

@@ -925,10 +925,17 @@ class MatViewSpec extends SparkSpec {
           |MIN(v) AS lo FROM src GROUP BY k""".stripMargin
       Snapshot.sql(spark, s"CREATE MATERIALIZED VIEW mv AS $defining", reg)
       val mvP = s"$root/mv"
+      val mc = Snapshot.latestManifest(spark, mvP).get
+      assert(mc.clusterBy == Seq("k") && !mc.properties.contains("graft.write.sorted"),
+        "a fresh rollup state is written without the range layout")
+      assert(mc.files.size > 1,
+        s"fixture needs a multi-file state, got ${mc.files.size} file(s)")
+      // the first commit onto a multi-file state takes the range layout
+      Snapshot.append(spark, srcP, Seq((9000L, "k0300", 4L)).toDF("id", "k", "v"))
+      Snapshot.sql(spark, "REFRESH MATERIALIZED VIEW mv", reg)
       val m0 = Snapshot.latestManifest(spark, mvP).get
-      assert(m0.clusterBy == Seq("k") &&
-        m0.properties.get("graft.write.sorted").contains("range"),
-        "rollup MV state must declare the range-clustered layout")
+      assert(m0.properties.get("graft.write.sorted").contains("range"),
+        "a multi-file rollup state must take the range-clustered layout")
       assert(m0.files.size > 1,
         s"fixture needs a multi-file state, got ${m0.files.size} file(s)")
       def state(): Set[Row] = Snapshot.read(spark, mvP).collect().toSet
@@ -976,6 +983,30 @@ class MatViewSpec extends SparkSpec {
       case Some(v) => spark.conf.set(advisoryKey, v)
       case None    => spark.conf.unset(advisoryKey)
     }
+  }
+
+  test("a one-file rollup state keeps the unsorted layout across refreshes") {
+    val root = Files.createTempDirectory("graft-mv-onefile").toString
+    val srcP = s"$root/src"
+    val mvP = s"$root/mv"
+    val reg = Map("src" -> srcP, "mv" -> mvP)
+    Snapshot.create(spark, srcP,
+      (0L until 600L).map(i => (i, f"k${i % 40}%02d", i % 50)).toDF("id", "k", "v"))
+    Snapshot.sql(spark,
+      "CREATE MATERIALIZED VIEW mv AS SELECT k, COUNT(*) AS n, SUM(v) AS s FROM src GROUP BY k", reg)
+    def layout(): (Option[String], Int) = {
+      val m = Snapshot.latestManifest(spark, mvP).get
+      (m.properties.get("graft.write.sorted"), m.files.size)
+    }
+    assert(layout() == (None, 1))
+    (1 to 2).foreach { w =>
+      Snapshot.append(spark, srcP, Seq((1000L + w, "k07", 3L)).toDF("id", "k", "v"))
+      Snapshot.sql(spark, "REFRESH MATERIALIZED VIEW mv", reg)
+      assert(layout() == (None, 1), s"window $w")
+    }
+    val recompute = Snapshot.read(spark, srcP).groupBy("k")
+      .agg(count(lit(1)).as("n"), sum("v").as("s")).collect().toSet
+    assert(Snapshot.read(spark, mvP).collect().toSet == recompute)
   }
 
   test("multi-feed MIN/MAX: equal merged extrema with cancelling counts still refold") {
