@@ -1003,11 +1003,13 @@ object MatView {
   /** Materialize `df` and count its rows (with `flag` set, only those
     * whose boolean column `flag` is true) in ONE job: the lazy
     * checkpoint fills while the count runs, so the materialized copy
-    * and the emptiness answer cost a single pass.
+    * and the emptiness answer cost a single pass. The count runs on the
+    * plan's own RDD (not `toRdd`, which pins the session's conf for its
+    * tasks), so the tasks see the calling thread's conf.
     */
   private def materialized(df: DataFrame, flag: Option[String] = None): (DataFrame, Long) = {
     val cp = df.localCheckpoint(eager = false)
-    val rows = cp.queryExecution.toRdd
+    val rows = cp.queryExecution.executedPlan.execute()
     val n = PlanBridge.withConfPropagated(cp.sparkSession)(flag.map(cp.schema.fieldIndex) match {
       case None => rows.count()
       case Some(i) => rows.filter(r => !r.isNullAt(i) && r.getBoolean(i)).count()

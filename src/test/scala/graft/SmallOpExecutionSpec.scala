@@ -7,14 +7,15 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.operators.{MatView, SmallOp, Snapshot}
 
 /** The interpreted-execution seam ([[SmallOp]]): engine operations over
   * manifest-sized inputs run with whole-stage codegen off and the
   * interpreted expression factory, give the same results as compiled
-  * runs, restore the caller's conf on every exit path, and never touch
-  * how user queries run.
+  * runs, leave the session's conf as the caller set it on every exit
+  * path, and never touch how user queries run, on any thread.
   */
 class SmallOpExecutionSpec extends SparkSpec {
   import spark.implicits._
@@ -34,16 +35,24 @@ class SmallOpExecutionSpec extends SparkSpec {
   /** The codegen keys as explicitly set on the session (None = unset). */
   private def conf: Seq[Option[String]] = Keys.map(spark.sessionState.conf.getAllConfs.get)
 
+  /** The codegen keys as this thread plans with them and hands them to
+    * its jobs' tasks.
+    */
+  private def threadView: (Seq[Option[String]], Seq[Option[String]]) =
+    (Keys.map(SQLConf.get.getAllConfs.get), Keys.map(k => Option(spark.sparkContext.getLocalProperty(k))))
+
   private def withConf[T](k: String, v: Option[String])(body: => T): T = {
-    val old = spark.conf.getOption(k)
+    val old = spark.sessionState.conf.getAllConfs.get(k)
     v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     try body finally old.fold(spark.conf.unset(k))(spark.conf.set(k, _))
   }
 
-  /** The codegen keys as a data-file write inside `body` saw them. */
-  private def seenByWrite(body: => Unit): Seq[Seq[Option[String]]] = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Option[String]]]()
-    Snapshot.faultHook = p => if (p == "data-files-written") seen.add(conf)
+  /** The codegen keys as each data-file write inside `body` saw them:
+    * its thread's view, then the session's.
+    */
+  private def seenByWrite(body: => Unit): Seq[(Any, Seq[Option[String]])] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Any, Seq[Option[String]])]()
+    Snapshot.faultHook = p => if (p == "data-files-written") seen.add(threadView -> conf)
     try body finally Snapshot.faultHook = _ => ()
     scala.jdk.CollectionConverters.IterableHasAsScala(seen).asScala.toSeq
   }
@@ -108,6 +117,17 @@ class SmallOpExecutionSpec extends SparkSpec {
     assert(Snapshot.latestManifest(spark, small("mv")).get.operation.contains("(incremental)"))
   }
 
+  test("a table over a mebibyte runs compiled, under the broadcast threshold too") {
+    val t = Files.createTempDirectory("graft-smallop-mid").toString + "/mid"
+    Snapshot.create(spark, t, spark.range(0, 80000).select(col("id"),
+      xxhash64(col("id")).as("v"), xxhash64(col("id"), lit(7)).as("w")).repartition(2))
+    val m = Snapshot.latestManifest(spark, t).get
+    val bytes = m.files.map(f => m.stats(f).bytes).sum
+    assert(bytes > SmallOp.InterpretedBytes && bytes < spark.sessionState.conf.autoBroadcastJoinThreshold)
+    assert(!SmallOp.isSmall(spark, Seq(t), Nil))
+    assert(compiles(Snapshot.delete(spark, t, col("v") % 1000003L === 424242L)) > 0L)
+  }
+
   test("the codegen keys return to the caller's values after every kind of exit") {
     val root = Files.createTempDirectory("graft-smallop-conf").toString
     val reg = fixture(root)
@@ -115,15 +135,16 @@ class SmallOpExecutionSpec extends SparkSpec {
     withConf(Keys.head, Some("true")) {
       val caller = conf
       assert(caller == Seq(Some("true"), None))
+      val inside = Seq((interpreted, interpreted) -> caller)
 
-      // a plain operation: interpreted inside, restored after
-      assert(seenByWrite(Snapshot.append(spark, reg("src"), rows(2000, 2010))) == Seq(interpreted))
-      assert(conf == caller)
+      // a plain operation: interpreted on its thread, the session untouched
+      assert(seenByWrite(Snapshot.append(spark, reg("src"), rows(2000, 2010))) == inside)
+      assert(conf == caller && threadView == (caller, Seq(None, None)))
 
       // an operation that throws inside the seam
       intercept[IllegalArgumentException](
         Snapshot.update(spark, reg("src"), col("id") === 1L, Map("nope" -> lit(1))))
-      assert(conf == caller)
+      assert(conf == caller && threadView == (caller, Seq(None, None)))
 
       // nested: a stacked view's cascade refresh commits through several
       // gated operations
@@ -132,8 +153,8 @@ class SmallOpExecutionSpec extends SparkSpec {
       Snapshot.append(spark, reg("src"), rows(2010, 2020))
       val cascade = seenByWrite(MatView.refreshCascade(spark, s"$root/top",
         resolve(reg + ("top" -> s"$root/top"))))
-      assert(cascade.nonEmpty && cascade.forall(_ == interpreted))
-      assert(conf == caller)
+      assert(cascade.nonEmpty && cascade.forall(_ == inside.head))
+      assert(conf == caller && threadView == (caller, Seq(None, None)))
       assert(sorted(Snapshot.read(spark, s"$root/top")) == Seq("2020"))
 
       // nested: a catalog DELETE runs the engine's DML inside spark.sql
@@ -142,8 +163,8 @@ class SmallOpExecutionSpec extends SparkSpec {
       try {
         spark.sql("CREATE NAMESPACE IF NOT EXISTS gsop.db")
         Snapshot.create(spark, s"$root/db/t", rows(0, 50).repartition(1))
-        assert(seenByWrite(spark.sql("DELETE FROM gsop.db.t WHERE v > 500")) == Seq(interpreted))
-        assert(conf == caller)
+        assert(seenByWrite(spark.sql("DELETE FROM gsop.db.t WHERE v > 500")) == inside)
+        assert(conf == caller && threadView == (caller, Seq(None, None)))
         assert(spark.sql("SELECT COUNT(*) FROM gsop.db.t").head().getLong(0) ==
           (0 until 50).count(i => i * 37 % 1009 <= 500))
       } finally {
@@ -158,9 +179,12 @@ class SmallOpExecutionSpec extends SparkSpec {
       val threads = tables.map(t => new Thread(() =>
         try (1 to 6).foreach(i => Snapshot.append(spark, t, rows(10 * i, 10 * i + 10)))
         catch { case e: Throwable => errors.add(e); () }))
-      threads.foreach(_.start())
-      threads.foreach(_.join())
+      val concurrent = seenByWrite {
+        threads.foreach(_.start())
+        threads.foreach(_.join())
+      }
       assert(errors.isEmpty, errors)
+      assert(concurrent.size == 12 && concurrent.forall(_ == inside.head))
       assert(conf == caller)
       tables.foreach(t => assert(Snapshot.read(spark, t).count() == 70L))
     }
@@ -178,5 +202,57 @@ class SmallOpExecutionSpec extends SparkSpec {
     assert(got.length == 7)
     assert(wholeStage(q), "a user SELECT plans whole-stage codegen")
     assert(wholeStage(Snapshot.read(spark, reg("mv"))), "so does a snapshot read")
+  }
+
+  test("a query another thread runs while an operation is in flight plans and runs compiled") {
+    val root = Files.createTempDirectory("graft-smallop-live").toString
+    val reg = fixture(root)
+    Snapshot.read(spark, reg("src")).createOrReplaceTempView("smallop_live")
+    assert(conf == Seq(None, None))
+    var opView: Any = null
+    var user: Option[(Boolean, Long, Int, Any)] = None
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val done = new java.util.concurrent.CountDownLatch(1)
+    // a thread that exists before the operation starts (a thread started
+    // from inside it would inherit its job properties) runs a SELECT
+    // while the operation is parked in its write, so every compile it
+    // counts is its own
+    val other = new Thread(() =>
+      try {
+        org.apache.spark.sql.SparkSession.setActiveSession(spark)
+        go.await()
+        val q = spark.sql("SELECT k, SUM(v * 7919) AS s FROM smallop_live WHERE v > 13 GROUP BY k")
+        var n = 0
+        val c = compiles { n = q.collect().length }
+        // a key the other thread sets while the operation is in flight
+        spark.conf.set(Keys.head, "true")
+        user = Some((wholeStage(q), c, n, threadView))
+      } catch { case e: Throwable => errors.add(e); () }
+      finally done.countDown())
+    other.start()
+    Snapshot.faultHook = p => if (p == "data-files-written" && opView == null) {
+      opView = threadView
+      go.countDown()
+      done.await()
+    }
+    try {
+      Snapshot.append(spark, reg("src"), rows(2000, 2010))
+      other.join()
+      assert(errors.isEmpty, errors)
+      val Some((planned, compiled, n, view)) = user
+      assert(planned, "the other thread's SELECT plans whole-stage codegen")
+      assert(compiled > 0L, "the other thread's SELECT compiles its stages")
+      assert(n == 7)
+      assert(conf == Seq(Some("true"), None), "the operation keeps the value the other thread set")
+      assert(view == (Seq(Some("true"), None), Seq(None, None)))
+      val interpreted = Seq(Some("false"), Some("NO_CODEGEN"))
+      assert(opView == (interpreted, interpreted))
+    } finally {
+      Snapshot.faultHook = _ => ()
+      go.countDown()
+      other.join()
+      spark.conf.unset(Keys.head)
+    }
   }
 }
