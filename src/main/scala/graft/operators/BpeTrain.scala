@@ -56,14 +56,13 @@ object BpeTrain {
     require(nMerges >= 1, "nMerges must be >= 1")
     val spark = df.sparkSession
     import spark.implicits._
-    var vocab = df
+    var vocab = Materialize(df
       .select(explode(split(col(textCol), " ")).as("w"))
       .where(col("w") =!= "")
       .groupBy("w").agg(count(lit(1)).as("cnt"))
       .select(col("w"), col("cnt"),
         expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
-          .as("syms"))
-      .localCheckpoint()
+          .as("syms"))).df
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
     var exhausted = false
     while (out.size < nMerges && !exhausted) {
@@ -93,8 +92,7 @@ object BpeTrain {
             concat(slice(acc, lit(1), size(acc) - 1),
               array(concat(element_at(acc, -1), s))))
             .otherwise(concat(acc, array(s))))
-        vocab = vocab.select(col("w"), col("cnt"), merged.as("syms"))
-          .localCheckpoint()
+        vocab = Materialize(vocab.select(col("w"), col("cnt"), merged.as("syms"))).df
       }
     }
     (spark.createDataset(out.toSeq).toDF("rank", "pair"), vocab)

@@ -194,10 +194,9 @@ object Dedup {
           s"(maxChunksPerDoc=$maxChunksPerDoc): doc "),
         col("id").cast("string"), lit(" chunk "),
         col("chunk_no").cast("string"))).cast("long"))
-    val survivors = cdcChunkDedup(df, idCol, textCol, divisor)
+    val survivors = Materialize(cdcChunkDedup(df, idCol, textCol, divisor)
       .where(col("keep") && col("n_tokens") >= minTokens)
-      .select(cid.as("cid"), col("chunk"))
-      .localCheckpoint()
+      .select(cid.as("cid"), col("chunk"))).df
     def doc(c: Column) = floor(c / maxChunksPerDoc).cast("long")
     def no(c: Column) = pmod(c, lit(maxChunksPerDoc.toLong)).cast("long")
     minhashLshPairs(survivors, "cid", "chunk", k, bands, rowsPerBand, minJaccard,
@@ -399,17 +398,17 @@ object Dedup {
     // SHUFFLE_HASH self-join + ReuseExchange: one evaluation of the
     // banding subtree (scan + minhash signatures) instead of the two a
     // broadcast build would pay — see shinglePairAgg for the rationale
-    val cand = banded.hint("shuffle_hash").as("a")
+    // the candidate set feeds THREE consumers (the id restriction
+    // below, twice, and the verification join) — materialize the
+    // collision-sized pair list once instead of re-running the banded
+    // self-join per consumer; its exact size lets the id semi-join
+    // broadcast the candidate side
+    val cand = Materialize(banded.hint("shuffle_hash").as("a")
       .join(banded.as("b"),
         col("a.bk.band") === col("b.bk.band") && col("a.bk.key") === col("b.bk.key") &&
           col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-      // the candidate set feeds THREE consumers (the id restriction
-      // below, twice, and the verification join) — materialize the
-      // collision-sized pair list once instead of re-running the
-      // banded self-join per consumer
-      .localCheckpoint()
+      .distinct()).df
     // verify ONLY candidate docs: shingle STRINGS are built for the
     // semi-joined candidate ids — O(collisions) docs — never for the
     // whole corpus (which the previous plan re-shingled twice, once
@@ -444,14 +443,13 @@ object Dedup {
                             idCol: String, textCol: String, k: Int,
                             bands: Int, rowsPerBand: Int, minJaccard: Double): DataFrame = {
     graft.expressions.GraftFunctions.register(left.sparkSession)
-    val cand = bandedKeys(left, idCol, textCol, k, bands, rowsPerBand).as("a")
+    // collision-sized; three consumers (two id restrictions + the
+    // verification join) — materialize once (see minhashLshPairs)
+    val cand = Materialize(bandedKeys(left, idCol, textCol, k, bands, rowsPerBand).as("a")
       .join(bandedKeys(right, idCol, textCol, k, bands, rowsPerBand).as("b"),
         col("a.bk.band") === col("b.bk.band") && col("a.bk.key") === col("b.bk.key"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-      // collision-sized; three consumers (two id restrictions + the
-      // verification join) — materialize once (see minhashLshPairs)
-      .localCheckpoint()
+      .distinct()).df
     // shingle strings only for candidate docs (semi-join per side) —
     // never for either whole corpus
     def sh(df: DataFrame, ids: DataFrame) = df
@@ -535,18 +533,16 @@ object Dedup {
     // only edge-touched nodes need propagation — a vanishing fraction of
     // the corpus (near-dups are rare by construction); everything else
     // is its own canonical id and never enters the loop
-    var labels = edges.select(col("src").as("id")).distinct()
+    val seed = edges.select(col("src").as("id")).distinct()
       .withColumn("canonical_id", col("id")).persist()
-    // labels becomes a projection over the cached step below; unpersist
-    // must target the cached plan itself, so track it separately
-    var cached = labels
+    var labels = seed
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
       // each node adopts the smallest canonical label among itself and
       // its neighbours' labels; the previous label rides along so the
-      // convergence check needs NO second join/job — one count() both
-      // materializes the persisted next AND folds the changed tally
+      // convergence check needs NO second join/job — the one pass that
+      // materializes next also counts the labels that moved
       val viaNeighbor = edges
         .join(labels.withColumnsRenamed(Map("id" -> "dst", "canonical_id" -> "nl")), "dst")
         .groupBy(col("src").as("id")).agg(min(col("nl")).as("nl"))
@@ -562,22 +558,23 @@ object Dedup {
           col("x.canonical_id") === col("p.cid"), "left")
         .select(col("x.id").as("id"), col("x.__prev").as("__prev"),
           least(col("x.canonical_id"), coalesce(col("p.cl"), col("x.canonical_id"))).as("canonical_id"))
-      // truncate lineage EVERY round (lazy localCheckpoint: the count
-      // below materializes it in the same job). The jump references
+        .select(col("id"), col("canonical_id"),
+          (col("canonical_id") =!= col("__prev")).as("__moved"))
+      // truncate lineage EVERY round (one job: the materialization
+      // counts the moved labels as it fills). The jump references
       // `stepped` twice, so without per-round truncation the analyzed
       // plan doubles each round and the driver drowns in plan
       // analysis/cache-lookup time (measured: 8 rounds of ~16 s of jobs
       // hiding behind ~110 s of driver overhead at every-3rd cadence);
       // checkpointing each round keeps every plan O(1) — the self-join
       // then reads a two-node RDD-leaf plan, not a doubling tree
-      val next = jumped.localCheckpoint(false)
-      converged = next.where(col("canonical_id") =!= col("__prev")).count() == 0
+      val next = Materialize(jumped, Some("__moved"))
+      converged = next.flagged == 0
       stepped.unpersist()
-      cached.unpersist()
-      cached = next
-      labels = next.select("id", "canonical_id")
+      labels = next.df.select("id", "canonical_id")
       i += 1
     }
+    seed.unpersist()
     edges.unpersist()
     // no broadcast hint: Catalyst broadcasts when the cluster table is
     // small (the usual case) and falls back to SMJ when it isn't

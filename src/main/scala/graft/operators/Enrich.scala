@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** The reference's dictionary-enrichment pattern (SURVEY.md §2.12): an
@@ -17,32 +16,17 @@ import org.apache.spark.sql.types.StructType
   */
 object Enrich {
 
-  /** Broadcast hint gated on the session threshold vs the plan's
-    * statistics: above the threshold (or with broadcast disabled via
-    * -1) the hint is dropped and Catalyst/AQE picks the join strategy —
-    * the pattern every dictionary-sized-but-unbounded relation in this
-    * engine shares (the UA/GeoIP dictionary here, the IVF centroid
-    * table, the k-means iteration). Call on a MATERIALIZED relation
-    * (persisted+counted, checkpointed, or a real source) so the stats
-    * are bytes, not schema-default guesses.
-    */
-  def sizeGatedBroadcast(df: DataFrame): DataFrame = {
-    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (threshold >= 0 && estBytes <= threshold) broadcast(df) else df
-  }
-
   /** Enrich `df` by `keyCol`: `fn` maps each distinct key to derived
     * values matching `outSchema` (a Row of extra columns). `fn` runs
     * distributed via mapPartitions — one call per distinct key, never
     * per fact row. Left join preserves unmatched facts.
     *
-    * The broadcast hint is size-gated: UA/IP dictionaries are
-    * dimension-sized, but a high-cardinality key column would OOM the
-    * driver if hinted unconditionally — above the session's
-    * autoBroadcastJoinThreshold the hint is dropped and Catalyst/AQE
-    * picks the join strategy. (The count() this needs is not extra work:
-    * the persisted dictionary must be materialized for the join anyway.)
+    * No broadcast hint: UA/IP dictionaries are dimension-sized, but a
+    * high-cardinality key column would OOM the driver if hinted
+    * unconditionally. The dictionary is materialized, so the planner
+    * sees its real bytes (not schema defaultSize, which prices every
+    * string at 20 bytes) and broadcasts it exactly when it fits the
+    * session's autoBroadcastJoinThreshold.
     */
   def viaDistinct(df: DataFrame, keyCol: String, outSchema: StructType)
                  (fn: String => Row): DataFrame = {
@@ -53,17 +37,10 @@ object Enrich {
         val k = r.getString(0)
         Row.fromSeq(k +: fn(k).toSeq)
       })
-    // persist: the lookup must run once per key total, not once per
+    // materialized: the lookup must run once per key total, not once per
     // downstream action — same reason the reference caches its parsed
-    // UA/IP dictionaries in driver frames. The cache lives for the
-    // session (it IS the parsed dictionary); repeated enrichments with
-    // different lookups should share one enriched dict or clear the
-    // cache between runs.
-    val dict = spark.createDataFrame(dictRdd, keyed).persist()
-    dict.count() // materialize so the cached-plan statistics are REAL bytes
-    // stats come from the materialized cache, not schema defaultSize
-    // (which prices every string at 20 bytes and would wave a multi-GB
-    // dictionary of long UA strings through the gate)
-    df.join(sizeGatedBroadcast(dict), Seq(keyCol), "left")
+    // UA/IP dictionaries in driver frames
+    val dict = Materialize(spark.createDataFrame(dictRdd, keyed)).df
+    df.join(dict, Seq(keyCol), "left")
   }
 }

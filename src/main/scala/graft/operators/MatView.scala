@@ -411,7 +411,7 @@ object MatView {
       lazy val replays = {
         val r = replaysFor(vFroms(_).get, changed)
         if (shape.distinctCols.isEmpty && shape.avgCols.isEmpty) r
-        else r.map(_.localCheckpoint())
+        else r.map(Materialize(_).df)
       }
       // DISTINCT STATE first: fold each side table's (keys, value)
       // counts over ITS window and commit — all side commits land
@@ -429,14 +429,14 @@ object MatView {
           val sameWindow = sChanged == changed &&
             sChanged.forall(i => vFroms(i).contains(sFroms(i)))
           val feeds = if (sameWindow) replays else replaysFor(sFroms(_), sChanged)
-          val (sDelta, sRows) = materialized(sideDelta(feeds, shape, e))
-          if (sRows == 0L)
+          val sDelta = Materialize(sideDelta(feeds, shape, e))
+          if (sDelta.rows == 0L)
             Snapshot.commitMetaOn(spark, sp, sm,
               s"REFRESH DISTINCT STATE $opTail (no-op window)")(stamp)
           else
-            foldCommitRestricted(spark, sp, sm, sDelta,
+            foldCommitRestricted(spark, sp, sm, sDelta.df,
               shape.keys.headOption.map(_._1),
-              cur => foldSide(cur, sDelta, shape),
+              cur => foldSide(cur, sDelta.df, shape),
               op = s"REFRESH DISTINCT STATE $opTail (incremental)",
               finish = stamp)
         }
@@ -463,14 +463,14 @@ object MatView {
           val sameWindow = sChanged == changed &&
             sChanged.forall(i => vFroms(i).contains(sFroms(i)))
           val feeds = if (sameWindow) replays else replaysFor(sFroms(_), sChanged)
-          val (aDelta, aRows) = materialized(groupedDelta(feeds, ash))
-          if (aRows == 0L)
+          val aDelta = Materialize(groupedDelta(feeds, ash))
+          if (aDelta.rows == 0L)
             Snapshot.commitMetaOn(spark, sp, sm,
               s"REFRESH AVG STATE $opTail (no-op window)")(stamp)
           else
-            foldCommitRestricted(spark, sp, sm, aDelta,
+            foldCommitRestricted(spark, sp, sm, aDelta.df,
               ash.keys.headOption.map(_._1),
-              cur => foldDeltas(cur, aDelta, ash, childAtNew),
+              cur => foldDeltas(cur, aDelta.df, ash, childAtNew),
               op = s"REFRESH AVG STATE $opTail (incremental)",
               finish = stamp)
         }
@@ -482,8 +482,8 @@ object MatView {
       // this the replay trees (the expensive part: change feeds joined
       // through the defining tree) would run once for the emptiness
       // check and again for the fold
-      val (delta0, deltaRows) = materialized(groupedDelta(replays, shape))
-      if (deltaRows == 0L)
+      val delta = Materialize(groupedDelta(replays, shape))
+      if (delta.rows == 0L)
         Snapshot.commitMetaOn(spark, mvPath, mvM,
           s"REFRESH MATERIALIZED VIEW $opTail (no-op window)")(stamp)
       // patch-free shapes commit through the file-restricted fold: a
@@ -493,13 +493,13 @@ object MatView {
       // side state (and so the patched column) while every view-owned
       // aggregate nets to neutral — so they keep the whole rewrite.
       else if (shape.distinctCols.isEmpty && shape.avgCols.isEmpty)
-        foldCommitRestricted(spark, mvPath, mvM, delta0,
+        foldCommitRestricted(spark, mvPath, mvM, delta.df,
           shape.keys.headOption.map(_._1),
-          cur => foldDeltas(cur, delta0, shape, childAtNew),
+          cur => foldDeltas(cur, delta.df, shape, childAtNew),
           op = s"REFRESH MATERIALIZED VIEW $opTail (incremental)",
           finish = stamp)
       else {
-        val folded = foldDeltas(current, delta0, shape, childAtNew)
+        val folded = foldDeltas(current, delta.df, shape, childAtNew)
         // COUNT(DISTINCT) columns derive from the just-committed side
         // states: per-group row counts of a state-sized table — never
         // a fact pass
@@ -1000,23 +1000,6 @@ object MatView {
     if (sm.clusterBy.isEmpty || sm.files.size <= 1) sm
     else sm.copy(properties = sm.properties + ("graft.write.sorted" -> "range"))
 
-  /** Materialize `df` and count its rows (with `flag` set, only those
-    * whose boolean column `flag` is true) in ONE job: the lazy
-    * checkpoint fills while the count runs, so the materialized copy
-    * and the emptiness answer cost a single pass. The count runs on the
-    * plan's own RDD (not `toRdd`, which pins the session's conf for its
-    * tasks), so the tasks see the calling thread's conf.
-    */
-  private def materialized(df: DataFrame, flag: Option[String] = None): (DataFrame, Long) = {
-    val cp = df.localCheckpoint(eager = false)
-    val rows = cp.queryExecution.executedPlan.execute()
-    val n = PlanBridge.withConfPropagated(cp.sparkSession)(flag.map(cp.schema.fieldIndex) match {
-      case None => rows.count()
-      case Some(i) => rows.filter(r => !r.isNullAt(i) && r.getBoolean(i)).count()
-    })
-    (cp, n)
-  }
-
   /** File-restricted state-fold commit — the O(changed-files) WRITE
     * path for incremental refreshes (opt guide §2.4/§6). Collects the
     * delta's first-group-key values (gated by
@@ -1283,12 +1266,12 @@ object MatView {
     // probe, the keep branch, the affected key set feeding the
     // re-derivation semi-join) — materialize the state-sized fold once
     // instead of re-running the full-outer join per consumer
-    val (folded, dented) = materialized(folded0, Some("__rec"))
-    val keep = folded.where(!col("__rec")).drop("__rec")
+    val folded = Materialize(folded0, Some("__rec"))
+    val keep = folded.df.where(!col("__rec")).drop("__rec")
     // state-sized decision (the MV rollup, not the source): skip the
     // recompute branch entirely when no delete dented an extremum
-    if (dented == 0L) return keep
-    val affected = folded.where(col("__rec"))
+    if (folded.flagged == 0L) return keep
+    val affected = folded.df.where(col("__rec"))
       .select(shape.keys.map { case (sn, _) => col(sn) }: _*)
     // re-derive ONLY the affected groups: semi-join the defining
     // query's child at the new source version against the (broadcast-

@@ -157,10 +157,11 @@ object Similarity {
     * that is n·sqrt(n), the standard IVF build cost, and the ranking is
     * the `graft_topk_pairs` partial aggregate, so the post-join shuffle
     * carries O(n · nprobe) rows, never the n × nlist candidate set a
-    * window sort would move. The centroid broadcast is size-gated like
-    * Enrich's dictionary: above the session broadcast threshold the
-    * hint is dropped and the assignment runs as a partitioned cartesian
-    * (n_part_v × n_part_c tasks) instead of dying in a driver build.
+    * window sort would move. The centroid table is persisted and
+    * counted, so the planner sees its real bytes: under the session
+    * broadcast threshold it broadcasts, above it the assignment runs as
+    * a partitioned cartesian (n_part_v × n_part_c tasks) instead of
+    * dying in a driver build.
     */
   def ivfIndex(df: DataFrame, centroids: DataFrame,
                idCol: String, vecCol: String, nprobe: Int = 2): IvfIndex = {
@@ -178,9 +179,8 @@ object Similarity {
     */
   private def assignTo(c: DataFrame, df: DataFrame,
                        idCol: String, vecCol: String, nprobe: Int): DataFrame = {
-    val cHinted = graft.operators.Enrich.sizeGatedBroadcast(c)
     val v = df.select(col(idCol).as("id"), col(vecCol).as("v"), norm(col(vecCol)).as("n"))
-    v.crossJoin(cHinted)
+    v.crossJoin(c)
       .select(col("id"), col("v"), col("n"),
         cosPre(dot(col("v"), col("cv")), col("n"), col("cn")).as("ccos"), col("centroid_id"))
       .groupBy("id")
@@ -307,9 +307,9 @@ object Similarity {
     * partial-aggregated to one row per vector) plus an elementwise-mean
     * shuffle of n · dim (cell, dim, value) triples — the standard
     * distributed k-means step; no driver-side math, no collect. The
-    * centroid side goes through the same size-gated broadcast as
-    * ivfIndex, and the mean accumulates in DECIMAL so the refined
-    * centroids are identical across partition counts and reruns.
+    * centroid side is materialized, so it broadcasts by its real size,
+    * and the mean accumulates in DECIMAL so the refined centroids are
+    * identical across partition counts and reruns.
     * Returns (centroid_id, vec) with ids preserved from the seeds, so
     * downstream assignment stays deterministic.
     *
@@ -331,13 +331,12 @@ object Similarity {
     var c = seeds.select(col(idCol).cast("long").as("centroid_id"),
       col(vecCol).cast("array<float>").as("cv"))
     for (_ <- 1 to iters) {
-      // persist + count before the gate: sizeGatedBroadcast needs REAL
-      // byte stats — the raw seeds plan's estimate can be the multi-GB
-      // source file a small seed slice was filtered from, which would
-      // wrongly drop the hint and cartesian the first iteration
-      val cn = c.select(col("centroid_id"), col("cv"), norm(col("cv")).as("cn")).persist()
-      cn.count()
-      val best = v.crossJoin(graft.operators.Enrich.sizeGatedBroadcast(cn))
+      // materialized, so the planner sees REAL bytes — the raw seeds
+      // plan's estimate can be the multi-GB source file a small seed
+      // slice was filtered from, which would plan a cartesian instead
+      // of a broadcast
+      val cn = Materialize(c.select(col("centroid_id"), col("cv"), norm(col("cv")).as("cn"))).df
+      val best = v.crossJoin(cn)
         .select(col("id"), col("v"),
           cosPre(dot(col("v"), col("cv")), col("n"), col("cn")).as("ccos"), col("centroid_id"))
         .groupBy("id")
@@ -360,11 +359,9 @@ object Similarity {
         .select(col("cell").as("centroid_id"),
           expr("transform(dm, p -> CAST(p.m AS FLOAT))").as("cv"))
       // empty cells keep their previous centroid (standard Lloyd fix)
-      c = c.join(means, Seq("centroid_id"), "left")
-        .select(col("centroid_id"), coalesce(means("cv"), c("cv")).as("cv"))
-        .localCheckpoint(true) // cut the per-iteration lineage (eager —
-                               // safe to drop cn afterwards)
-      cn.unpersist()
+      // cut the per-iteration lineage
+      c = Materialize(c.join(means, Seq("centroid_id"), "left")
+        .select(col("centroid_id"), coalesce(means("cv"), c("cv")).as("cv"))).df
     }
     c.select(col("centroid_id"), col("cv"))
   }

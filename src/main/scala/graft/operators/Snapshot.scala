@@ -3206,7 +3206,7 @@ object Snapshot {
   }
 
   /** K3 partition-restricted MERGE-by-id, snapshot form. Unlike the raw
-    * writer there is NO read-own-overwrite hazard and no localCheckpoint:
+    * writer there is NO read-own-overwrite hazard and no materialization:
     * the affected slice is read from immutable pinned files, and the
     * commit atomically swaps the affected partitions' file sets.
     * Same id-embeds-partition contract as `Writers.mergeByIdWritePartitioned`.

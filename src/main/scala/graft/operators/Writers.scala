@@ -336,9 +336,9 @@ object Writers {
     * `assertIdsLocal = true` in tests/backfills to pay that scan and
     * fail loudly instead.
     *
-    * The affected slice is localCheckpoint'ed before the overwrite (you
-    * cannot lazily read the files you are replacing); it is bounded by
-    * the update window, not the table.
+    * The affected slice is materialized ([[Materialize]]) before the
+    * overwrite (you cannot lazily read the files you are replacing); it
+    * is bounded by the update window, not the table.
     */
   def mergeByIdWritePartitioned(spark: SparkSession, path: String, updates: DataFrame,
                                 idCol: String, partitionCol: String,
@@ -374,7 +374,7 @@ object Writers {
             s"(id does not embed $partitionCol); e.g. ${strays.mkString(", ")}")
       }
       val affected = spark.read.parquet(path).where(inParts)
-      val merged = mergeById(affected, updates, idCol).localCheckpoint(true)
+      val merged = Materialize(mergeById(affected, updates, idCol)).df
       replaceWindow(merged, path, Seq(partitionCol))
     }
   }

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.functions.TextFns
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, Materialize, Similarity}
 
 /** Corpus-construction operators a large-scale training-data pipeline
   * runs AFTER the per-document layers (TextPack) and pair-finding layers
@@ -63,7 +63,7 @@ object CorpusPack extends QueryPack {
     // cluster canonicalization keeping min-id survivors (q27+q44) →
     // PII redaction (q45) → deterministic split (q46), emitting the
     // per-document training manifest. The quality+exact stage is
-    // localCheckpoint'ed ONCE: three downstream consumers (pair
+    // materialized ONCE: three downstream consumers (pair
     // finding, the id spine, the final manifest join) would otherwise
     // each recompute the scan; at 100 TB each stage boundary would be a
     // persisted table instead, with identical semantics.
@@ -71,7 +71,7 @@ object CorpusPack extends QueryPack {
     val q = t.documents
       .select(col("doc_id"), col("lang"), col("source"), col("text"), quality.as("quality"))
       .where(col("quality") >= 0.5)
-    val s = Dedup.exact(q, "text", "doc_id").localCheckpoint(true)
+    val s = Materialize(Dedup.exact(q, "text", "doc_id")).df
     val pairs = Dedup.jaccardPairs(s, "doc_id", "text", k = 3, minJaccard = 0.5)
     val survivors = Dedup.canonicalize(s.select("doc_id"), "doc_id", pairs)
       .where(col("id") === col("canonical_id"))

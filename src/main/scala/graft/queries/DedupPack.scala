@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.TextFns
-import graft.operators.{Dedup, FuzzyJoin}
+import graft.operators.{Dedup, FuzzyJoin, Materialize}
 
 /** Near-duplicate detection over `documents` — n-gram Jaccard, MinHash+
   * LSH, SimHash (see operators.Dedup for the scale design; none of these
@@ -266,9 +266,8 @@ object DedupPack extends QueryPack {
     // final output join) and its quality column is the expensive text
     // scoring pass — materialize once; at 100 TB this is the persisted
     // stage boundary between scoring and election
-    val j = comp.join(q, comp("id") === q("doc_id"))
-      .select(col("id"), col("component_id"), col("quality"))
-      .localCheckpoint()
+    val j = Materialize(comp.join(q, comp("id") === q("doc_id"))
+      .select(col("id"), col("component_id"), col("quality"))).df
     val surv = j.groupBy("component_id")
       .agg(max_by(col("id"), struct(col("quality"), -col("id"))).as("survivor_id"))
     j.join(surv, "component_id")
@@ -347,7 +346,7 @@ object DedupPack extends QueryPack {
     // scaffolding for the operator under test, not the operator: at
     // 100 TB yesterday's labels exist on disk, tonight's pairs come
     // from the landing batch. Staged so Bench times only the
-    // incremental fold; localCheckpoint pins both inputs so the timed
+    // incremental fold; Materialize pins both inputs so the timed
     // region re-reads materialized partitions, not the pair join.
     //
     // Yesterday's corpus is docs < 400 (labeled by the standard
@@ -355,22 +354,20 @@ object DedupPack extends QueryPack {
     // (those touching a new doc) feed the incremental fold. The pair
     // table feeds four consumers (old split, lift, new-id derivation,
     // seed anti-join) — materialize the inverted-index join once.
-    val pairs = Dedup.jaccardPairs(t.documents, "doc_id", "text", k = 3, minJaccard = 0.5)
-      .localCheckpoint()
+    val pairs = Materialize(
+      Dedup.jaccardPairs(t.documents, "doc_id", "text", k = 3, minJaccard = 0.5)).df
     val oldPairs = pairs.where(col("id_a") < 400 && col("id_b") < 400)
-    val newPairs = pairs.where(col("id_a") >= 400 || col("id_b") >= 400)
-      .localCheckpoint()
+    val newPairs = Materialize(pairs.where(col("id_a") >= 400 || col("id_b") >= 400)).df
     val oldLabels = Dedup.canonicalize(
       t.documents.where(col("doc_id") < 400).select("doc_id"), "doc_id", oldPairs)
     val allIds = t.documents.select(col("doc_id").as("id"))
     // new docs with no pairs at all still need self-labels
-    val seeded = allIds.join(oldLabels.select("id"), Seq("id"), "left_anti")
+    val seeded = Materialize(allIds.join(oldLabels.select("id"), Seq("id"), "left_anti")
       .join(newPairs.select(col("id_a").as("id"))
         .unionByName(newPairs.select(col("id_b").as("id"))).distinct(),
         Seq("id"), "left_anti")
       .withColumn("canonical_id", col("id"))
-      .unionByName(oldLabels)
-      .localCheckpoint()
+      .unionByName(oldLabels)).df
     (seeded, newPairs)
   } { (t, fixture: (DataFrame, DataFrame)) =>
     // MEASURED: the incremental fold only — contract the new pairs

@@ -148,12 +148,16 @@ class PlanHygieneSpec extends SparkSpec {
       // the label graph; exchanges scale with the (fixed) round count.
       // q109's fixture (yesterday's full labeling) is STAGED since
       // round 10, so its pinned plan is the incremental fold only —
-      // contraction joins + remap over localCheckpointed inputs.
-      "q109_incremental_components" -> (7, 1, 8, 4, 0, 0),
-      // r16: q95 materializes its scored component join once
-      // (localCheckpoint, two consumers) — the survivor election reads
-      // the checkpointed RDD, so the visible plan is the election only
-      "q95_quality_survivorship"    -> (2, 1, 4, 1, 0, 0),
+      // contraction joins + remap over materialized inputs. Their exact
+      // sizes let the new-id anti-joins broadcast the old labels
+      // (pushed below the distinct: 7 -> 5 hash, 8 -> 4 sort, 4 -> 2 SMJ).
+      "q109_incremental_components" -> (5, 1, 4, 2, 4, 0),
+      // r16: q95 materializes its scored component join once (two
+      // consumers) — the survivor election reads the checkpointed RDD,
+      // so the visible plan is the election plus the join back, which
+      // broadcasts the survivor table now that the input's size is
+      // exact (2 -> 1 hash, 4 -> 3 sort, SMJ -> BHJ).
+      "q95_quality_survivorship"    -> (1, 1, 3, 0, 1, 0),
       "q79_semantic_dedup"          -> (2, 1, 3, 1, 0, 0),
       "q70_pipeline_survivors"      -> (2, 1, 3, 1, 1, 0),
       "q44_dedup_survivors"         -> (2, 1, 3, 1, 0, 0),

@@ -102,19 +102,22 @@ class SnapshotSpec extends SparkSpec {
   test("age-based vacuum: versions inside the horizon survive, older reclaim") {
     val dir = tmp("agevac")
     Snapshot.create(spark, dir, fixture(0 until 10, 1), Seq("p"))
-    Thread.sleep(60) // separate the commit stamps
+    Thread.sleep(1500) // separate the commit stamps by far more than the test's own latency
     Snapshot.append(spark, dir, fixture(10 until 20, 1))
     Thread.sleep(60)
     Snapshot.append(spark, dir, fixture(20 until 30, 1))
     val stamps = Snapshot.versions(spark, dir)
       .map(v => v -> Snapshot.manifest(spark, dir, v).committedAtMicros).toMap
     assert(stamps.values.forall(_ > 0L))
+    assert(stamps(2L) - stamps(1L) >= 1000000L)
 
-    // horizon straddling v2's stamp: v2 and v3 are younger, v1 older.
-    // keepVersions = 1, so only the horizon keeps v2 alive.
+    // horizon midway between v1's and v2's stamps: v2 and v3 are
+    // younger, v1 older, with ~0.75 s of slack for the time between this
+    // clock read and the vacuum's. keepVersions = 1, so only the horizon
+    // keeps v2 alive.
     val now = System.currentTimeMillis() * 1000L
     Snapshot.vacuum(spark, dir, keepVersions = 1, orphanGraceMs = 0L,
-      retainMicros = Some(now - stamps(2L) + 1000L))
+      retainMicros = Some(now - (stamps(1L) + stamps(2L)) / 2))
     assert(Snapshot.versions(spark, dir) == Seq(2L, 3L, 4L)) // v4 = the floor commit
     // the boundary version fully reconstructs (checkpointed before the
     // chain was dropped) and time travel inside the horizon still works
