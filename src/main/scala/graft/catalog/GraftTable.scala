@@ -15,7 +15,8 @@ import org.apache.spark.sql.sources.{AlwaysTrue, And, BaseRelation, EqualNullSaf
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.operators.{Snapshot, SnapshotStats}
+import graft.operators.Snapshot
+import graft.sources.SnapshotSource
 
 /** One snapshot table pinned at one manifest — the DSv2 `Table` the
   * catalog hands the analyzer. Pinning at load time IS reader
@@ -284,17 +285,9 @@ private final class GraftV1ScanBuilder(table: GraftTable)
           if (known.nonEmpty && known.size == table.manifest.files.size) known.sum
           else super.sizeInBytes
         }
-        override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-          val spark = context.sparkSession
-          val m = table.manifest
-          val kept =
-            if (filters.isEmpty) m.files
-            else SnapshotStats.pruneByFilters(spark, m, filters, Some(table.path))
-          val df = Snapshot.readManifestFiles(spark, table.path, m, kept)
-          if (required.isEmpty)
-            df.select(df.columns.head).rdd.map(_ => org.apache.spark.sql.Row.empty)
-          else df.select(required.fieldNames.map(col).toSeq: _*).rdd
-        }
+        override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
+          SnapshotSource.scanRows(context.sparkSession, table.path, table.manifest,
+            required.fieldNames.toSeq, filters)
       }
       rel.asInstanceOf[T]
     }

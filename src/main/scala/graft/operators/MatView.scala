@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedRelation, UnresolvedStar}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, IsNotNull, Literal}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, SubqueryAlias}
 import org.apache.spark.sql.functions._
@@ -49,12 +49,16 @@ import org.apache.spark.sql.graftbridge.{ColumnBridge, PlanBridge}
   *    from the same net change feeds; the view column derives as the
   *    side table's per-group row count — a delete that removes a
   *    group's LAST occurrence of a value drops the state row and the
-  *    count follows, O(change) per refresh with no fact rescan. Side
-  *    commits land BEFORE the view commit (each versioned, each
-  *    stamped with the source watermarks), so a crash between them
-  *    leaves the view watermark old: the rerun sees the side already
-  *    current, skips its fold, and re-folds only the view —
-  *    exactly-once per table.
+  *    count follows, O(change) per refresh with no fact rescan.
+  *
+  *    Every side table (COUNT(DISTINCT) and AVG alike, [[sides]]) is a
+  *    plain COUNT/SUM rollup with its own [[Shape]], so one loop
+  *    creates, health-checks, folds, heals and routes them all, and
+  *    each folds through the view's own fold. Side commits land BEFORE
+  *    the view commit (each versioned, each stamped with the source
+  *    watermarks), so a crash between them leaves the view watermark
+  *    old: the rerun sees the committed sides already current, skips
+  *    their folds, and re-folds only the rest — exactly-once per table.
   *
   *    MIN/MAX columns fold with a DELETE-TRIGGERED per-group tier:
   *    inserts fold as least/greatest against the current extremum; a
@@ -111,21 +115,26 @@ object MatView {
     */
   private[graft] def avgSidePath(mvPath: String): String = s"${mvPath}__avgs"
 
-  /** The avg expansion is incremental only for EXACT-typed arguments
-    * (decimal or integral sums fold bitwise); floating-point sums are
-    * partition-order dependent, so parity with a recompute is not even
-    * well-defined — those views demote to full recompute.
+  /** A side table's SUM state must fold bitwise, so a side exists only
+    * when every SUM it keeps has an EXACT-typed argument (decimal or
+    * integral): the AVG side of a view averaging a floating-point value
+    * is never built, and that view demotes to full recompute (a double
+    * sum is partition-order dependent, so parity with a recompute is not
+    * even well-defined). `childDf` is the side's child; it is analysed
+    * only when the side keeps a SUM.
     */
-  private def exactAvg(childDf: DataFrame, sh: Shape): Boolean =
-    sh.avgCols.forall { case (_, e) =>
-      childDf.select(ColumnBridge.column(e)).schema.head.dataType match {
-        case _: org.apache.spark.sql.types.DecimalType => true
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
+  private def exactSums(childDf: => DataFrame, sh: Shape): Boolean =
+    sh.cols.forall {
+      case (_, SumOf(e)) =>
+        childDf.select(ColumnBridge.column(e)).schema.head.dataType match {
+          case _: org.apache.spark.sql.types.DecimalType => true
+          case org.apache.spark.sql.types.ByteType |
+               org.apache.spark.sql.types.ShortType |
+               org.apache.spark.sql.types.IntegerType |
+               org.apache.spark.sql.types.LongType => true
+          case _ => false
+        }
+      case _ => true
     }
 
   /** Replay Average's evaluate chain over folded SUM/COUNT state: the
@@ -145,21 +154,6 @@ object MatView {
       case _ =>
         when(cntC > 0, (sumC.cast("double") / cntC.cast("double")).cast(outDt))
     }
-
-  /** The avg side table body: one row per live group with the
-    * liveness count and each avg column's sum/non-null-count state.
-    */
-  private def avgSideState(childDf: DataFrame, shape: Shape): DataFrame = {
-    val ash = shape.avgShape
-    val aggs = ash.cols.collect {
-      case (n, CountStar) => count(lit(1)).as(n)
-      case (n, SumOf(e)) => sum(ColumnBridge.column(e)).as(n)
-      case (n, CountOf(e)) => count(ColumnBridge.column(e)).as(n)
-    }
-    childDf.groupBy(ash.keys.map { case (sn, ke) =>
-        ColumnBridge.column(ke).as(sn) }: _*)
-      .agg(aggs.head, aggs.tail: _*)
-  }
 
   /** Overwrite the view's AVG columns from the avg side state —
     * state-sized join on the group keys, column order preserved.
@@ -203,10 +197,8 @@ object MatView {
                          resolvePath: Seq[String] => String)(body: => T): T =
     scala.util.Try {
       val plan = spark.sessionState.sqlParser.parsePlan(sqlText)
-      val sides = rollupShape(plan).toSeq.flatMap(sh =>
-        sh.distinctCols.map(d => sidePath(mvPath, d._1)) ++
-          (if (sh.avgCols.isEmpty) Nil else Seq(avgSidePath(mvPath))))
-      sourceRelations(plan, sqlText).map(resolvePath) ++ (mvPath +: sides)
+      val sidePaths = rollupShape(plan).toSeq.flatMap(sides(mvPath, _)).map(_.path)
+      sourceRelations(plan, sqlText).map(resolvePath) ++ (mvPath +: sidePaths)
     }.toOption match {
       case Some(tables) => SmallOp(spark, tables)(body)
       case None => body
@@ -246,43 +238,12 @@ object MatView {
     val ret = Snapshot.commitMetaOn(spark, mvPath, m,
       s"MATERIALIZE ${vs.mkString("v", ",v", "")}")(mm =>
       mm.copy(streamBatch = mm.streamBatch ++ wmEntries(srcs, vs)))
-    // COUNT(DISTINCT) columns of a rollup-shaped view co-create their
-    // distinct-state side tables from the SAME pinned reads. A crash
-    // before a side lands leaves it missing — the first REFRESH heals
-    // by full recompute (sideOk demotes) and recreates it.
-    shapeC.filter(_.distinctCols.nonEmpty).foreach { sh =>
-      val childDf = PlanBridge.dataFrame(spark, substituted(sh.child, reads))
-      sh.distinctCols.foreach { case (n, e) =>
-        val sp = sidePath(mvPath, n)
-        require(Snapshot.latestVersion(spark, sp).isEmpty,
-          s"distinct-state side table already exists: $sp")
-        Snapshot.create(spark, sp, sideState(childDf, sh, e),
-          clusterBy = stateCluster,
-          properties = Map(SideProp -> mvPath))
-        val sm = Snapshot.latestManifest(spark, sp).get
-        Snapshot.commitMetaOn(spark, sp, sm,
-          s"MATERIALIZE DISTINCT STATE ${vs.mkString("v", ",v", "")}")(mm =>
-          mm.copy(streamBatch = mm.streamBatch ++ wmEntries(srcs, vs)))
-      }
-    }
-    // AVG columns of a rollup-shaped view with exact-typed arguments
-    // co-create the ONE avg-state side table — same pinned reads, same
-    // crash-healing contract
-    shapeC.filter(_.avgCols.nonEmpty).foreach { sh =>
-      val childDf = PlanBridge.dataFrame(spark, substituted(sh.child, reads))
-      if (exactAvg(childDf, sh)) {
-        val sp = avgSidePath(mvPath)
-        require(Snapshot.latestVersion(spark, sp).isEmpty,
-          s"avg-state side table already exists: $sp")
-        Snapshot.create(spark, sp, avgSideState(childDf, sh),
-          clusterBy = stateCluster,
-          properties = Map(SideProp -> mvPath))
-        val sm = Snapshot.latestManifest(spark, sp).get
-        Snapshot.commitMetaOn(spark, sp, sm,
-          s"MATERIALIZE AVG STATE ${vs.mkString("v", ",v", "")}")(mm =>
-          mm.copy(streamBatch = mm.streamBatch ++ wmEntries(srcs, vs)))
-      }
-    }
+    // the side tables of a rollup-shaped view co-create from the SAME
+    // pinned reads. A crash before a side lands leaves it missing — the
+    // first REFRESH heals by full recompute (sideOk demotes) and
+    // recreates it.
+    shapeC.foreach(buildSides(spark, mvPath, _, reads, wmEntries(srcs, vs),
+      vs.mkString("v", ",v", ""), fresh = true))
     ret
   }
 
@@ -332,39 +293,26 @@ object MatView {
       catch { case _: java.io.FileNotFoundException => false }
     def windowOk(i: Int): Boolean = vFroms(i).exists(windowOkFrom(i, _))
     val shape0 = rollupShape(plan)
-    // the distinct tier additionally needs every side table HEALTHY:
-    // present, carrying a watermark per source, each side window
-    // readable (side watermarks can sit AHEAD of the view's after a
-    // crash between the side and view commits — the rerun skips the
-    // current side and re-folds only the view, exactly-once per table)
-    def sideOk(sh: Shape): Boolean = sh.distinctCols.forall { case (n, _) =>
-      Snapshot.latestManifest(spark, sidePath(mvPath, n)).exists { sm =>
-        srcs.indices.forall { i =>
-          sm.streamBatch.get(wmKey(srcs, i)).exists(sv =>
-            sv == vNows(i) || (sv < vNows(i) && windowOkFrom(i, sv)))
+    lazy val readsNow = srcs.indices.map(i => srcKey(srcs(i)) ->
+      Snapshot.readVersion(spark, paths(i), vNows(i)).queryExecution.logical).toMap
+    // a view with side tables additionally needs every side HEALTHY:
+    // present, with a SUM state that folds exactly ([[exactSums]]),
+    // carrying a watermark per source, each side window readable (side
+    // watermarks can sit AHEAD of the view's after a crash between the
+    // side and view commits — the rerun skips the current side and
+    // re-folds only the view, exactly-once per table)
+    def sideOk(s: Side): Boolean =
+      exactSums(PlanBridge.dataFrame(spark, substituted(s.shape.child, readsNow)), s.shape) &&
+        Snapshot.latestManifest(spark, s.path).exists { sm =>
+          srcs.indices.forall { i =>
+            sm.streamBatch.get(wmKey(srcs, i)).exists(sv =>
+              sv == vNows(i) || (sv < vNows(i) && windowOkFrom(i, sv)))
+          }
         }
-      }
-    }
-    // ...the AVG tier likewise needs its (one) side table healthy AND
-    // exact-typed arguments (decimal/integral sums fold bitwise;
-    // floating sums have no well-defined recompute parity)
-    def avgSideOk(sh: Shape): Boolean =
-      Snapshot.latestManifest(spark, avgSidePath(mvPath)).exists { sm =>
-        srcs.indices.forall { i =>
-          sm.streamBatch.get(wmKey(srcs, i)).exists(sv =>
-            sv == vNows(i) || (sv < vNows(i) && windowOkFrom(i, sv)))
-        }
-      }
-    def avgTypesExact(sh: Shape): Boolean = {
-      val reads = srcs.indices.map(i => srcKey(srcs(i)) ->
-        Snapshot.readVersion(spark, paths(i), vNows(i)).queryExecution.logical).toMap
-      exactAvg(PlanBridge.dataFrame(spark, substituted(sh.child, reads)), sh)
-    }
     val incremental =
       if (changed.forall(i => windowOk(i) &&
           occurrences(plan, srcKey(srcs(i))) == 1))
-        shape0.filter(sh => (sh.distinctCols.isEmpty || sideOk(sh)) &&
-          (sh.avgCols.isEmpty || (avgTypesExact(sh) && avgSideOk(sh))))
+        shape0.filter(sides(mvPath, _).forall(sideOk))
       else None
     // O(change), any number of changed sources — the TELESCOPING delta
     // rule: Q(new…) − Q(old…) = Σ_k replay_k, where replay_k feeds
@@ -387,10 +335,11 @@ object MatView {
         def replayReads(k: Int): Map[String, LogicalPlan] =
           srcs.indices.map { i =>
             val pos = chg.indexOf(i)
-            // the SIGNED net feed: every consumer below (grouped/side/
-            // avg delta) folds sign-linearly, so the value-level
-            // exceptAll cancellation pair — two full shuffles of the
-            // change streams — is provably a no-op here and skipped
+            // the SIGNED net feed: every consumer below (the view's and
+            // each side's grouped delta) folds sign-linearly, so the
+            // value-level exceptAll cancellation pair — two full
+            // shuffles of the change streams — is provably a no-op here
+            // and skipped
             // (readChangesSigned; MIN/MAX/KMV dent tiers only widen)
             srcKey(srcs(i)) -> (
               if (pos == k) Snapshot.readChangesSigned(spark, paths(i),
@@ -401,25 +350,41 @@ object MatView {
         chg.indices.map(k =>
           PlanBridge.dataFrame(spark, substituted(shape.child, replayReads(k))))
       }
+      val sideList = sides(mvPath, shape)
       // evaluate each telescoping replay ONCE: the side folds and the
       // view fold all consume the same feeds, and the feed (readChanges
       // reconstructing net per-commit changes through the defining
       // tree) is the expensive part — materialize per feed instead of
       // re-running it once per consumer. Change-window-sized, the same
-      // budget the fold itself reads. A view with NO distinct columns
-      // has exactly one consumer — skip the materialization there.
+      // budget the fold itself reads. A view with NO side tables has
+      // exactly one consumer — skip the materialization there.
       lazy val replays = {
         val r = replaysFor(vFroms(_).get, changed)
-        if (shape.distinctCols.isEmpty && shape.avgCols.isEmpty) r
-        else r.map(Materialize(_).df)
+        if (sideList.isEmpty) r else r.map(Materialize(_).df)
       }
-      // DISTINCT STATE first: fold each side table's (keys, value)
-      // counts over ITS window and commit — all side commits land
-      // BEFORE the view commit, so a crash anywhere leaves the view
-      // watermark old and the rerun re-folds only what didn't commit
-      shape.distinctCols.foreach { case (n, e) =>
-        val sp = sidePath(mvPath, n)
-        val sm = Snapshot.latestManifest(spark, sp).get
+      // a side's child is the view's child, bare (AVG) or under the
+      // distinct side's non-null filter: the view's replays feed it with
+      // that filter on top
+      def feedsOf(sh: Shape, feeds: Seq[DataFrame]): Seq[DataFrame] = sh.child match {
+        case c if c == shape.child => feeds
+        case Filter(cond, c) if c == shape.child =>
+          feeds.map(_.where(ColumnBridge.column(cond)))
+      }
+      // the per-group MIN/MAX recompute tier reads the NEW state of
+      // every changed source (others at their watermark) — lazily
+      // built, only executed for groups a delete actually dented
+      def childAtNew(child: LogicalPlan): DataFrame = PlanBridge.dataFrame(spark,
+        substituted(child, srcs.indices.map { i =>
+          srcKey(srcs(i)) -> (if (changed.contains(i)) readAt(i, vNows(i))
+          else readAt(i, vFroms(i).get))
+        }.toMap))
+      // SIDE STATES first: each side table folds through the SAME
+      // machinery as the view (its shape is a plain COUNT/SUM rollup)
+      // over ITS window and commits — all side commits land BEFORE the
+      // view commit, so a crash anywhere leaves the view watermark old
+      // and the rerun re-folds only what didn't commit
+      sideList.foreach { s =>
+        val sm = Snapshot.latestManifest(spark, s.path).get
         val sFroms = srcs.indices.map(i => sm.streamBatch(wmKey(srcs, i)))
         val sChanged = srcs.indices.filterNot(i => sFroms(i) >= vNows(i))
         if (sChanged.nonEmpty) {
@@ -428,50 +393,17 @@ object MatView {
           // replays that window separately
           val sameWindow = sChanged == changed &&
             sChanged.forall(i => vFroms(i).contains(sFroms(i)))
-          val feeds = if (sameWindow) replays else replaysFor(sFroms(_), sChanged)
-          val sDelta = Materialize(sideDelta(feeds, shape, e))
+          val feeds = feedsOf(s.shape,
+            if (sameWindow) replays else replaysFor(sFroms(_), sChanged))
+          val sDelta = Materialize(groupedDelta(feeds, s.shape))
           if (sDelta.rows == 0L)
-            Snapshot.commitMetaOn(spark, sp, sm,
-              s"REFRESH DISTINCT STATE $opTail (no-op window)")(stamp)
+            Snapshot.commitMetaOn(spark, s.path, sm,
+              s"REFRESH ${s.label} STATE $opTail (no-op window)")(stamp)
           else
-            foldCommitRestricted(spark, sp, sm, sDelta.df,
-              shape.keys.headOption.map(_._1),
-              cur => foldSide(cur, sDelta.df, shape),
-              op = s"REFRESH DISTINCT STATE $opTail (incremental)",
-              finish = stamp)
-        }
-      }
-      // the per-group MIN/MAX recompute tier reads the NEW state of
-      // every changed source (others at their watermark) — lazily
-      // built, only executed for groups a delete actually dented
-      lazy val childAtNew = PlanBridge.dataFrame(spark,
-        substituted(shape.child, srcs.indices.map { i =>
-          srcKey(srcs(i)) -> (if (changed.contains(i)) readAt(i, vNows(i))
-          else readAt(i, vFroms(i).get))
-        }.toMap))
-      // AVG STATE next: the one avg side table folds through the SAME
-      // machinery as the view (its shape is a plain COUNT/SUM rollup
-      // over the same child) — committed BEFORE the view, exactly like
-      // the distinct sides, with the identical crash-divergence story
-      if (shape.avgCols.nonEmpty) {
-        val ash = shape.avgShape
-        val sp = avgSidePath(mvPath)
-        val sm = Snapshot.latestManifest(spark, sp).get
-        val sFroms = srcs.indices.map(i => sm.streamBatch(wmKey(srcs, i)))
-        val sChanged = srcs.indices.filterNot(i => sFroms(i) >= vNows(i))
-        if (sChanged.nonEmpty) {
-          val sameWindow = sChanged == changed &&
-            sChanged.forall(i => vFroms(i).contains(sFroms(i)))
-          val feeds = if (sameWindow) replays else replaysFor(sFroms(_), sChanged)
-          val aDelta = Materialize(groupedDelta(feeds, ash))
-          if (aDelta.rows == 0L)
-            Snapshot.commitMetaOn(spark, sp, sm,
-              s"REFRESH AVG STATE $opTail (no-op window)")(stamp)
-          else
-            foldCommitRestricted(spark, sp, sm, aDelta.df,
-              ash.keys.headOption.map(_._1),
-              cur => foldDeltas(cur, aDelta.df, ash, childAtNew),
-              op = s"REFRESH AVG STATE $opTail (incremental)",
+            foldCommitRestricted(spark, s.path, sm, sDelta.df,
+              s.shape.keys.headOption.map(_._1),
+              cur => foldDeltas(cur, sDelta.df, s.shape, childAtNew(s.shape.child)),
+              op = s"REFRESH ${s.label} STATE $opTail (incremental)",
               finish = stamp)
         }
       }
@@ -492,14 +424,14 @@ object MatView {
       // view delta alone — a value swap inside a group can change the
       // side state (and so the patched column) while every view-owned
       // aggregate nets to neutral — so they keep the whole rewrite.
-      else if (shape.distinctCols.isEmpty && shape.avgCols.isEmpty)
+      else if (sideList.isEmpty)
         foldCommitRestricted(spark, mvPath, mvM, delta.df,
           shape.keys.headOption.map(_._1),
-          cur => foldDeltas(cur, delta.df, shape, childAtNew),
+          cur => foldDeltas(cur, delta.df, shape, childAtNew(shape.child)),
           op = s"REFRESH MATERIALIZED VIEW $opTail (incremental)",
           finish = stamp)
       else {
-        val folded = foldDeltas(current, delta.df, shape, childAtNew)
+        val folded = foldDeltas(current, delta.df, shape, childAtNew(shape.child))
         // COUNT(DISTINCT) columns derive from the just-committed side
         // states: per-group row counts of a state-sized table — never
         // a fact pass
@@ -520,61 +452,13 @@ object MatView {
     incremental match {
       case Some(shape) => incrementalRefresh(shape)
       case None =>
-        val reads = srcs.indices.map(i => srcKey(srcs(i)) ->
-          Snapshot.readVersion(spark, paths(i), vNows(i)).queryExecution.logical).toMap
-        val result = PlanBridge.dataFrame(spark, substituted(plan, reads))
-        // a rollup view with COUNT(DISTINCT) columns rebuilds its side
-        // tables from the SAME pinned reads (healing a missing or
-        // window-broken side), committed BEFORE the view so a crash
-        // leaves the view watermark old and the rerun heals again
-        shape0.filter(_.distinctCols.nonEmpty).foreach { sh =>
-          val childDf = PlanBridge.dataFrame(spark, substituted(sh.child, reads))
-          sh.distinctCols.foreach { case (n, e) =>
-            val sp = sidePath(mvPath, n)
-            val current = Snapshot.latestManifest(spark, sp)
-            val sideCurrent = current.exists(sm => srcs.indices.forall(i =>
-              sm.streamBatch.get(wmKey(srcs, i)).exists(_ >= vNows(i))))
-            if (!sideCurrent) current match {
-              case Some(sm) =>
-                Snapshot.replaceWholeTableOn(spark, sp, stateLayout(sm),
-                  sideState(childDf, sh, e),
-                  op = s"REFRESH DISTINCT STATE $opTail (full recompute)",
-                  finish = stamp)
-              case None =>
-                Snapshot.create(spark, sp, sideState(childDf, sh, e),
-                  clusterBy = sh.keys.headOption.map(_._1).toSeq,
-                  properties = Map(SideProp -> mvPath))
-                val sm = Snapshot.latestManifest(spark, sp).get
-                Snapshot.commitMetaOn(spark, sp, sm,
-                  s"MATERIALIZE DISTINCT STATE $opTail")(stamp)
-            }
-          }
-        }
-        // ...and the avg side heals the same way (exact-typed args
-        // only — a floating-AVG view never owns one)
-        shape0.filter(_.avgCols.nonEmpty).foreach { sh =>
-          val childDf = PlanBridge.dataFrame(spark, substituted(sh.child, reads))
-          if (exactAvg(childDf, sh)) {
-            val sp = avgSidePath(mvPath)
-            val current = Snapshot.latestManifest(spark, sp)
-            val sideCurrent = current.exists(sm => srcs.indices.forall(i =>
-              sm.streamBatch.get(wmKey(srcs, i)).exists(_ >= vNows(i))))
-            if (!sideCurrent) current match {
-              case Some(sm) =>
-                Snapshot.replaceWholeTableOn(spark, sp, stateLayout(sm),
-                  avgSideState(childDf, sh),
-                  op = s"REFRESH AVG STATE $opTail (full recompute)",
-                  finish = stamp)
-              case None =>
-                Snapshot.create(spark, sp, avgSideState(childDf, sh),
-                  clusterBy = sh.keys.headOption.map(_._1).toSeq,
-                  properties = Map(SideProp -> mvPath))
-                val sm = Snapshot.latestManifest(spark, sp).get
-                Snapshot.commitMetaOn(spark, sp, sm,
-                  s"MATERIALIZE AVG STATE $opTail")(stamp)
-            }
-          }
-        }
+        // a rollup view rebuilds its side tables from the SAME pinned
+        // reads (healing a missing or window-broken side), committed
+        // BEFORE the view so a crash leaves the view watermark old and
+        // the rerun heals again
+        shape0.foreach(buildSides(spark, mvPath, _, readsNow, wmEntries(srcs, vNows),
+          opTail, fresh = false))
+        val result = PlanBridge.dataFrame(spark, substituted(plan, readsNow))
         Snapshot.replaceWholeTableOn(spark, mvPath, stateLayout(mvM), result,
           op = s"REFRESH MATERIALIZED VIEW $opTail (full recompute)", finish = stamp)
     }
@@ -630,40 +514,19 @@ object MatView {
       }
     }
 
-  /** Auto-route support for the DISTINCT containment tier: the side
-    * table backing COUNT(DISTINCT) state column `stateCol`, IF it is
+  /** Auto-route support for the DISTINCT and AVG containment tiers: the
+    * side table at `sp` ([[sidePath]], [[avgSidePath]]) IF it is
     * exactly in sync with the view (same watermark per source — a side
     * that ran ahead across a crash window reflects newer data than the
     * view's watermark and MUST NOT serve queries pinned at it).
     * Returns (side path, side version).
     */
   private[graft] def sideRouteInfo(spark: SparkSession, mvPath: String,
-                                   stateCol: String): Option[(String, Long)] = {
+                                   sp: String): Option[(String, Long)] = {
     val mvM = Snapshot.latestManifest(spark, mvPath).getOrElse(return None)
     val sqlText = mvM.properties.getOrElse(SqlProp, return None)
     val plan = spark.sessionState.sqlParser.parsePlan(sqlText)
     val srcs = sourceRelations(plan, sqlText)
-    val sp = sidePath(mvPath, stateCol)
-    Snapshot.latestManifest(spark, sp).filter { sm =>
-      sm.properties.get(SideProp).exists(p =>
-        Snapshot.qualifiedRoot(spark, p) == Snapshot.qualifiedRoot(spark, mvPath)) &&
-        srcs.indices.forall(i => sm.streamBatch.get(wmKey(srcs, i)).isDefined &&
-          sm.streamBatch.get(wmKey(srcs, i)) == mvM.streamBatch.get(wmKey(srcs, i)))
-    }.map(sm => sp -> sm.version)
-  }
-
-  /** Auto-route support for the AVG containment tier over an
-    * AVG-declaring view: the avg-state side table, IF exactly in sync
-    * with the view (same watermark per source — the [[sideRouteInfo]]
-    * contract). Returns (side path, side version).
-    */
-  private[graft] def avgRouteInfo(spark: SparkSession,
-                                  mvPath: String): Option[(String, Long)] = {
-    val mvM = Snapshot.latestManifest(spark, mvPath).getOrElse(return None)
-    val sqlText = mvM.properties.getOrElse(SqlProp, return None)
-    val plan = spark.sessionState.sqlParser.parsePlan(sqlText)
-    val srcs = sourceRelations(plan, sqlText)
-    val sp = avgSidePath(mvPath)
     Snapshot.latestManifest(spark, sp).filter { sm =>
       sm.properties.get(SideProp).exists(p =>
         Snapshot.qualifiedRoot(spark, p) == Snapshot.qualifiedRoot(spark, mvPath)) &&
@@ -750,7 +613,35 @@ object MatView {
             s"__c_$n" -> (CountOf(e): AggCol))
         }),
       child)
+    /** A COUNT(DISTINCT e) side table's own rollup shape: keys are the
+      * group keys plus the value `__v`, the one state column `__vcnt`
+      * counts its occurrences, and NULL values never hold a state row
+      * alive (COUNT(DISTINCT) ignores them). The fold drops a row whose
+      * count reaches zero, so the view column — the side's per-group
+      * row count — follows a delete of a group's LAST occurrence of a
+      * value.
+      */
+    def distinctShape(e: Expression): Shape = {
+      val ks = keys :+ ("__v" -> e)
+      Shape(ks, ks.map { case (sn, ke) => sn -> (KeyOf(ke): AggCol) } :+
+        ("__vcnt" -> (CountStar: AggCol)), Filter(IsNotNull(e), child))
+    }
   }
+
+  /** A side table of a rollup view: its path, its own rollup [[Shape]]
+    * and the label its operation strings carry (`DISTINCT`, `AVG`).
+    */
+  private final case class Side(path: String, shape: Shape, label: String)
+
+  /** The side tables of a rollup view, in commit order: one per
+    * COUNT(DISTINCT) column, then the one AVG side.
+    */
+  private def sides(mvPath: String, shape: Shape): Seq[Side] =
+    shape.distinctCols.map { case (n, e) =>
+      Side(sidePath(mvPath, n), shape.distinctShape(e), "DISTINCT")
+    } ++ (if (shape.avgCols.isEmpty) Nil
+      else Seq(Side(avgSidePath(mvPath), shape.avgShape, "AVG")))
+
   private sealed trait AggCol
   private final case class KeyOf(keyExpr: Expression) extends AggCol
   private case object CountStar extends AggCol
@@ -924,67 +815,50 @@ object MatView {
     case _ => None
   }
 
-  /** The distinct-state table body: one row per (group keys under their
-    * STATE names, non-null value of `e` as `__v`) with its occurrence
-    * count `__vcnt`. NULLs are excluded up front — COUNT(DISTINCT x)
-    * ignores them, so they must never hold a state row alive.
+  /** A rollup state built whole from its child: one row per group,
+    * the key columns under their state names, then the COUNT/SUM
+    * state columns (the side tables' bodies).
     */
-  private def sideState(childDf: DataFrame, shape: Shape,
-                        e: Expression): DataFrame =
-    childDf.where(ColumnBridge.column(e).isNotNull)
-      .groupBy(shape.keys.map { case (sn, ke) =>
-        ColumnBridge.column(ke).as(sn) } :+
-        ColumnBridge.column(e).as("__v"): _*)
-      .agg(count(lit(1)).as("__vcnt"))
-
-  /** The signed per-(keys, value) delta of a distinct column's refresh
-    * window — the side-table analogue of [[groupedDelta]]: each replay
-    * groups to (child key cols, value) with a signed occurrence count,
-    * replays merge on the same synthesized name.
-    */
-  private def sideDelta(feeds: Seq[DataFrame], shape: Shape,
-                        e: Expression): DataFrame = {
-    val sign = when(col("_change_type") === "insert", 1L).otherwise(-1L)
-    val keyCols = shape.keys.zipWithIndex.map { case ((_, ke), i) =>
-      ColumnBridge.column(ke).as(s"__gk_$i") }
-    val mergeKeys = shape.keys.indices.map(i => col(s"__gk_$i"))
-    val perFeed = feeds.map(_.where(ColumnBridge.column(e).isNotNull)
-      .groupBy(keyCols :+ ColumnBridge.column(e).as("__v"): _*)
-      .agg(sum(sign).as("__dc")))
-    // zero-sum rows (signed-feed cancellation pairs, rewrite windows)
-    // change no occurrence count — drop them so a net-no-op window
-    // yields an EMPTY delta (metadata-only side commit, no rewrite)
-    val eff = col("__dc") =!= 0
-    if (perFeed.size == 1) perFeed.head.where(eff)
-    else perFeed.reduce(_ unionByName _)
-      .groupBy(mergeKeys :+ col("__v"): _*)
-      .agg(sum(col("__dc")).as("__dc"))
-      .where(eff)
+  private def stateOf(childDf: DataFrame, sh: Shape): DataFrame = {
+    val aggs = sh.cols.collect {
+      case (n, CountStar) => count(lit(1)).as(n)
+      case (n, SumOf(e)) => sum(ColumnBridge.column(e)).as(n)
+      case (n, CountOf(e)) => count(ColumnBridge.column(e)).as(n)
+    }
+    childDf.groupBy(sh.keys.map { case (sn, ke) => ColumnBridge.column(ke).as(sn) }: _*)
+      .agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Fold a [[sideDelta]] into the current side state: null-safe join
-    * on (keys, value), counts add, rows whose count reaches zero drop
-    * (their value no longer exists in the group — exactly what makes
-    * the derived COUNT(DISTINCT) track deletes of a group's LAST
-    * occurrence of a value).
+  /** Build the side tables of `shape` whole from the pinned `reads` and
+    * stamp them with the watermarks `wm`: a missing side is created (its
+    * watermarks ride a follow-up metadata commit), a side behind `wm` is
+    * replaced by full recompute, a current one is left as it is. A
+    * `fresh` build (CREATE) refuses a side that already exists. A side
+    * whose SUM state would not fold exactly is never built
+    * ([[exactSums]]).
     */
-  private def foldSide(cur: DataFrame, delta0: DataFrame,
-                       shape: Shape): DataFrame = {
-    val delta = delta0.select(
-      shape.keys.zipWithIndex.map { case ((sn, _), i) =>
-        col(s"__gk_$i").as(sn) } ++
-        Seq(col("__v"), col("__dc")): _*)
-    val c = cur.alias("__cur")
-    val d = delta.alias("__dlt")
-    val keyNames = shape.keys.map(_._1) :+ "__v"
-    val on = keyNames.map(k => col(s"__cur.$k") <=> col(s"__dlt.$k"))
-      .reduce(_ && _)
-    c.join(d, on, "full_outer")
-      .select(keyNames.map(k =>
-        coalesce(col(s"__cur.$k"), col(s"__dlt.$k")).as(k)) :+
-        (coalesce(col("__cur.__vcnt"), lit(0L)) +
-          coalesce(col("__dlt.__dc"), lit(0L))).as("__vcnt"): _*)
-      .where(col("__vcnt") > 0)
+  private def buildSides(spark: SparkSession, mvPath: String, shape: Shape,
+                         reads: Map[String, LogicalPlan], wm: Map[String, Long],
+                         opTail: String, fresh: Boolean): Unit = {
+    val stamp = (m: Snapshot.Manifest) => m.copy(streamBatch = m.streamBatch ++ wm)
+    sides(mvPath, shape).foreach { s =>
+      val childDf = PlanBridge.dataFrame(spark, substituted(s.shape.child, reads))
+      if (exactSums(childDf, s.shape)) Snapshot.latestManifest(spark, s.path) match {
+        case None =>
+          Snapshot.create(spark, s.path, stateOf(childDf, s.shape),
+            clusterBy = shape.keys.headOption.map(_._1).toSeq,
+            properties = Map(SideProp -> mvPath))
+          Snapshot.commitMetaOn(spark, s.path, Snapshot.latestManifest(spark, s.path).get,
+            s"MATERIALIZE ${s.label} STATE $opTail")(stamp)
+        case Some(sm) =>
+          require(!fresh,
+            s"${s.label.toLowerCase}-state side table already exists: ${s.path}")
+          if (!wm.forall { case (k, v) => sm.streamBatch.get(k).exists(_ >= v) })
+            Snapshot.replaceWholeTableOn(spark, s.path, stateLayout(sm),
+              stateOf(childDf, s.shape),
+              op = s"REFRESH ${s.label} STATE $opTail (full recompute)", finish = stamp)
+      }
+    }
   }
 
   /** The layout a state commit writes under. A rollup state starts

@@ -3658,16 +3658,23 @@ object Snapshot {
     * warehouse would do — bounded retries, then surface the conflict.
     */
   private def retryDml(spark: SparkSession, path: String, what: String,
-                       inputs: Seq[DataFrame] = Nil)(body: => Long): Long = {
+                       inputs: Seq[DataFrame] = Nil)(body: => Long): Long =
+    SmallOp(spark, Seq(path), inputs)(retryConflicts(what)(body))
+
+  /** Run a RE-DERIVABLE `body` (one that computes everything from the
+    * latest manifest) again when a concurrent commit makes its
+    * derivation stale: three attempts, then the conflict surfaces.
+    */
+  private[graft] def retryConflicts[T](what: String)(body: => T): T = {
     val attempts = 3
-    def attempt(n: Int): Long =
+    def attempt(n: Int): T =
       try body
       catch {
         case _: CommitConflictException if n < attempts => attempt(n + 1)
         case e: CommitConflictException => throw new CommitConflictException(
           s"snapshot $what: still conflicting after $attempts re-derivations: ${e.getMessage}")
       }
-    SmallOp(spark, Seq(path), inputs)(attempt(1))
+    attempt(1)
   }
 
   /** DML predicates and SET values are evaluated in SEVERAL independent

@@ -8,10 +8,10 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeRef
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 
 import graft.operators.{Snapshot, SnapshotStats}
-import graft.sources.{DvSnapshotRelation, SnapshotFileIndex}
+import graft.sources.SnapshotSource
 
 /** Metadata-only aggregation under the VANILLA SQL front end.
   *
@@ -68,7 +68,7 @@ case class MetadataAggRewrite(session: SparkSession) extends Rule[LogicalPlan] {
       val rewritten =
         for {
           rel <- unwrap(child)
-          m <- snapshotManifest(rel)
+          m <- SnapshotSource.pinnedScan(rel.relation).map(_._2)
           // grouping (if any) must be bare partition-column attributes:
           // partition values are manifest metadata, so the groups — and
           // per-group folds — stay exact
@@ -95,21 +95,6 @@ case class MetadataAggRewrite(session: SparkSession) extends Rule[LogicalPlan] {
     case Project(pl, c) if pl.forall(_.isInstanceOf[AttributeReference]) => unwrap(c)
     case _ => None
   }
-
-  /** The pinned manifest when the relation is a snapshot scan — the
-    * native FileIndex path or the DV/column-mapping fallback (both pin
-    * one version at resolution, so the fold answers for exactly the
-    * version the scan would read, time travel included).
-    */
-  private def snapshotManifest(l: LogicalRelation): Option[Snapshot.Manifest] =
-    l.relation match {
-      case h: HadoopFsRelation => h.location match {
-        case i: SnapshotFileIndex => i.pinnedManifest
-        case _ => None
-      }
-      case d: DvSnapshotRelation => Some(d.pinnedManifest)
-      case _ => None
-    }
 
   private def classifyAll(es: Seq[NamedExpression],
                           groupIdx: Map[org.apache.spark.sql.catalyst.expressions.ExprId, Int]): Option[Seq[Cell]] = {

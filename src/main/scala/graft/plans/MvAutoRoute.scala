@@ -6,13 +6,13 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, Project, SubqueryAlias}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.catalog.GraftTable
 import graft.operators.{MatView, Snapshot}
-import graft.sources.{DvSnapshotRelation, SnapshotFileIndex}
+import graft.sources.SnapshotSource
 
 /** MV AUTO-ROUTING: a query whose rollup matches a FRESH materialized
   * view's defining SQL answers from the MV's state instead of
@@ -208,7 +208,7 @@ case class MvAutoRoute(session: SparkSession) extends Rule[LogicalPlan] {
                       if ae.isDistinct && ae.filter.isEmpty =>
                     ae.aggregateFunction match {
                       case c: Count if c.children.size == 1 =>
-                        MatView.sideRouteInfo(session, mvPath, nm)
+                        MatView.sideRouteInfo(session, mvPath, MatView.sidePath(mvPath, nm))
                           .map(norm(c.children.head, leaves) -> _)
                       case _ => None
                     }
@@ -223,25 +223,26 @@ case class MvAutoRoute(session: SparkSession) extends Rule[LogicalPlan] {
             // sync with the view
             val astate: Map[Expression, (String, Long, String)] =
               strip(analyzed) match {
-                case ag: Aggregate => MatView.avgRouteInfo(session, mvPath) match {
-                  case Some((sp, sv)) => ag.aggregateExpressions.flatMap { ne =>
-                    val (nm, ex) = ne match {
-                      case al: Alias => (al.name, al.child)
-                      case a => (a.name, a: Expression)
-                    }
-                    ex match {
-                      case ae: AggregateExpression
-                          if !ae.isDistinct && ae.filter.isEmpty =>
-                        ae.aggregateFunction match {
-                          case a: org.apache.spark.sql.catalyst.expressions.aggregate.Average =>
-                            Some(norm(a.child, leaves) -> ((sp, sv, nm)))
-                          case _ => None
-                        }
-                      case _ => None
-                    }
-                  }.toMap
-                  case None => Map.empty
-                }
+                case ag: Aggregate =>
+                  MatView.sideRouteInfo(session, mvPath, MatView.avgSidePath(mvPath)) match {
+                    case Some((sp, sv)) => ag.aggregateExpressions.flatMap { ne =>
+                      val (nm, ex) = ne match {
+                        case al: Alias => (al.name, al.child)
+                        case a => (a.name, a: Expression)
+                      }
+                      ex match {
+                        case ae: AggregateExpression
+                            if !ae.isDistinct && ae.filter.isEmpty =>
+                          ae.aggregateFunction match {
+                            case a: org.apache.spark.sql.catalyst.expressions.aggregate.Average =>
+                              Some(norm(a.child, leaves) -> ((sp, sv, nm)))
+                            case _ => None
+                          }
+                        case _ => None
+                      }
+                    }.toMap
+                    case None => Map.empty
+                  }
                 case _ => Map.empty
               }
             Some(Entry(mvPath, ver, resolved.flatten.toMap, analyzed,
@@ -269,14 +270,8 @@ case class MvAutoRoute(session: SparkSession) extends Rule[LogicalPlan] {
     * fallback, plus the pre-swap v2 form.
     */
   private def leafInfo(p: LogicalPlan): Option[(String, Long)] = p match {
-    case l: LogicalRelation => l.relation match {
-      case h: HadoopFsRelation => h.location match {
-        case i: SnapshotFileIndex => i.pinnedManifest.map(m => (qr(i.pinnedPath), m.version))
-        case _ => None
-      }
-      case d: DvSnapshotRelation => Some((qr(d.pinnedPath), d.pinnedManifest.version))
-      case _ => None
-    }
+    case l: LogicalRelation =>
+      SnapshotSource.pinnedScan(l.relation).map { case (path, m) => (qr(path), m.version) }
     case DataSourceV2Relation(t: GraftTable, _, _, _, _, _) =>
       Some((qr(t.path), t.manifest.version))
     case _ => None

@@ -1,13 +1,14 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
-import org.apache.spark.sql.{SparkSession, SQLContext}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Row, SparkSession, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graftbridge.ScanBridge
-import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, RelationProvider}
+import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, Filter, RelationProvider}
 import org.apache.spark.sql.types._
 
 import graft.operators.{Snapshot, SnapshotStats}
@@ -223,6 +224,43 @@ object SnapshotSource {
     else fileRelation(spark, path, m, tableSchema)
   }
 
+  /** (table root, pinned manifest) when `rel` scans one whole snapshot
+    * version: the native relation over a [[SnapshotFileIndex]] or the
+    * [[DvSnapshotRelation]] fallback. The plan rules that answer from a
+    * version's metadata ([[graft.plans.MetadataAggRewrite]],
+    * [[graft.plans.MvAutoRoute]]) recognise their leaves through it; the
+    * read core's file-subset scans pin no version and yield None.
+    */
+  private[graft] def pinnedScan(rel: BaseRelation): Option[(String, Snapshot.Manifest)] =
+    rel match {
+      case h: HadoopFsRelation => h.location match {
+        case i: SnapshotFileIndex => i.pinnedManifest.map(i.pinnedPath -> _)
+        case _ => None
+      }
+      case d: DvSnapshotRelation => Some(d.pinnedPath -> d.pinnedManifest)
+      case _ => None
+    }
+
+  /** The rows of a row-based snapshot scan ([[DvSnapshotRelation]], the
+    * catalog's extension-less V1 scan): the manifest's files pruned by
+    * the pushed `filters` (an optimization only — Spark re-applies every
+    * filter above), read through the snapshot read core and projected to
+    * `required`. A count-only scan (`required` empty) reads the narrowest
+    * column and emits the empty rows the contract asks for, so it never
+    * reads and converts the full row width.
+    */
+  private[graft] def scanRows(spark: SparkSession, path: String, m: Snapshot.Manifest,
+                              required: Seq[String],
+                              filters: Array[Filter]): RDD[Row] = {
+    val kept =
+      if (filters.isEmpty) m.files
+      else SnapshotStats.pruneByFilters(spark, m, filters, Some(path))
+    val df = Snapshot.readManifestFiles(spark, path, m, kept)
+    if (required.isEmpty)
+      df.select(df.schema.fields.minBy(_.dataType.defaultSize).name).rdd.map(_ => Row.empty)
+    else df.select(required.map(org.apache.spark.sql.functions.col): _*).rdd
+  }
+
   /** The native parquet scan over `m.files` with `dataSchema` — the
     * SQL source's relation above, and the base scan of the snapshot
     * read core ([[Snapshot.readFiles]]), which passes a file subset
@@ -259,22 +297,10 @@ final class DvSnapshotRelation(spark: SparkSession, path: String,
   private[graft] def pinnedPath: String = path
   override def sqlContext: SQLContext = spark.sqlContext
   override val schema: StructType = tableSchema
-  override def unhandledFilters(filters: Array[org.apache.spark.sql.sources.Filter]): Array[org.apache.spark.sql.sources.Filter] =
+  override def unhandledFilters(filters: Array[Filter]): Array[Filter] =
     filters // re-applied above: pruning below can only skip provably-unmatchable files
-  override def buildScan(requiredColumns: Array[String],
-                         filters: Array[org.apache.spark.sql.sources.Filter]): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-    val kept =
-      if (filters.isEmpty) m.files
-      else SnapshotStats.pruneByFilters(spark, m, filters, Some(path))
-    val df = Snapshot.readManifestFiles(spark, path, m, kept)
-    if (requiredColumns.isEmpty) {
-      // count-style scan: project the narrowest column so the fallback
-      // never reads and converts the full row width, then emit the
-      // empty rows the contract asks for
-      val narrowest = schema.fields.minBy(_.dataType.defaultSize).name
-      df.select(narrowest).rdd.map(_ => org.apache.spark.sql.Row.empty)
-    } else df.select(requiredColumns.map(org.apache.spark.sql.functions.col).toSeq: _*).rdd
-  }
+  override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] =
+    SnapshotSource.scanRows(spark, path, m, requiredColumns.toSeq, filters)
   override def toString: String = s"DvSnapshotRelation[$path v${m.version}]"
 }
 

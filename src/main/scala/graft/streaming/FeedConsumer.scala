@@ -149,16 +149,8 @@ object FeedConsumer {
     // concurrent replica commit — another consumer's drain, a property
     // change — re-runs the window against the new state instead of
     // surfacing the raw conflict; same contract as the DML retry
-    var attempt = 0
-    while (true) {
-      try return replicateOnce(spark, srcPath, dstPath, consumerId, keyCols)
-      catch {
-        // 3 total attempts — the same bound as Snapshot.retryDml
-        case _: graft.operators.Snapshot.CommitConflictException if attempt < 2 =>
-          attempt += 1
-      }
-    }
-    None // unreachable
+    Snapshot.retryConflicts("replicate")(
+      replicateOnce(spark, srcPath, dstPath, consumerId, keyCols))
   }
 
   private def replicateOnce(spark: SparkSession, srcPath: String, dstPath: String,

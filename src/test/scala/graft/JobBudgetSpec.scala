@@ -54,12 +54,19 @@ class JobBudgetSpec extends SparkSpec {
     val src = s"$root/src"
     val feed = s"$root/feed"
     Snapshot.create(spark, src, rows(0 until 400).repartition(2))
-    val reg = Map("src" -> src, "mv_sum" -> s"$root/mv_sum", "mv_min" -> s"$root/mv_min")
+    val reg = Map("src" -> src, "mv_sum" -> s"$root/mv_sum", "mv_min" -> s"$root/mv_min",
+      "mv_distinct" -> s"$root/mv_distinct", "mv_avg" -> s"$root/mv_avg")
     val sumSql = "SELECT k, COUNT(*) AS n, SUM(CAST(v AS DECIMAL(18,2))) AS total " +
       "FROM src GROUP BY k"
     val minSql = "SELECT k, MIN(v) AS lo FROM src GROUP BY k"
+    // the two side-table kinds: a COUNT(DISTINCT) side and an AVG side
+    val distinctSql = "SELECT k, COUNT(*) AS n, COUNT(DISTINCT v) AS nv FROM src GROUP BY k"
+    val avgSql = "SELECT k, COUNT(*) AS n, AVG(CAST(v AS DECIMAL(18,2))) AS av " +
+      "FROM src GROUP BY k"
     val create = jobsOf(Snapshot.sql(spark, s"CREATE MATERIALIZED VIEW mv_sum AS $sumSql", reg))
     Snapshot.sql(spark, s"CREATE MATERIALIZED VIEW mv_min AS $minSql", reg)
+    Snapshot.sql(spark, s"CREATE MATERIALIZED VIEW mv_distinct AS $distinctSql", reg)
+    Snapshot.sql(spark, s"CREATE MATERIALIZED VIEW mv_avg AS $avgSql", reg)
     Snapshot.create(spark, feed,
       FeedConsumer.emptyRollup(spark, Snapshot.read(spark, src), Seq("k")))
     def drain() = FeedConsumer.drain(spark, src, feed, "rollup", signed = true)(
@@ -73,18 +80,29 @@ class JobBudgetSpec extends SparkSpec {
     Snapshot.update(spark, src, col("id") === 97L, Map("v" -> lit(50L)))
     val refreshSum = jobsOf(Snapshot.sql(spark, "REFRESH MATERIALIZED VIEW mv_sum", reg))
     val refreshMin = jobsOf(Snapshot.sql(spark, "REFRESH MATERIALIZED VIEW mv_min", reg))
+    val refreshDistinct = jobsOf(Snapshot.sql(spark, "REFRESH MATERIALIZED VIEW mv_distinct", reg))
+    val refreshAvg = jobsOf(Snapshot.sql(spark, "REFRESH MATERIALIZED VIEW mv_avg", reg))
     val drained = jobsOf(drain())
-    info(s"create=$create refreshSum=$refreshSum refreshMin=$refreshMin drain=$drained")
+    info(s"create=$create refreshSum=$refreshSum refreshMin=$refreshMin " +
+      s"refreshDistinct=$refreshDistinct refreshAvg=$refreshAvg drain=$drained")
 
     def sorted(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.head.toString).toSeq
     Snapshot.read(spark, src).createOrReplaceTempView("budget_src")
     def recompute(sql: String) = sorted(spark.sql(sql.replace("FROM src", "FROM budget_src")))
     assert(sorted(Snapshot.read(spark, s"$root/mv_sum")) == recompute(sumSql))
     assert(sorted(Snapshot.read(spark, s"$root/mv_min")) == recompute(minSql))
+    assert(sorted(Snapshot.read(spark, s"$root/mv_distinct")) == recompute(distinctSql))
+    assert(sorted(Snapshot.read(spark, s"$root/mv_avg")) == recompute(avgSql))
+    Seq("mv_distinct", "mv_avg").foreach { v =>
+      assert(Snapshot.latestManifest(spark, s"$root/$v").get.operation.contains("(incremental)"),
+        s"$v refreshes incrementally through its side table")
+    }
     assert(sorted(Snapshot.read(spark, feed)) == recompute(sumSql))
 
-    val bounds = Map("create" -> 2, "refreshSum" -> 6, "refreshMin" -> 3, "drain" -> 4)
+    val bounds = Map("create" -> 2, "refreshSum" -> 6, "refreshMin" -> 3,
+      "refreshDistinct" -> 14, "refreshAvg" -> 13, "drain" -> 4)
     Seq("create" -> create, "refreshSum" -> refreshSum, "refreshMin" -> refreshMin,
+      "refreshDistinct" -> refreshDistinct, "refreshAvg" -> refreshAvg,
       "drain" -> drained).foreach { case (k, n) =>
       assert(n <= bounds(k), s"$k ran $n jobs, bound ${bounds(k)}")
     }

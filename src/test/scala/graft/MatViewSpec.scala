@@ -537,47 +537,6 @@ class MatViewSpec extends SparkSpec {
     assert(Snapshot.latestManifest(spark, mvP).get.operation.contains("(incremental)"))
   }
 
-  test("COUNT(DISTINCT) tier: a crash between side and view commits heals exactly-once") {
-    val root = Files.createTempDirectory("graft-mv-distinct-crash").toString
-    val (srcP, mvP) = (s"$root/src", s"$root/mv")
-    Snapshot.create(spark, srcP,
-      (0L until 60L).map(i => (i, s"k${i % 3}", s"v${i % 7}")).toDF("id", "k", "v"))
-    val reg = Map("src" -> srcP, "mv" -> mvP)
-    val defining =
-      "SELECT k, COUNT(*) AS n, COUNT(DISTINCT v) AS nv FROM src GROUP BY k"
-    Snapshot.sql(spark, s"CREATE MATERIALIZED VIEW mv AS $defining", reg)
-    Snapshot.append(spark, srcP,
-      Seq((500L, "k0", "vA"), (501L, "k1", "v1")).toDF("id", "k", "v"))
-    // kill the refresh AFTER the side table committed (its manifest
-    // lands first) and BEFORE the view's own manifest stages — the
-    // side watermark is ahead, the view watermark is behind
-    var staged = 0
-    Snapshot.faultHook = stage => if (stage == "manifest-staged") {
-      staged += 1
-      if (staged == 2) throw new RuntimeException("injected crash")
-    }
-    val e = try intercept[RuntimeException](
-      Snapshot.sql(spark, "REFRESH MATERIALIZED VIEW mv", reg))
-    finally Snapshot.faultHook = _ => ()
-    assert(e.getMessage == "injected crash")
-    val sideWm = Snapshot.latestManifest(spark, MatView.sidePath(mvP, "nv")).get
-      .streamBatch(MatView.ConsumerId)
-    val viewWm = Snapshot.latestManifest(spark, mvP).get
-      .streamBatch(MatView.ConsumerId)
-    assert(sideWm > viewWm, "crash left the side ahead of the view")
-    // the rerun folds ONLY the view window (the side is current),
-    // exactly-once: the result is bitwise the recompute
-    Snapshot.sql(spark, "REFRESH MATERIALIZED VIEW mv", reg)
-    assert(Snapshot.read(spark, mvP).select("k", "n", "nv").collect().toSet ==
-      Snapshot.sqlQuery(spark, defining, reg).collect().toSet)
-    assert(Snapshot.latestManifest(spark, mvP).get.operation.contains("(incremental)"),
-      "the healing rerun must not demote to full recompute")
-    // and a redelivered refresh no-ops
-    val v = Snapshot.latestVersion(spark, mvP).get
-    Snapshot.sql(spark, "REFRESH MATERIALIZED VIEW mv", reg)
-    assert(Snapshot.latestVersion(spark, mvP).get == v)
-  }
-
   test("multi-argument COUNT(DISTINCT a, b) demotes to full recompute") {
     val root = Files.createTempDirectory("graft-mv-distinct-demote").toString
     val (srcP, mvP) = (s"$root/src", s"$root/mv")
@@ -678,41 +637,73 @@ class MatViewSpec extends SparkSpec {
       Snapshot.sqlQuery(spark, defFl, regFl).collect().toSet)
   }
 
-  test("AVG tier: a crash between the avg side and view commits heals exactly-once") {
-    val root = Files.createTempDirectory("graft-mv-avg-crash").toString
-    val (srcP, mvP) = (s"$root/src", s"$root/mv")
-    Snapshot.create(spark, srcP,
-      (0L until 60L).map(i => (i, s"k${i % 3}", i % 9)).toDF("id", "k", "v"))
-    val reg = Map("src" -> srcP, "mv" -> mvP)
-    val defining =
-      "SELECT k, COUNT(*) AS n, AVG(CAST(v AS DECIMAL(18,2))) AS av FROM src GROUP BY k"
-    Snapshot.sql(spark, s"CREATE MATERIALIZED VIEW mv AS $defining", reg)
-    Snapshot.append(spark, srcP, Seq((500L, "k0", 8L), (501L, "k1", 2L))
-      .toDF("id", "k", "v"))
-    // kill AFTER the avg side committed, BEFORE the view stages
-    var staged = 0
-    Snapshot.faultHook = stage => if (stage == "manifest-staged") {
-      staged += 1
-      if (staged == 2) throw new RuntimeException("injected crash")
+  /** A side-crash case: the view's side columns, its side tables in
+    * commit order, and how many side commits land before the crash.
+    */
+  private case class SideCrash(name: String, sideCols: String,
+                               sides: String => Seq[String], crashAfter: Int)
+
+  private val threeSides =
+    "COUNT(DISTINCT s) AS nv, COUNT(DISTINCT v) AS nd, AVG(CAST(v AS DECIMAL(18,2))) AS av"
+  private def threeSidePaths(mv: String) =
+    Seq(MatView.sidePath(mv, "nv"), MatView.sidePath(mv, "nd"), MatView.avgSidePath(mv))
+
+  // every side table kind runs the same lifecycle, so one body covers a
+  // view with a COUNT(DISTINCT) side, one with an AVG side, and one with
+  // both kinds crashed after its first and after its last side commit
+  Seq(
+    SideCrash("COUNT(DISTINCT) tier: a crash between side and view commits heals exactly-once",
+      "COUNT(DISTINCT s) AS nv", mv => Seq(MatView.sidePath(mv, "nv")), 1),
+    SideCrash("AVG tier: a crash between the avg side and view commits heals exactly-once",
+      "AVG(CAST(v AS DECIMAL(18,2))) AS av", mv => Seq(MatView.avgSidePath(mv)), 1),
+    SideCrash("three side tables: a crash after the first side commit heals exactly-once",
+      threeSides, threeSidePaths, 1),
+    SideCrash("three side tables: a crash after the last side commit heals exactly-once",
+      threeSides, threeSidePaths, 3)
+  ).foreach { c =>
+    test(c.name) {
+      val root = Files.createTempDirectory("graft-mv-side-crash").toString
+      val (srcP, mvP) = (s"$root/src", s"$root/mv")
+      Snapshot.create(spark, srcP,
+        (0L until 60L).map(i => (i, s"k${i % 3}", i % 9, s"v${i % 7}")).toDF("id", "k", "v", "s"))
+      val reg = Map("src" -> srcP, "mv" -> mvP)
+      val defining = s"SELECT k, COUNT(*) AS n, ${c.sideCols} FROM src GROUP BY k"
+      Snapshot.sql(spark, s"CREATE MATERIALIZED VIEW mv AS $defining", reg)
+      Snapshot.append(spark, srcP, Seq((500L, "k0", 8L, "vA"), (501L, "k1", 2L, "v1"))
+        .toDF("id", "k", "v", "s"))
+      // kill the refresh once `crashAfter` side tables committed (side
+      // manifests land first) and BEFORE the next manifest stages — the
+      // committed sides' watermarks are ahead, the view's is behind
+      var staged = 0
+      Snapshot.faultHook = stage => if (stage == "manifest-staged") {
+        staged += 1
+        if (staged == c.crashAfter + 1) throw new RuntimeException("injected crash")
+      }
+      val e = try intercept[RuntimeException](
+        Snapshot.sql(spark, "REFRESH MATERIALIZED VIEW mv", reg))
+      finally Snapshot.faultHook = _ => ()
+      assert(e.getMessage == "injected crash")
+      def wm(path: String) =
+        Snapshot.latestManifest(spark, path).get.streamBatch(MatView.ConsumerId)
+      val viewWm = wm(mvP)
+      c.sides(mvP).zipWithIndex.foreach { case (sp, i) =>
+        if (i < c.crashAfter) assert(wm(sp) > viewWm, s"crash left side $sp ahead of the view")
+        else assert(wm(sp) == viewWm, s"side $sp did not commit before the crash")
+      }
+      // the rerun folds ONLY what did not commit (current sides skip),
+      // exactly-once: the result is bitwise the recompute
+      val cols = Seq("k", "n") ++ c.sideCols.split(", ").map(_.split(" AS ").last)
+      Snapshot.sql(spark, "REFRESH MATERIALIZED VIEW mv", reg)
+      assert(Snapshot.read(spark, mvP).select(cols.map(col): _*).collect().toSet ==
+        Snapshot.sqlQuery(spark, defining, reg).select(cols.map(col): _*).collect().toSet)
+      assert(Snapshot.latestManifest(spark, mvP).get.operation.contains("(incremental)"),
+        "the healing rerun must not demote to full recompute")
+      c.sides(mvP).foreach(sp => assert(wm(sp) == wm(mvP), s"side $sp in sync after the rerun"))
+      // and a redelivered refresh changes nothing
+      val versions = (mvP +: c.sides(mvP)).map(Snapshot.latestVersion(spark, _).get)
+      Snapshot.sql(spark, "REFRESH MATERIALIZED VIEW mv", reg)
+      assert((mvP +: c.sides(mvP)).map(Snapshot.latestVersion(spark, _).get) == versions)
     }
-    val e = try intercept[RuntimeException](
-      Snapshot.sql(spark, "REFRESH MATERIALIZED VIEW mv", reg))
-    finally Snapshot.faultHook = _ => ()
-    assert(e.getMessage == "injected crash")
-    val sideWm = Snapshot.latestManifest(spark, MatView.avgSidePath(mvP)).get
-      .streamBatch(MatView.ConsumerId)
-    val viewWm = Snapshot.latestManifest(spark, mvP).get
-      .streamBatch(MatView.ConsumerId)
-    assert(sideWm > viewWm, "crash left the avg side ahead of the view")
-    // the rerun skips the current side and re-folds only the view
-    Snapshot.sql(spark, "REFRESH MATERIALIZED VIEW mv", reg)
-    assert(Snapshot.read(spark, mvP).select("k", "n", "av").collect().toSet ==
-      Snapshot.sqlQuery(spark, defining, reg).collect().toSet)
-    assert(Snapshot.latestManifest(spark, mvP).get.operation.contains("(incremental)"),
-      "the healing rerun must not demote to full recompute")
-    val v = Snapshot.latestVersion(spark, mvP).get
-    Snapshot.sql(spark, "REFRESH MATERIALIZED VIEW mv", reg)
-    assert(Snapshot.latestVersion(spark, mvP).get == v)
   }
 
   test("KMV sketch-state MV folds inserts and re-derives delete-dented groups") {

@@ -176,7 +176,7 @@ class SimilarityEnrichSpec extends SparkSpec {
     } finally idx.release()
   }
 
-  test("IVF centroid broadcast is size-gated like the Enrich dictionary") {
+  test("IVF centroids broadcast by their real size and stop above the threshold") {
     val emb = sf().embeddings.limit(100)
     val cents = sf().embeddings.where($"vec_id" < 16)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -288,7 +288,7 @@ class SimilarityEnrichSpec extends SparkSpec {
     assert(calls.value == 2) // once per DISTINCT key, not per row
   }
 
-  test("Enrich.viaDistinct drops the broadcast hint above the threshold") {
+  test("Enrich.viaDistinct broadcasts by real size and stops above the threshold") {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     def plan(rows: Int): String = {
       val df = (1 to rows).map(i => (s"key$i", i)).toDF("key", "v")
@@ -299,12 +299,11 @@ class SimilarityEnrichSpec extends SparkSpec {
     try {
       // dimension-sized dictionary → broadcast join
       assert(plan(50).contains("BroadcastHashJoin"))
-      // same dictionary over a tiny threshold → hint dropped, no driver
-      // collect of the dictionary
+      // same dictionary over a tiny threshold → no broadcast, so the
+      // dictionary is never collected
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "100b")
       assert(!plan(50).contains("BroadcastHashJoin"))
-      // "-1" (broadcast disabled) must drop the hint, not crash the
-      // byte-string parse
+      // "-1" (broadcast disabled) → no broadcast
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       assert(!plan(50).contains("BroadcastHashJoin"))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
