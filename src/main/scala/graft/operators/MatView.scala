@@ -264,8 +264,7 @@ object MatView {
     // the refresh session may differ from the creating one — the
     // defining SQL (and the KMV fold) need the graft_* registrations
     graft.expressions.GraftFunctions.register(spark)
-    val mvM = Snapshot.latestManifest(spark, mvPath).getOrElse(
-      throw new IllegalArgumentException(s"not a snapshot table: $mvPath"))
+    val mvM = Snapshot.latest(spark, mvPath)
     val sqlText = mvM.properties.getOrElse(SqlProp, throw new IllegalArgumentException(
       s"not a materialized view (no $SqlProp property): $mvPath"))
     val plan = spark.sessionState.sqlParser.parsePlan(sqlText)
@@ -488,8 +487,7 @@ object MatView {
       }
       refresh(spark, path, resolvePath)
     }
-    val m = Snapshot.latestManifest(spark, mvPath).getOrElse(
-      throw new IllegalArgumentException(s"not a snapshot table: $mvPath"))
+    val m = Snapshot.latest(spark, mvPath)
     val sqlText = m.properties.getOrElse(SqlProp, throw new IllegalArgumentException(
       s"not a materialized view (no $SqlProp property): $mvPath"))
     val plan = spark.sessionState.sqlParser.parsePlan(sqlText)
@@ -579,13 +577,6 @@ object MatView {
           .getOrElse(r)
     }
 
-  /** The rollup shape the incremental path handles:
-    * `SELECT keys…, aggs… FROM <inner-join/filter tree over relations>
-    * GROUP BY keys` where every agg is COUNT(*), SUM, MIN or MAX of a
-    * deterministic expression, at least one COUNT(*) present (it
-    * carries group liveness — a group whose count reaches zero drops,
-    * exactly like the recompute), and every GROUP BY key is SELECTed.
-    */
   /** `keys` pairs the SELECTed state name with the EXPRESSION it
     * groups on — a bare source column (`c_mktsegment AS seg`) or a
     * deterministic scalar expression of source columns
@@ -706,6 +697,15 @@ object MatView {
     case _ => false
   }
 
+  /** The rollup shape the incremental path handles:
+    * `SELECT keys…, aggs… FROM <inner-join/filter tree over relations>
+    * GROUP BY keys` where every agg is unfiltered and one of COUNT(*),
+    * COUNT, COUNT(DISTINCT), SUM, MIN, MAX or AVG of a deterministic
+    * expression, or a `graft_bottomk` KMV sketch; at least one COUNT(*)
+    * is present (it carries group liveness — a group whose count
+    * reaches zero drops, exactly like the recompute), and every GROUP
+    * BY key is SELECTed.
+    */
   private def rollupShape(plan: LogicalPlan): Option[Shape] = plan match {
     case Aggregate(groupingExprs, aggExprs, child, _) =>
       if (!okChild(child)) return None

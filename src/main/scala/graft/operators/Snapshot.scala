@@ -48,7 +48,10 @@ import scala.jdk.CollectionConverters._
   * when every file they derived their output from is still live with
   * an unchanged deletion vector in the winning manifest
   * ([[commitRebasing]]) — so a compaction survives a concurrent
-  * hourly append with neither commit lost. Whole-table and
+  * hourly append with neither commit lost. Metadata commits (tags,
+  * branches, properties, constraints, column DDL, ANALYZE, the vacuum
+  * floor) rebase the same way, all through one loop
+  * ([[commitOnLatest]], at most 10 retries). Whole-table and
   * partition-predicate writers (`overwrite`, `replacePartitions`,
   * `mergeById`) REFUSE on conflict ([[CommitConflictException]])
   * rather than silently discard a concurrent commit — their write
@@ -122,8 +125,8 @@ object Snapshot {
     * file's rows at the recorded positions are DELETED in this version
     * (merge-on-read; see [[delete]]). A file absent from `dvs` is fully
     * live.
-    */
-  /** `colMap` is COLUMN MAPPING state (logical → physical name, only
+    *
+    * `colMap` is COLUMN MAPPING state (logical → physical name, only
     * non-identity entries): data files always store a column under the
     * PHYSICAL name it was born with, so a rename is a metadata-only
     * commit that re-labels the logical schema — no file rewrite, which
@@ -133,8 +136,8 @@ object Snapshot {
     * files would resurrect the dropped column's values into the new
     * one. Partition columns never map (their name is baked into every
     * directory path); [[renameColumn]]/[[dropColumn]] refuse them.
-    */
-  /** `colDefault` maps a column to its CURRENT DEFAULT expression SQL:
+    *
+    * `colDefault` maps a column to its CURRENT DEFAULT expression SQL:
     * writes that omit the column (SQL INSERT column lists, MERGE
     * INSERT arms) fill it instead of null — BigQuery's constant-filled
     * wide load schemas (consumo_bloques_hora.py:132) as a declaration.
@@ -215,7 +218,7 @@ object Snapshot {
   @volatile private[graft] var faultHook: String => Unit = _ => ()
 
   /** A concurrent commit took this version first. APPEND-family writers
-    * catch it and rebase ([[append]]'s retry loop); read-modify-write
+    * catch it and rebase ([[commitOnLatest]]); read-modify-write
     * writers (overwrite, replace, merge) let it propagate — their new
     * state was derived from a manifest that is no longer latest, and
     * blindly rebasing would silently discard the other writer's commit.
@@ -670,6 +673,13 @@ object Snapshot {
   def latestManifest(spark: SparkSession, path: String): Option[Manifest] =
     latestVersion(spark, path).map(manifest(spark, path, _))
 
+  /** The latest manifest of a table that must exist: the one
+    * not-a-table refusal.
+    */
+  def latest(spark: SparkSession, path: String): Manifest =
+    latestManifest(spark, path).getOrElse(
+      throw new IllegalArgumentException(s"not a snapshot table: $path"))
+
   /** Partition values of a manifest-relative file path, by parsing the
     * hive-escaped `col=value` segments between the txn dir and the file
     * name. Null partitions carry the [[NullPartition]] sentinel.
@@ -735,39 +745,34 @@ object Snapshot {
     * later (or the table predates commit stamps and `tsMicros` is
     * before stamp support — stamp 0 sorts before every real time).
     */
-  def versionAtTimestamp(spark: SparkSession, path: String, tsMicros: Long): Option[Long] = {
-    val vs = versions(spark, path)
-    if (vs.isEmpty) return None
-    val fs = fsFor(spark, path)
-    var lo = 0
-    var hi = vs.size - 1
-    var best = -1
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      if (manifestFrom(fs, path, vs(mid)).committedAtMicros <= tsMicros) {
-        best = mid; lo = mid + 1
-      } else hi = mid - 1
-    }
-    if (best < 0) None else Some(vs(best))
-  }
+  def versionAtTimestamp(spark: SparkSession, path: String, tsMicros: Long): Option[Long] =
+    searchCommitted(spark, path, newest = true)(_ <= tsMicros)
 
   /** The first version committed AT OR AFTER `tsMicros` — the streaming
     * twin of [[versionAtTimestamp]] (a stream's `startingTimestamp`
     * means "changes from this moment on", where time travel means "the
     * state as of this moment"). None when every version is older.
     */
-  def versionAtOrAfter(spark: SparkSession, path: String, tsMicros: Long): Option[Long] = {
+  def versionAtOrAfter(spark: SparkSession, path: String, tsMicros: Long): Option[Long] =
+    searchCommitted(spark, path, newest = false)(_ >= tsMicros)
+
+  /** The one binary search over the retained log's commit stamps
+    * (monotone per table): the newest version whose stamp passes `hit`
+    * (a prefix of the log) when `newest`, else the oldest (a suffix).
+    * None when no version passes.
+    */
+  private def searchCommitted(spark: SparkSession, path: String, newest: Boolean)
+                             (hit: Long => Boolean): Option[Long] = {
     val vs = versions(spark, path)
-    if (vs.isEmpty) return None
     val fs = fsFor(spark, path)
     var lo = 0
     var hi = vs.size - 1
     var best = -1
     while (lo <= hi) {
       val mid = (lo + hi) >>> 1
-      if (manifestFrom(fs, path, vs(mid)).committedAtMicros >= tsMicros) {
-        best = mid; hi = mid - 1
-      } else lo = mid + 1
+      val h = hit(manifestFrom(fs, path, vs(mid)).committedAtMicros)
+      if (h) best = mid
+      if (h == newest) lo = mid + 1 else hi = mid - 1
     }
     if (best < 0) None else Some(vs(best))
   }
@@ -791,8 +796,7 @@ object Snapshot {
     */
   def readWhere(spark: SparkSession, path: String, pred: Column,
                 version: Option[Long] = None): DataFrame = {
-    val m = version.map(manifest(spark, path, _)).orElse(latestManifest(spark, path))
-      .getOrElse(throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    val m = version.map(manifest(spark, path, _)).getOrElse(latest(spark, path))
     readFiles(spark, path, m, Some(SnapshotStats.prune(spark, m, pred, Some(path)))).where(pred)
   }
 
@@ -801,8 +805,7 @@ object Snapshot {
     */
   def pruneFiles(spark: SparkSession, path: String, pred: Column,
                  version: Option[Long] = None): (Seq[String], Int) = {
-    val m = version.map(manifest(spark, path, _)).orElse(latestManifest(spark, path))
-      .getOrElse(throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    val m = version.map(manifest(spark, path, _)).getOrElse(latest(spark, path))
     (SnapshotStats.prune(spark, m, pred, Some(path)), m.files.size)
   }
 
@@ -1612,6 +1615,29 @@ object Snapshot {
     m.version
   }
 
+  /** The one OPTIMISTIC commit loop: `step` derives the next manifest
+    * from `m` (None = nothing to commit, returns `m.version`), which
+    * publishes at `m.version + 1`; a lost publish re-derives against the
+    * latest manifest, at most 10 times, then the conflict surfaces.
+    * `first` seeds the first attempt with the manifest a writer already
+    * derived from (no extra read). A refusal thrown by `step` itself —
+    * including a stale-derivation [[CommitConflictException]] —
+    * propagates at once: only the publish retries.
+    */
+  private def commitOnLatest(spark: SparkSession, path: String, first: Option[Manifest] = None)
+                            (step: Manifest => Option[Manifest]): Long = {
+    def attempt(retries: Int, m: Manifest): Long = step(m) match {
+      case None => m.version
+      case Some(next) =>
+        try commitManifest(spark, path, next.copy(version = m.version + 1))
+        catch {
+          case _: CommitConflictException if retries < 10 =>
+            attempt(retries + 1, latest(spark, path))
+        }
+    }
+    attempt(0, first.getOrElse(latest(spark, path)))
+  }
+
   // --------------------------------------------------------- operations
 
   /** Footer stats keyed by what the files actually store — PHYSICAL
@@ -1723,10 +1749,7 @@ object Snapshot {
       s"setProperties: '$VacuumFloorProp' is engine-managed (committed by vacuum)")
     require(!set.contains(BranchBaseProp),
       s"setProperties: '$BranchBaseProp' is engine-managed (committed by REBASE BRANCH)")
-    var attempt = 0
-    while (true) {
-      val m = latestManifest(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    commitOnLatest(spark, path) { m =>
       val next = (m.properties -- unset) ++ set ++
         m.properties.view.filterKeys(k =>
           k == VacuumFloorProp || k == BranchBaseProp).toMap
@@ -1738,13 +1761,10 @@ object Snapshot {
       policyLong(m.copy(properties = next), "optimize.targetBytes")
       policyLong(m.copy(properties = next), "mv.refreshEvery")
       writeSortSpecOf(m.clusterBy, next)
-      if (next == m.properties) return m.version
-      try return commitManifest(spark, path, m.copy(version = m.version + 1,
+      Option.when(next != m.properties)(m.copy(
         operation = if (set.nonEmpty) "SET TBLPROPERTIES" else "UNSET TBLPROPERTIES",
         properties = next))
-      catch { case _: CommitConflictException if attempt < 10 => attempt += 1 }
     }
-    -1L // unreachable
   }
 
   /** The vacuum-race guard ([[vacuum]] commits it before deleting;
@@ -1794,10 +1814,7 @@ object Snapshot {
                 version: Option[Long] = None, replace: Boolean = false): Long = {
     require(TagNameRe.matches(name),
       s"createTag: tag name must be identifier-shaped and not a number, got '$name'")
-    var attempt = 0
-    while (true) {
-      val m = latestManifest(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    commitOnLatest(spark, path) { m =>
       val target = version.getOrElse(m.version)
       require(target <= m.version, s"createTag: version $target does not exist yet " +
         s"(latest is ${m.version})")
@@ -1819,11 +1836,8 @@ object Snapshot {
           case e: java.io.FileNotFoundException => throw new IllegalArgumentException(
             s"createTag: vacuum already reclaimed v$target; that version is gone", e)
         }
-      try return commitManifest(spark, path, m.copy(version = m.version + 1,
-        operation = s"CREATE TAG $name v$target", tags = m.tags + (name -> target)))
-      catch { case _: CommitConflictException if attempt < 10 => attempt += 1 }
+      Some(m.copy(operation = s"CREATE TAG $name v$target", tags = m.tags + (name -> target)))
     }
-    -1L // unreachable
   }
 
   // ------------------------------------------------------------ branches
@@ -1834,6 +1848,18 @@ object Snapshot {
     * listing and the vacuum txn sweep all ignore it.
     */
   def branchPath(path: String, name: String): String = s"$path/_branch/$name"
+
+  /** Operations that make MULTIPLE commits or read back their own
+    * commit cannot run inside a commit group (a staged commit is
+    * invisible to its own follow-up reads) — refuse loudly instead of
+    * wedging half-staged. Plain writers (append/overwrite/replace/DML,
+    * single-commit maintenance) group fine.
+    */
+  private[operators] def requireNotInGroup(op: String): Unit =
+    require(groupMarker.get().isEmpty,
+      s"$op cannot run inside a commit group: it commits more than once " +
+        "(or reads back its own commit), and staged commits are invisible " +
+        "until the group's marker - run it outside the group")
 
   /** CREATE BRANCH: a named WRITABLE fork — the staging workflow a
     * corpus team runs before promoting a nightly build. Two commits:
@@ -1852,43 +1878,22 @@ object Snapshot {
     * pointing at it); `ALTER TABLE t MERGE BRANCH name` fast-forwards
     * the parent to the branch head ([[mergeBranch]]).
     */
-  /** Operations that make MULTIPLE commits or read back their own
-    * commit cannot run inside a commit group (a staged commit is
-    * invisible to its own follow-up reads) — refuse loudly instead of
-    * wedging half-staged. Plain writers (append/overwrite/replace/DML,
-    * single-commit maintenance) group fine.
-    */
-  private[operators] def requireNotInGroup(op: String): Unit =
-    require(groupMarker.get().isEmpty,
-      s"$op cannot run inside a commit group: it commits more than once " +
-        "(or reads back its own commit), and staged commits are invisible " +
-        "until the group's marker - run it outside the group")
-
   def createBranch(spark: SparkSession, path: String, name: String): Long = {
     requireNotInGroup("createBranch")
     require(TagNameRe.matches(name),
       s"createBranch: branch name must be identifier-shaped and not a number, got '$name'")
     require(latestVersion(spark, branchPath(path, name)).isEmpty,
       s"createBranch: branch '$name' already has a table at ${branchPath(path, name)}")
-    var base = -1L
-    var attempt = 0
-    var done = false
-    while (!done) {
-      val m = latestManifest(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    val record = commitOnLatest(spark, path) { m =>
       require(!m.branches.contains(name),
         s"createBranch: branch '$name' already exists (base v${m.branches(name)})")
       require(!m.tags.contains(name),
         s"createBranch: '$name' is already a tag name on this table")
-      base = m.version
-      try {
-        commitManifest(spark, path, m.copy(version = m.version + 1,
-          operation = s"CREATE BRANCH $name v$base",
-          branches = m.branches + (name -> base)))
-        done = true
-      } catch { case _: CommitConflictException if attempt < 10 => attempt += 1 }
+      Some(m.copy(operation = s"CREATE BRANCH $name v${m.version}",
+        branches = m.branches + (name -> m.version)))
     }
-    shallowClone(spark, path, branchPath(path, name), Some(base))
+    // the record commits right above the base it pins
+    shallowClone(spark, path, branchPath(path, name), Some(record - 1))
   }
 
   /** DROP BRANCH: delete the fork's table and release the base-version
@@ -1900,26 +1905,16 @@ object Snapshot {
   def dropBranch(spark: SparkSession, path: String, name: String,
                  ifExists: Boolean = false): Long = {
     requireNotInGroup("dropBranch")
-    var attempt = 0
-    while (true) {
-      val m = latestManifest(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"not a snapshot table: $path"))
-      if (!m.branches.contains(name)) {
-        require(ifExists, s"dropBranch: no such branch '$name' " +
-          s"(have: ${m.branches.keys.toSeq.sorted.mkString(", ")})")
-        // a crashed earlier drop may have left the dir — finish the job
-        fsFor(spark, path).delete(new HPath(branchPath(path, name)), true)
-        return m.version
-      }
-      try {
-        val v = commitManifest(spark, path, m.copy(version = m.version + 1,
-          operation = s"DROP BRANCH $name", branches = m.branches - name))
-        fsFor(spark, path).delete(new HPath(branchPath(path, name)), true)
-        return v
-      }
-      catch { case _: CommitConflictException if attempt < 10 => attempt += 1 }
+    val v = commitOnLatest(spark, path) { m =>
+      require(m.branches.contains(name) || ifExists, s"dropBranch: no such branch '$name' " +
+        s"(have: ${m.branches.keys.toSeq.sorted.mkString(", ")})")
+      Option.when(m.branches.contains(name))(
+        m.copy(operation = s"DROP BRANCH $name", branches = m.branches - name))
     }
-    -1L // unreachable
+    // after the record retires (or, with no record, finishing a crashed
+    // earlier drop that left the dir)
+    fsFor(spark, path).delete(new HPath(branchPath(path, name)), true)
+    v
   }
 
   /** MERGE BRANCH (fast-forward): make the branch head the parent's
@@ -1973,8 +1968,7 @@ object Snapshot {
     // fast-forward PRE-CHECK against the current parent BEFORE anything
     // moves: a refusal here (the common case — a genuinely diverged
     // parent) touches nothing
-    val main0 = latestManifest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    val main0 = latest(spark, path)
     ffCheck(spark, path, name, main0, bh)
     // move the branch's LOCAL commit dirs under the parent root ONCE —
     // idempotent against the commit retry below (already-moved dirs are
@@ -2027,7 +2021,6 @@ object Snapshot {
       if (root == qMain || root == qBranch) rel
       else s"@${aliasOf(root)}/$rel"
     }
-    var attempt = 0
     // flips the instant the parent manifest COMMITS: from then on the
     // moved dirs belong to the parent table and the catch-all below
     // must NOT rename them back (a post-commit failure — e.g. the
@@ -2035,9 +2028,7 @@ object Snapshot {
     // parent with file refs that just moved out from under it)
     var committed = false
     try {
-      while (true) {
-        val main = latestManifest(spark, path).getOrElse(
-          throw new IllegalArgumentException(s"not a snapshot table: $path"))
+      val v = commitOnLatest(spark, path) { main =>
         val baseM = ffCheck(spark, path, name, main, bh)
         // three-way METADATA merge: a parent facet changed since the
         // branch point must not silently vanish under the branch head's
@@ -2067,39 +2058,33 @@ object Snapshot {
         // both-sides change, parent-side-only updates carry through
         val ndv = mergeMeta("", baseM.colNdv, main.colNdv, bh.colNdv, adviseOnly = true)
         val hist = mergeMeta("", baseM.colHist, main.colHist, bh.colHist, adviseOnly = true)
-        try {
-          val v = commitManifest(spark, path, Manifest(
-            version = main.version + 1,
-            partitionCols = bh.partitionCols,
-            schemaDdl = bh.schemaDdl,
-            files = bh.files.map(remap),
-            stats = bh.stats.map { case (f, st) => remap(f) -> st },
-            streamBatch = main.streamBatch, // parent consumers keep their marks
-            dvs = bh.dvs.map { case (f, r) => remap(f) -> r.copy(file = remap(r.file)) },
-            blooms = bh.blooms.map { case (f, r) => remap(f) -> r.copy(file = remap(r.file)) },
-            colMap = bh.colMap,
-            retired = bh.retired,
-            constraints = cons,
-            generatedCols = gens,
-            operation = s"MERGE BRANCH $name",
-            clusterBy = cluster,
-            properties = props,
-            externalRoots = aliasOf.map(_.swap),
-            // parent refs, not branch state; a crashed REBASE's helper
-            // pin retires with the merge
-            tags = main.tags - s"__rebase_$name",
-            colNdv = ndv,
-            colHist = hist,
-            colDefault = defs,
-            colExistsDefault = exDefs,
-            branches = main.branches - name))  // the record retires with the merge
-          committed = true
-          faultHook("merge-branch-committed") // injection seam: commit→cleanup window
-          fs.delete(new HPath(bPath), true)
-          return v
-        } catch { case _: CommitConflictException if attempt < 10 => attempt += 1 }
+        // the branch head's state (schema, column mapping and
+        // retirements included) over the parent's refs
+        Some(bh.copy(
+          files = bh.files.map(remap),
+          stats = bh.stats.map { case (f, st) => remap(f) -> st },
+          streamBatch = main.streamBatch, // parent consumers keep their marks
+          dvs = bh.dvs.map { case (f, r) => remap(f) -> r.copy(file = remap(r.file)) },
+          blooms = bh.blooms.map { case (f, r) => remap(f) -> r.copy(file = remap(r.file)) },
+          constraints = cons,
+          generatedCols = gens,
+          operation = s"MERGE BRANCH $name",
+          clusterBy = cluster,
+          properties = props,
+          externalRoots = aliasOf.map(_.swap),
+          // parent refs, not branch state; a crashed REBASE's helper
+          // pin retires with the merge
+          tags = main.tags - s"__rebase_$name",
+          colNdv = ndv,
+          colHist = hist,
+          colDefault = defs,
+          colExistsDefault = exDefs,
+          branches = main.branches - name))  // the record retires with the merge
       }
-      -1L // unreachable
+      committed = true
+      faultHook("merge-branch-committed") // injection seam: commit→cleanup window
+      fs.delete(new HPath(bPath), true)
+      v
     } catch {
       case e: Throwable =>
         // a refusal AFTER the moves (in-window parent divergence,
@@ -2178,8 +2163,7 @@ object Snapshot {
     val qBranch = fsFor(spark, bPath).makeQualified(new HPath(bPath)).toString
     val bh = latestManifest(spark, bPath).getOrElse(
       throw new IllegalArgumentException(s"rebaseBranch: no branch table at $bPath"))
-    val main = latestManifest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    val main = latest(spark, path)
     val recorded = main.branches.getOrElse(name, throw new IllegalArgumentException(
       s"rebaseBranch: no such branch '$name' " +
         s"(have: ${main.branches.keys.toSeq.sorted.mkString(", ")})"))
@@ -2328,18 +2312,11 @@ object Snapshot {
 
     // durable pin handover: the parent's branch record moves to the new
     // base, then the helper tag retires
-    var attempt = 0
-    var done = false
-    while (!done) {
-      val cur = latestManifest(spark, path).get
+    commitOnLatest(spark, path) { cur =>
       require(cur.branches.contains(name),
         s"rebaseBranch: branch '$name' was dropped concurrently")
-      try {
-        commitManifest(spark, path, cur.copy(version = cur.version + 1,
-          operation = s"REBASE BRANCH $name v${main.version}",
-          branches = cur.branches + (name -> main.version)))
-        done = true
-      } catch { case _: CommitConflictException if attempt < 10 => attempt += 1 }
+      Some(cur.copy(operation = s"REBASE BRANCH $name v${main.version}",
+        branches = cur.branches + (name -> main.version)))
     }
     dropTag(spark, path, s"__rebase_$name", ifExists = true)
     main.version
@@ -2374,20 +2351,12 @@ object Snapshot {
     */
   def dropTag(spark: SparkSession, path: String, name: String,
               ifExists: Boolean = false): Long = {
-    var attempt = 0
-    while (true) {
-      val m = latestManifest(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"not a snapshot table: $path"))
-      if (!m.tags.contains(name)) {
-        require(ifExists, s"dropTag: no such tag '$name' " +
-          s"(have: ${m.tags.keys.toSeq.sorted.mkString(", ")})")
-        return m.version
-      }
-      try return commitManifest(spark, path, m.copy(version = m.version + 1,
-        operation = s"DROP TAG $name", tags = m.tags - name))
-      catch { case _: CommitConflictException if attempt < 10 => attempt += 1 }
+    commitOnLatest(spark, path) { m =>
+      require(m.tags.contains(name) || ifExists, s"dropTag: no such tag '$name' " +
+        s"(have: ${m.tags.keys.toSeq.sorted.mkString(", ")})")
+      Option.when(m.tags.contains(name))(
+        m.copy(operation = s"DROP TAG $name", tags = m.tags - name))
     }
-    -1L // unreachable
   }
 
   /** The one version-spec funnel: an all-digit spec is a version
@@ -2410,8 +2379,7 @@ object Snapshot {
         throw new IllegalArgumentException(s"no committed commit group under $dir"))
       CommitGroup.versionAt(spark, mk, path)
     } else s.toLongOption.getOrElse {
-      val m = latestManifest(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"not a snapshot table: $path"))
+      val m = latest(spark, path)
       m.tags.getOrElse(s, throw new IllegalArgumentException(
         s"no such tag '$s' on $path " +
           s"(have: ${m.tags.keys.toSeq.sorted.mkString(", ")})"))
@@ -2430,8 +2398,7 @@ object Snapshot {
     val s = spec.trim.stripPrefix("'").stripSuffix("'")
       .stripPrefix("\"").stripSuffix("\"")
     if (s.toLongOption.isEmpty) {
-      val m = latestManifest(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"not a snapshot table: $path"))
+      val m = latest(spark, path)
       if (!m.tags.contains(s) && m.branches.contains(s)) {
         val bp = branchPath(path, s)
         return (bp, latestManifest(spark, bp).getOrElse(
@@ -2462,8 +2429,7 @@ object Snapshot {
     * cardinalities.
     */
   def analyze(spark: SparkSession, path: String, cols: Seq[String] = Nil): Long = {
-    val m0 = latestManifest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    val m0 = latest(spark, path)
     val schema = StructType.fromDDL(m0.schemaDdl)
     val atomic = schema.fields.filter(f => f.dataType match {
       case _: org.apache.spark.sql.types.ArrayType |
@@ -2543,20 +2509,16 @@ object Snapshot {
             Option(row.getAs[String](s"__max_$c")))
         }.toMap
       }
-    var attempt = 0
-    while (true) {
-      val m = latestManifest(spark, path).get
+    commitOnLatest(spark, path) { m =>
       // keys that survived concurrent DDL only (a racing DROP/RENAME
       // wins over the measurement)
       val live = StructType.fromDDL(m.schemaDdl).fieldNames.toSet
-      try return commitManifest(spark, path, m.copy(version = m.version + 1,
+      Some(m.copy(
         operation = s"ANALYZE ${targets.size} column(s)" +
           (if (hists.nonEmpty) s", ${hists.size} histogram(s)" else ""),
         colNdv = (m.colNdv ++ measured).view.filterKeys(live).toMap,
         colHist = (m.colHist ++ hists).view.filterKeys(live).toMap))
-      catch { case _: CommitConflictException if attempt < 10 => attempt += 1 }
     }
-    -1L // unreachable
   }
 
   /** `graft.write.sorted` policy → (sort keys, range-partition?).
@@ -2618,21 +2580,14 @@ object Snapshot {
     * per-table knowledge; the table itself carries its layout policy.
     */
   def setClusterBy(spark: SparkSession, path: String, cols: Seq[String]): Long = {
-    var attempt = 0
-    while (true) {
-      val m = latestManifest(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    commitOnLatest(spark, path) { m =>
       val schema = StructType.fromDDL(m.schemaDdl)
       cols.foreach(c => require(schema.fieldNames.contains(c),
         s"setClusterBy: column $c not in the schema"))
       cols.foreach(c => require(!m.partitionCols.contains(c),
         s"setClusterBy: $c is a partition column — it is already clustered by layout"))
-      if (m.clusterBy == cols) return m.version
-      try return commitManifest(spark, path, m.copy(version = m.version + 1,
-        operation = "CLUSTER BY", clusterBy = cols))
-      catch { case _: CommitConflictException if attempt < 10 => attempt += 1 }
+      Option.when(m.clusterBy != cols)(m.copy(operation = "CLUSTER BY", clusterBy = cols))
     }
-    -1L // unreachable
   }
 
   /** K1 append: new version = old live set + the new txn's files.
@@ -2694,8 +2649,7 @@ object Snapshot {
         StructType(table.fields ++ cleanFields(StructType(newCols)).map(_.copy(nullable = true))).toDDL
       }
     }
-    val m0 = latestManifest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    val m0 = latest(spark, path)
     resolveDdl(m0) // fail fast before any data lands
     if (!guard(m0)) return None
     // derive generated columns BEFORE stats: the written files carry
@@ -2709,10 +2663,7 @@ object Snapshot {
     // the batch's own schema covers exactly the new files' columns, so
     // stats are computed once and reused across commit retries
     val newStats = statsFor(spark, path, files, StructType(cleanFields(full.schema)).toDDL, m0.partitionCols, m0.colMap)
-    var attempt = 0
-    while (true) {
-      val m = if (attempt == 0) m0 else latestManifest(spark, path).getOrElse(m0)
-      if (!guard(m)) return None
+    def onto(m: Manifest): Manifest = {
       // the txn files were written under m0's PHYSICAL names; a rebase
       // target whose column mapping differs (a concurrent rename, or a
       // drop + re-add minting a fresh physical slot) would register
@@ -2734,15 +2685,15 @@ object Snapshot {
       // partition column, which `df` does not carry yet.
       val newConstraints = m.constraints.filter { case (k, p) => !m0.constraints.get(k).contains(p) }
       if (newConstraints.nonEmpty) checkConstraints(full, newConstraints)
-      try {
-        return Some(commitManifest(spark, path, finish(m.copy(version = m.version + 1,
-          schemaDdl = ddl, files = m.files ++ files, stats = m.stats ++ newStats,
-          operation = "APPEND"))))
-      } catch {
-        case _: CommitConflictException if attempt < 10 => attempt += 1
-      }
+      finish(m.copy(schemaDdl = ddl, files = m.files ++ files, stats = m.stats ++ newStats,
+        operation = "APPEND"))
     }
-    None // unreachable
+    var duplicate = false
+    val v = commitOnLatest(spark, path, Some(m0)) { m =>
+      duplicate = !guard(m)
+      Option.unless(duplicate)(onto(m))
+    }
+    Option.unless(duplicate)(v)
   }
 
   /** Exactly-once micro-batch append for a Structured Streaming
@@ -2789,10 +2740,7 @@ object Snapshot {
       val dt = cols.find(_.name == c).get.dataType
       c -> validateDefault(spark, c, dt, sql)
     }
-    var attempt = 0
-    while (true) {
-      val m = latestManifest(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    commitOnLatest(spark, path) { m =>
       val table = StructType.fromDDL(m.schemaDdl)
       val clash = cols.map(_.name).filter(n => table.fieldNames.exists(_.equalsIgnoreCase(n)))
       require(clash.isEmpty, s"addColumns: column(s) already exist: ${clash.mkString(", ")}")
@@ -2809,14 +2757,11 @@ object Snapshot {
         if (phys == f.name) None else Some(f.name -> phys)
       }
       val ddl = StructType(table.fields ++ cleanFields(StructType(cols)).map(_.copy(nullable = true))).toDDL
-      try return commitManifest(spark, path, m.copy(version = m.version + 1,
-        operation = "ADD COLUMNS", schemaDdl = ddl,
+      Some(m.copy(operation = "ADD COLUMNS", schemaDdl = ddl,
         colMap = m.colMap ++ mapAdds,
         colDefault = m.colDefault ++ folded.view.mapValues(_._1).toMap,
         colExistsDefault = m.colExistsDefault ++ folded.view.mapValues(_._2).toMap))
-      catch { case _: CommitConflictException if attempt < 10 => attempt += 1 }
     }
-    -1L // unreachable
   }
 
   /** Validate a DEFAULT expression and fold it: must parse, reference
@@ -2852,10 +2797,7 @@ object Snapshot {
     */
   def setColumnDefault(spark: SparkSession, path: String, col: String,
                        default: Option[String]): Long = {
-    var attempt = 0
-    while (true) {
-      val m = latestManifest(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    commitOnLatest(spark, path) { m =>
       val schema = StructType.fromDDL(m.schemaDdl)
       val canon = schema.fieldNames.find(_.equalsIgnoreCase(col)).getOrElse(
         throw new IllegalArgumentException(s"setColumnDefault: no column $col"))
@@ -2867,13 +2809,10 @@ object Snapshot {
             schema(canon).dataType, sql)._1)
         case None => m.colDefault - canon
       }
-      if (next == m.colDefault) return m.version
-      try return commitManifest(spark, path, m.copy(version = m.version + 1,
+      Option.when(next != m.colDefault)(m.copy(
         operation = if (default.isDefined) s"SET DEFAULT $canon" else s"DROP DEFAULT $canon",
         colDefault = next))
-      catch { case _: CommitConflictException if attempt < 10 => attempt += 1 }
     }
-    -1L // unreachable
   }
 
   /** Top-level column names a constraint's predicate text references —
@@ -2898,36 +2837,21 @@ object Snapshot {
     require(!name.startsWith(ReservedConstraintPrefix),
       s"addConstraint: constraint name '$name' uses the reserved " +
         s"$ReservedConstraintPrefix prefix")
-    var attempt = 0
-    while (true) {
-      val m = latestManifest(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    commitOnLatest(spark, path) { m =>
       require(!m.constraints.contains(name), s"addConstraint: constraint $name already exists")
       checkConstraints(readFiles(spark, path, m), Map(name -> predicateSql))
-      try return commitManifest(spark, path, m.copy(version = m.version + 1,
-        operation = "ADD CONSTRAINT",
+      Some(m.copy(operation = "ADD CONSTRAINT",
         constraints = m.constraints + (name -> predicateSql)))
-      catch { case _: CommitConflictException if attempt < 10 => attempt += 1 }
     }
-    -1L // unreachable
   }
 
   def dropConstraint(spark: SparkSession, path: String, name: String,
                      ifExists: Boolean = false): Long = {
-    var attempt = 0
-    while (true) {
-      val m = latestManifest(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"not a snapshot table: $path"))
-      if (!m.constraints.contains(name)) {
-        require(ifExists, s"dropConstraint: no constraint $name")
-        return m.version
-      }
-      try return commitManifest(spark, path,
-        m.copy(version = m.version + 1, operation = "DROP CONSTRAINT",
-          constraints = m.constraints - name))
-      catch { case _: CommitConflictException if attempt < 10 => attempt += 1 }
+    commitOnLatest(spark, path) { m =>
+      require(m.constraints.contains(name) || ifExists, s"dropConstraint: no constraint $name")
+      Option.when(m.constraints.contains(name))(
+        m.copy(operation = "DROP CONSTRAINT", constraints = m.constraints - name))
     }
-    -1L // unreachable
   }
 
   /** METADATA-ONLY column rename: the logical schema re-labels, the
@@ -2940,10 +2864,7 @@ object Snapshot {
     * unchanged. Commutes with appends via rebase-and-retry.
     */
   def renameColumn(spark: SparkSession, path: String, from: String, to: String): Long = {
-    var attempt = 0
-    while (true) {
-      val m = latestManifest(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    commitOnLatest(spark, path) { m =>
       val table = StructType.fromDDL(m.schemaDdl)
       require(table.fieldNames.contains(from), s"renameColumn: no column $from")
       require(!m.partitionCols.contains(from),
@@ -2964,19 +2885,16 @@ object Snapshot {
       // identity entries never persist: renaming b back to its physical
       // name a drops the mapping instead of storing a -> a
       val map = (m.colMap - from) ++ (if (phys == to) Map.empty else Map(to -> phys))
-      try return commitManifest(spark, path,
-        m.copy(version = m.version + 1, operation = "RENAME COLUMN",
-          clusterBy = m.clusterBy.map(c => if (c == from) to else c),
-          properties = renameInBloomPolicy(m.properties, from, to),
-          colNdv = m.colNdv.map { case (c, n) => (if (c == from) to else c) -> n },
-          colHist = m.colHist.map { case (c, h) => (if (c == from) to else c) -> h },
-          colDefault = m.colDefault.map { case (c, d) => (if (c == from) to else c) -> d },
-          colExistsDefault = m.colExistsDefault.map { case (c, d) =>
-            (if (c == from) to else c) -> d },
-          schemaDdl = ddl, colMap = map))
-      catch { case _: CommitConflictException if attempt < 10 => attempt += 1 }
+      Some(m.copy(operation = "RENAME COLUMN",
+        clusterBy = m.clusterBy.map(c => if (c == from) to else c),
+        properties = renameInBloomPolicy(m.properties, from, to),
+        colNdv = m.colNdv.map { case (c, n) => (if (c == from) to else c) -> n },
+        colHist = m.colHist.map { case (c, h) => (if (c == from) to else c) -> h },
+        colDefault = m.colDefault.map { case (c, d) => (if (c == from) to else c) -> d },
+        colExistsDefault = m.colExistsDefault.map { case (c, d) =>
+          (if (c == from) to else c) -> d },
+        schemaDdl = ddl, colMap = map))
     }
-    -1L // unreachable
   }
 
   /** Lossless widenings the read side absorbs without touching a file:
@@ -3007,24 +2925,17 @@ object Snapshot {
     */
   def widenColumnType(spark: SparkSession, path: String, name: String,
                       to: org.apache.spark.sql.types.DataType): Long = {
-    var attempt = 0
-    while (true) {
-      val m = latestManifest(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    commitOnLatest(spark, path) { m =>
       val table = StructType.fromDDL(m.schemaDdl)
       val f = table.fields.find(_.name == name).getOrElse(
         throw new IllegalArgumentException(s"widenColumnType: no column $name"))
-      if (f.dataType == to) return m.version
-      require(widens(f.dataType, to),
+      require(f.dataType == to || widens(f.dataType, to),
         s"widenColumnType: ${f.dataType.simpleString} -> ${to.simpleString} is not a " +
           "lossless widening (only byte/short/int/long up-casts and float -> double)")
       val ddl = StructType(table.fields.map(x =>
         if (x.name == name) x.copy(dataType = to) else x)).toDDL
-      try return commitManifest(spark, path, m.copy(version = m.version + 1,
-        operation = "WIDEN COLUMN", schemaDdl = ddl))
-      catch { case _: CommitConflictException if attempt < 10 => attempt += 1 }
+      Option.when(f.dataType != to)(m.copy(operation = "WIDEN COLUMN", schemaDdl = ddl))
     }
-    -1L // unreachable
   }
 
   /** METADATA-ONLY column drop: the field leaves the logical schema and
@@ -3035,10 +2946,7 @@ object Snapshot {
     * and the last remaining column.
     */
   def dropColumn(spark: SparkSession, path: String, name: String): Long = {
-    var attempt = 0
-    while (true) {
-      val m = latestManifest(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    commitOnLatest(spark, path) { m =>
       val table = StructType.fromDDL(m.schemaDdl)
       require(table.fieldNames.contains(name), s"dropColumn: no column $name")
       require(!m.partitionCols.contains(name),
@@ -3054,18 +2962,15 @@ object Snapshot {
           s"${generatorOf.keys.mkString(", ")}")
       val phys = physicalOf(m, name)
       val ddl = StructType(table.fields.filterNot(_.name == name)).toDDL
-      try return commitManifest(spark, path,
-        m.copy(version = m.version + 1, operation = "DROP COLUMN", schemaDdl = ddl,
-          clusterBy = m.clusterBy.filterNot(_ == name),
-          properties = dropFromBloomPolicy(m.properties, name),
-          colNdv = m.colNdv - name,
-          colHist = m.colHist - name,
-          colDefault = m.colDefault - name,
-          colExistsDefault = m.colExistsDefault - name,
-          colMap = m.colMap - name, retired = (m.retired :+ phys).distinct))
-      catch { case _: CommitConflictException if attempt < 10 => attempt += 1 }
+      Some(m.copy(operation = "DROP COLUMN", schemaDdl = ddl,
+        clusterBy = m.clusterBy.filterNot(_ == name),
+        properties = dropFromBloomPolicy(m.properties, name),
+        colNdv = m.colNdv - name,
+        colHist = m.colHist - name,
+        colDefault = m.colDefault - name,
+        colExistsDefault = m.colExistsDefault - name,
+        colMap = m.colMap - name, retired = (m.retired :+ phys).distinct))
     }
-    -1L // unreachable
   }
 
   /** K4 full overwrite: new version = exactly the new txn's files. The
@@ -3083,8 +2988,7 @@ object Snapshot {
   private def overwriteWith(spark: SparkSession, path: String, df: DataFrame,
                             finish: Manifest => Manifest,
                             layout: Option[(Seq[String], Map[String, String])] = None): Long = {
-    val m = latestManifest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    val m = latest(spark, path)
     val (partitionCols, generatedCols) = layout.getOrElse((m.partitionCols, m.generatedCols))
     // an overwrite keeps (or swaps in) the generated partition columns:
     // the replacement derives them like any other load
@@ -3154,8 +3058,7 @@ object Snapshot {
     */
   def overwriteBatch(spark: SparkSession, path: String, df: DataFrame,
                      appId: String, batchId: Long): Boolean = {
-    val m = latestManifest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    val m = latest(spark, path)
     if (m.streamBatch.get(appId).exists(_ >= batchId)) return false
     SmallOp(spark, Nil, Seq(df))(overwriteWith(spark, path, df,
       mNew => mNew.copy(streamBatch = mNew.streamBatch + (appId -> batchId))))
@@ -3171,8 +3074,7 @@ object Snapshot {
                         dropOld: Map[String, String] => Boolean): Long =
     SmallOp(spark, Nil, Seq(replacement)) {
       replacePartitionsOn(spark, path,
-        latestManifest(spark, path).getOrElse(
-          throw new IllegalArgumentException(s"not a snapshot table: $path")),
+        latest(spark, path),
         replacement, dropOld)
     }
 
@@ -3232,8 +3134,7 @@ object Snapshot {
   private def mergeByIdOn(spark: SparkSession, path: String, updates: DataFrame,
                           idCol: String, partitionCols: Seq[String],
                           assertIdsLocal: Boolean): Long = {
-    val m = latestManifest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    val m = latest(spark, path)
     require(m.partitionCols == partitionCols,
       s"snapshot table is partitioned by ${m.partitionCols}, not $partitionCols")
     if (partitionCols.isEmpty) {
@@ -3425,8 +3326,7 @@ object Snapshot {
                                     notMatched: Seq[InsertArm],
                                     bySource: Seq[WhenArm]): Long = {
     require(idCols.nonEmpty, "merge: no key column")
-    val m = latestManifest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    val m = latest(spark, path)
     val schema = StructType.fromDDL(m.schemaDdl)
     val pCols = m.partitionCols
     (matched ++ bySource).flatMap(_.set).foreach { set =>
@@ -3749,8 +3649,7 @@ object Snapshot {
   private def rowDmlOnce(spark: SparkSession, path: String, what: String,
                          target: DmlMatch, set0: Option[Map[String, Column]],
                          dvMaxFraction: Double): Long = {
-    val m = latestManifest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    val m = latest(spark, path)
     val schema = StructType.fromDDL(m.schemaDdl)
     set0.foreach { s =>
       val bad = s.keySet.diff(schema.fieldNames.toSet)
@@ -4023,8 +3922,7 @@ object Snapshot {
   private def compactOn(spark: SparkSession, path: String, targetBytes: Long,
                         minFiles: Int, zorderBy: Seq[String],
                         where: Option[Column]): Seq[String] = {
-    val m = latestManifest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    val m = latest(spark, path)
     // 0 = the library default (4): SQL routes pass the sentinel so the
     // default lives in exactly one place
     val minFilesEff = if (minFiles > 0) minFiles else 4
@@ -4174,8 +4072,7 @@ object Snapshot {
     */
   private def replaceFiles(spark: SparkSession, path: String, replacement: DataFrame,
                            drop: Set[String]): Long = {
-    val m = latestManifest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    val m = latest(spark, path)
     replaceFilesOn(spark, path, m, replacement, drop)
   }
 
@@ -4201,19 +4098,15 @@ object Snapshot {
   def bloomIndex(spark: SparkSession, path: String, cols: Seq[String],
                  fpp: Double = 0.01): Long = {
     require(cols.nonEmpty, "bloomIndex: no columns given")
-    val m = latestManifest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    val m = latest(spark, path)
     val want = cols.map(physicalOf(m, _)).sorted // refs record physical names
     val todo = m.files.filterNot(f => m.blooms.get(f).exists(_.cols.sorted == want))
     if (todo.isEmpty) return m.version
     val refs = SnapshotBloom.build(spark, path, m, todo, cols, fpp)
-    retryDml(spark, path, "bloomIndex") {
-      val cur = latestManifest(spark, path).get
+    commitOnLatest(spark, path) { cur =>
       val liveRefs = refs.view.filterKeys(cur.files.toSet).toMap
-      if (liveRefs.isEmpty) cur.version
-      else commitManifest(spark, path,
-        cur.copy(version = cur.version + 1, operation = "BLOOM INDEX",
-          blooms = cur.blooms ++ liveRefs))
+      Option.when(liveRefs.nonEmpty)(
+        cur.copy(operation = "BLOOM INDEX", blooms = cur.blooms ++ liveRefs))
     }
   }
 
@@ -4228,8 +4121,7 @@ object Snapshot {
     */
   def foldDvs(spark: SparkSession, path: String,
               minFileFraction: Double = 0.0): Seq[String] = {
-    val m = latestManifest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    val m = latest(spark, path)
     val targets = m.dvs.keys.filter { f =>
       m.stats.get(f) match {
         case Some(st) if st.rows > 0 =>
@@ -4292,9 +4184,7 @@ object Snapshot {
                              addStats: Map[String, SnapshotStats.FileStats],
                              addDvs: Map[String, DvRef],
                              op: String = ""): Long = {
-    var attempt = 0
-    while (true) {
-      val m = if (attempt == 0) base else latestManifest(spark, path).getOrElse(base)
+    commitOnLatest(spark, path, Some(base)) { m =>
       val derivedFrom = drop ++ touched
       val missing = derivedFrom.diff(m.files.toSet)
       val dvDrift = derivedFrom.filter(f => m.dvs.get(f) != base.dvs.get(f))
@@ -4322,18 +4212,12 @@ object Snapshot {
           s"snapshot rewrite conflict at $path: column mapping changed " +
             "mid-rewrite; files were written under stale physical names")
       val kept = m.files.filterNot(drop)
-      try {
-        return commitManifest(spark, path, m.copy(
-          version = m.version + 1,
-          operation = op,
-          files = kept ++ addFiles,
-          stats = m.stats.view.filterKeys(kept.toSet).toMap ++ addStats,
-          dvs = m.dvs.view.filterKeys(kept.toSet).toMap ++ addDvs))
-      } catch {
-        case _: CommitConflictException if attempt < 10 => attempt += 1
-      }
+      Some(m.copy(
+        operation = op,
+        files = kept ++ addFiles,
+        stats = m.stats.view.filterKeys(kept.toSet).toMap ++ addStats,
+        dvs = m.dvs.view.filterKeys(kept.toSet).toMap ++ addDvs))
     }
-    -1L // unreachable
   }
 
   /** Byte size of a live file — from the manifest's own stats when
@@ -4381,8 +4265,7 @@ object Snapshot {
     */
   def metadataAgg(spark: SparkSession, path: String, cols: Seq[String],
                   version: Option[Long] = None): DataFrame = {
-    val m = version.map(manifest(spark, path, _)).orElse(latestManifest(spark, path))
-      .getOrElse(throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    val m = version.map(manifest(spark, path, _)).getOrElse(latest(spark, path))
     if (cols.isEmpty) {
       // count-only: EXACT even under deletion vectors, because vector
       // sizes are manifest metadata (live rows = rows − dv.rows)
@@ -4504,8 +4387,7 @@ object Snapshot {
     * drop (they are an optimization); DVs are correctness and refuse.
     */
   def restore(spark: SparkSession, path: String, version: Long): Long = {
-    val cur = latestManifest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    val cur = latest(spark, path)
     if (version == cur.version) return cur.version
     // same arbitration as createTag: below the vacuum floor only tagged
     // versions are reliably intact — an untagged one may be mid-reclaim
@@ -4618,8 +4500,7 @@ object Snapshot {
       s"shallowClone: destination already exists: $dstPath")
     val src = version match {
       case Some(v) => manifest(spark, srcPath, v)
-      case None => latestManifest(spark, srcPath).getOrElse(
-        throw new IllegalArgumentException(s"not a snapshot table: $srcPath"))
+      case None => latest(spark, srcPath)
     }
     val qSrc = fsFor(spark, srcPath).makeQualified(new HPath(srcPath)).toString
     require(fsFor(spark, dstPath).makeQualified(new HPath(dstPath)).toString != qSrc,
@@ -4691,8 +4572,7 @@ object Snapshot {
       s"deepClone: destination already exists: $dstPath")
     val src = version match {
       case Some(v) => manifest(spark, srcPath, v)
-      case None => latestManifest(spark, srcPath).getOrElse(
-        throw new IllegalArgumentException(s"not a snapshot table: $srcPath"))
+      case None => latest(spark, srcPath)
     }
     val qSrc = fsFor(spark, srcPath).makeQualified(new HPath(srcPath)).toString
     val qDst = fsFor(spark, dstPath).makeQualified(new HPath(dstPath)).toString
@@ -4776,8 +4656,7 @@ object Snapshot {
     * maintenance action. Pure manifest math — no data files open.
     */
   def describeDetail(spark: SparkSession, path: String): DataFrame = {
-    val m = latestManifest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    val m = latest(spark, path)
     // a file without recorded stats makes the totals unknowable —
     // answer NULL, never a silent undercount
     val complete = m.files.forall(m.stats.contains)
@@ -4879,30 +4758,16 @@ object Snapshot {
     // the arbitration a tag could land on a version mid-deletion and
     // dangle forever.
     if (dead.nonEmpty && !dryRun) {
-      var attempts = 0
-      var committed = false
-      while (!committed && dead.nonEmpty) {
-        val latest = latestManifest(spark, path).getOrElse(return Nil)
-        val s = splitByTags(pins(latest))
+      commitOnLatest(spark, path) { cur =>
+        val s = splitByTags(pins(cur))
         kept = s._1; dead = s._2
-        if (dead.nonEmpty) {
-          // the floor is the CONTIGUOUS suffix's head — dead versions
-          // can sit between tagged islands, so "oldest kept" would lie:
-          // below the floor only TAGGED versions are reliably retained,
-          // which is exactly the rule createTag enforces
-          val floor = vs(cutIdx)
-          try {
-            commitManifest(spark, path, latest.copy(version = latest.version + 1,
-              operation = s"VACUUM floor v$floor",
-              properties = latest.properties + ("graft.vacuum.floor" -> floor.toString)))
-            committed = true
-          } catch {
-            case _: CommitConflictException =>
-              attempts += 1
-              require(attempts <= 10, "vacuum: could not publish the reclaim floor " +
-                "after 10 attempts (heavy concurrent commit traffic); retry later")
-          }
-        }
+        // the floor is the CONTIGUOUS suffix's head — dead versions
+        // can sit between tagged islands, so "oldest kept" would lie:
+        // below the floor only TAGGED versions are reliably retained,
+        // which is exactly the rule createTag enforces
+        val floor = vs(cutIdx)
+        Option.when(dead.nonEmpty)(cur.copy(operation = s"VACUUM floor v$floor",
+          properties = cur.properties + ("graft.vacuum.floor" -> floor.toString)))
       }
       if (dead.isEmpty) return Nil // concurrent tags pinned everything
       faultHook("vacuum-floor-committed") // injection seam: the race window

@@ -700,18 +700,18 @@ object SnapshotStats {
       filters.map(toPred).reduceLeft((l, r) => FnNode("and", Seq(l, r))), tablePath)
   }
 
-  /** Files of `m` that might satisfy `pred` per manifest stats. Sound:
-    * the result is always a superset of the files holding matching
-    * rows. Files without stats are kept. The evaluation itself is one
-    * local-relation filter — Spark's own casts and orderings decide
-    * every comparison.
-    */
   /** Test-only observability: (kept, total) of the most recent prune
     * decision — lets a spec assert that a scan driven through the SQL
     * path actually skipped files. Never read by engine code.
     */
   @volatile private[graft] var lastPrune: (Int, Int) = (0, 0)
 
+  /** Files of `m` that might satisfy `pred` per manifest stats. Sound:
+    * the result is always a superset of the files holding matching
+    * rows. Files without stats are kept. The evaluation itself is one
+    * local-relation filter — Spark's own casts and orderings decide
+    * every comparison.
+    */
   def prune(spark: SparkSession, m: Snapshot.Manifest, pred: Column,
             tablePath: Option[String] = None): Seq[String] =
     pruneNode(spark, m, ColumnBridge.pred(pred), tablePath)

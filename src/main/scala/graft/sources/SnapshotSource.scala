@@ -120,8 +120,7 @@ class SnapshotSource extends RelationProvider with DataSourceRegister
             s"no version of $path committed at or before $raw"))
         (path, Snapshot.manifest(spark, path, v))
       })
-      .orElse(Snapshot.latestManifest(spark, path).map((path, _)))
-      .getOrElse(throw new IllegalArgumentException(s"not a snapshot table: $path"))
+      .getOrElse((path, Snapshot.latest(spark, path)))
     SnapshotSource.relationFor(spark, readPath, m)
   }
 
@@ -132,8 +131,7 @@ class SnapshotSource extends RelationProvider with DataSourceRegister
                             parameters: Map[String, String]): (String, StructType) = {
     val path = parameters.getOrElse("path",
       throw new IllegalArgumentException("graft-snapshot needs a path"))
-    val m = Snapshot.latestManifest(sqlContext.sparkSession, path)
-      .getOrElse(throw new IllegalArgumentException(s"not a snapshot table: $path"))
+    val m = Snapshot.latest(sqlContext.sparkSession, path)
     val base = StructType.fromDDL(m.schemaDdl)
     val out =
       if (parameters.get("readChangeFeed").exists(_.toBoolean))

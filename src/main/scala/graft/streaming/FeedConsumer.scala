@@ -40,8 +40,8 @@ object FeedConsumer {
     * `netFeed` carries the source schema plus `_change_type`
     * (insert/delete). Returns Some(fromVersion -> toVersion) when the
     * consumer advanced, None when already up to date.
-    */
-  /** `signed = true` feeds `apply` the SIGNED net feed
+    *
+    * `signed = true` feeds `apply` the SIGNED net feed
     * ([[Snapshot.readChangesSigned]]): the same change streams minus
     * the value-level exceptAll cancellation pair — two full shuffles
     * whose removed (+row, −row) pairs contribute exactly zero to any

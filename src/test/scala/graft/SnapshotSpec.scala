@@ -343,4 +343,56 @@ class SnapshotSpec extends SparkSpec {
       assert(Snapshot.latestVersion(spark, dir).contains(3L), s"dialect $name")
     }
   }
+
+  test("commit retry budget: a lost publish rebases at most 10 times, a no-op publishes nothing") {
+    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+
+    // a substrate where a concurrent committer wins the slot for the
+    // first `refusals` publishes; after that it publishes normally
+    final class RefusingGuard(refusals: Int) extends Snapshot.CommitGuard {
+      var publishes = 0
+      override def publish(fs: FileSystem, tablePath: String, tmp: HPath, target: HPath): Boolean = {
+        publishes += 1
+        publishes > refusals && Snapshot.JvmLockedRenameGuard.publish(fs, tablePath, tmp, target)
+      }
+    }
+    def under[T](guard: Snapshot.CommitGuard)(body: => T): T = {
+      val prev = Snapshot.commitGuard
+      Snapshot.commitGuard = guard
+      try body finally Snapshot.commitGuard = prev
+    }
+
+    val dir = tmp("retry")
+    Snapshot.create(spark, dir, fixture(0 until 20, 1), Seq("p"))
+
+    // metadata commit: two refusals, then one new version
+    val props = new RefusingGuard(2)
+    assert(under(props)(Snapshot.setProperties(spark, dir, Map("owner" -> "etl"))) == 2L)
+    assert(props.publishes == 3)
+    assert(Snapshot.latestManifest(spark, dir).get.properties.get("owner").contains("etl"))
+
+    // append: two refusals, then one new version holding every row
+    val app = new RefusingGuard(2)
+    assert(under(app)(Snapshot.append(spark, dir, fixture(100 until 110, 2))) == 3L)
+    assert(app.publishes == 3)
+    assert(Snapshot.latestVersion(spark, dir).contains(3L))
+    assert(rows(Snapshot.read(spark, dir)) ==
+      rows(fixture(0 until 20, 1)) ++ rows(fixture(100 until 110, 2)))
+
+    // a slot that is never won: the first publish plus 10 retries, then
+    // the conflict surfaces and the table is untouched
+    val never = new RefusingGuard(Int.MaxValue)
+    intercept[Snapshot.CommitConflictException] {
+      under(never)(Snapshot.addConstraint(spark, dir, "v_nonneg", "v >= 0"))
+    }
+    assert(never.publishes == 11)
+    assert(Snapshot.latestVersion(spark, dir).contains(3L))
+    assert(Snapshot.latestManifest(spark, dir).get.constraints.isEmpty)
+
+    // a no-op (the clustering already declared) commits nothing
+    assert(Snapshot.setClusterBy(spark, dir, Seq("id")) == 4L)
+    val noop = new RefusingGuard(0)
+    assert(under(noop)(Snapshot.setClusterBy(spark, dir, Seq("id"))) == 4L)
+    assert(noop.publishes == 0)
+  }
 }
