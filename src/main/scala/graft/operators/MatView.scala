@@ -444,8 +444,8 @@ object MatView {
         val next = if (shape.avgCols.isEmpty) next0
           else patchAvg(next0, Snapshot.read(spark, avgSidePath(mvPath)),
             shape, curSchema)
-        Snapshot.replaceWholeTableOn(spark, mvPath, stateLayout(mvM), next,
-          op = s"REFRESH MATERIALIZED VIEW $opTail (incremental)", finish = stamp)
+        Snapshot.swapFilesOn(spark, mvPath, stateLayout(mvM), next, _ => true,
+          s"REFRESH MATERIALIZED VIEW $opTail (incremental)", stamp)
       }
     }
     incremental match {
@@ -458,8 +458,8 @@ object MatView {
         shape0.foreach(buildSides(spark, mvPath, _, readsNow, wmEntries(srcs, vNows),
           opTail, fresh = false))
         val result = PlanBridge.dataFrame(spark, substituted(plan, readsNow))
-        Snapshot.replaceWholeTableOn(spark, mvPath, stateLayout(mvM), result,
-          op = s"REFRESH MATERIALIZED VIEW $opTail (full recompute)", finish = stamp)
+        Snapshot.swapFilesOn(spark, mvPath, stateLayout(mvM), result, _ => true,
+          s"REFRESH MATERIALIZED VIEW $opTail (full recompute)", stamp)
     }
     Some(vFroms.head.getOrElse(0L) -> vNows.head)
   }
@@ -854,9 +854,9 @@ object MatView {
           require(!fresh,
             s"${s.label.toLowerCase}-state side table already exists: ${s.path}")
           if (!wm.forall { case (k, v) => sm.streamBatch.get(k).exists(_ >= v) })
-            Snapshot.replaceWholeTableOn(spark, s.path, stateLayout(sm),
-              stateOf(childDf, s.shape),
-              op = s"REFRESH ${s.label} STATE $opTail (full recompute)", finish = stamp)
+            Snapshot.swapFilesOn(spark, s.path, stateLayout(sm),
+              stateOf(childDf, s.shape), _ => true,
+              s"REFRESH ${s.label} STATE $opTail (full recompute)", stamp)
       }
     }
   }
@@ -880,7 +880,7 @@ object MatView {
     * `spark.graft.mv.foldKeysMax`, default 1000), stats-prunes the
     * state manifest to the files that might hold an affected group,
     * runs `fold` over ONLY those files' rows, and retains every other
-    * live file byte-identical ([[Snapshot.replaceFilesOn]] — their
+    * live file byte-identical ([[Snapshot.swapFilesOn]] — their
     * stats ride along, no data pass). Sound because every fold here is
     * per-group local: a state row whose group key matches no delta key
     * passes through the full-outer fold join unchanged (COUNT/SUM add
@@ -891,7 +891,7 @@ object MatView {
     * first-key containment bounds full-key containment). Falls back to
     * the whole-table rewrite whenever restriction is unsound
     * (partitioned or DV-carrying state) or useless (≤1 file, gate
-    * exceeded, nothing retained). With the state layout clustered by
+    * exceeded). With the state layout clustered by
     * the group keys (`graft.write.sorted=range`, see [[stateLayout]])
     * state files carry disjoint key ranges, so at scale a churn window
     * rewrites only the dented files: the refresh write path becomes
@@ -905,26 +905,22 @@ object MatView {
                                    op: String,
                                    finish: Snapshot.Manifest => Snapshot.Manifest): Long = {
     val sm = stateLayout(sm0)
-    def whole(): Long = Snapshot.replaceWholeTableOn(spark, sp, sm,
-      fold(Snapshot.readManifestFiles(spark, sp, sm, sm.files)), op, finish)
+    def foldOver(files: Seq[String]): Long = Snapshot.swapFilesOn(spark, sp, sm,
+      fold(Snapshot.readManifestFiles(spark, sp, sm, files)), files.toSet, op, finish)
     val gate = spark.conf.getOption("spark.graft.mv.foldKeysMax")
       .map(_.toInt).getOrElse(1000)
     if (stateKey.isEmpty || gate <= 0 || sm.files.size <= 1 ||
-      sm.partitionCols.nonEmpty || sm.dvs.nonEmpty) return whole()
+      sm.partitionCols.nonEmpty || sm.dvs.nonEmpty) return foldOver(sm.files)
     // the delta is caller-checkpointed: this key collect reads the
     // materialized change-sized copy, never the replay trees
     val keys = delta.select(col("__gk_0")).distinct()
       .limit(gate + 1).collect().map(_.get(0))
-    if (keys.length > gate || keys.isEmpty) return whole()
+    if (keys.length > gate || keys.isEmpty) return foldOver(sm.files)
     val nonNull = keys.filter(_ != null)
     val k = col(stateKey.get)
     val pred = ((if (nonNull.nonEmpty) Seq(k.isin(nonNull.toSeq: _*)) else Nil) ++
       (if (nonNull.length < keys.length) Seq(k.isNull) else Nil)).reduce(_ || _)
-    val touched = SnapshotStats.prune(spark, sm, pred, Some(sp))
-    val retained = sm.files.diff(touched)
-    if (retained.isEmpty) return whole()
-    Snapshot.replaceFilesOn(spark, sp, sm, retained,
-      fold(Snapshot.readManifestFiles(spark, sp, sm, touched)), op, finish)
+    foldOver(SnapshotStats.prune(spark, sm, pred, Some(sp)))
   }
 
   /** Overwrite one COUNT(DISTINCT) column of the folded view with the

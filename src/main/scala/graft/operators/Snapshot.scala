@@ -1171,18 +1171,36 @@ object Snapshot {
     */
   private[graft] val ReservedConstraintPrefix = "__graft_"
 
-  /** Write `df` into a fresh immutable txn dir under the table root;
-    * returns the new files' table-relative paths. Nothing is live until
-    * a manifest referencing them commits.
+  /** What a write derives and checks beyond laying rows out under its
+    * manifest: `derive` applies the generated columns and the CHECK
+    * constraints, `notNull` adds one `IS NOT NULL` check per NOT NULL
+    * field ([[withNotNullChecks]]), `sorted` applies the
+    * `graft.write.sorted` policy ([[writeSortSpec]]).
     */
-  private def writeTxnFiles(df1: DataFrame, path: String, partitionCols: Seq[String],
-                            colMap: Map[String, String] = Map.empty,
-                            constraints: Map[String, String] = Map.empty,
-                            generated: Map[String, String] = Map.empty,
-                            sortBy: Seq[String] = Nil,
-                            sortRange: Boolean = false): Seq[String] = {
-    val df0 = withGenerated(df1, generated)
-    checkConstraints(df0, constraints)
+  private final case class WriteMode(derive: Boolean, notNull: Boolean, sorted: Boolean)
+  /** Appends, overwrites, replaces, merges, the UPDATE tiers, MV and replica states. */
+  private val Constructive = WriteMode(derive = true, notNull = true, sorted = true)
+  /** CREATE: only the constraints it declares. */
+  private val Declared = WriteMode(derive = true, notNull = false, sorted = true)
+  /** A DELETE rewrite: the surviving rows were validated when written. */
+  private val SortOnly = WriteMode(derive = false, notNull = false, sorted = true)
+  /** Compaction and the vector fold: they lay out their own rows. */
+  private val Verbatim = WriteMode(derive = false, notNull = false, sorted = false)
+
+  /** The ONE data write: `df1` lands in a fresh immutable txn dir under
+    * the table root, laid out as `m` says — its partition columns and
+    * physical names, and per `mode` its generated columns, constraints
+    * and write sort. Returns the new files' table-relative paths with
+    * their footer stats under `m`'s schema. Nothing is live until a
+    * manifest referencing them commits.
+    */
+  private def writeUnder(spark: SparkSession, path: String, m: Manifest, df1: DataFrame,
+                         mode: WriteMode = Constructive)
+      : (Seq[String], Map[String, SnapshotStats.FileStats]) = {
+    val (sortBy, sortRange) = if (mode.sorted) writeSortSpec(m) else (Nil, false)
+    val df0 = if (mode.derive) withGenerated(df1, m.generatedCols) else df1
+    if (mode.derive) checkConstraints(df0,
+      if (mode.notNull) withNotNullChecks(m.constraints, m.schemaDdl) else m.constraints)
     // write-time clustering (`graft.write.sorted` policy over the
     // declared CLUSTER BY keys): files carry tight min/max from their
     // FIRST write, so point/range predicates prune without waiting for
@@ -1193,7 +1211,7 @@ object Snapshot {
     val dfSorted =
       if (sortBy.isEmpty) df0
       else {
-        val keys = (partitionCols.filterNot(sortBy.contains) ++ sortBy)
+        val keys = (m.partitionCols.filterNot(sortBy.contains) ++ sortBy)
           .filter(df0.columns.contains).map(col)
         // the range exchange deliberately carries NO explicit count:
         // AQE (on by default) coalesces the post-exchange partitions to
@@ -1207,7 +1225,7 @@ object Snapshot {
       }
     // files ALWAYS store physical names, whatever the logical schema
     // says today — that uniformity is what makes rename metadata-only
-    val df = toPhysical(dfSorted, colMap)
+    val df = toPhysical(dfSorted, m.colMap)
     val txn = s"txn-${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
     val dir = s"$path/$txn"
     // INT96 timestamps carry no footer statistics; pin the annotated
@@ -1220,16 +1238,21 @@ object Snapshot {
     val tsKey = "spark.sql.parquet.outputTimestampType"
     ScopedConf(df.sparkSession, Seq(tsKey -> "TIMESTAMP_MICROS")) {
       val w = df.write.mode("errorifexists")
-      (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*)).parquet(dir)
+      (if (m.partitionCols.isEmpty) w else w.partitionBy(m.partitionCols: _*)).parquet(dir)
     }
     faultHook("data-files-written")
     val fs = fsFor(df.sparkSession, path)
     val root = fs.makeQualified(new HPath(path)).toString
-    listParquetRecursive(fs, new HPath(dir)).map { p =>
+    val files = listParquetRecursive(fs, new HPath(dir)).map { p =>
       val q = fs.makeQualified(p).toString
       require(q.startsWith(root + "/"), s"txn file $q outside table root $root")
       q.drop(root.length + 1)
     }.sorted
+    // footer stats keyed by what the files actually store — PHYSICAL
+    // column names (the prune side translates its lookups the same way)
+    files -> SnapshotStats.collect(spark, path, files,
+      StructType(StructType.fromDDL(m.schemaDdl).fields.map(f =>
+        f.copy(name = m.colMap.getOrElse(f.name, f.name)))), m.partitionCols)
   }
 
   // ------------------------------------------- manifest serialization
@@ -1640,17 +1663,6 @@ object Snapshot {
 
   // --------------------------------------------------------- operations
 
-  /** Footer stats keyed by what the files actually store — PHYSICAL
-    * column names (`colMap` re-labels the logical DDL before the footer
-    * walk; the prune side translates its lookups the same way).
-    */
-  private def statsFor(spark: SparkSession, path: String, files: Seq[String],
-                       schemaDdl: String, partitionCols: Seq[String],
-                       colMap: Map[String, String] = Map.empty): Map[String, SnapshotStats.FileStats] =
-    SnapshotStats.collect(spark, path, files,
-      StructType(StructType.fromDDL(schemaDdl).fields.map(f =>
-        f.copy(name = colMap.getOrElse(f.name, f.name)))), partitionCols)
-
   /** Initialize a snapshot table (version 1) from `df`. `generatedCols`
     * maps a column name to a generator SQL expression over the row
     * (the engine's partition-transform support — `PARTITIONED BY
@@ -1675,10 +1687,6 @@ object Snapshot {
         s"create: constraint name '$n' uses the reserved $ReservedConstraintPrefix prefix")
     }
     val full = withGenerated(df, generatedCols)
-    // create-time constraints land IN the first commit (one atomic
-    // version — no window where the table exists unconstrained), after
-    // validating they resolve and hold on the initial data
-    if (constraints.nonEmpty) checkConstraints(full, constraints)
     // NOT NULL in the stored schema means DECLARED, never inferred:
     // Scala frames built from literals/ranges/tuples carry incidental
     // nullable=false that the initial data satisfies but later writes
@@ -1696,15 +1704,6 @@ object Snapshot {
     // engine-read policy properties validate at declaration time
     require(!properties.contains(VacuumFloorProp),
       s"create: '$VacuumFloorProp' is engine-managed (committed by vacuum)")
-    locally {
-      val probe = Manifest(0L, partitionCols, ddl, Nil, properties = properties,
-        clusterBy = clusterBy)
-      bloomPolicyCols(probe).foreach(_ => ())
-      policyLong(probe, "vacuum.retainVersions")
-      policyLong(probe, "vacuum.retainDays")
-      policyLong(probe, "optimize.targetBytes")
-      policyLong(probe, "mv.refreshEvery")
-    }
     // CREATE-time defaults are write defaults only: every file written
     // from here on physically carries the column, so no existence
     // default is ever needed for them
@@ -1716,17 +1715,23 @@ object Snapshot {
         s"create: DEFAULT on generated column $canon (its value is derived)")
       canon -> validateDefault(spark, canon, schemaAtCreate(canon).dataType, sql)._1
     }
-    val (sortBy0, sortRange0) = writeSortSpecOf(clusterBy, properties)
-    val files = writeTxnFiles(full, path, partitionCols,
-      sortBy = sortBy0, sortRange = sortRange0)
-    commitManifest(spark, path, Manifest(1L, partitionCols, ddl, files,
-      statsFor(spark, path, files, ddl, partitionCols),
+    val m = Manifest(1L, partitionCols, ddl, Nil,
       constraints = constraints,
       generatedCols = generatedCols,
       operation = "CREATE",
       clusterBy = clusterBy,
       properties = properties,
-      colDefault = normDefaults))
+      colDefault = normDefaults)
+    bloomPolicyCols(m).foreach(_ => ())
+    policyLong(m, "vacuum.retainVersions")
+    policyLong(m, "vacuum.retainDays")
+    policyLong(m, "optimize.targetBytes")
+    policyLong(m, "mv.refreshEvery")
+    // create-time constraints land IN the first commit (one atomic
+    // version — no window where the table exists unconstrained), after
+    // the write validates they resolve and hold on the initial data
+    val (files, stats) = writeUnder(spark, path, m, df, Declared)
+    commitManifest(spark, path, m.copy(files = files, stats = stats))
   }
 
   /** Set (upsert) and/or unset table properties as one metadata commit.
@@ -1760,7 +1765,7 @@ object Snapshot {
       policyLong(m.copy(properties = next), "vacuum.retainDays")
       policyLong(m.copy(properties = next), "optimize.targetBytes")
       policyLong(m.copy(properties = next), "mv.refreshEvery")
-      writeSortSpecOf(m.clusterBy, next)
+      writeSortSpec(m.copy(properties = next))
       Option.when(next != m.properties)(m.copy(
         operation = if (set.nonEmpty) "SET TBLPROPERTIES" else "UNSET TBLPROPERTIES",
         properties = next))
@@ -2530,18 +2535,14 @@ object Snapshot {
     * write. With no CLUSTER BY declared the policy is a validated
     * no-op until keys are declared.
     */
-  private[graft] def writeSortSpecOf(clusterBy: Seq[String],
-                                     properties: Map[String, String]): (Seq[String], Boolean) =
-    properties.get("graft.write.sorted").map(_.trim.toLowerCase) match {
+  private def writeSortSpec(m: Manifest): (Seq[String], Boolean) =
+    m.properties.get("graft.write.sorted").map(_.trim.toLowerCase) match {
       case None | Some("none") | Some("") => (Nil, false)
-      case Some("local") => (clusterBy, false)
-      case Some("range") => (clusterBy, true)
+      case Some("local") => (m.clusterBy, false)
+      case Some("range") => (m.clusterBy, true)
       case Some(other) => throw new IllegalArgumentException(
         s"table property graft.write.sorted must be none|local|range, got '$other'")
     }
-
-  private[graft] def writeSortSpec(m: Manifest): (Seq[String], Boolean) =
-    writeSortSpecOf(m.clusterBy, m.properties)
 
   /** An engine policy key, read from table properties: `graft.<name>`. */
   private[graft] def policyProp(m: Manifest, name: String): Option[String] =
@@ -2650,19 +2651,12 @@ object Snapshot {
       }
     }
     val m0 = latest(spark, path)
-    resolveDdl(m0) // fail fast before any data lands
+    val ddl0 = resolveDdl(m0) // fail fast before any data lands
     if (!guard(m0)) return None
-    // derive generated columns BEFORE stats: the written files carry
-    // them, so their stats (and partition pseudo-stats) must too, or
-    // the new files would be unprunable on the partition column
-    val full = withGenerated(df, m0.generatedCols)
-    val (sortBy0, sortRange0) = writeSortSpec(m0)
-    val files = writeTxnFiles(full, path, m0.partitionCols, m0.colMap,
-      withNotNullChecks(m0.constraints, m0.schemaDdl),
-      sortBy = sortBy0, sortRange = sortRange0)
-    // the batch's own schema covers exactly the new files' columns, so
-    // stats are computed once and reused across commit retries
-    val newStats = statsFor(spark, path, files, StructType(cleanFields(full.schema)).toDDL, m0.partitionCols, m0.colMap)
+    // written under m0's layout and the evolved schema, so the stats
+    // cover every column the batch brings; they are computed once and
+    // reused across commit retries
+    val (files, newStats) = writeUnder(spark, path, m0.copy(schemaDdl = ddl0), df)
     def onto(m: Manifest): Manifest = {
       // the txn files were written under m0's PHYSICAL names; a rebase
       // target whose column mapping differs (a concurrent rename, or a
@@ -2684,7 +2678,8 @@ object Snapshot {
       // frame: a new constraint may legitimately reference a GENERATED
       // partition column, which `df` does not carry yet.
       val newConstraints = m.constraints.filter { case (k, p) => !m0.constraints.get(k).contains(p) }
-      if (newConstraints.nonEmpty) checkConstraints(full, newConstraints)
+      if (newConstraints.nonEmpty)
+        checkConstraints(withGenerated(df, m0.generatedCols), newConstraints)
       finish(m.copy(schemaDdl = ddl, files = m.files ++ files, stats = m.stats ++ newStats,
         operation = "APPEND"))
     }
@@ -2979,16 +2974,15 @@ object Snapshot {
     * manifest rename.
     */
   def overwrite(spark: SparkSession, path: String, df: DataFrame): Long =
-    SmallOp(spark, Nil, Seq(df))(overwriteWith(spark, path, df, identity))
+    SmallOp(spark, Nil, Seq(df))(overwriteWith(spark, path, latest(spark, path), df, identity))
 
   /** The one full-rewrite body under [[overwrite]], [[overwriteBatch]]
-    * and [[overwritePartitioned]]: `layout` (partition columns,
-    * generated columns) replaces the table's own when given.
+    * and [[overwritePartitioned]], pinned to `m`: `layout` (partition
+    * columns, generated columns) replaces the table's own when given.
     */
-  private def overwriteWith(spark: SparkSession, path: String, df: DataFrame,
+  private def overwriteWith(spark: SparkSession, path: String, m: Manifest, df: DataFrame,
                             finish: Manifest => Manifest,
                             layout: Option[(Seq[String], Map[String, String])] = None): Long = {
-    val m = latest(spark, path)
     val (partitionCols, generatedCols) = layout.getOrElse((m.partitionCols, m.generatedCols))
     // an overwrite keeps (or swaps in) the generated partition columns:
     // the replacement derives them like any other load
@@ -3005,10 +2999,6 @@ object Snapshot {
     val ddl = StructType(cleanFields(full.schema).map { f =>
       f.copy(nullable = !prior.fields.find(_.name == f.name).exists(!_.nullable))
     }).toDDL
-    val (sortBy1, sortRange1) = writeSortSpec(m)
-    val files = writeTxnFiles(full, path, partitionCols,
-      constraints = withNotNullChecks(m.constraints, ddl),
-      sortBy = sortBy1, sortRange = sortRange1)
     // streamBatch watermarks survive an overwrite: a foreachBatch
     // redelivery after a full rewrite must still be recognized as a
     // duplicate, or appendBatch's exactly-once contract breaks.
@@ -3016,21 +3006,21 @@ object Snapshot {
     // mapping resets too — every live file is new and written under
     // the current logical names, so physical == logical again (and no
     // dropped column can resurrect: its files left the live set).
-    commitManifest(spark, path, finish(
-      m.copy(version = m.version + 1, operation = "OVERWRITE",
-        schemaDdl = ddl, files = files,
-        stats = statsFor(spark, path, files, ddl, partitionCols),
-        partitionCols = partitionCols, generatedCols = generatedCols,
-        // clustering keys survive an overwrite only while their
-        // columns do (and are not partition columns of the new layout)
-        // — a replaced schema must not strand a policy the next
-        // OPTIMIZE cannot resolve
-        clusterBy = m.clusterBy.filter(c =>
-          full.columns.contains(c) && !partitionCols.contains(c)),
-        dvs = Map.empty, colMap = Map.empty, retired = Nil,
-        // bloom refs belong to the replaced files: keeping them would
-        // hold their sidecar dirs live in vacuum forever
-        blooms = Map.empty)))
+    val next = m.copy(version = m.version + 1, operation = "OVERWRITE",
+      schemaDdl = ddl, files = Nil, stats = Map.empty,
+      partitionCols = partitionCols, generatedCols = generatedCols,
+      // clustering keys survive an overwrite only while their
+      // columns do (and are not partition columns of the new layout)
+      // — a replaced schema must not strand a policy the next
+      // OPTIMIZE cannot resolve
+      clusterBy = m.clusterBy.filter(c =>
+        full.columns.contains(c) && !partitionCols.contains(c)),
+      dvs = Map.empty, colMap = Map.empty, retired = Nil,
+      // bloom refs belong to the replaced files: keeping them would
+      // hold their sidecar dirs live in vacuum forever
+      blooms = Map.empty)
+    val (files, stats) = writeUnder(spark, path, next, df)
+    commitManifest(spark, path, finish(next.copy(files = files, stats = stats)))
   }
 
   /** Full rewrite that also CHANGES THE PARTITION LAYOUT — partition
@@ -3047,7 +3037,8 @@ object Snapshot {
                            partitionCols: Seq[String],
                            generatedCols: Map[String, String] = Map.empty): Long =
     SmallOp(spark, Nil, Seq(df))(
-      overwriteWith(spark, path, df, identity, Some((partitionCols, generatedCols))))
+      overwriteWith(spark, path, latest(spark, path), df, identity,
+        Some((partitionCols, generatedCols))))
 
   /** Exactly-once micro-batch OVERWRITE — the full-rewrite twin of
     * [[appendBatch]], for incremental consumers whose publish step
@@ -3058,9 +3049,11 @@ object Snapshot {
     */
   def overwriteBatch(spark: SparkSession, path: String, df: DataFrame,
                      appId: String, batchId: Long): Boolean = {
+    // the duplicate check reads the manifest the rewrite commits
+    // against: a redelivery landing after it conflicts the commit
     val m = latest(spark, path)
     if (m.streamBatch.get(appId).exists(_ >= batchId)) return false
-    SmallOp(spark, Nil, Seq(df))(overwriteWith(spark, path, df,
+    SmallOp(spark, Nil, Seq(df))(overwriteWith(spark, path, m, df,
       mNew => mNew.copy(streamBatch = mNew.streamBatch + (appId -> batchId))))
     true
   }
@@ -3073,39 +3066,11 @@ object Snapshot {
   def replacePartitions(spark: SparkSession, path: String, replacement: DataFrame,
                         dropOld: Map[String, String] => Boolean): Long =
     SmallOp(spark, Nil, Seq(replacement)) {
-      replacePartitionsOn(spark, path,
-        latest(spark, path),
-        replacement, dropOld)
+      val m = latest(spark, path)
+      require(m.partitionCols.nonEmpty, "replacePartitions needs a partitioned snapshot table")
+      swapFilesOn(spark, path, m, replacement,
+        f => dropOld(partitionValues(m.partitionCols, f)), "REPLACE PARTITIONS")
     }
-
-  /** [[replacePartitions]] against a CALLER-PINNED manifest: the merge
-    * family derives its replacement from the files of the manifest it
-    * read, so the commit must be versioned against THAT manifest — a
-    * commit landing in between then version-conflicts and refuses,
-    * instead of the replacement (derived without the newcomer's rows)
-    * silently discarding it.
-    */
-  private[graft] def replacePartitionsOn(spark: SparkSession, path: String, m: Manifest,
-                                         replacement: DataFrame,
-                                         dropOld: Map[String, String] => Boolean,
-                                         op: String = "REPLACE PARTITIONS",
-                                         finish: Manifest => Manifest = identity): Long = {
-    require(m.partitionCols.nonEmpty, "replacePartitions needs a partitioned snapshot table")
-    val (sortBy3, sortRange3) = writeSortSpec(m)
-    val newFiles = writeTxnFiles(replacement, path, m.partitionCols, m.colMap,
-      withNotNullChecks(m.constraints, m.schemaDdl), m.generatedCols,
-      sortBy = sortBy3, sortRange = sortRange3)
-    val newParts = newFiles.map(partitionValues(m.partitionCols, _)).toSet
-    val kept = m.files.filterNot { f =>
-      val pv = partitionValues(m.partitionCols, f)
-      dropOld(pv) || newParts.contains(pv)
-    }
-    commitManifest(spark, path, finish(m.copy(version = m.version + 1, operation = op,
-      files = kept ++ newFiles,
-      stats = m.stats.view.filterKeys(kept.toSet).toMap ++
-        statsFor(spark, path, newFiles, m.schemaDdl, m.partitionCols, m.colMap),
-      dvs = m.dvs.view.filterKeys(kept.toSet).toMap)))
-  }
 
   /** K3 partition-restricted MERGE-by-id, snapshot form. Unlike the raw
     * writer there is NO read-own-overwrite hazard and no materialization:
@@ -3137,17 +3102,14 @@ object Snapshot {
     val m = latest(spark, path)
     require(m.partitionCols == partitionCols,
       s"snapshot table is partitioned by ${m.partitionCols}, not $partitionCols")
-    if (partitionCols.isEmpty) {
-      // UNPARTITIONED tier: no restriction possible — the merge is a
-      // whole-table rewrite, committed against the pinned manifest so
-      // a concurrent commit conflicts instead of being discarded.
-      // (A table big enough for this to hurt should be partitioned;
-      // the tier exists so small dimension tables merge too.)
-      val merged = Writers.mergeById(readFiles(spark, path, m), updates, idCol)
-      return replaceWholeTableOn(spark, path, m, merged)
-    }
-    val (affectedRaw, affectedFiles) = affectedPartitions(spark, m, updates, partitionCols)
-    if (assertIdsLocal) {
+    // UNPARTITIONED tier: no restriction possible — the merge is a
+    // whole-table rewrite. (A table big enough for this to hurt should
+    // be partitioned; the tier exists so small dimension tables merge
+    // too.)
+    val affectedFiles =
+      if (partitionCols.isEmpty) m.files
+      else affectedPartitions(spark, m, updates, partitionCols)
+    if (assertIdsLocal && partitionCols.nonEmpty) {
       // the moved-id probe scans only unaffected files whose manifest
       // id-range OVERLAPS the batch's ids — on a table whose ids are
       // time-or-range clustered (the common landing shape) the probe
@@ -3170,63 +3132,32 @@ object Snapshot {
           s"(id does not embed ${partitionCols.mkString("(", ", ", ")")}); " +
           s"e.g. ${strays.mkString(", ")}")
     }
-    val affected = readFiles(spark, path, m, Some(affectedFiles))
-    val merged = Writers.mergeById(affected, updates, idCol)
-    replacePartitionsOn(spark, path, m, merged, dropOld = affectedRaw.contains,
-      op = "MERGE")
+    val merged = Writers.mergeById(readFiles(spark, path, m, Some(affectedFiles)), updates, idCol)
+    swapFilesOn(spark, path, m, merged, affectedFiles.toSet, "MERGE")
   }
 
-  /** Whole-table replacement against a CALLER-PINNED manifest — the
-    * unpartitioned merge tier: every live file drops and the
-    * replacement lands constraint-checked with generated columns
-    * re-derived, versioned against THAT manifest so ANY concurrent
-    * commit conflicts and refuses (the same contract as the
-    * partitioned merge's replacePartitionsOn — a rebase here would
-    * silently admit rows the merge never read, or duplicate ids a
-    * concurrent append landed).
+  /** The ONE pinned file swap: `replacement` is written under `m`, and
+    * the commit drops every live file `drop` selects — on a partitioned
+    * table also every file of a partition tuple the replacement wrote —
+    * keeping the stats, vectors and bloom refs of the rest. Versioned
+    * against `m` itself, so ANY concurrent commit conflicts and refuses:
+    * the replacement was derived from `m`'s rows, and a rebase would
+    * silently discard the rows a newcomer landed (or duplicate ids a
+    * concurrent append wrote). Merges, partition replaces, replica
+    * windows and MV states commit here; appends, DML, compaction and
+    * the vector fold rebase instead ([[commitRebasing]]).
     */
-  private[graft] def replaceWholeTableOn(spark: SparkSession, path: String, m: Manifest,
-                                         replacement: DataFrame,
-                                         op: String = "MERGE",
-                                         finish: Manifest => Manifest = identity): Long = {
-    val (sortBy4, sortRange4) = writeSortSpec(m)
-    val newFiles = writeTxnFiles(replacement, path, Nil, m.colMap,
-      withNotNullChecks(m.constraints, m.schemaDdl), m.generatedCols,
-      sortBy = sortBy4, sortRange = sortRange4)
+  private[graft] def swapFilesOn(spark: SparkSession, path: String, m: Manifest,
+                                 replacement: DataFrame, drop: String => Boolean, op: String,
+                                 finish: Manifest => Manifest = identity): Long = {
+    val (added, addedStats) = writeUnder(spark, path, m, replacement)
+    val written = added.map(partitionValues(m.partitionCols, _)).toSet
+    val kept = m.files.filterNot(f => drop(f) ||
+      (m.partitionCols.nonEmpty && written.contains(partitionValues(m.partitionCols, f))))
     commitManifest(spark, path, finish(m.copy(version = m.version + 1, operation = op,
-      files = newFiles,
-      stats = statsFor(spark, path, newFiles, m.schemaDdl, Nil, m.colMap),
-      dvs = Map.empty, blooms = Map.empty)))
-  }
-
-  /** PARTIAL rewrite commit: `retained` live files of `m` survive
-    * byte-identical (their stats and bloom refs ride along), the rest
-    * are replaced by `replacement`'s files — the O(changed files) write
-    * path for state folds whose delta provably cannot touch the
-    * retained files (the caller proves it, typically via manifest-stats
-    * pruning on the fold keys). Unpartitioned, DV-free tables only:
-    * retained DV bookkeeping is the caller's problem and no current
-    * caller has one.
-    */
-  private[graft] def replaceFilesOn(spark: SparkSession, path: String, m: Manifest,
-                                    retained: Seq[String], replacement: DataFrame,
-                                    op: String = "MERGE",
-                                    finish: Manifest => Manifest = identity): Long = {
-    require(m.partitionCols.isEmpty, "replaceFilesOn: unpartitioned tables only")
-    require(m.dvs.isEmpty, "replaceFilesOn: tables with deletion vectors unsupported")
-    val keepSet = retained.toSet
-    require(keepSet.subsetOf(m.files.toSet),
-      "replaceFilesOn: retained files must be live in the pinned manifest")
-    val (sortBy5, sortRange5) = writeSortSpec(m)
-    val newFiles = writeTxnFiles(replacement, path, Nil, m.colMap,
-      withNotNullChecks(m.constraints, m.schemaDdl), m.generatedCols,
-      sortBy = sortBy5, sortRange = sortRange5)
-    commitManifest(spark, path, finish(m.copy(version = m.version + 1, operation = op,
-      files = (retained ++ newFiles).sorted,
-      stats = m.stats.view.filterKeys(keepSet).toMap ++
-        statsFor(spark, path, newFiles, m.schemaDdl, Nil, m.colMap),
-      dvs = Map.empty,
-      blooms = m.blooms.view.filterKeys(keepSet).toMap)))
+      files = kept ++ added,
+      stats = m.stats.view.filterKeys(kept.toSet).toMap ++ addedStats,
+      dvs = m.dvs.view.filterKeys(kept.toSet).toMap)))
   }
 
   /** Metadata-only commit against a CALLER-PINNED manifest: no file
@@ -3239,16 +3170,16 @@ object Snapshot {
                                   op: String)(finish: Manifest => Manifest): Long =
     commitManifest(spark, path, finish(m.copy(version = m.version + 1, operation = op)))
 
-  /** Partition restriction shared by the merge family: the partition
-    * value-string TUPLES (and their live files) whose typed values
-    * appear in `source` — manifest value strings cast to each partition
+  /** Partition restriction shared by the merge family: the live files
+    * of the partition value-string TUPLES whose typed values appear in
+    * `source` — manifest value strings cast to each partition
     * column's type, null-safely semi-joined against the source's
     * distinct tuples. One job over tuple-count-sized data, never the
     * table.
     */
   private[graft] def affectedPartitions(spark: SparkSession, m: Manifest,
                                         source: DataFrame, partitionCols: Seq[String])
-      : (Set[Map[String, String]], Seq[String]) = {
+      : Seq[String] = {
     require(m.partitionCols == partitionCols,
       s"snapshot table is partitioned by ${m.partitionCols}, not $partitionCols")
     require(partitionCols.nonEmpty, "merge needs a partitioned snapshot table")
@@ -3276,8 +3207,7 @@ object Snapshot {
       .select(rawCols.map(col): _*).collect()
       .map(r => partitionCols.indices.map(i => partitionCols(i) -> r.getString(i)).toMap)
       .toSet
-    (affectedRaw, m.files.filter(f =>
-      affectedRaw.contains(partitionValues(m.partitionCols, f))))
+    m.files.filter(f => affectedRaw.contains(partitionValues(m.partitionCols, f)))
   }
 
   /** One WHEN arm of a generalized MERGE: `cond` is the arm's AND
@@ -3370,10 +3300,9 @@ object Snapshot {
     // unpartitioned targets take the whole-table tier; partitioned ones
     // swap only the source's tuples — UNLESS a BY SOURCE arm speaks
     // about every target row, which pulls the whole table into scope
-    val restrict = bySource.isEmpty && pCols.nonEmpty
-    val (affectedRaw, affectedFiles) =
-      if (restrict) affectedPartitions(spark, m, source, pCols)
-      else (Set.empty[Map[String, String]], m.files)
+    val affectedFiles =
+      if (bySource.isEmpty && pCols.nonEmpty) affectedPartitions(spark, m, source, pCols)
+      else m.files
     val t = readFiles(spark, path, m, Some(affectedFiles)).alias(targetAlias)
     val s = source.alias(sourceAlias)
     // composite keys join on EQUALITY per column (not null-safe: a
@@ -3432,12 +3361,8 @@ object Snapshot {
         }
         Some(sOnly.where(iIdx >= 0).select(cols: _*))
       }
-    val replacement = inserts.fold(survivors)(survivors.unionByName(_))
-    if (pCols.isEmpty) replaceWholeTableOn(spark, path, m, replacement)
-    else if (restrict)
-      replacePartitionsOn(spark, path, m, replacement, dropOld = affectedRaw.contains,
-        op = "MERGE")
-    else replacePartitionsOn(spark, path, m, replacement, dropOld = _ => true, op = "MERGE")
+    swapFilesOn(spark, path, m, inserts.fold(survivors)(survivors.unionByName(_)),
+      affectedFiles.toSet, "MERGE")
   }
 
   // --------------------------------------------------- row-level DML
@@ -3679,7 +3604,7 @@ object Snapshot {
             _.join(keys, on, "left_anti"),
             df => (df.join(keys, on, "left"), col(InKeyCol).isNotNull))
       }
-      // SET values are evaluated once per tier (two writeTxnFiles jobs);
+      // SET values are evaluated once per tier (two write jobs);
       // pin their clock too, so both tiers stamp the same instant
       val set = set0.map(_.map { case (k, v) => k -> pinDmlExpr(spark, m, verb, v) })
       val candidates = bound.candidates
@@ -3719,19 +3644,18 @@ object Snapshot {
         else matched.partition { case (f, n) => liveRowsOf(m, f).contains(n) }
       val (dvTier, rewriteTier) = dvTierSplit(m, rest, dvMaxFraction)
       val rewrite = rewriteTier.keys.toSeq.sorted
-      val (checks, generated) =
-        if (set.isEmpty) (Map.empty[String, String], Map.empty[String, String])
-        else (withNotNullChecks(m.constraints, m.schemaDdl), m.generatedCols)
-      def write(df: DataFrame): Seq[String] =
-        writeTxnFiles(df, path, m.partitionCols, m.colMap, checks, generated,
-          sortBy = writeSortSpec(m)._1, sortRange = writeSortSpec(m)._2)
+      // an UPDATE writes new values; a DELETE only drops rows that
+      // were validated when they were written
+      def write(df: DataFrame) = writeUnder(spark, path, m, df,
+        if (set.isEmpty) SortOnly else Constructive)
+      val noFiles = (Seq.empty[String], Map.empty[String, SnapshotStats.FileStats])
       def assigned(df: DataFrame, hit: Column, s: Map[String, Column]): DataFrame =
         df.select(schema.fields.toSeq.map { f =>
           s.get(f.name).fold(col(f.name))(v =>
             when(hit, v.cast(f.dataType)).otherwise(col(f.name))).as(f.name)
         }: _*)
       val rewritten =
-        if (rewrite.isEmpty) Nil
+        if (rewrite.isEmpty) noFiles
         else {
           val rows = readFiles(spark, path, m, Some(rewrite))
           write(set.fold(bound.keep(rows)) { s =>
@@ -3740,7 +3664,7 @@ object Snapshot {
           })
         }
       val (dvNew, appended) =
-        if (dvTier.isEmpty) (Map.empty[String, DvRef], Nil)
+        if (dvTier.isEmpty) (Map.empty[String, DvRef], noFiles)
         else {
           // the vector and an UPDATE's appended rows read the fused
           // cache, narrowed to the tier's files; without it one scan of
@@ -3755,16 +3679,13 @@ object Snapshot {
               if (set.isDefined) hold(r) else r
           }
           (writeDvFrom(spark, path, m, rows, dvTier),
-            set.fold(Seq.empty[String])(s => write(assigned(rows, lit(true), s))))
+            set.fold(noFiles)(s => write(assigned(rows, lit(true), s))))
         }
-      val added = rewritten ++ appended
       val committed = commitRebasing(spark, path, m,
         drop = whole.keySet ++ rewrite,
         touched = dvTier.keySet,
-        addFiles = added,
-        addStats =
-          if (added.isEmpty) Map.empty
-          else statsFor(spark, path, added, m.schemaDdl, m.partitionCols, m.colMap),
+        addFiles = rewritten._1 ++ appended._1,
+        addStats = rewritten._2 ++ appended._2,
         addDvs = dvNew, op = if (set.isEmpty) "DELETE" else "UPDATE")
       if (dvNew.isEmpty) committed else maybeFoldDense(spark, path, committed)
     } finally held.foreach(_.unpersist())
@@ -4010,7 +3931,11 @@ object Snapshot {
           .sortWithinPartitions((pCols.map(col) :+ col("__z")): _*)
           .drop("__z")
       }
-    replaceFiles(spark, path, packed, markedFiles.toSet)
+    // the rewrite rebases from `m`, the manifest the slice was read
+    // from: a commit that changed a marked file since refuses it
+    val (files, stats) = writeUnder(spark, path, m, packed, Verbatim)
+    commitRebasing(spark, path, m, markedFiles.toSet, Set.empty, files, stats, Map.empty,
+      op = "OPTIMIZE")
     latestManifest(spark, path).foreach(policyBloomRefresh(spark, path, _))
     marked.keys.toSeq.map { pv =>
       if (pCols.isEmpty) ""
@@ -4064,26 +3989,6 @@ object Snapshot {
   private def policyBloomRefresh(spark: SparkSession, path: String, m: Manifest): Unit =
     bloomPolicyCols(m).foreach(cols => bloomIndex(spark, path, cols))
 
-  /** Swap EXACTLY `drop` (live files) for `replacement`'s rewrite in
-    * one atomic commit — the file-precise core under [[compact]] (and,
-    * pinned to a given manifest, [[foldDvs]]). The DML verbs commit
-    * their rewrite tier themselves, next to the deletion vectors,
-    * through [[commitRebasing]].
-    */
-  private def replaceFiles(spark: SparkSession, path: String, replacement: DataFrame,
-                           drop: Set[String]): Long = {
-    val m = latest(spark, path)
-    replaceFilesOn(spark, path, m, replacement, drop)
-  }
-
-  private def replaceFilesOn(spark: SparkSession, path: String, m: Manifest,
-                             replacement: DataFrame, drop: Set[String]): Long = {
-    val newFiles = writeTxnFiles(replacement, path, m.partitionCols, m.colMap)
-    commitRebasing(spark, path, m, drop, Set.empty, newFiles,
-      statsFor(spark, path, newFiles, m.schemaDdl, m.partitionCols, m.colMap), Map.empty,
-      op = "OPTIMIZE")
-  }
-
   /** Build per-file bloom-filter sidecars over `cols` for every live
     * file not already indexed on exactly that column set, and commit
     * the refs ([[BloomRef]]; see [[SnapshotBloom]] for what blooms buy
@@ -4132,7 +4037,10 @@ object Snapshot {
     if (targets.isEmpty) return Nil
     // the read core applies the vectors, so the rewrite holds exactly
     // the live rows and the new files carry no vector by construction
-    replaceFilesOn(spark, path, m, readFiles(spark, path, m, Some(targets)), targets.toSet)
+    val (files, stats) =
+      writeUnder(spark, path, m, readFiles(spark, path, m, Some(targets)), Verbatim)
+    commitRebasing(spark, path, m, targets.toSet, Set.empty, files, stats, Map.empty,
+      op = "OPTIMIZE")
     targets
   }
 

@@ -168,13 +168,8 @@ object FeedConsumer {
       case None =>
         // bootstrap: the latest source state wholesale, watermark in
         // the same commit
-        val full = Snapshot.readVersion(spark, srcPath, vNow)
-        if (dstM.partitionCols.isEmpty)
-          Snapshot.replaceWholeTableOn(spark, dstPath, dstM, full,
-            op = "REPLICATE", finish = stamp)
-        else
-          Snapshot.replacePartitionsOn(spark, dstPath, dstM, full,
-            dropOld = _ => true, op = "REPLICATE", finish = stamp)
+        Snapshot.swapFilesOn(spark, dstPath, dstM, Snapshot.readVersion(spark, srcPath, vNow),
+          _ => true, "REPLICATE", stamp)
       case Some(v) =>
         // the net feed is consumed several times (inserts, deletes, key
         // set, partition restriction) and is itself a double exceptAll
@@ -192,26 +187,23 @@ object FeedConsumer {
           if (feed.isEmpty)
             // compaction-only / net-empty window: watermark alone
             Snapshot.commitMetaOn(spark, dstPath, dstM, "REPLICATE")(stamp)
-          else if (dstM.partitionCols.isEmpty)
+          else {
             // read the PINNED manifest, not "latest at call time": the
             // diff must apply to exactly the state the watermark vouches
             // for (the commit's version check backstops, but the pinned
-            // read is the contract)
-            Snapshot.replaceWholeTableOn(spark, dstPath, dstM,
-              applied(Snapshot.readManifestFiles(spark, dstPath, dstM, dstM.files)),
-              op = "REPLICATE", finish = stamp)
-          else {
-            // `affected` = feed partitions the replica ALREADY HAS (their
-            // files are diffed and rewritten). A non-empty feed whose
+            // read is the contract). An unpartitioned replica diffs all
+            // its files; a partitioned one the files of the feed
+            // partitions it ALREADY HAS. A non-empty feed whose
             // partitions are all NEW to the replica — the nightly
-            // append of a fresh date partition — has an empty affected
-            // set but must still apply: the inserts ride `applied` as
+            // append of a fresh date partition — has no affected files
+            // but must still apply: the inserts ride `applied` as
             // brand-new partition files, dropping nothing.
-            val (affected, affectedFiles) =
-              Snapshot.affectedPartitions(spark, dstM, feed, dstM.partitionCols)
-            val slice = Snapshot.readManifestFiles(spark, dstPath, dstM, affectedFiles)
-            Snapshot.replacePartitionsOn(spark, dstPath, dstM, applied(slice),
-              dropOld = affected.contains, op = "REPLICATE", finish = stamp)
+            val affected =
+              if (dstM.partitionCols.isEmpty) dstM.files
+              else Snapshot.affectedPartitions(spark, dstM, feed, dstM.partitionCols)
+            Snapshot.swapFilesOn(spark, dstPath, dstM,
+              applied(Snapshot.readManifestFiles(spark, dstPath, dstM, affected)),
+              affected.toSet, "REPLICATE", stamp)
           }
         } finally feed.unpersist()
     }

@@ -49,6 +49,37 @@ class JobBudgetSpec extends SparkSpec {
       Seq((0 until 900).filter(_ != 7).map(i => (i % 97).toLong).sum, 3, 3))
   }
 
+  test("a DELETE rewrite and a compaction do not re-validate rows: constraints add no job") {
+    // the same table twice, once with a CHECK constraint and NOT NULL
+    // columns (id, v), once without: an append validates (one job per
+    // check), a rewrite-tier delete and a compaction keep rows that were
+    // validated when they were written, so they launch the same jobs
+    def run(constrained: Boolean): Map[String, Int] = {
+      val dir = Files.createTempDirectory("graft-budget-modes").toString + "/t"
+      Snapshot.create(spark, dir, rows(0 until 600).repartition(4),
+        constraints = if (constrained) Map("v_small" -> "v < 100") else Map.empty,
+        keepNullability = constrained)
+      val m = Snapshot.latestManifest(spark, dir).get
+      assert(m.constraints.nonEmpty == constrained)
+      assert(m.schemaDdl.contains("NOT NULL") == constrained)
+      // repartitioned: checks over a local relation run on the driver, jobless
+      val append = jobsOf(Snapshot.append(spark, dir, rows(600 until 650).repartition(1)))
+      val delete = jobsOf(Snapshot.delete(spark, dir, col("v") === 5L, dvMaxFraction = 0.0))
+      val after = Snapshot.latestManifest(spark, dir).get
+      assert(after.operation == "DELETE" && after.dvs.isEmpty, "the delete must take the rewrite tier")
+      val compact = jobsOf(Snapshot.compact(spark, dir, minFiles = 2))
+      assert(Snapshot.latestManifest(spark, dir).get.operation == "OPTIMIZE")
+      assert(Snapshot.read(spark, dir).count() == (0 until 650).count(_ % 97 != 5))
+      Map("append" -> append, "delete" -> delete, "compact" -> compact)
+    }
+    val plain = run(constrained = false)
+    val checked = run(constrained = true)
+    info(s"plain=$plain constrained=$checked")
+    assert(checked("append") > plain("append"), "an append validates its rows")
+    assert(checked("delete") == plain("delete"), "a DELETE rewrite re-validates nothing")
+    assert(checked("compact") == plain("compact"), "a compaction re-validates nothing")
+  }
+
   test("MV create, SUM- and MIN-view refreshes and a feed drain stay within their job budgets") {
     val root = Files.createTempDirectory("graft-budget-mv").toString
     val src = s"$root/src"

@@ -609,6 +609,28 @@ class SnapshotStatsSpec extends SparkSpec {
     assert(rows2(Snapshot.read(spark, dir)) == before.filterNot(_._1 < 50))
   }
 
+  test("a vector-tier delete landing during a compaction refuses it; the deleted rows stay deleted") {
+    // the compaction packs the rows it read: a concurrent delete that
+    // only adds a deletion vector to a marked file must still refuse
+    // the packed rewrite, or the deleted rows come back
+    val dir = tmp("compact-dv-race")
+    def batch(r: Range) = r.map(i => (i.toLong, i.toLong)).toDF("id", "w").repartition(1)
+    Snapshot.create(spark, dir, batch(0 until 100))
+    (1 to 3).foreach(k => Snapshot.append(spark, dir, batch(k * 100 until k * 100 + 100)))
+    val before = rows2(Snapshot.read(spark, dir))
+    var injected = false
+    Snapshot.faultHook = stage => if (stage == "data-files-written" && !injected) {
+      injected = true
+      Snapshot.delete(spark, dir, col("id") === 7L, dvMaxFraction = 1.0)
+    }
+    try intercept[Snapshot.CommitConflictException] {
+      Snapshot.compact(spark, dir, minFiles = 2)
+    } finally Snapshot.faultHook = _ => ()
+    val m = Snapshot.latestManifest(spark, dir).get
+    assert(m.operation == "DELETE" && m.dvs.size == 1, "the delete took the vector tier")
+    assert(rows2(Snapshot.read(spark, dir)) == before.filterNot(_._1 == 7L))
+  }
+
   private def rows2(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
     df.select("id", "w").as[(Long, Long)].collect().toSet
 
