@@ -64,7 +64,7 @@ object CommitGroup {
           // slot then resolves to deletion on next touch), then clean
           // our staged files eagerly
           try {
-            Snapshot.publishGroupMarker(spark, marker, "abort")
+            Snapshot.publishGroupMarker(spark, marker, ManifestCodec.AbortMarker)
             Snapshot.groupMarker.set(None)
             writes.foreach(w => Snapshot.latestVersion(spark, w.path))
           } catch { case _: Throwable => () }
@@ -76,7 +76,7 @@ object CommitGroup {
       // can later pin a CONSISTENT multi-table read to this tick
       // (`VERSION AS OF 'tick:<marker>'`, [[readAt]]).
       val committed = Snapshot.publishGroupMarker(spark, marker,
-        commitContent(Snapshot.groupStagedMembers.get().toList))
+        ManifestCodec.commitMarker(Snapshot.groupStagedMembers.get().toList))
       if (!committed) throw new Snapshot.CommitConflictException(
         s"commit group $id was aborted by a concurrent arbiter " +
           "(staging outlived the pending grace window); nothing published")
@@ -92,15 +92,6 @@ object CommitGroup {
     }
   }
 
-  private def commitContent(members: List[(String, Long)]): String = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.createObjectNode()
-    node.put("state", "commit")
-    val ms = node.putObject("members")
-    members.foreach { case (p, v) => ms.put(p, v) }
-    mapper.writeValueAsString(node)
-  }
-
   // --------------------------------------------------- tick-pinned reads
 
   /** The committed tick's member map: qualified table root → the
@@ -112,18 +103,10 @@ object CommitGroup {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val p = new org.apache.hadoop.fs.Path(marker)
     require(fs.exists(p), s"no such commit-group marker: $marker")
-    val in = fs.open(p)
-    val s = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim finally in.close()
-    require(s.startsWith("{"),
-      if (s == "commit") s"marker $marker records no member map (pre-tick format)"
-      else s"commit group at $marker did not commit (state: $s)")
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(s)
-    require(root.get("state").asText() == "commit",
-      s"commit group at $marker did not commit (state: ${root.get("state").asText()})")
-    import scala.jdk.CollectionConverters._
-    root.get("members").properties().asScala
-      .map(e => e.getKey -> e.getValue.asLong()).toMap
+    val g = ManifestCodec.decodeMarker(ManifestCodec.read(fs, p))
+    require(g.committed, s"commit group at $marker did not commit (state: ${g.state})")
+    g.members.getOrElse(throw new IllegalArgumentException(
+      s"marker $marker records no member map (pre-tick format)")).toMap
   }
 
   /** This table's version at the given tick. The table must be a tick

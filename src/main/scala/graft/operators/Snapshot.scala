@@ -1,6 +1,5 @@
 package graft.operators
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -361,19 +360,7 @@ object Snapshot {
   private[operators] def groupState(fs: FileSystem, marker: String): Option[Boolean] = {
     val p = new HPath(marker)
     if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val s = try new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim finally in.close()
-      // two content forms: the bare legacy word, and the JSON envelope
-      // carrying the tick's member map ({"state":"commit","members":…})
-      if (s.startsWith("{"))
-        Some(scala.util.Try {
-          val r = new ObjectMapper().readTree(s)
-          r.has("state") && r.get("state").asText() == "commit"
-        }.getOrElse(false))
-      else Some(s == "commit")
-    }
+    else Some(ManifestCodec.decodeMarker(ManifestCodec.read(fs, p)).committed)
   }
 
   /** Write a group marker ONCE through the commit guard (same
@@ -381,13 +368,11 @@ object Snapshot {
     * group's FINAL state — the winner's content decides.
     */
   private[operators] def publishGroupMarker(spark: SparkSession, marker: String,
-                                            state: String): Boolean = {
+                                            content: ManifestCodec.GroupMarker): Boolean = {
     val fs = fsFor(spark, marker)
     val dir = new HPath(marker).getParent
     if (!fs.exists(dir)) fs.mkdirs(dir)
-    val tmp = new HPath(dir, s".tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, false)
-    try out.write(state.getBytes("UTF-8")) finally out.close()
+    val tmp = ManifestCodec.stage(fs, dir, ManifestCodec.encodeMarker(content))
     val won =
       try commitGuard.publish(fs, dir.toString, tmp, new HPath(marker))
       catch { case e: Throwable => fs.delete(tmp, true); throw e }
@@ -410,16 +395,14 @@ object Snapshot {
     val grp = grpManifestPath(path, v)
     val (st, marker) = try {
       if (!fs.exists(grp)) return
-      val in = fs.open(grp)
-      val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-      val root = new ObjectMapper().readTree(bytes)
-      if (!root.has("group")) { fs.delete(grp, false); return } // malformed husk
-      val mk = root.get("group").asText()
+      val mk = ManifestCodec.groupOf(ManifestCodec.read(fs, grp)).getOrElse {
+        fs.delete(grp, false); return // malformed husk
+      }
       val state = groupState(fs, mk) match {
         case None =>
           val age = System.currentTimeMillis() - fs.getFileStatus(grp).getModificationTime
           if (age <= groupGraceMs(spark)) None // in-flight: leave pending
-          else Some(publishGroupMarker(spark, mk, "abort")) // arbitrate
+          else Some(publishGroupMarker(spark, mk, ManifestCodec.AbortMarker)) // arbitrate
         case s => s
       }
       (state, mk)
@@ -445,10 +428,7 @@ object Snapshot {
             // a substrate without cross-name commit serialization, a
             // plain commit stole the slot from a committed group — that
             // is a torn tick and must be LOUD, not silently mixed
-            val in = fs.open(target)
-            val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-            val root = new ObjectMapper().readTree(bytes)
-            if (!(root.has("group") && root.get("group").asText() == marker))
+            if (!ManifestCodec.groupOf(ManifestCodec.read(fs, target)).contains(marker))
               throw new IllegalStateException(
                 s"commit-group collision at $target: a plain commit occupies the slot " +
                   s"a COMMITTED group staged ($grp) — the substrate's commit guard does " +
@@ -520,11 +500,7 @@ object Snapshot {
       try {
         val p = lastPointerPath(path)
         if (!fs.exists(p)) None
-        else {
-          val in = fs.open(p)
-          val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-          scala.util.Try(new String(bytes, "UTF-8").trim.toLong).toOption
-        }
+        else new String(ManifestCodec.read(fs, p), "UTF-8").trim.toLongOption
       } catch { case _: Exception => None }
     hinted match {
       case Some(v) if fs.exists(manifestPath(path, v)) =>
@@ -555,36 +531,6 @@ object Snapshot {
   def manifest(spark: SparkSession, path: String, version: Long): Manifest =
     manifestFrom(fsFor(spark, path), path, version)
 
-  private def parseStats(root: com.fasterxml.jackson.databind.JsonNode): Map[String, SnapshotStats.FileStats] =
-    if (!root.has("stats")) Map.empty
-    else root.get("stats").properties().asScala.map { e =>
-      val n = e.getValue
-      val cols = if (!n.has("cols")) Map.empty[String, SnapshotStats.ColStats]
-      else n.get("cols").properties().asScala.map { ce =>
-        val c = ce.getValue
-        ce.getKey -> SnapshotStats.ColStats(
-          if (c.has("mn")) Some(c.get("mn").asText()) else None,
-          if (c.has("mx")) Some(c.get("mx").asText()) else None,
-          if (c.has("nulls")) Some(c.get("nulls").asLong()) else None,
-          c.has("tr") && c.get("tr").asBoolean())
-      }.toMap
-      e.getKey -> SnapshotStats.FileStats(n.get("rows").asLong(), cols,
-        if (n.has("bytes")) n.get("bytes").asLong() else 0L)
-    }.toMap
-
-  private def parseDvs(root: com.fasterxml.jackson.databind.JsonNode, field: String): Map[String, DvRef] =
-    if (!root.has(field)) Map.empty
-    else root.get(field).properties().asScala.map { e =>
-      e.getKey -> DvRef(e.getValue.get("file").asText(), e.getValue.get("rows").asLong())
-    }.toMap
-
-  private def parseBlooms(root: com.fasterxml.jackson.databind.JsonNode, field: String): Map[String, BloomRef] =
-    if (!root.has(field)) Map.empty
-    else root.get(field).properties().asScala.map { e =>
-      e.getKey -> BloomRef(e.getValue.get("file").asText(),
-        e.getValue.get("cols").elements().asScala.map(_.asText()).toSeq)
-    }.toMap
-
   /** Load one version: the boundary CHECKPOINT if vacuum wrote one
     * (the version's delta chain may have been reclaimed), else the
     * version's own manifest — replayed over its parent chain when it
@@ -594,81 +540,9 @@ object Snapshot {
     */
   private def manifestFrom(fs: FileSystem, path: String, version: Long): Manifest = {
     val ck = ckptPath(path, version)
-    val p = if (fs.exists(ck)) ck else manifestPath(path, version)
-    val in = fs.open(p)
-    val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-    val root = new ObjectMapper().readTree(bytes)
-    if (root.has("base"))
-      return applyDelta(manifestFrom(fs, path, root.get("base").asLong()), root)
-    Manifest(
-      root.get("version").asLong(),
-      root.get("partitionCols").elements().asScala.map(_.asText()).toSeq,
-      root.get("schemaDdl").asText(),
-      root.get("files").elements().asScala.map(_.asText()).toSeq,
-      parseStats(root),
-      if (!root.has("streamBatch")) Map.empty
-      else root.get("streamBatch").properties().asScala
-        .map(e => e.getKey -> e.getValue.asLong()).toMap,
-      if (root.has("committedAt")) root.get("committedAt").asLong() else 0L,
-      parseDvs(root, "dvs"),
-      parseBlooms(root, "blooms"),
-      parseColMap(root, "colMap"),
-      parseStrings(root, "retiredCols"),
-      parseColMap(root, "constraints"),
-      parseColMap(root, "generatedCols"),
-      if (root.has("operation")) root.get("operation").asText() else "",
-      parseStrings(root, "clusterBy"),
-      parseColMap(root, "properties"),
-      parseColMap(root, "externalRoots"),
-      parseLongMap(root, "tags"),
-      parseLongMap(root, "colNdv"),
-      parseColMap(root, "colDefault"),
-      parseColMap(root, "colExistsDefault"),
-      parseLongMap(root, "branches"),
-      parseColHist(root, "colHist"))
+    ManifestCodec.decode(ManifestCodec.read(fs, if (fs.exists(ck)) ck else manifestPath(path, version)),
+      manifestFrom(fs, path, _))
   }
-
-  private def parseColMap(root: com.fasterxml.jackson.databind.JsonNode, field: String): Map[String, String] =
-    if (!root.has(field)) Map.empty
-    else root.get(field).properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
-
-  private def parseLongMap(root: com.fasterxml.jackson.databind.JsonNode, field: String): Map[String, Long] =
-    if (!root.has(field)) Map.empty
-    else root.get(field).properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
-
-  private def parseStrings(root: com.fasterxml.jackson.databind.JsonNode, field: String): Seq[String] =
-    if (!root.has(field)) Nil
-    else root.get(field).elements().asScala.map(_.asText()).toSeq
-
-  private def putColHist(node: com.fasterxml.jackson.databind.node.ObjectNode,
-                         field: String, hist: Map[String, ColHist],
-                         explicitEmpty: Boolean = false): Unit =
-    if (hist.nonEmpty || explicitEmpty) {
-      val h = node.putObject(field)
-      hist.toSeq.sortBy(_._1).foreach { case (c, ch) =>
-        val n = h.putObject(c)
-        n.put("h", ch.height)
-        ch.exactMin.foreach(n.put("min", _))
-        ch.exactMax.foreach(n.put("max", _))
-        val bs = n.putArray("bins")
-        ch.bins.foreach { b =>
-          val a = bs.addArray(); a.add(b.lo); a.add(b.hi); a.add(b.ndv)
-        }
-      }
-    }
-
-  private def parseColHist(root: com.fasterxml.jackson.databind.JsonNode,
-                           field: String): Map[String, ColHist] =
-    if (!root.has(field)) Map.empty
-    else root.get(field).properties().asScala.map { e =>
-      val n = e.getValue
-      val bins = n.get("bins").elements().asScala.map { b =>
-        HistBin(b.get(0).asDouble(), b.get(1).asDouble(), b.get(2).asLong())
-      }.toSeq
-      e.getKey -> ColHist(n.get("h").asDouble(), bins,
-        if (n.has("min")) Some(n.get("min").asText()) else None,
-        if (n.has("max")) Some(n.get("max").asText()) else None)
-    }.toMap
 
   def latestManifest(spark: SparkSession, path: String): Option[Manifest] =
     latestVersion(spark, path).map(manifest(spark, path, _))
@@ -1255,288 +1129,6 @@ object Snapshot {
         f.copy(name = m.colMap.getOrElse(f.name, f.name)))), m.partitionCols)
   }
 
-  // ------------------------------------------- manifest serialization
-
-  private def putStats(node: com.fasterxml.jackson.databind.node.ObjectNode,
-                       stats: Map[String, SnapshotStats.FileStats]): Unit =
-    if (stats.nonEmpty) {
-      val st = node.putObject("stats")
-      stats.toSeq.sortBy(_._1).foreach { case (f, fs) =>
-        val fn = st.putObject(f)
-        fn.put("rows", fs.rows)
-        if (fs.bytes > 0L) fn.put("bytes", fs.bytes)
-        if (fs.cols.nonEmpty) {
-          val cn = fn.putObject("cols")
-          fs.cols.toSeq.sortBy(_._1).foreach { case (c, cs) =>
-            val n = cn.putObject(c)
-            cs.mn.foreach(n.put("mn", _))
-            cs.mx.foreach(n.put("mx", _))
-            cs.nulls.foreach(n.put("nulls", _))
-            if (cs.trunc) n.put("tr", true)
-          }
-        }
-      }
-    }
-
-  private def putDvs(node: com.fasterxml.jackson.databind.node.ObjectNode,
-                     field: String, dvs: Map[String, DvRef]): Unit =
-    if (dvs.nonEmpty) {
-      val dv = node.putObject(field)
-      dvs.toSeq.sortBy(_._1).foreach { case (f, r) =>
-        val n = dv.putObject(f); n.put("file", r.file); n.put("rows", r.rows)
-      }
-    }
-
-  private def putBlooms(node: com.fasterxml.jackson.databind.node.ObjectNode,
-                        field: String, blooms: Map[String, BloomRef]): Unit =
-    if (blooms.nonEmpty) {
-      val bl = node.putObject(field)
-      blooms.toSeq.sortBy(_._1).foreach { case (f, r) =>
-        val n = bl.putObject(f); n.put("file", r.file)
-        val cs = n.putArray("cols"); r.cols.foreach(cs.add)
-      }
-    }
-
-  /** The complete (checkpoint) manifest form — every live file, its
-    * stats and vectors. Written at v1, every
-    * [[LogCheckpointIntervalKey]]-th commit, whenever the delta form
-    * fails its lossless self-check, and by vacuum at the retention
-    * boundary.
-    */
-  private def fullNode(mapper: ObjectMapper, m: Manifest,
-                       committedAtMicros: Long): com.fasterxml.jackson.databind.node.ObjectNode = {
-    val node = mapper.createObjectNode()
-    node.put("version", m.version)
-    node.put("committedAt", committedAtMicros)
-    node.put("schemaDdl", m.schemaDdl)
-    val pc = node.putArray("partitionCols"); m.partitionCols.foreach(pc.add)
-    val fl = node.putArray("files"); m.files.foreach(fl.add)
-    if (m.streamBatch.nonEmpty) {
-      val sb = node.putObject("streamBatch")
-      m.streamBatch.toSeq.sortBy(_._1).foreach { case (k, v) => sb.put(k, v) }
-    }
-    putDvs(node, "dvs", m.dvs)
-    putBlooms(node, "blooms", m.blooms)
-    if (m.colMap.nonEmpty) {
-      val cm = node.putObject("colMap")
-      m.colMap.toSeq.sortBy(_._1).foreach { case (l, p) => cm.put(l, p) }
-    }
-    if (m.retired.nonEmpty) {
-      val rt = node.putArray("retiredCols"); m.retired.foreach(rt.add)
-    }
-    if (m.constraints.nonEmpty) {
-      val cn = node.putObject("constraints")
-      m.constraints.toSeq.sortBy(_._1).foreach { case (n, p) => cn.put(n, p) }
-    }
-    if (m.generatedCols.nonEmpty) {
-      val gn = node.putObject("generatedCols")
-      m.generatedCols.toSeq.sortBy(_._1).foreach { case (n, g) => gn.put(n, g) }
-    }
-    if (m.operation.nonEmpty) node.put("operation", m.operation)
-    if (m.clusterBy.nonEmpty) {
-      val cb = node.putArray("clusterBy"); m.clusterBy.foreach(cb.add)
-    }
-    if (m.properties.nonEmpty) {
-      val pr = node.putObject("properties")
-      m.properties.toSeq.sortBy(_._1).foreach { case (k, v) => pr.put(k, v) }
-    }
-    if (m.externalRoots.nonEmpty) {
-      val er = node.putObject("externalRoots")
-      m.externalRoots.toSeq.sortBy(_._1).foreach { case (a, r) => er.put(a, r) }
-    }
-    if (m.tags.nonEmpty) {
-      val tg = node.putObject("tags")
-      m.tags.toSeq.sortBy(_._1).foreach { case (n, v) => tg.put(n, v) }
-    }
-    if (m.colNdv.nonEmpty) {
-      val nd = node.putObject("colNdv")
-      m.colNdv.toSeq.sortBy(_._1).foreach { case (c, n) => nd.put(c, n) }
-    }
-    if (m.colDefault.nonEmpty) {
-      val cd = node.putObject("colDefault")
-      m.colDefault.toSeq.sortBy(_._1).foreach { case (c, d) => cd.put(c, d) }
-    }
-    if (m.colExistsDefault.nonEmpty) {
-      val ce = node.putObject("colExistsDefault")
-      m.colExistsDefault.toSeq.sortBy(_._1).foreach { case (c, d) => ce.put(c, d) }
-    }
-    if (m.branches.nonEmpty) {
-      val br = node.putObject("branches")
-      m.branches.toSeq.sortBy(_._1).foreach { case (n, v) => br.put(n, v) }
-    }
-    putColHist(node, "colHist", m.colHist)
-    putStats(node, m.stats)
-    node
-  }
-
-  /** The DELTA manifest form: only what this commit CHANGED against its
-    * parent — added/removed files (stats ride the adds), deletion-vector
-    * puts/drops, streamBatch puts, and the schema only when it evolved.
-    * An hourly append to a million-file table commits O(batch) bytes,
-    * not O(table): the full-manifest rewrite was the one remaining
-    * per-commit cost proportional to table size.
-    */
-  private def deltaNode(mapper: ObjectMapper, m: Manifest, parent: Manifest,
-                        committedAtMicros: Long): com.fasterxml.jackson.databind.node.ObjectNode = {
-    val node = mapper.createObjectNode()
-    node.put("version", m.version)
-    node.put("committedAt", committedAtMicros)
-    node.put("base", parent.version)
-    if (m.schemaDdl != parent.schemaDdl) node.put("schemaDdl", m.schemaDdl)
-    val parentFiles = parent.files.toSet
-    val fileSet = m.files.toSet
-    val adds = m.files.filterNot(parentFiles)
-    val removes = parent.files.filterNot(fileSet)
-    if (adds.nonEmpty) { val a = node.putArray("addFiles"); adds.foreach(a.add) }
-    if (removes.nonEmpty) { val r = node.putArray("removeFiles"); removes.foreach(r.add) }
-    // stats ride adds; a kept file whose stats CHANGED (shouldn't
-    // happen — files are immutable — but the self-check keeps us honest)
-    // also lands here
-    putStats(node, m.stats.filter { case (f, st) => parent.stats.get(f) != Some(st) })
-    putDvs(node, "dvsPut",
-      m.dvs.filter { case (f, r) => parent.dvs.get(f) != Some(r) })
-    val dvsDrop = parent.dvs.keySet.intersect(fileSet).diff(m.dvs.keySet)
-    if (dvsDrop.nonEmpty) { val d = node.putArray("dvsDrop"); dvsDrop.toSeq.sorted.foreach(d.add) }
-    putBlooms(node, "bloomsPut",
-      m.blooms.filter { case (f, r) => parent.blooms.get(f) != Some(r) })
-    val bloomsDrop = parent.blooms.keySet.intersect(fileSet).diff(m.blooms.keySet)
-    if (bloomsDrop.nonEmpty) { val b = node.putArray("bloomsDrop"); bloomsDrop.toSeq.sorted.foreach(b.add) }
-    // column-mapping state replaces WHOLE on change (it is tiny and
-    // changes only on rename/drop DDL); an absent node means inherit,
-    // so a reset-to-empty writes an explicit empty node
-    if (m.colMap != parent.colMap) {
-      val cm = node.putObject("colMapSet")
-      m.colMap.toSeq.sortBy(_._1).foreach { case (l, p) => cm.put(l, p) }
-    }
-    if (m.retired != parent.retired) {
-      val rt = node.putArray("retiredSet"); m.retired.foreach(rt.add)
-    }
-    if (m.constraints != parent.constraints) {
-      val cn = node.putObject("constraintsSet")
-      m.constraints.toSeq.sortBy(_._1).foreach { case (n, p) => cn.put(n, p) }
-    }
-    if (m.generatedCols != parent.generatedCols) {
-      val gn = node.putObject("generatedColsSet")
-      m.generatedCols.toSeq.sortBy(_._1).foreach { case (n, g) => gn.put(n, g) }
-    }
-    val sbPut = m.streamBatch.filter { case (k, v) => parent.streamBatch.get(k) != Some(v) }
-    if (sbPut.nonEmpty) {
-      val sb = node.putObject("streamBatchPut")
-      sbPut.toSeq.sortBy(_._1).foreach { case (k, v) => sb.put(k, v) }
-    }
-    // per-commit metadata, never inherited: each delta carries its own
-    if (m.operation.nonEmpty) node.put("operation", m.operation)
-    if (m.clusterBy != parent.clusterBy) {
-      val cb = node.putArray("clusterBySet"); m.clusterBy.foreach(cb.add)
-    }
-    if (m.properties != parent.properties) {
-      val pr = node.putObject("propertiesSet")
-      m.properties.toSeq.sortBy(_._1).foreach { case (k, v) => pr.put(k, v) }
-    }
-    if (m.externalRoots != parent.externalRoots) {
-      val er = node.putObject("externalRootsSet")
-      m.externalRoots.toSeq.sortBy(_._1).foreach { case (a, r) => er.put(a, r) }
-    }
-    // tag state replaces WHOLE on change (tiny, changes only on
-    // CREATE/DROP TAG); absent node means inherit, so a reset-to-empty
-    // writes an explicit empty node
-    if (m.tags != parent.tags) {
-      val tg = node.putObject("tagsSet")
-      m.tags.toSeq.sortBy(_._1).foreach { case (n, v) => tg.put(n, v) }
-    }
-    if (m.colNdv != parent.colNdv) {
-      val nd = node.putObject("colNdvSet")
-      m.colNdv.toSeq.sortBy(_._1).foreach { case (c, n) => nd.put(c, n) }
-    }
-    if (m.colDefault != parent.colDefault) {
-      val cd = node.putObject("colDefaultSet")
-      m.colDefault.toSeq.sortBy(_._1).foreach { case (c, d) => cd.put(c, d) }
-    }
-    if (m.colExistsDefault != parent.colExistsDefault) {
-      val ce = node.putObject("colExistsDefaultSet")
-      m.colExistsDefault.toSeq.sortBy(_._1).foreach { case (c, d) => ce.put(c, d) }
-    }
-    if (m.branches != parent.branches) {
-      val br = node.putObject("branchesSet")
-      m.branches.toSeq.sortBy(_._1).foreach { case (n, v) => br.put(n, v) }
-    }
-    if (m.colHist != parent.colHist) putColHist(node, "colHistSet", m.colHist,
-      explicitEmpty = true)
-    node
-  }
-
-  /** Reconstruct a manifest from its delta node applied over the parent.
-    * Files keep parent order with removals dropped and adds appended —
-    * order is not semantic (reads group by partition), but keeping it
-    * stable keeps plans and file listings deterministic.
-    */
-  private def applyDelta(parent: Manifest, root: com.fasterxml.jackson.databind.JsonNode): Manifest = {
-    val adds =
-      if (root.has("addFiles")) root.get("addFiles").elements().asScala.map(_.asText()).toSeq
-      else Seq.empty
-    val removes =
-      if (root.has("removeFiles")) root.get("removeFiles").elements().asScala.map(_.asText()).toSet
-      else Set.empty[String]
-    val files = parent.files.filterNot(removes) ++ adds
-    val stats = (parent.stats -- removes) ++ parseStats(root)
-    val dvsDrop =
-      if (root.has("dvsDrop")) root.get("dvsDrop").elements().asScala.map(_.asText()).toSet
-      else Set.empty[String]
-    val dvs = (parent.dvs -- removes -- dvsDrop) ++ parseDvs(root, "dvsPut")
-    val bloomsDrop =
-      if (root.has("bloomsDrop")) root.get("bloomsDrop").elements().asScala.map(_.asText()).toSet
-      else Set.empty[String]
-    val blooms = (parent.blooms -- removes -- bloomsDrop) ++ parseBlooms(root, "bloomsPut")
-    val sbPut =
-      if (!root.has("streamBatchPut")) Map.empty[String, Long]
-      else root.get("streamBatchPut").properties().asScala
-        .map(e => e.getKey -> e.getValue.asLong()).toMap
-    Manifest(
-      root.get("version").asLong(),
-      parent.partitionCols,
-      if (root.has("schemaDdl")) root.get("schemaDdl").asText() else parent.schemaDdl,
-      files, stats, parent.streamBatch ++ sbPut,
-      if (root.has("committedAt")) root.get("committedAt").asLong() else 0L,
-      dvs, blooms,
-      if (root.has("colMapSet")) parseColMap(root, "colMapSet") else parent.colMap,
-      if (root.has("retiredSet")) parseStrings(root, "retiredSet") else parent.retired,
-      if (root.has("constraintsSet")) parseColMap(root, "constraintsSet") else parent.constraints,
-      if (root.has("generatedColsSet")) parseColMap(root, "generatedColsSet") else parent.generatedCols,
-      // the DELTA's own label, never the parent's: operation is
-      // per-commit metadata
-      if (root.has("operation")) root.get("operation").asText() else "",
-      if (root.has("clusterBySet")) parseStrings(root, "clusterBySet")
-      else parent.clusterBy,
-      if (root.has("propertiesSet")) parseColMap(root, "propertiesSet")
-      else parent.properties,
-      if (root.has("externalRootsSet")) parseColMap(root, "externalRootsSet")
-      else parent.externalRoots,
-      if (root.has("tagsSet")) parseLongMap(root, "tagsSet") else parent.tags,
-      if (root.has("colNdvSet")) parseLongMap(root, "colNdvSet") else parent.colNdv,
-      if (root.has("colDefaultSet")) parseColMap(root, "colDefaultSet") else parent.colDefault,
-      if (root.has("colExistsDefaultSet")) parseColMap(root, "colExistsDefaultSet")
-      else parent.colExistsDefault,
-      if (root.has("branchesSet")) parseLongMap(root, "branchesSet") else parent.branches,
-      if (root.has("colHistSet")) parseColHist(root, "colHistSet") else parent.colHist)
-  }
-
-  /** Logical equality modulo commit stamp and file ORDER — the delta
-    * self-check: a delta is only committed if replaying it over the
-    * parent reproduces exactly the manifest being committed.
-    */
-  private def sameLogical(a: Manifest, b: Manifest): Boolean =
-    a.version == b.version && a.partitionCols == b.partitionCols &&
-      a.schemaDdl == b.schemaDdl && a.files.toSet == b.files.toSet &&
-      a.files.size == b.files.size && a.stats == b.stats &&
-      a.streamBatch == b.streamBatch && a.dvs == b.dvs && a.blooms == b.blooms &&
-      a.colMap == b.colMap && a.retired == b.retired && a.constraints == b.constraints &&
-      a.generatedCols == b.generatedCols && a.operation == b.operation &&
-      a.clusterBy == b.clusterBy && a.properties == b.properties &&
-      a.externalRoots == b.externalRoots && a.tags == b.tags &&
-      a.colNdv == b.colNdv && a.colDefault == b.colDefault &&
-      a.colExistsDefault == b.colExistsDefault && a.branches == b.branches &&
-      a.colHist == b.colHist
-
   /** The atomic step: stage the manifest JSON under a temp name in the
     * log dir, then a single rename to its version name. Readers list
     * only `vNNNNNNNN.json` names, so the staged file is invisible and
@@ -1561,7 +1153,6 @@ object Snapshot {
     require(m.dvs.keySet.subsetOf(m.files.toSet),
       "manifest dvs reference non-live files: " +
         m.dvs.keySet.diff(m.files.toSet).mkString(", "))
-    val mapper = new ObjectMapper()
     // commit wall-clock, stamped HERE (never caller-supplied): per-table
     // commits serialize on the version counter, so this is monotone up
     // to OS clock steps — the basis for timestamp time travel
@@ -1573,20 +1164,12 @@ object Snapshot {
       if (m.version > 1 && interval > 1 && (m.version - 1) % interval != 0)
         try Some(manifestFrom(fs, path, m.version - 1)) catch { case _: Exception => None }
       else None
-    val node = parent match {
-      case Some(p) if p.partitionCols == m.partitionCols =>
-        val d = deltaNode(mapper, m, p, nowMicros)
-        if (sameLogical(applyDelta(p, d), m)) d else fullNode(mapper, m, nowMicros)
-      case _ => fullNode(mapper, m, nowMicros)
-    }
     // a staged commit-group manifest may hold this slot: committed →
     // it rolls forward and this commit conflicts; aborted/expired → the
     // slot frees; in-flight → conflict (the retry loop re-derives)
     resolveGroupSlot(spark, fs, path, m.version)
     val marker = groupMarker.get()
-    marker.foreach { mk =>
-      node.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode].put("group", mk)
-    }
+    val bytes = ManifestCodec.encode(m, parent, nowMicros, marker)
     val realTarget = marker match {
       case Some(_) =>
         if (fs.exists(grpManifestPath(path, m.version)))
@@ -1596,10 +1179,7 @@ object Snapshot {
         grpManifestPath(path, m.version)
       case None => target
     }
-    val tmp = new HPath(log, s".tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, false)
-    try out.write(mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
-    finally out.close()
+    val tmp = ManifestCodec.stage(fs, log, bytes)
     faultHook("manifest-staged")
     // publish through the conditional-put seam; making `target` exist is
     // the commit point on every substrate (for a group STAGE the rename
@@ -2039,52 +1619,22 @@ object Snapshot {
         // branch point must not silently vanish under the branch head's
         // wholesale state (see Scaladoc); VacuumFloorProp stays engine-
         // managed — the parent's current floor always wins
-        val dropProps = Seq(VacuumFloorProp, BranchBaseProp)
-        val props = mergeMeta("table property", baseM.properties -- dropProps,
-          main.properties -- dropProps, bh.properties -- dropProps) ++
-          main.properties.view.filterKeys(_ == VacuumFloorProp).toMap
-        val cons = mergeMeta("CHECK constraint", baseM.constraints,
-          main.constraints, bh.constraints)
-        val gens = mergeMeta("generated column", baseM.generatedCols,
-          main.generatedCols, bh.generatedCols)
-        val defs = mergeMeta("column DEFAULT", baseM.colDefault,
-          main.colDefault, bh.colDefault)
-        val exDefs = mergeMeta("column existence default", baseM.colExistsDefault,
-          main.colExistsDefault, bh.colExistsDefault)
-        val cluster =
-          if (main.clusterBy == baseM.clusterBy) bh.clusterBy
-          else if (bh.clusterBy == baseM.clusterBy) main.clusterBy
-          else if (main.clusterBy == bh.clusterBy) bh.clusterBy
-          else throw new IllegalArgumentException(
-            "mergeBranch: CLUSTER BY changed on both the parent and the branch " +
-              s"since the branch point (parent=${main.clusterBy.mkString(",")}, " +
-              s"branch=${bh.clusterBy.mkString(",")}); resolve on the branch first")
-        // ANALYZE stats are advisory planner input — branch wins on a
-        // both-sides change, parent-side-only updates carry through
-        val ndv = mergeMeta("", baseM.colNdv, main.colNdv, bh.colNdv, adviseOnly = true)
-        val hist = mergeMeta("", baseM.colHist, main.colHist, bh.colHist, adviseOnly = true)
+        val meta = mergeBranchMeta("mergeBranch", baseM, main, bh,
+          main.properties.view.filterKeys(_ == VacuumFloorProp).toMap)
         // the branch head's state (schema, column mapping and
         // retirements included) over the parent's refs
-        Some(bh.copy(
+        Some(meta(bh.copy(
           files = bh.files.map(remap),
           stats = bh.stats.map { case (f, st) => remap(f) -> st },
           streamBatch = main.streamBatch, // parent consumers keep their marks
           dvs = bh.dvs.map { case (f, r) => remap(f) -> r.copy(file = remap(r.file)) },
           blooms = bh.blooms.map { case (f, r) => remap(f) -> r.copy(file = remap(r.file)) },
-          constraints = cons,
-          generatedCols = gens,
           operation = s"MERGE BRANCH $name",
-          clusterBy = cluster,
-          properties = props,
           externalRoots = aliasOf.map(_.swap),
           // parent refs, not branch state; a crashed REBASE's helper
           // pin retires with the merge
           tags = main.tags - s"__rebase_$name",
-          colNdv = ndv,
-          colHist = hist,
-          colDefault = defs,
-          colExistsDefault = exDefs,
-          branches = main.branches - name))  // the record retires with the merge
+          branches = main.branches - name)))  // the record retires with the merge
       }
       committed = true
       faultHook("merge-branch-committed") // injection seam: commit→cleanup window
@@ -2112,26 +1662,55 @@ object Snapshot {
     }
   }
 
-  /** Three-way metadata merge for [[mergeBranch]]: per key, a side that
-    * changed the value since the branch point wins over one that did
-    * not; both sides changed differently → refuse (or branch-wins when
-    * `adviseOnly`, for advisory stats). Deletions count as changes.
+  /** The three-way METADATA merge [[mergeBranch]] and [[rebaseBranch]]
+    * share, over the eight facets a branch and its parent both carry:
+    * properties, CHECK constraints, generated columns, DEFAULTs,
+    * existence defaults, CLUSTER BY, NDVs and histograms. Per key, a
+    * side that changed the value since the branch point `base` wins
+    * over one that did not; both sides changed differently → `verb`
+    * refuses, except for the advisory ANALYZE stats, where the branch
+    * wins. Deletions count as changes. The engine-managed properties
+    * ([[VacuumFloorProp]], [[BranchBaseProp]]) are the caller's: it
+    * passes the ones to keep as `keepProps`. Conflicts refuse HERE,
+    * before the caller acts; the returned function applies the merge.
     */
-  private def mergeMeta[V](facet: String, base: Map[String, V],
-                           parent: Map[String, V], branch: Map[String, V],
-                           adviseOnly: Boolean = false): Map[String, V] = {
-    (base.keySet ++ parent.keySet ++ branch.keySet).iterator.flatMap { k =>
-      val b = base.get(k); val p = parent.get(k); val br = branch.get(k)
-      val chosen =
-        if (p == b) br                       // parent untouched: branch state stands
-        else if (br == b || p == br) p       // branch untouched (or same change): parent's
-        else if (adviseOnly) br
-        else throw new IllegalArgumentException(
-          s"mergeBranch: $facet '$k' changed on BOTH the parent and the branch " +
-            s"since the branch point (parent=${p.getOrElse("<dropped>")}, " +
-            s"branch=${br.getOrElse("<dropped>")}); resolve on the branch and re-merge")
-      chosen.map(k -> _)
-    }.toMap
+  private def mergeBranchMeta(verb: String, base: Manifest, parent: Manifest, branch: Manifest,
+                              keepProps: Map[String, String]): Manifest => Manifest = {
+    val redo = s"resolve on the branch and re-${verb.stripSuffix("Branch")}"
+    def keyed[V](facet: String, of: Manifest => Map[String, V],
+                 adviseOnly: Boolean = false): Map[String, V] = {
+      val (b0, p0, br0) = (of(base), of(parent), of(branch))
+      (b0.keySet ++ p0.keySet ++ br0.keySet).iterator.flatMap { k =>
+        val b = b0.get(k); val p = p0.get(k); val br = br0.get(k)
+        val chosen =
+          if (p == b) br                       // parent untouched: branch state stands
+          else if (br == b || p == br) p       // branch untouched (or same change): parent's
+          else if (adviseOnly) br
+          else throw new IllegalArgumentException(
+            s"$verb: $facet '$k' changed on BOTH the parent and the branch " +
+              s"since the branch point (parent=${p.getOrElse("<dropped>")}, " +
+              s"branch=${br.getOrElse("<dropped>")}); $redo")
+        chosen.map(k -> _)
+      }.toMap
+    }
+    val engineProps = Seq(VacuumFloorProp, BranchBaseProp)
+    val props = keyed("table property", _.properties -- engineProps) ++ keepProps
+    val cons = keyed("CHECK constraint", _.constraints)
+    val gens = keyed("generated column", _.generatedCols)
+    val defs = keyed("column DEFAULT", _.colDefault)
+    val exDefs = keyed("column existence default", _.colExistsDefault)
+    val cluster =
+      if (parent.clusterBy == base.clusterBy) branch.clusterBy
+      else if (branch.clusterBy == base.clusterBy || branch.clusterBy == parent.clusterBy)
+        parent.clusterBy
+      else throw new IllegalArgumentException(
+        s"$verb: CLUSTER BY changed on both the parent and the branch " +
+          s"since the branch point (parent=${parent.clusterBy.mkString(",")}, " +
+          s"branch=${branch.clusterBy.mkString(",")}); $redo")
+    val ndv = keyed("", _.colNdv, adviseOnly = true)
+    val hist = keyed("", _.colHist, adviseOnly = true)
+    _.copy(properties = props, constraints = cons, generatedCols = gens, colDefault = defs,
+      colExistsDefault = exDefs, clusterBy = cluster, colNdv = ndv, colHist = hist)
   }
 
   /** REBASE BRANCH: replay the branch's NET file-level deltas since its
@@ -2149,7 +1728,7 @@ object Snapshot {
     * touched on BOTH sides since the branch point is a TRUE conflict
     * and refuses loudly (re-branch and replay is the resolution), as
     * does a schema/CLUSTER BY/metadata key changed differently on both
-    * sides ([[mergeMeta]] semantics, shared with the merge).
+    * sides ([[mergeBranchMeta]], shared with the merge).
     *
     * Crash-safety: the parent head is first pinned with a helper tag
     * (`__rebase_<name>`, arbitrated against concurrent vacuums by the
@@ -2230,28 +1809,10 @@ object Snapshot {
         "rebaseBranch: the schema changed on BOTH the parent and the branch since " +
           s"the branch point v$baseV; resolve on the branch and re-rebase")
 
-    val cons = mergeMeta("CHECK constraint", baseM.constraints,
-      main.constraints, bh.constraints)
-    val gens = mergeMeta("generated column", baseM.generatedCols,
-      main.generatedCols, bh.generatedCols)
-    val defs = mergeMeta("column DEFAULT", baseM.colDefault,
-      main.colDefault, bh.colDefault)
-    val exDefs = mergeMeta("column existence default", baseM.colExistsDefault,
-      main.colExistsDefault, bh.colExistsDefault)
-    val dropProps = Seq(VacuumFloorProp, BranchBaseProp)
-    val props = mergeMeta("table property", baseM.properties -- dropProps,
-      main.properties -- dropProps, bh.properties -- dropProps) ++
+    // the branch keeps its own vacuum floor and records its new base
+    val meta = mergeBranchMeta("rebaseBranch", baseM, main, bh,
       bh.properties.view.filterKeys(_ == VacuumFloorProp).toMap +
-      (BranchBaseProp -> main.version.toString)
-    val cluster =
-      if (main.clusterBy == baseM.clusterBy) bh.clusterBy
-      else if (bh.clusterBy == baseM.clusterBy || bh.clusterBy == main.clusterBy)
-        main.clusterBy
-      else throw new IllegalArgumentException(
-        "rebaseBranch: CLUSTER BY changed on both the parent and the branch since " +
-          "the branch point; resolve on the branch and re-rebase")
-    val ndv = mergeMeta("", baseM.colNdv, main.colNdv, bh.colNdv, adviseOnly = true)
-    val hist = mergeMeta("", baseM.colHist, main.colHist, bh.colHist, adviseOnly = true)
+        (BranchBaseProp -> main.version.toString))
 
     // pin the parent head as a vacuum island BEFORE the branch
     // references its files (createTag arbitrates against a concurrent
@@ -2286,7 +1847,7 @@ object Snapshot {
     def render(k: (String, String)): String =
       if (k._1 == qBranch) k._2 else s"@${aliasOf(k._1)}/${k._2}"
 
-    commitManifest(spark, bPath, Manifest(
+    commitManifest(spark, bPath, meta(Manifest(
       version = bh.version + 1,
       partitionCols = schemaPick.partitionCols,
       schemaDdl = schemaPick.schemaDdl,
@@ -2300,18 +1861,10 @@ object Snapshot {
         render(k) -> BloomRef(render(bk), cols) },
       colMap = schemaPick.colMap,
       retired = schemaPick.retired,
-      constraints = cons,
-      generatedCols = gens,
       operation = s"REBASE BRANCH onto v${main.version}",
-      clusterBy = cluster,
-      properties = props,
       externalRoots = aliasOf.map(_.swap),
       tags = bh.tags,
-      colNdv = ndv,
-      colHist = hist,
-      colDefault = defs,
-      colExistsDefault = exDefs,
-      branches = bh.branches))
+      branches = bh.branches)))
 
     faultHook("rebase-branch-committed") // injection seam: record handover window
 
@@ -4741,27 +4294,15 @@ object Snapshot {
     // the invariant "every already-processed kept version is safe", so
     // one base hop decides each version.
     if (dead.nonEmpty && !dryRun) {
-      val mapper = new ObjectMapper()
       val keptSet = kept.toSet
-      def baseOf(v: Long): Option[Long] = {
-        val in = fs.open(manifestPath(path, v))
-        val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-        val root = mapper.readTree(bytes)
-        if (root.has("base")) Some(root.get("base").asLong()) else None
-      }
       kept.zip(keptManifests).foreach { case (v, full) =>
         val ck = ckptPath(path, v)
-        val safe = fs.exists(ck) || (baseOf(v) match {
-          case None => true // full manifest form: self-contained
-          case Some(b) => keptSet.contains(b) // kept base, already made safe
-        })
+        val safe = fs.exists(ck) ||
+          ManifestCodec.baseOf(ManifestCodec.read(fs, manifestPath(path, v)))
+            .forall(keptSet.contains) // full form, or a kept base already made safe
         if (!safe) {
-          val tmp = new HPath(new HPath(path, LogDirName),
-            s".tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-          val out = fs.create(tmp, false)
-          try out.write(mapper.writerWithDefaultPrettyPrinter()
-            .writeValueAsBytes(fullNode(mapper, full, full.committedAtMicros)))
-          finally out.close()
+          val tmp = ManifestCodec.stage(fs, new HPath(path, LogDirName),
+            ManifestCodec.encode(full, None, full.committedAtMicros, None))
           if (!fs.rename(tmp, ck)) { fs.delete(tmp, true) }
         }
       }
@@ -4774,7 +4315,7 @@ object Snapshot {
     // invisible to readers, but reclaim it past the grace window
     val log = new HPath(path, LogDirName)
     fs.listStatus(log)
-      .filter(s => s.isFile && s.getPath.getName.startsWith(".tmp-") &&
+      .filter(s => s.isFile && s.getPath.getName.startsWith(ManifestCodec.StagePrefix) &&
         now - s.getModificationTime > orphanGraceMs)
       .foreach(s => reap(s.getPath, recursive = false))
     // staged commit-group manifests resolve on the same sweep: a

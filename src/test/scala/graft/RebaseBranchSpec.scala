@@ -130,6 +130,7 @@ class RebaseBranchSpec extends SparkSpec {
     Snapshot.append(spark, path, fixture(95 until 96)) // diverge again
     val e = intercept[IllegalArgumentException](Snapshot.rebaseBranch(spark, path, "dev"))
     assert(e.getMessage.contains("quality.bar") && e.getMessage.contains("BOTH"))
+    assert(e.getMessage.startsWith("rebaseBranch:"), e.getMessage)
   }
 
   test("a crash between the branch commit and the record handover heals on re-run AND on merge") {
