@@ -214,77 +214,4 @@ object Layout {
     }
     (intersecting, total)
   }
-
-  /** Small-file compaction, partition-restricted — the maintenance job
-    * every streaming/hourly append eventually needs at 100 TB: each
-    * micro-batch or tick drops a few files per partition, and a year of
-    * ticks turns every scan into a listing storm. Only partitions whose
-    * file count is >= `minFiles` are rewritten: one read over the
-    * marked partitions (basePath keeps the partition column), one
-    * shuffle keyed on (partition, salt) where salt spreads a partition
-    * over ceil(bytes/targetBytes) writers, one dynamic-partition
-    * overwrite. Untouched partitions keep their files byte-identical —
-    * the same partition-restricted contract as the K2/K3 writers.
-    * Returns the rewritten partition values (as strings).
-    *
-    * The job reads the files its own commit replaces; that is safe
-    * because dynamic overwrite stages output and deletes old files only
-    * at job COMMIT (after every read task finished), but it does mean a
-    * task retried after commit began would miss its input — production
-    * deployments pair this with the stagedSwap pattern or a lakehouse
-    * format's snapshot isolation when executors are preemptible.
-    */
-  def compactPartitions(spark: org.apache.spark.sql.SparkSession, path: String,
-                        partitionCol: String, targetBytes: Long = 128L << 20,
-                        minFiles: Int = 4): Seq[String] = {
-    if (Snapshot.isSnapshotTable(spark, path)) {
-      // snapshot route: old files stay on disk until vacuum, so readers
-      // pinned to the pre-compaction version are never broken — the
-      // concurrent-reader guarantee the raw path below cannot give
-      return Snapshot.compact(spark, path, targetBytes, minFiles)
-    }
-    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-    val dir = new HPath(path)
-    val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return Nil
-    // Directory names are Hive-ESCAPED (':' → '%3A', null →
-    // __HIVE_DEFAULT_PARTITION__): unescape before matching against the
-    // data's own values, or escaped/null partitions silently miss the
-    // join and are skipped while still being reported as rewritten.
-    val hiveNull = "__HIVE_DEFAULT_PARTITION__"
-    val unescape = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName _
-    val parts = fs.listStatus(dir).filter(_.isDirectory)
-      .filter(_.getPath.getName.startsWith(s"$partitionCol="))
-    val marked = parts.flatMap { p =>
-      val files = fs.listStatus(p.getPath).filter(_.getPath.getName.endsWith(".parquet"))
-      if (files.length >= minFiles) {
-        val bytes = files.map(_.getLen).sum
-        val raw = p.getPath.getName.stripPrefix(s"$partitionCol=")
-        val value: Option[String] = if (raw == hiveNull) None else Some(unescape(raw))
-        Some((value, p.getPath.toString, math.max(1L, (bytes + targetBytes - 1) / targetBytes)))
-      } else None
-    }
-    if (marked.isEmpty) return Nil
-    import spark.implicits._
-    val nf = marked.map { case (v, _, n) => (v, n) }.toSeq.toDF("__pv", "__nf")
-    val df = spark.read.option("basePath", path).parquet(marked.map(_._2).toSeq: _*)
-    val dataCols = df.columns.filterNot(_ == partitionCol)
-    // match on the partition column's own TYPE (dirname "01" must meet
-    // int 1), null-safely so the hive-default partition compacts too
-    val salted = df
-      .join(broadcast(nf), col(partitionCol) <=> col("__pv").cast(df.schema(partitionCol).dataType))
-      .withColumn("__salt", pmod(hash(dataCols.map(col).toSeq: _*).cast("long"), col("__nf")))
-    // report only partitions actually present in the rewritten data —
-    // a listed directory with zero surviving rows was not rewritten
-    val rewritten = salted.select(col("__pv")).distinct()
-      .as[Option[String]].collect().map(_.getOrElse(hiveNull)).toSeq.sorted
-    salted
-      .repartition(col(partitionCol), col("__salt"))
-      .drop("__pv", "__nf", "__salt")
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol)
-      .parquet(path)
-    rewritten
-  }
 }

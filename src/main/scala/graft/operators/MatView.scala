@@ -92,7 +92,14 @@ object MatView {
 
   private[graft] val SqlProp = "graft.mv.sql"
   private[graft] val SourceProp = "graft.mv.source"
+  /** Marks a side table with its owning view's NAME (the last path
+    * segment; a side is always the view's sibling), so the log never
+    * records where the warehouse lives and a moved warehouse keeps
+    * routing. Sides written with the view's absolute path still match:
+    * ownership compares last segments.
+    */
   private[graft] val SideProp = "graft.mv.sideOf"
+  private def viewName(path: String): String = new org.apache.hadoop.fs.Path(path).getName
   private[graft] val ConsumerId = "__graft_mv"
 
   /** The co-maintained DISTINCT-STATE side table for a COUNT(DISTINCT
@@ -526,8 +533,7 @@ object MatView {
     val plan = spark.sessionState.sqlParser.parsePlan(sqlText)
     val srcs = sourceRelations(plan, sqlText)
     Snapshot.latestManifest(spark, sp).filter { sm =>
-      sm.properties.get(SideProp).exists(p =>
-        Snapshot.qualifiedRoot(spark, p) == Snapshot.qualifiedRoot(spark, mvPath)) &&
+      sm.properties.get(SideProp).exists(viewName(_) == viewName(mvPath)) &&
         srcs.indices.forall(i => sm.streamBatch.get(wmKey(srcs, i)).isDefined &&
           sm.streamBatch.get(wmKey(srcs, i)) == mvM.streamBatch.get(wmKey(srcs, i)))
     }.map(sm => sp -> sm.version)
@@ -847,7 +853,7 @@ object MatView {
         case None =>
           Snapshot.create(spark, s.path, stateOf(childDf, s.shape),
             clusterBy = shape.keys.headOption.map(_._1).toSeq,
-            properties = Map(SideProp -> mvPath))
+            properties = Map(SideProp -> viewName(mvPath)))
           Snapshot.commitMetaOn(spark, s.path, Snapshot.latestManifest(spark, s.path).get,
             s"MATERIALIZE ${s.label} STATE $opTail")(stamp)
         case Some(sm) =>

@@ -12,12 +12,16 @@ import scala.jdk.CollectionConverters._
   *
   * The reference gets atomicity free from BigQuery — every load job,
   * DELETE and MERGE commits atomically (funnel_live.py:106-174,
-  * consumo_detalle.py:317-340). Plain-parquet writers cannot: stagedSwap
-  * has a no-table window between renames, dynamic partition overwrite
-  * can crash between partition delete and rewrite, and compaction reads
-  * files its own commit replaces. This layer closes all of those with
-  * the standard log-structured scheme (the publicly documented core of
-  * Delta/Iceberg, reduced to what the engine needs):
+  * consumo_detalle.py:317-340). Plain-parquet writers cannot: a
+  * rename swap has a no-table window between renames, dynamic
+  * partition overwrite can crash between partition delete and rewrite,
+  * and compaction reads files its own commit replaces. This layer
+  * closes all of those with the standard log-structured scheme (the
+  * publicly documented core of Delta/Iceberg, reduced to what the
+  * engine needs), and it is the ONE format of every table the engine
+  * writes — the load writers (`Writers`), the landing sink
+  * (`Fetch.windowKeyedSink`) and the streaming sink all create
+  * through [[createIfAbsent]]:
   *
   *  - data files are IMMUTABLE and written under per-transaction
   *    directories (`txn-<id>/<hive partition dirs>/part-N.parquet`) — a
@@ -59,7 +63,7 @@ import scala.jdk.CollectionConverters._
   *
   * At 100 TB: manifests are O(#live files) metadata, commits are O(new
   * files) + one rename, and every routed writer below stays partition-
-  * restricted — the log adds no data-path cost over the raw writers.
+  * restricted — the log adds no data-path cost over plain parquet.
   */
 object Snapshot {
 
@@ -1314,6 +1318,32 @@ object Snapshot {
     commitManifest(spark, path, m.copy(files = files, stats = stats))
   }
 
+  /** The one first write of an engine-written table: nothing when
+    * `path` holds a snapshot table, else an EMPTY table of `schema`
+    * partitioned by `partitionCols`, so the writer that follows always
+    * takes the snapshot route. A create lost to a concurrent first
+    * write falls through to the winner's table. A path that holds
+    * files but no snapshot log is refused: a new manifest would hide
+    * them. A crashed first create (a log with no committed version)
+    * counts as absent.
+    */
+  def createIfAbsent(spark: SparkSession, path: String, schema: StructType,
+                     partitionCols: Seq[String] = Nil): Unit =
+    if (latestVersion(spark, path).isEmpty) {
+      val fs = fsFor(spark, path)
+      val root = new HPath(path)
+      require(fs.exists(new HPath(root, LogDirName)) || !fs.exists(root) ||
+        fs.listStatus(root).isEmpty,
+        s"$path holds files but no snapshot table; register them with " +
+          "Snapshot.importParquet before writing to it")
+      try create(spark, path, spark.createDataFrame(
+        spark.sparkContext.emptyRDD[Row], schema), partitionCols)
+      catch {
+        case _: IllegalArgumentException | _: CommitConflictException
+            if latestVersion(spark, path).isDefined => ()
+      }
+    }
+
   /** Set (upsert) and/or unset table properties as one metadata commit.
     * Properties are free-form key→value strings carried by the
     * manifest; the engine itself reads the `graft.`-prefixed policy
@@ -2521,10 +2551,9 @@ object Snapshot {
     }
   }
 
-  /** K4 full overwrite: new version = exactly the new txn's files. The
-    * atomic replacement stagedSwap approximates — with no window where
-    * the table is missing, because the old version stays live until the
-    * manifest rename.
+  /** K4 full overwrite: new version = exactly the new txn's files,
+    * with no window where the table is missing, because the old version
+    * stays live until the manifest rename.
     */
   def overwrite(spark: SparkSession, path: String, df: DataFrame): Long =
     SmallOp(spark, Nil, Seq(df))(overwriteWith(spark, path, latest(spark, path), df, identity))
@@ -3372,9 +3401,9 @@ object Snapshot {
     * holding >= `minFiles` live files — for single-column, multi-column
     * AND unpartitioned tables (an unpartitioned table is one partition
     * group). Readers pinned to the old version keep reading the OLD
-    * files — they stay on disk until `vacuum` — which is exactly the
-    * concurrent-reader guarantee the raw `Layout.compactPartitions`
-    * documents as out of reach. The commit swaps EXACTLY the marked
+    * files — they stay on disk until `vacuum` — the concurrent-reader
+    * guarantee an in-place parquet rewrite cannot give (its job reads
+    * the files its own commit deletes). The commit swaps EXACTLY the marked
     * files for their rewrite, one atomic manifest. Returns the
     * compacted partitions as value strings (single column: the raw
     * value; multi: hive-style `c1=v1/c2=v2`; unpartitioned: `""`).
@@ -3956,60 +3985,27 @@ object Snapshot {
     * never chases a chain.
     */
   def shallowClone(spark: SparkSession, srcPath: String, dstPath: String,
-                   version: Option[Long] = None): Long = {
-    require(latestVersion(spark, dstPath).isEmpty,
-      s"shallowClone: destination already exists: $dstPath")
-    val src = version match {
-      case Some(v) => manifest(spark, srcPath, v)
-      case None => latest(spark, srcPath)
+                   version: Option[Long] = None): Long =
+    cloneOf(spark, "shallowClone", srcPath, dstPath, version) { (src, qSrc, _) =>
+      // external refs are opened with the CLONE's filesystem — a source
+      // on another scheme/authority would fail every later read with
+      // Hadoop's "Wrong FS"; refuse at fork time instead
+      val dstFsUri = fsFor(spark, dstPath).getUri
+      def sameFs(root: String): Boolean = fsFor(spark, root).getUri == dstFsUri
+      require(sameFs(srcPath) && src.externalRoots.values.forall(sameFs),
+        s"shallowClone: source and destination must share one filesystem " +
+          s"(destination is $dstFsUri) — deep-copy across filesystems instead")
+      // dense alias table: the source root itself plus any roots the
+      // source (itself a clone) already references
+      val roots = qSrc +: src.externalRoots.values.toSeq.distinct.filterNot(_ == qSrc)
+      val aliasOf: Map[String, String] =
+        roots.zipWithIndex.map { case (r, i) => r -> s"r$i" }.toMap
+      val remap = (f: String) => {
+        val (root, rel) = fileRootRel(qSrc, src, f)
+        s"@${aliasOf(root)}/$rel"
+      }
+      (remap, s"CLONE v${src.version}", aliasOf.map(_.swap))
     }
-    val qSrc = fsFor(spark, srcPath).makeQualified(new HPath(srcPath)).toString
-    require(fsFor(spark, dstPath).makeQualified(new HPath(dstPath)).toString != qSrc,
-      "shallowClone: source and destination are the same table")
-    // external refs are opened with the CLONE's filesystem — a source
-    // on another scheme/authority would fail every later read with
-    // Hadoop's "Wrong FS"; refuse at fork time instead
-    val dstFsUri = fsFor(spark, dstPath).getUri
-    def sameFs(root: String): Boolean = {
-      val u = new HPath(root).getFileSystem(
-        spark.sparkContext.hadoopConfiguration).getUri
-      u == dstFsUri
-    }
-    require(sameFs(srcPath) && src.externalRoots.values.forall(sameFs),
-      s"shallowClone: source and destination must share one filesystem " +
-        s"(destination is $dstFsUri) — deep-copy across filesystems instead")
-    // dense alias table: the source root itself plus any roots the
-    // source (itself a clone) already references
-    val roots = qSrc +: src.externalRoots.values.toSeq.distinct.filterNot(_ == qSrc)
-    val aliasOf: Map[String, String] =
-      roots.zipWithIndex.map { case (r, i) => r -> s"r$i" }.toMap
-    def remap(f: String): String = {
-      val (root, rel) = fileRootRel(qSrc, src, f)
-      s"@${aliasOf(root)}/$rel"
-    }
-    commitManifest(spark, dstPath, Manifest(
-      version = 1L,
-      partitionCols = src.partitionCols,
-      schemaDdl = src.schemaDdl,
-      files = src.files.map(remap),
-      stats = src.stats.map { case (f, st) => remap(f) -> st },
-      dvs = src.dvs.map { case (f, r) => remap(f) -> r.copy(file = remap(r.file)) },
-      blooms = src.blooms.map { case (f, r) => remap(f) -> r.copy(file = remap(r.file)) },
-      colMap = src.colMap,
-      retired = src.retired,
-      constraints = src.constraints,
-      generatedCols = src.generatedCols,
-      operation = s"CLONE v${src.version}",
-      clusterBy = src.clusterBy,
-      // the source's vacuum FLOOR is about the SOURCE's reclaimed log;
-      // the clone's fresh log has reclaimed nothing
-      properties = src.properties -- Seq(VacuumFloorProp),
-      colNdv = src.colNdv, // same rows, same distinctness
-      colHist = src.colHist,
-      colDefault = src.colDefault,
-      colExistsDefault = src.colExistsDefault, // same files predate the same adds
-      externalRoots = aliasOf.map(_.swap)))
-  }
 
   /** DEEP CLONE: MATERIALIZE `srcPath` at `version` (default latest)
     * into a new table at `dstPath` — every referenced data file,
@@ -4028,85 +4024,102 @@ object Snapshot {
     * fresh), matching [[shallowClone]].
     */
   def deepClone(spark: SparkSession, srcPath: String, dstPath: String,
-                version: Option[Long] = None): Long = {
-    require(latestVersion(spark, dstPath).isEmpty,
-      s"deepClone: destination already exists: $dstPath")
-    val src = version match {
-      case Some(v) => manifest(spark, srcPath, v)
-      case None => latest(spark, srcPath)
+                version: Option[Long] = None): Long =
+    cloneOf(spark, "deepClone", srcPath, dstPath, version) { (src, _, qDst) =>
+      val entries = (src.files ++ src.dvs.values.map(_.file) ++
+        src.blooms.values.map(_.file)).distinct
+      // destination layout mirrors the source's RELATIVE shape: the first
+      // segment plays the txn-dir role (or `_dv/<commit>` / `_bloom/
+      // <commit>` for sidecars), so reads, partition parsing and vacuum
+      // sweeps work on the clone unchanged. A clone can draw the same
+      // base-dir name from two different roots (a clone of clones); the
+      // later group gets a uniquified name — safe, the segment is opaque.
+      def baseOf(rel: String): String = {
+        val segs = rel.split('/')
+        if (segs.head == "_dv" || segs.head == "_bloom") segs.take(2).mkString("/")
+        else segs.head
+      }
+      val groupKeys = entries.map { f =>
+        val (r, rel) = fileRootRel(srcPath, src, f); (r, baseOf(rel))
+      }.distinct.sorted
+      val used = scala.collection.mutable.Set.empty[String]
+      val baseMap: Map[(String, String), String] = groupKeys.map { case k @ (_, base) =>
+        val cut = base.lastIndexOf('/') + 1
+        val (pre, name) = (base.take(cut), base.drop(cut))
+        val cand =
+          if (!used.contains(base)) base
+          else Iterator.from(1).map(i => s"${pre}dc$i-$name").find(!used.contains(_)).get
+        used += cand
+        k -> cand
+      }.toMap
+      val remap = (f: String) => {
+        val (r, rel) = fileRootRel(srcPath, src, f)
+        val base = baseOf(rel)
+        baseMap((r, base)) + rel.drop(base.length)
+      }
+      val pairs = entries.map { f =>
+        val (r, rel) = fileRootRel(srcPath, src, f)
+        (s"$r/$rel", s"$qDst/${remap(f)}")
+      }
+      if (pairs.nonEmpty) {
+        val conf = org.apache.spark.graftbridge.ConfBridge.serializable(
+          spark.sparkContext.hadoopConfiguration)
+        val slices = math.min(pairs.size, math.max(1, spark.sparkContext.defaultParallelism * 2))
+        spark.sparkContext.parallelize(pairs, slices).foreach { case (s0, d0) =>
+          val c = conf.value
+          val sp = new HPath(s0)
+          val dp = new HPath(d0)
+          val ok = org.apache.hadoop.fs.FileUtil.copy(
+            sp.getFileSystem(c), sp, dp.getFileSystem(c), dp,
+            false /*deleteSource*/, true /*overwrite*/, c)
+          if (!ok) throw new java.io.IOException(s"deepClone: copy failed: $s0 -> $d0")
+        }
+      }
+      // same bytes, so the same stats, vectors and bloom refs
+      (remap, s"DEEP CLONE v${src.version}", Map.empty[String, String])
     }
+
+  /** The preflight and first manifest both clones share: `dstPath` must
+    * be new and not the source; `plan` gets the pinned source manifest
+    * and the qualified source and destination roots, does any copying,
+    * and returns the file-ref remap, the operation string and the
+    * clone's external roots. The clone keeps the source's layout,
+    * schema, stats, vectors, bloom refs and table metadata; consumer
+    * watermarks, tags and branches do not carry (its history starts
+    * fresh), and neither does the vacuum FLOOR, which is about the
+    * source's reclaimed log.
+    */
+  private def cloneOf(spark: SparkSession, verb: String, srcPath: String, dstPath: String,
+                      version: Option[Long])
+                     (plan: (Manifest, String, String) =>
+                       (String => String, String, Map[String, String])): Long = {
+    require(latestVersion(spark, dstPath).isEmpty,
+      s"$verb: destination already exists: $dstPath")
+    val src = version.fold(latest(spark, srcPath))(manifest(spark, srcPath, _))
     val qSrc = fsFor(spark, srcPath).makeQualified(new HPath(srcPath)).toString
     val qDst = fsFor(spark, dstPath).makeQualified(new HPath(dstPath)).toString
-    require(qDst != qSrc, "deepClone: source and destination are the same table")
-    val entries = (src.files ++ src.dvs.values.map(_.file) ++
-      src.blooms.values.map(_.file)).distinct
-    // destination layout mirrors the source's RELATIVE shape: the first
-    // segment plays the txn-dir role (or `_dv/<commit>` / `_bloom/
-    // <commit>` for sidecars), so reads, partition parsing and vacuum
-    // sweeps work on the clone unchanged. A clone can draw the same
-    // base-dir name from two different roots (a clone of clones); the
-    // later group gets a uniquified name — safe, the segment is opaque.
-    def baseOf(rel: String): String = {
-      val segs = rel.split('/')
-      if (segs.head == "_dv" || segs.head == "_bloom") segs.take(2).mkString("/")
-      else segs.head
-    }
-    val groupKeys = entries.map { f =>
-      val (r, rel) = fileRootRel(srcPath, src, f); (r, baseOf(rel))
-    }.distinct.sorted
-    val used = scala.collection.mutable.Set.empty[String]
-    val baseMap: Map[(String, String), String] = groupKeys.map { case k @ (_, base) =>
-      val cut = base.lastIndexOf('/') + 1
-      val (pre, name) = (base.take(cut), base.drop(cut))
-      val cand =
-        if (!used.contains(base)) base
-        else Iterator.from(1).map(i => s"${pre}dc$i-$name").find(!used.contains(_)).get
-      used += cand
-      k -> cand
-    }.toMap
-    def remap(f: String): String = {
-      val (r, rel) = fileRootRel(srcPath, src, f)
-      val base = baseOf(rel)
-      baseMap((r, base)) + rel.drop(base.length)
-    }
-    val pairs = entries.map { f =>
-      val (r, rel) = fileRootRel(srcPath, src, f)
-      (s"$r/$rel", s"$qDst/${remap(f)}")
-    }
-    if (pairs.nonEmpty) {
-      val conf = org.apache.spark.graftbridge.ConfBridge.serializable(
-        spark.sparkContext.hadoopConfiguration)
-      val slices = math.min(pairs.size, math.max(1, spark.sparkContext.defaultParallelism * 2))
-      spark.sparkContext.parallelize(pairs, slices).foreach { case (s0, d0) =>
-        val c = conf.value
-        val sp = new HPath(s0)
-        val dp = new HPath(d0)
-        val ok = org.apache.hadoop.fs.FileUtil.copy(
-          sp.getFileSystem(c), sp, dp.getFileSystem(c), dp,
-          false /*deleteSource*/, true /*overwrite*/, c)
-        if (!ok) throw new java.io.IOException(s"deepClone: copy failed: $s0 -> $d0")
-      }
-    }
+    require(qDst != qSrc, s"$verb: source and destination are the same table")
+    val (remap, operation, externalRoots) = plan(src, qSrc, qDst)
     commitManifest(spark, dstPath, Manifest(
       version = 1L,
       partitionCols = src.partitionCols,
       schemaDdl = src.schemaDdl,
       files = src.files.map(remap),
-      stats = src.stats.map { case (f, st) => remap(f) -> st }, // same bytes, same stats
+      stats = src.stats.map { case (f, st) => remap(f) -> st },
       dvs = src.dvs.map { case (f, r) => remap(f) -> r.copy(file = remap(r.file)) },
       blooms = src.blooms.map { case (f, r) => remap(f) -> r.copy(file = remap(r.file)) },
       colMap = src.colMap,
       retired = src.retired,
       constraints = src.constraints,
       generatedCols = src.generatedCols,
-      operation = s"DEEP CLONE v${src.version}",
+      operation = operation,
       clusterBy = src.clusterBy,
-      properties = src.properties -- Seq(VacuumFloorProp), // fresh log, no floor
-
-      colNdv = src.colNdv,
+      properties = src.properties -- Seq(VacuumFloorProp),
+      colNdv = src.colNdv, // same rows, same distinctness
       colHist = src.colHist,
       colDefault = src.colDefault,
-      colExistsDefault = src.colExistsDefault))
+      colExistsDefault = src.colExistsDefault, // same files predate the same adds
+      externalRoots = externalRoots))
   }
 
   /** One-row table detail — the `DESCRIBE DETAIL` surface: current

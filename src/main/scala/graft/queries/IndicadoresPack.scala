@@ -226,9 +226,9 @@ object IndicadoresPack extends QueryPack {
   }
 
   /** The reference's publication (py:42-47 ×8): DELETE WHERE fecha =
-    * fin_mes, then load — on parquet exactly a dynamic partition
-    * overwrite of the month's fecha partition; prior months are never
-    * opened. Monthly rerun is idempotent.
+    * fin_mes, then load — exactly a K2 replace of the month's fecha
+    * partition, one snapshot commit; prior months are never opened.
+    * Monthly rerun is idempotent.
     */
   def publish(t: Tables, path: String): Unit =
     Writers.replaceWindow(wide(t), path, "fecha")

@@ -92,15 +92,14 @@ object LayoutPack extends QueryPack {
     // decay), run the partition-restricted compactor, and answer from
     // the compacted copy — value-identical to the original, which is
     // what the oracle reads. CompactionSpec pins the layout effects
-    // (file counts, untouched partitions byte-identical, idempotence);
+    // (file counts, untouched partitions' files unchanged, idempotence);
     // this query pins that the rewrite moves no data.
     val dir = java.nio.file.Files.createTempDirectory("graft_q106").toString + "/events_c"
-    t.events.select("event_id", "ts", "user_id", "event_type", "value")
-      .repartition(16)
-      .write.partitionBy("event_type").parquet(dir)
-    graft.operators.Layout.compactPartitions(t.spark, dir, "event_type",
-      targetBytes = 1L << 30, minFiles = 4)
-    t.spark.read.parquet(dir)
+    graft.operators.Snapshot.create(t.spark, dir,
+      t.events.select("event_id", "ts", "user_id", "event_type", "value").repartition(16),
+      Seq("event_type"))
+    graft.operators.Snapshot.compact(t.spark, dir, targetBytes = 1L << 30, minFiles = 4)
+    graft.operators.Snapshot.read(t.spark, dir)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("total"),
         countDistinct(col("user_id")).as("users"))
@@ -145,8 +144,7 @@ object LayoutPack extends QueryPack {
     // contract holds — asserted, not assumed
     graft.operators.Writers.mergeByIdWritePartitioned(
       t.spark, dir, updates, "o_orderkey", "o_orderpriority", assertIdsLocal = true)
-    graft.operators.Layout.compactPartitions(t.spark, dir, "o_orderpriority",
-      targetBytes = 1L << 30, minFiles = 2)
+    graft.operators.Snapshot.compact(t.spark, dir, targetBytes = 1L << 30, minFiles = 2)
     graft.operators.Snapshot.vacuum(t.spark, dir, keepVersions = 1, orphanGraceMs = 0L)
     graft.operators.Snapshot.read(t.spark, dir)
       .groupBy("o_orderpriority")

@@ -4,6 +4,7 @@ import java.time.{Duration, LocalDateTime, ZoneOffset}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.StructType
+import graft.operators.Snapshot
 
 /** The reference's windowed-ingest protocol (S1/S4–S6), minus the HTTP
   * transport the sandbox cannot exercise:
@@ -87,29 +88,22 @@ object Fetch {
     landed
   }
 
-  /** The ready-made window-keyed sink: each chunk lands in a partition
-    * keyed by the WINDOW START (epoch seconds — digits-only, so the
-    * hive directory name needs no escaping), replacing any earlier copy
-    * of the same window. An EMPTY re-fetch still clears the window's
-    * partition — dynamic partition overwrite alone cannot delete a
-    * partition it writes no rows for, which is exactly the "day whose
+  /** The ready-made window-keyed sink: each chunk lands in the
+    * partition of its WINDOW START (epoch seconds) of a snapshot table,
+    * replacing any earlier copy of the same window in one atomic
+    * commit. An EMPTY re-fetch still clears the window — the "day whose
     * re-extract came back empty must still be deleted" case the
     * replacePeriodWindow scaladoc calls out. With this sink a rerun of
-    * `windowedIngest` over the same span makes the landing dir EQUAL a
-    * clean single run, regardless of how row contents moved or vanished
-    * between fetches.
+    * `windowedIngest` over the same span makes the landing table EQUAL
+    * a clean single run, regardless of how row contents moved or
+    * vanished between fetches.
     */
   def windowKeyedSink(path: String, windowCol: String = "w")
                      (df: DataFrame, from: LocalDateTime, to: LocalDateTime): Unit = {
     val key = from.toEpochSecond(ZoneOffset.UTC)
-    if (df.isEmpty) {
-      val part = new org.apache.hadoop.fs.Path(path, s"$windowCol=$key")
-      val fs = part.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-      fs.delete(part, true)
-      ()
-    } else {
-      graft.operators.Writers.replaceWindow(
-        df.withColumn(windowCol, lit(key)), path, windowCol)
-    }
+    val keyed = df.withColumn(windowCol, lit(key))
+    Snapshot.createIfAbsent(df.sparkSession, path, keyed.schema, Seq(windowCol))
+    Snapshot.replacePartitions(df.sparkSession, path, keyed,
+      dropOld = _.get(windowCol).contains(key.toString))
   }
 }

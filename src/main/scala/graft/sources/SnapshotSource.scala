@@ -79,17 +79,10 @@ class SnapshotSource extends RelationProvider with DataSourceRegister
         // re-root the incremental plan (the standard DSv1 sink move:
         // the incoming Dataset belongs to the streaming execution)
         val batch = org.apache.spark.sql.graftbridge.StreamBridge.rebatch(data)
-        if (Snapshot.latestVersion(spark, path).isEmpty)
-          try Snapshot.create(spark, path,
-            spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              data.schema), partitionColumns)
-          catch {
-            // two first-batch writers racing the auto-create: the loser
-            // falls through to the watermark-idempotent batch write
-            // against the winner's (empty, same-schema) table
-            case _: IllegalArgumentException
-                if Snapshot.latestVersion(spark, path).isDefined => ()
-          }
+        // two first-batch writers racing the auto-create: the loser
+        // falls through to the watermark-idempotent batch write
+        // against the winner's (empty, same-schema) table
+        Snapshot.createIfAbsent(spark, path, data.schema, partitionColumns)
         if (complete) Snapshot.overwriteBatch(spark, path, batch, appId, batchId)
         else Snapshot.appendBatch(spark, path, batch, appId, batchId, mergeSchema)
       }

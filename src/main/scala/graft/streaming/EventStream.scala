@@ -56,9 +56,9 @@ object EventStream {
     * partition-restricted merge (K3), so a late row inside the watermark
     * REWRITES its aggregate in place instead of appending a correction
     * row, and only the touched hour partitions are opened. This is the
-    * streaming analog of the reference's delete-and-replace re-ingest,
-    * lakehouse-free: Update windows + foreachBatch +
-    * mergeByIdWritePartitioned.
+    * streaming analog of the reference's delete-and-replace re-ingest:
+    * Update windows + foreachBatch + mergeByIdWritePartitioned, so
+    * `outDir` is a snapshot table (read it with `Snapshot.read`).
     */
   def runMergePublish(rollup: DataFrame, outDir: String, checkpointDir: String): Unit =
     rollup.writeStream

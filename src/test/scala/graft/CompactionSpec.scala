@@ -2,58 +2,54 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.operators.Layout
+import graft.operators.Snapshot
 
 /** Partition-restricted small-file compaction: fragmented partitions
   * collapse toward the target file size, healthy partitions keep their
-  * files byte-identical, and the data never changes.
+  * files (the same manifest entries), and the data never changes.
   */
 class CompactionSpec extends SparkSpec {
   import spark.implicits._
 
-  private def filesOf(dir: String, part: String): Map[String, Long] = {
-    val d = new java.io.File(s"$dir/event_type=$part")
-    d.listFiles().filter(_.getName.endsWith(".parquet"))
-      .map(f => f.getName -> f.lastModified()).toMap
+  /** Live files of `dir` whose single partition column has value `part`. */
+  private def filesOf(dir: String, part: String): Seq[String] = {
+    val m = Snapshot.latest(spark, dir)
+    m.files.filter(Snapshot.partitionValues(m.partitionCols, _).values.toSeq == Seq(part)).sorted
   }
 
   test("compaction merges fragmented partitions only; data identical") {
     val dir = Files.createTempDirectory("graft-compact").toString + "/t"
     val events = sf().events.select("event_id", "user_id", "event_type", "value")
     // fragment two partitions into ~12 files each
-    events.where(col("event_type").isin("click", "view"))
-      .repartition(12)
-      .write.partitionBy("event_type").parquet(dir)
+    Snapshot.create(spark, dir,
+      events.where(col("event_type").isin("click", "view")).repartition(12), Seq("event_type"))
     // land one healthy partition as a single file
-    events.where(col("event_type") === "error").coalesce(1)
-      .write.mode("append").partitionBy("event_type").parquet(dir)
+    Snapshot.append(spark, dir, events.where(col("event_type") === "error").coalesce(1))
 
-    val before = spark.read.parquet(dir)
+    val before = Snapshot.read(spark, dir)
     val beforeRows = before.count()
     val beforeSum = before.agg(sum(col("value").cast("decimal(18,2)"))).head().getDecimal(0)
     val healthyBefore = filesOf(dir, "error")
     assert(filesOf(dir, "click").size >= 10)
 
-    val rewritten = Layout.compactPartitions(spark, dir, "event_type",
-      targetBytes = 1L << 30, minFiles = 4)
+    val rewritten = Snapshot.compact(spark, dir, targetBytes = 1L << 30, minFiles = 4)
     assert(rewritten.toSet == Set("click", "view"), s"rewrote: $rewritten")
 
     // fragmented partitions collapsed to one file (everything fits the target)
     assert(filesOf(dir, "click").size == 1)
     assert(filesOf(dir, "view").size == 1)
-    // the healthy partition was not rewritten: same files, same mtimes
+    // the healthy partition was not rewritten: same files
     assert(filesOf(dir, "error") == healthyBefore)
     // data unchanged
-    val after = spark.read.parquet(dir)
+    val after = Snapshot.read(spark, dir)
     assert(after.count() == beforeRows)
     assert(after.agg(sum(col("value").cast("decimal(18,2)"))).head().getDecimal(0) == beforeSum)
 
     // idempotent: nothing left to compact at this threshold
-    assert(Layout.compactPartitions(spark, dir, "event_type", 1L << 30, 4).isEmpty)
+    assert(Snapshot.compact(spark, dir, 1L << 30, 4).isEmpty)
   }
 
   test("snapshot compaction: unpartitioned table bin-packs to the target") {
-    import graft.operators.Snapshot
     val dir = Files.createTempDirectory("graft-compact-np").toString + "/t"
     Snapshot.create(spark, dir,
       (0 until 100).map(i => (i.toLong, s"v$i")).toDF("id", "v").repartition(6))
@@ -71,7 +67,6 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("snapshot compaction: two-level partitioning rewrites only fragmented leaves") {
-    import graft.operators.Snapshot
     val dir = Files.createTempDirectory("graft-compact-2l").toString + "/t"
     val mk = (n: Int, reg: String, yr: Int, parts: Int) =>
       (0 until n).map(i => (i.toLong, reg, yr, i.toDouble)).toDF("id", "region", "yr", "v")
@@ -107,22 +102,21 @@ class CompactionSpec extends SparkSpec {
       when(col("id") % 3 === 0, lit("a:b"))
         .when(col("id") % 3 === 1, lit(null: String))
         .otherwise(lit("plain")).as("p"))
-    df.repartition(8).write.partitionBy("p").parquet(dir)
-    assert(new java.io.File(s"$dir/p=a%3Ab").exists(), "fixture must produce an escaped dirname")
-    assert(new java.io.File(s"$dir/p=__HIVE_DEFAULT_PARTITION__").exists())
+    Snapshot.create(spark, dir, df.repartition(8), Seq("p"))
+    val entries = Snapshot.latest(spark, dir).files
+    assert(entries.exists(_.contains("/p=a%3Ab/")), "fixture must produce an escaped dirname")
+    assert(entries.exists(_.contains("/p=__HIVE_DEFAULT_PARTITION__/")))
 
-    val before = spark.read.parquet(dir)
+    val before = Snapshot.read(spark, dir)
     val beforeSum = before.agg(sum("v")).head().getLong(0)
     val beforeNulls = before.where(col("p").isNull).count()
-    val rewritten = Layout.compactPartitions(spark, dir, "p", targetBytes = 1L << 30, minFiles = 4)
+    val rewritten = Snapshot.compact(spark, dir, targetBytes = 1L << 30, minFiles = 4)
     assert(rewritten.toSet == Set("a:b", "plain", "__HIVE_DEFAULT_PARTITION__"),
       s"rewrote: $rewritten")
 
-    def parquetFiles(sub: String) =
-      new java.io.File(s"$dir/$sub").listFiles().count(_.getName.endsWith(".parquet"))
-    assert(parquetFiles("p=a%3Ab") == 1)
-    assert(parquetFiles("p=__HIVE_DEFAULT_PARTITION__") == 1)
-    val after = spark.read.parquet(dir)
+    assert(filesOf(dir, "a:b").size == 1)
+    assert(filesOf(dir, "__HIVE_DEFAULT_PARTITION__").size == 1)
+    val after = Snapshot.read(spark, dir)
     assert(after.count() == 400)
     assert(after.agg(sum("v")).head().getLong(0) == beforeSum)
     assert(after.where(col("p").isNull).count() == beforeNulls)

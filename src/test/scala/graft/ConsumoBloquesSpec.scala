@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
-import graft.operators.Writers
+import graft.operators.{Snapshot, Writers}
 import graft.queries.ConsumoBloquesPack
 
 /** q62's persisted half: the 5-branch dual-grain rollup published
@@ -30,19 +30,18 @@ class ConsumoBloquesSpec extends SparkSpec {
     // hour 0 of the month: first full load (target absent)
     Writers.replacePeriodWindowWrite(spark, path, ConsumoBloquesPack.firstLoad(t),
       "p_start", "periodo", ConsumoBloquesPack.cutoffTs)
-    assert(canon(spark.read.parquet(path)) == canon(ConsumoBloquesPack.firstLoad(t)))
+    assert(canon(Snapshot.read(spark, path)) == canon(ConsumoBloquesPack.firstLoad(t)))
 
     // partitions OUTSIDE the replace window (hora, pre-cutoff) must come
-    // through the rerun byte-identical — the writer may not even open
+    // through the rerun as the same files — the writer may not even open
     // them, let alone rewrite them; this is what makes the hourly rerun
     // O(window) instead of O(table) at 100 TB
-    def untouched(): Map[String, (Long, Long)] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
-      walk(new java.io.File(path + "/periodo=hora"))
-        .filter(_.getName.endsWith(".parquet"))
-        .filter(_.getParentFile.getName.replace("%3A", ":") < "p_start=2024-01-15 00:00:00")
-        .map(f => f.getAbsolutePath -> (f.length, f.lastModified)).toMap
+    def untouched(): Seq[String] = {
+      val m = Snapshot.latest(spark, path)
+      m.files.filter { f =>
+        val pv = Snapshot.partitionValues(m.partitionCols, f)
+        pv("periodo") == "hora" && pv("p_start") < "2024-01-15 00:00:00"
+      }.sorted
     }
     val beforeRerun = untouched()
     assert(beforeRerun.nonEmpty, "fixture must have pre-cutoff hora partitions")
@@ -52,7 +51,7 @@ class ConsumoBloquesSpec extends SparkSpec {
     val replacement = ConsumoBloquesPack.rerunReplacement(t)
     Writers.replacePeriodWindowWrite(spark, path, replacement,
       "p_start", "periodo", ConsumoBloquesPack.cutoffTs)
-    val afterRerun = canon(spark.read.parquet(path))
+    val afterRerun = canon(Snapshot.read(spark, path))
     assert(afterRerun == canon(ConsumoBloquesPack.publish(t)))
     assert(untouched() == beforeRerun,
       "rerun rewrote partitions outside the replace window")
@@ -60,13 +59,13 @@ class ConsumoBloquesSpec extends SparkSpec {
     // a second identical rerun must change nothing
     Writers.replacePeriodWindowWrite(spark, path, replacement,
       "p_start", "periodo", ConsumoBloquesPack.cutoffTs)
-    assert(canon(spark.read.parquet(path)) == afterRerun)
+    assert(canon(Snapshot.read(spark, path)) == afterRerun)
 
     // the dual window really is dual: pre-cutoff hora rows are the
     // first load's, in-window hora rows are the replacement's
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val back = spark.read.parquet(path)
+    val back = Snapshot.read(spark, path)
     val cut = java.sql.Timestamp.valueOf("2024-01-15 00:00:00")
     val first = ConsumoBloquesPack.firstLoad(t)
     assert(canon(back.where($"periodo" === "hora" && $"p_start" < cut)) ==
@@ -76,7 +75,6 @@ class ConsumoBloquesSpec extends SparkSpec {
   }
 
   test("snapshot-published q62: rerun is idempotent AND atomic under fault injection") {
-    import graft.operators.Snapshot
     val t = sf()
     val path = Files.createTempDirectory("graft-bloques-snap").toString + "/consumo_bloques"
     // publish the first load INTO a snapshot table; all later writer

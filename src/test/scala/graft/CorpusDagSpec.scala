@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.functions.TextFns
-import graft.operators.{Dedup, Expectations, Writers}
+import graft.operators.{Dedup, Expectations, Snapshot, Writers}
 import graft.pipelines.Runner
 import graft.pipelines.Runner.Stage
 
@@ -28,7 +28,7 @@ class CorpusDagSpec extends SparkSpec {
     // standing corpus: the sf0.001 documents, landed partitioned by source
     val seed = sf().documents.select("doc_id", "text", "lang", "source")
     Writers.appendPartitioned(seed, corpusDir, "source")
-    val seedCount = spark.read.parquet(corpusDir).count()
+    val seedCount = Snapshot.read(spark, corpusDir).count()
     val someDoc = seed.orderBy("doc_id").select("text").as[String].head()
 
     // tonight's batch: 1 exact dup, 1 near dup (one token swapped),
@@ -45,7 +45,7 @@ class CorpusDagSpec extends SparkSpec {
     var statsOutage = true
     def stages = Seq(
       Stage("screen")(() => {
-        val corpus = spark.read.parquet(corpusDir)
+        val corpus = Snapshot.read(spark, corpusDir)
         val exactHit = batch.join(corpus.select(md5(col("text")).as("h")).distinct(),
           md5(batch("text")) === col("h"), "left_semi")
         val nearHit = Dedup.minhashLshPairsAcross(batch, corpus,
@@ -66,12 +66,12 @@ class CorpusDagSpec extends SparkSpec {
           corpusDir, "source")),
       Stage("stats", deps = Seq("append"))(() => {
         if (statsOutage) sys.error("stats cluster down")
-        spark.read.parquet(corpusDir).groupBy("source")
+        Snapshot.read(spark, corpusDir).groupBy("source")
           .agg(count(lit(1)).as("docs"), countDistinct(col("doc_id")).as("ids"))
           .write.mode("overwrite").parquet(statsDir)
       }),
       Stage("expect", deps = Seq("append"))(() =>
-        Expectations.check(spark.read.parquet(corpusDir), "doc_id", Seq(
+        Expectations.check(Snapshot.read(spark, corpusDir), "doc_id", Seq(
             Expectations.NotNull("text_not_null", "text"),
             Expectations.Unique("unique_doc_id", "doc_id"),
             Expectations.InSet("known_lang", "lang", Seq("en", "es", "de", "fr", "zh", "und"))))
@@ -82,7 +82,7 @@ class CorpusDagSpec extends SparkSpec {
     assert(first("append") == Runner.Ran)
     assert(first("stats").isInstanceOf[Runner.Failed])
     assert(first("expect") == Runner.Ran) // depends only on append
-    val afterAppend = spark.read.parquet(corpusDir).count()
+    val afterAppend = Snapshot.read(spark, corpusDir).count()
     assert(afterAppend == seedCount + 3, s"expected 3 appended fresh docs, corpus $seedCount -> $afterAppend")
 
     // tick 2: stats back up — screen/gate/append/expect resume from
@@ -91,12 +91,12 @@ class CorpusDagSpec extends SparkSpec {
     val second = Runner.run(spark, stages, flags)
     assert(second("screen") == Runner.Resumed && second("append") == Runner.Resumed)
     assert(second("stats") == Runner.Ran)
-    assert(spark.read.parquet(corpusDir).count() == seedCount + 3, "append re-ran: corpus double-appended")
+    assert(Snapshot.read(spark, corpusDir).count() == seedCount + 3, "append re-ran: corpus double-appended")
 
     // stats agree with a recompute; expectations report is all-clean
     val stats = spark.read.parquet(statsDir)
       .select("source", "docs").as[(String, Long)].collect().toMap
-    val recomputed = spark.read.parquet(corpusDir).groupBy("source")
+    val recomputed = Snapshot.read(spark, corpusDir).groupBy("source")
       .agg(count(lit(1)).as("docs")).as[(String, Long)].collect().toMap
     assert(stats == recomputed && stats("batch") == 3L)
     val report = spark.read.parquet(reportDir)

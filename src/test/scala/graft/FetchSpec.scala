@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.time.{Duration, LocalDateTime}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
+import graft.operators.Snapshot
 import graft.sources.Fetch
 
 /** The windowed-ingest protocol of the reference's API extracts
@@ -78,7 +79,7 @@ class FetchSpec extends SparkSpec {
       rows(from, 2)
     }(Fetch.windowKeyedSink(path))
     assert(landed == 3)
-    assert(spark.read.parquet(path).count() == 6)
+    assert(Snapshot.read(spark, path).count() == 6)
 
     // a permanently dead window aborts the run but keeps earlier chunks
     val path2 = Files.createTempDirectory("graft-fetch").toString + "/t"
@@ -89,20 +90,20 @@ class FetchSpec extends SparkSpec {
         rows(from, 1)
       }(Fetch.windowKeyedSink(path2))
     }
-    val kept = spark.read.parquet(path2).select("fecha").as[String].collect().toSet
+    val kept = Snapshot.read(spark, path2).select("fecha").as[String].collect().toSet
     assert(kept == Set("2024-01-01", "2024-01-02"))
 
     // the recovery contract: rerun re-fetches EVERY window and the
     // window-keyed sink replaces earlier copies — even rows whose DATA
     // moved dates between fetches cannot double (the partition key is
     // the WINDOW, not row content), and an empty re-fetch CLEARS its
-    // window (the delete dynamic overwrite can't express)
+    // window in the same atomic commit
     Fetch.windowedIngest(spark, schema,
       t("2024-01-01T00:00"), t("2024-01-04T00:00"), Duration.ofDays(1)) { (from, _) =>
       if (from == t("2024-01-01T00:00")) Seq.empty // late retraction
       else rows(from.minusDays(1), 1)              // data dated OUTSIDE its window
     }(Fetch.windowKeyedSink(path2))
-    val after = spark.read.parquet(path2).select("fecha").as[String].collect().sorted.toSeq
+    val after = Snapshot.read(spark, path2).select("fecha").as[String].collect().sorted.toSeq
     assert(after == Seq("2024-01-01", "2024-01-02")) // w1 cleared; w2/w3 replaced, no dupes
   }
 

@@ -5,6 +5,7 @@ import java.time.{Duration, LocalDateTime}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.operators.Snapshot
 import graft.pipelines.{ConsumoPipeline, Runner}
 import graft.pipelines.Runner.Stage
 import graft.sources.Fetch
@@ -49,7 +50,7 @@ class HourlyDagSpec extends SparkSpec {
         ()
       }),
       Stage("load", deps = Seq("extract"))(() =>
-        ConsumoPipeline.run(spark, spark.read.parquet(landing).drop("w"), p, table)))
+        ConsumoPipeline.run(spark, Snapshot.read(spark, landing).drop("w"), p, table)))
 
     // tick 1: window 2 dead -> extract fails, load blocked, flags off
     val first = Runner.run(spark, stages, flags)
@@ -57,7 +58,7 @@ class HourlyDagSpec extends SparkSpec {
     assert(first("load") == Runner.Blocked("extract"))
     assert(!Runner.flagSet(spark, flags, "extract") && !Runner.flagSet(spark, flags, "load"))
     // windows 0 and 1 landed before the outage
-    assert(spark.read.parquet(landing).count() == 2)
+    assert(Snapshot.read(spark, landing).count() == 2)
 
     // tick 2: API back up. The extract stage re-runs whole (its flag is
     // off) and re-fetches windows 0,1 — the window-keyed K2 landing
@@ -66,7 +67,7 @@ class HourlyDagSpec extends SparkSpec {
     val second = Runner.run(spark, stages, flags)
     assert(second("extract") == Runner.Ran && second("load") == Runner.Ran)
     assert(Runner.report(spark, flags, stages).forall(_._2))
-    assert(spark.read.parquet(landing).count() == 4) // one row per window
+    assert(Snapshot.read(spark, landing).count() == 4) // one row per window
 
     // published table == one clean never-crashed run over clean input:
     // the real recovery contract, provable because the window-keyed
@@ -76,7 +77,7 @@ class HourlyDagSpec extends SparkSpec {
     val expect = ConsumoPipeline.rollup(spark, clean, p)
       .select("p_start", "event_type", "vip", "users", "n_events", "minutes")
       .as[(java.sql.Timestamp, String, Long, Long, Long, Double)].collect().toSet
-    val got = spark.read.parquet(table)
+    val got = Snapshot.read(spark, table)
       .select("p_start", "event_type", "vip", "users", "n_events", "minutes")
       .as[(java.sql.Timestamp, String, Long, Long, Long, Double)].collect().toSet
     assert(got == expect && got.nonEmpty)

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import graft.operators.Snapshot
 import graft.queries.IndicadoresPack
 
 /** q66's composition contract: eight indicator families from ONE fact
@@ -57,24 +58,24 @@ class IndicadoresSpec extends SparkSpec {
     val prior = IndicadoresPack.wide(t)
       .withColumn("fecha", lit("2023-12-31 00:00:00").cast("timestamp"))
     graft.operators.Writers.appendPartitioned(prior, path, "fecha")
-    val priorFiles = new java.io.File(path).listFiles().filter(_.isDirectory)
-      .flatMap(d => d.listFiles()).filter(_.getName.endsWith(".parquet"))
-      .map(f => f.getAbsolutePath -> f.lastModified).toMap
+    def priorMonthFiles(): Seq[String] = {
+      val m = Snapshot.latest(spark, path)
+      m.files.filter(Snapshot.partitionValues(m.partitionCols, _)("fecha")
+        .startsWith("2023-12-31")).sorted
+    }
+    val priorFiles = priorMonthFiles()
+    assert(priorFiles.nonEmpty)
     // publish the current month twice — reruns must be no-ops and the
     // prior month must never be rewritten (the reference DELETEs only
     // WHERE fecha = fin_mes)
     IndicadoresPack.publish(t, path)
     IndicadoresPack.publish(t, path)
-    val back = spark.read.parquet(path)
+    val back = Snapshot.read(spark, path)
     assert(back.select(date_format($"fecha", "yyyy-MM-dd")).distinct()
       .as[String].collect().toSet == Set("2023-12-31", "2024-01-31"))
     val expected = IndicadoresPack.wide(t).count()
     assert(back.where($"fecha" === lit("2024-01-31 00:00:00").cast("timestamp")).count() == expected)
-    val after = new java.io.File(path).listFiles().filter(_.isDirectory)
-      .flatMap(d => d.listFiles()).filter(_.getName.endsWith(".parquet"))
-      .map(f => f.getAbsolutePath -> f.lastModified).toMap
-    val priorAfter = after.filter(_._1.contains("2023-12-31"))
-    assert(priorAfter == priorFiles.filter(_._1.contains("2023-12-31")),
+    assert(priorMonthFiles() == priorFiles,
       "prior-month partition was rewritten by the monthly publish")
   }
 }

@@ -502,7 +502,7 @@ class MatViewSpec extends SparkSpec {
     // the side tables exist, marked with their owning view
     for (c <- Seq("nv", "nw")) {
       val sm = Snapshot.latestManifest(spark, MatView.sidePath(mvP, c))
-      assert(sm.exists(_.properties.get(MatView.SideProp).contains(mvP)),
+      assert(sm.exists(_.properties.get(MatView.SideProp).contains("mv")),
         s"missing distinct-state side table for $c")
     }
     // window 1: inserts that ADD new values to some groups and

@@ -791,4 +791,49 @@ class MvRouteSpec extends SparkSpec {
       assert(scanPaths(otherArg) == Set(srcPath), "mismatched argument refuses")
     } finally spark.conf.unset("spark.graft.mv.autoRoute")
   }
+
+  test("a side table still routes after its warehouse directory is renamed") {
+    // the side records its view by NAME, not by absolute path, so a
+    // moved warehouse keeps the distinct containment route
+    val root = Files.createTempDirectory("graft-mv-move").toString
+    val (wh1, wh2) = (s"$root/wh_before", s"$root/wh_after_move")
+    spark.conf.set("spark.sql.catalog.gmove", "graft.catalog.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.gmove.warehouse", wh1)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS gmove.db")
+    Snapshot.create(spark, s"$wh1/db/src",
+      (0L until 60L).map(i => (i, s"k${i % 3}", s"v${i % 7}")).toDF("id", "k", "v"))
+    spark.sql(
+      """CREATE MATERIALIZED VIEW gmove.db.mv AS
+        |SELECT k, COUNT(*) AS n, COUNT(DISTINCT v) AS nv
+        |FROM gmove.db.src GROUP BY k""".stripMargin)
+    val q = "SELECT COUNT(DISTINCT v) AS nv FROM gmove.db.src"
+    def routesIn(wh: String): Unit = {
+      val mvPath = s"$wh/db/mv"
+      spark.conf.set("spark.graft.mv.autoRoute", mvPath)
+      val routed = spark.sql(q)
+      assert(scanPaths(routed) == Set(mvPath, graft.operators.MatView.sidePath(mvPath, "nv")),
+        s"the side must route from $wh: ${scanPaths(routed)}")
+      spark.conf.unset("spark.graft.mv.autoRoute")
+      assert(routed.collect().toSeq == spark.sql(q).collect().toSeq)
+    }
+    try {
+      routesIn(wh1)
+      val side1 = graft.operators.MatView.sidePath(s"$wh1/db/mv", "nv")
+      assert(Snapshot.latest(spark, side1).properties.get(graft.operators.MatView.SideProp)
+        .contains("mv"))
+      java.nio.file.Files.move(java.nio.file.Path.of(wh1), java.nio.file.Path.of(wh2))
+      spark.conf.set("spark.sql.catalog.gmove.warehouse", wh2)
+      routesIn(wh2)
+      // a side written with the view's ABSOLUTE path (older tables)
+      // still matches by its last segment, even from the old location;
+      // a side marked for another view does not
+      val (mv2, side2) = (s"$wh2/db/mv", graft.operators.MatView.sidePath(s"$wh2/db/mv", "nv"))
+      def markedAs(owner: String) = {
+        Snapshot.setProperties(spark, side2, Map(graft.operators.MatView.SideProp -> owner))
+        graft.operators.MatView.sideRouteInfo(spark, mv2, side2)
+      }
+      assert(markedAs(s"$wh1/db/mv").contains((side2, Snapshot.latestVersion(spark, side2).get)))
+      assert(markedAs(s"$wh1/db/other").isEmpty)
+    } finally spark.conf.unset("spark.graft.mv.autoRoute")
+  }
 }

@@ -141,13 +141,13 @@ class PipelineOpsSpec extends SparkSpec {
       val rep = repRows.toDF("periodo", "fecha", "v")
         .withColumn("fecha", $"fecha".cast("timestamp"))
       val path = java.nio.file.Files.createTempDirectory(s"graft-rpw$round").toString + "/t"
-      existing.write.partitionBy("periodo", "fecha").parquet(path)
+      graft.operators.Snapshot.create(spark, path, existing, Seq("periodo", "fecha"))
       graft.operators.Writers.replacePeriodWindowWrite(spark, path, rep, "fecha", "periodo", cutoff)
       val expected = graft.operators.Writers
         .replacePeriodWindow(existing, rep, "fecha", "periodo", cutoff)
         .select($"periodo", $"fecha".cast("string"), $"v")
         .as[(String, String, Double)].collect().toSet
-      val got = spark.read.parquet(path)
+      val got = graft.operators.Snapshot.read(spark, path)
         .select($"periodo", $"fecha".cast("timestamp").cast("string"), $"v")
         .as[(String, String, Double)].collect().toSet
       assert(got == expected, s"round $round: write path diverged from pure dataflow")

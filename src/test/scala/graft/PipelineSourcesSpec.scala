@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.operators.Snapshot
 import graft.pipelines.ConsumoPipeline
 import graft.sources.Readers
 
@@ -81,7 +82,7 @@ class PipelineSourcesSpec extends SparkSpec {
     val hora = ConsumoPipeline.Params("2024-01-15 00:00:00", "2024-02-01 00:00:00")
     ConsumoPipeline.runDualGrain(spark, events2, hora, full, out,
       lit("2024-01-15 00:00:00").cast("timestamp"))
-    val got = spark.read.parquet(out).where($"vip" === 0L)
+    val got = Snapshot.read(spark, out).where($"vip" === 0L)
       .select("periodo", "p_start", "minutes")
       .as[(String, java.sql.Timestamp, Double)].collect()
       .map { case (p, ps, m) => (p, ps.toString.take(10), m) }.toSet
@@ -107,7 +108,7 @@ class PipelineSourcesSpec extends SparkSpec {
     val out = s"$dir/rollup"
     ConsumoPipeline.run(spark, events, p, out)
     ConsumoPipeline.run(spark, events, p, out) // K2: rerun must not duplicate
-    val got = spark.read.parquet(out)
+    val got = Snapshot.read(spark, out)
       .select("p_start", "event_type", "vip", "users", "minutes")
       .as[(java.sql.Timestamp, String, Long, Long, Double)].collect()
       .map { case (ps, et, vip, u, m) => (ps.toString, et, vip, u, m) }.toSet

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import graft.operators.Writers
+import graft.operators.{Snapshot, Writers}
 import graft.pipelines.Runner
 import graft.pipelines.Runner.{Blocked, Failed, Ran, Resumed, Stage}
 
@@ -51,7 +51,7 @@ class RunnerSpec extends SparkSpec {
     assert(second("publish") == Ran)
     assert((aRuns, bRuns, cRuns) == ((1, 2, 1)))
     assert(Runner.report(spark, flags, stages).forall(_._2))
-    val table = spark.read.parquet(out).as[(Double, String)].collect().toSet
+    val table = Snapshot.read(spark, out).select("v", "fecha").as[(Double, String)].collect().toSet
     assert(table.map(_._1) == Set(1.0, 2.0, 3.0))
 
     // third run: everything resumed, nothing re-executed, table untouched
@@ -69,7 +69,7 @@ class RunnerSpec extends SparkSpec {
         Writers.mergeByIdWrite(spark, out, Seq((1L, "a"), (2L, "b")).toDF("id", "v"), "id")))
     assert(Runner.run(spark, stages, flags)("load") == Ran)
     assert(Runner.run(spark, stages, flags, resume = false)("load") == Ran)
-    assert(spark.read.parquet(out).as[(Long, String)].collect().toMap ==
+    assert(Snapshot.read(spark, out).as[(Long, String)].collect().toMap ==
       Map(1L -> "a", 2L -> "b"))
   }
 

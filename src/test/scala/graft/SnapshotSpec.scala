@@ -3,12 +3,13 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{Layout, Snapshot, Writers}
+import graft.operators.{Snapshot, Writers}
 
 /** The snapshot/commit-log layer: atomic commits, reader isolation,
-  * crash injection between every pair of protocol steps, and the routed
+  * crash injection between every pair of protocol steps, and the
   * writers (replaceWindow / replacePeriodWindowWrite / mergeById* /
-  * compactPartitions) proven equal to their pure-dataflow twins.
+  * appendPartitioned, then compaction) proven equal to their
+  * pure-dataflow twins.
   */
 class SnapshotSpec extends SparkSpec {
   import spark.implicits._
@@ -200,12 +201,12 @@ class SnapshotSpec extends SparkSpec {
     Writers.mergeByIdWrite(spark, dir2, updates, "id")
     assert(rows(Snapshot.read(spark, dir2)) == rows(Writers.mergeById(target, updates, "id")))
 
-    // compaction route (via Layout API) — identical data, fewer files
+    // appends then compaction — identical data, fewer files
     val dir3 = tmp("compact")
     Snapshot.create(spark, dir3, fixture(0 until 10, 1), Seq("p"))
     (1 to 3).foreach(i => Writers.appendPartitioned(fixture(i * 10 until i * 10 + 10, 1), dir3, "p"))
     val before = rows(Snapshot.read(spark, dir3))
-    val done = Layout.compactPartitions(spark, dir3, "p", targetBytes = 1L << 30, minFiles = 2)
+    val done = Snapshot.compact(spark, dir3, targetBytes = 1L << 30, minFiles = 2)
     assert(done.nonEmpty)
     assert(rows(Snapshot.read(spark, dir3)) == before)
   }

@@ -120,7 +120,7 @@ class StreamingSpec extends SparkSpec {
       .toDF("ts", "event_type", "value").write.mode("append").parquet(landing)
     EventStream.runMergePublish(
       EventStream.hourlyRollup(EventStream.read(spark, landing, schema)), out, ckpt)
-    val got = spark.read.parquet(out)
+    val got = graft.operators.Snapshot.read(spark, out)
       .select("p_start", "event_type", "n", "minutes")
       .as[(java.sql.Timestamp, String, Long, Double)].collect()
       .map { case (p, t, n, m) => (p.toString, t, n, m) }.toSet
