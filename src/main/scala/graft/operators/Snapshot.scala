@@ -1324,16 +1324,19 @@ object Snapshot {
     * takes the snapshot route. A create lost to a concurrent first
     * write falls through to the winner's table. A path that holds
     * files but no snapshot log is refused: a new manifest would hide
-    * them. A crashed first create (a log with no committed version)
-    * counts as absent.
+    * them. What a create leaves before its first commit (the log
+    * directory, `txn-*` data directories) does not count as files: a
+    * crashed first create reruns, and a second first writer that finds
+    * the first one mid-write joins its race instead of refusing.
     */
   def createIfAbsent(spark: SparkSession, path: String, schema: StructType,
                      partitionCols: Seq[String] = Nil): Unit =
     if (latestVersion(spark, path).isEmpty) {
       val fs = fsFor(spark, path)
       val root = new HPath(path)
-      require(fs.exists(new HPath(root, LogDirName)) || !fs.exists(root) ||
-        fs.listStatus(root).isEmpty,
+      val foreign = if (!fs.exists(root)) Nil else fs.listStatus(root).toSeq
+        .map(_.getPath.getName).filterNot(n => n == LogDirName || n.startsWith("txn-"))
+      require(foreign.isEmpty,
         s"$path holds files but no snapshot table; register them with " +
           "Snapshot.importParquet before writing to it")
       try create(spark, path, spark.createDataFrame(

@@ -269,4 +269,46 @@ class WritersSpec extends SparkSpec {
     // one create and two appends: the lost create committed nothing
     assert(Snapshot.latestVersion(spark, path).contains(3L))
   }
+
+  test("a first write that crashes after its data write reruns cleanly") {
+    val path = tmp() + "/t"
+    val rows = Seq(("2024-01-01", 1L), ("2024-01-02", 2L)).toDF("fecha", "id")
+    Snapshot.faultHook = stage =>
+      if (stage == "data-files-written") throw new RuntimeException("injected crash")
+    try intercept[RuntimeException](Writers.appendPartitioned(rows, path, "fecha"))
+    finally Snapshot.faultHook = _ => ()
+    // the crash left a data directory and no committed version
+    assert(new java.io.File(path).list().exists(_.startsWith("txn-")))
+    assert(Snapshot.latestVersion(spark, path).isEmpty)
+    Writers.appendPartitioned(rows, path, "fecha")
+    assert(Snapshot.read(spark, path).select("id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L))
+  }
+
+  test("a first write that starts after another first write's data write joins its race") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val path = tmp() + "/t"
+    val first = Seq(("2024-01-01", 1L), ("2024-01-02", 2L)).toDF("fecha", "id")
+    val second = Seq(("2024-01-02", 3L), ("2024-01-03", 4L)).toDF("fecha", "id")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val firstThread = Thread.currentThread()
+    @volatile var fired = false
+    // the first create has written its data directory but not its log:
+    // the second writer runs to completion inside that window
+    Snapshot.faultHook = stage =>
+      if (stage == "data-files-written" && Thread.currentThread() == firstThread && !fired) {
+        fired = true
+        assert(!new java.io.File(path, Snapshot.LogDirName).exists())
+        Await.result(Future(Writers.appendPartitioned(second, path, "fecha")), 3.minutes)
+      }
+    try Writers.appendPartitioned(first, path, "fecha")
+    finally { Snapshot.faultHook = _ => (); pool.shutdown() }
+    assert(fired)
+    assert(Snapshot.read(spark, path).select("id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 3L, 4L))
+    // the second writer's create and append, then the first one's append
+    assert(Snapshot.latestVersion(spark, path).contains(3L))
+  }
 }
